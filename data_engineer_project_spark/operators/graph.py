@@ -31,10 +31,11 @@ re-exchanged the whole edge set inside EVERY round. The dedup still
 costs exactly one exchange: ``repartition(e_src)`` followed by
 ``dropDuplicates([e_src, e_dst])`` plans the aggregate WITHOUT its own
 exchange because hash(e_src) already clusters equal (e_src, e_dst)
-rows. Callers whose pair set is distinct with src < dst by
-construction (verified near-dup pairs) pass ``pairs_unique=True`` and
-skip the dedup aggregate entirely — the mirrored union of such pairs
-cannot contain duplicates.
+rows. Callers whose pair set has no duplicate unordered pair, no
+self-loop, and one orientation per pair by construction (verified
+near-dup pairs, standing-cluster star edges) pass ``pairs_unique=True``
+and skip the dedup aggregate entirely — the mirrored union of such
+pairs cannot contain duplicates.
 """
 
 from __future__ import annotations
@@ -168,9 +169,11 @@ def connected_components(
     if needed).
 
     ``pairs_unique=True`` asserts the caller's pair set has no
-    duplicate rows and ``src < dst`` on every row — then the mirrored
-    union is distinct by construction and the dedup aggregate is
-    skipped (performance only; duplicate edges would not change the
+    duplicate unordered pair, no self-loop, and one orientation per
+    pair (``src < dst`` is one way to guarantee that, but d101's
+    ``(member, root)`` star edges need not satisfy it) — then the
+    mirrored union is distinct by construction and the dedup aggregate
+    is skipped (performance only; duplicate edges would not change the
     labels, just the per-round cost).
     """
     # The convergence probe sums labels as decimal; a non-numeric id

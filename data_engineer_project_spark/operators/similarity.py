@@ -199,7 +199,7 @@ def _banded_sigs_arrow(
     - the sign test (> 0), the bit weights (1 << r), and
       sqrt-of-self-fold for the norm are single IEEE ops, identical in
       both engines. Parity is pinned by
-      tests/test_round14_opt.py::test_banded_sigs_arrow_matches_hof
+      tests/test_round15_opt.py::test_banded_sigs_arrow_matches_hof
       and by the DuckDB oracle hashes of every consumer (d10/d16/…).
 
     Why: the HOF lambdas evaluate INTERPRETED, per element, per plane

@@ -67,14 +67,20 @@ def build_dim_date(src: dict[str, DataFrame]) -> DataFrame:
         F.month("d").alias("Mo"),
         F.dayofmonth("d").alias("Dy"),
     )
-    unknown = dim.sparkSession.createDataFrame(
-        [(UNKNOWN_DATE_SK, None, 1900, 1, 1)], schema=dim.schema
-    )
-    return unknown.union(dim)
+    return _with_unknown(dim, (UNKNOWN_DATE_SK, None, 1900, 1, 1))
 
 
 def _with_unknown(dim: DataFrame, unknown_row: tuple) -> DataFrame:
-    unknown = dim.sparkSession.createDataFrame([unknown_row], schema=dim.schema)
+    """``dim`` with the Unknown row on top, typed by ``dim.schema``.
+    The row is literals projected over ``spark.range(1)``, a JVM-side
+    one-row scan: ``createDataFrame`` over a Python list would plan as
+    ``Scan ExistingRDD`` and start Python workers on every build."""
+    unknown = dim.sparkSession.range(1, numPartitions=1).select(
+        *[
+            F.lit(v).cast(f.dataType).alias(f.name)
+            for v, f in zip(unknown_row, dim.schema.fields, strict=True)
+        ]
+    )
     return unknown.union(dim)
 
 

@@ -24,6 +24,7 @@ from data_engineer_project_spark.operators import dedup as DD
 from data_engineer_project_spark.operators.cache import tracked_persist
 from data_engineer_project_spark.operators import graph as GR
 from data_engineer_project_spark.operators import linalg as LA
+from data_engineer_project_spark.operators import neardup as ND
 from data_engineer_project_spark.operators import retrieval as RET
 from data_engineer_project_spark.operators import similarity as SIM
 from data_engineer_project_spark.operators import topk as TK
@@ -142,18 +143,8 @@ def d03_lang_id_heuristic(t):
 
 @query(
     "d04_fingerprints",
-    """
-    WITH w AS (
-      SELECT doc_id, unnest(string_split(text,' ')) AS wd,
-             generate_subscripts(string_split(text,' '),1) AS i
-      FROM documents
-    ),
-    sh AS (
-      SELECT doc_id,
-             wd || ' ' || lead(wd,1) OVER win || ' ' || lead(wd,2) OVER win AS shingle
-      FROM w WINDOW win AS (PARTITION BY doc_id ORDER BY i)
-      QUALIFY lead(wd,2) OVER win IS NOT NULL
-    )
+    f"""
+    WITH {ND.shingles_sql()}
     SELECT d.doc_id,
            md5(d.text) AS exact_fp,
            md5(array_to_string(string_split(d.text,' ')[1:10], ' ')) AS prefix_fp,
@@ -222,58 +213,22 @@ def d06_dedup_prefix_clusters(t):
     return DD.prefix_clusters(t.documents, n_words=10)
 
 
-def _minhash_oracle(num_hashes: int = 8, bands: int = 4, threshold: float = 0.5) -> str:
-    r = num_hashes // bands
-    sig_cols = ", ".join(
-        f"min(md5('{k}:' || shingle)) AS mh{k}" for k in range(num_hashes)
-    )
-    band_selects = "\n      UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, md5({key}) AS key FROM sig".format(
-            b=b,
-            key=" || '|' || ".join(f"mh{b * r + i}" for i in range(r)),
-        )
-        for b in range(bands)
-    )
-    return f"""
-    WITH w AS (
-      SELECT doc_id, unnest(string_split(text,' ')) AS wd,
-             generate_subscripts(string_split(text,' '),1) AS i
-      FROM documents
-    ),
-    sh AS (
-      SELECT doc_id,
-             wd || ' ' || lead(wd,1) OVER win || ' ' || lead(wd,2) OVER win AS shingle
-      FROM w WINDOW win AS (PARTITION BY doc_id ORDER BY i)
-      QUALIFY lead(wd,2) OVER win IS NOT NULL
-    ),
-    sig AS (SELECT doc_id, {sig_cols} FROM sh GROUP BY doc_id),
-    bands AS ({band_selects}),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-    ),
-    shd AS (SELECT DISTINCT doc_id, shingle FROM sh),
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM shd GROUP BY doc_id),
-    inter AS (
-      SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-      FROM cand c
-      JOIN shd sa ON sa.doc_id = c.doc_a
-      JOIN shd sb ON sb.doc_id = c.doc_b AND sb.shingle = sa.shingle
-      GROUP BY c.doc_a, c.doc_b
-    )
-    SELECT i.doc_a, i.doc_b,
-           CAST(i.n_inter AS DOUBLE)
-             / CAST(za.n_sh + zb.n_sh - i.n_inter AS DOUBLE) AS jaccard
-    FROM inter i
-    JOIN sizes za ON za.doc_id = i.doc_a
-    JOIN sizes zb ON zb.doc_id = i.doc_b
-    WHERE CAST(i.n_inter AS DOUBLE)
-            / CAST(za.n_sh + zb.n_sh - i.n_inter AS DOUBLE) >= {threshold}
-    """
+# d07's chain over documents up to the verified pairs ``ver``(doc_a,
+# doc_b, jaccard): the prefix of every near-dup pair/cluster oracle
+# over the raw corpus.
+_NEARDUP_CTES = f"""{ND.shingles_sql()},
+    {ND.minhash_sql()},
+    {ND.verify_self_sql(0.5)}"""
 
 
-@query("d07_dedup_minhash_lsh", _minhash_oracle(), tags=("llm", "dedup", "flagship"))
+@query(
+    "d07_dedup_minhash_lsh",
+    f"""
+    WITH {_NEARDUP_CTES}
+    SELECT doc_a, doc_b, jaccard FROM ver
+    """,
+    tags=("llm", "dedup", "flagship"),
+)
 def d07_dedup_minhash_lsh(t):
     """MinHash+LSH near-dup pairs with exact-Jaccard verify (SURVEY
     north-star dedup): shingle → salted-md5 signature → band buckets →
@@ -495,37 +450,12 @@ def d11_embedding_norm_stats(t):
 
 def _ngram_jaccard_oracle(threshold: float = 0.5, max_df: int = 50) -> str:
     return f"""
-    WITH w AS (
-      SELECT doc_id, unnest(string_split(text,' ')) AS wd,
-             generate_subscripts(string_split(text,' '),1) AS i
-      FROM documents
-    ),
-    sh AS (
-      SELECT doc_id,
-             wd || ' ' || lead(wd,1) OVER win || ' ' || lead(wd,2) OVER win AS shingle
-      FROM w WINDOW win AS (PARTITION BY doc_id ORDER BY i)
-      QUALIFY lead(wd,2) OVER win IS NOT NULL
-    ),
-    shd AS (SELECT DISTINCT doc_id, shingle FROM sh),
-    informative AS (
-      SELECT shingle FROM shd GROUP BY shingle
-      HAVING COUNT(*) <= {max_df} AND COUNT(*) > 1
-    ),
-    shf AS (SELECT shd.doc_id, shd.shingle FROM shd JOIN informative USING (shingle)),
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM shf GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-      FROM shf a JOIN shf b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
-    SELECT i.doc_a, i.doc_b,
-           CAST(i.n_inter AS DOUBLE)
-             / CAST(za.n_sh + zb.n_sh - i.n_inter AS DOUBLE) AS jaccard
-    FROM inter i
-    JOIN sizes za ON za.doc_id = i.doc_a
-    JOIN sizes zb ON zb.doc_id = i.doc_b
-    WHERE CAST(i.n_inter AS DOUBLE)
-            / CAST(za.n_sh + zb.n_sh - i.n_inter AS DOUBLE) >= {threshold}
+    WITH {ND.shingles_sql()},
+    {ND.inverted_pairs_sql(max_df)}
+    SELECT doc_a, doc_b,
+           CAST(n_inter AS DOUBLE) / CAST(n_a + n_b - n_inter AS DOUBLE) AS jaccard
+    FROM pstats
+    WHERE CAST(n_inter AS DOUBLE) / CAST(n_a + n_b - n_inter AS DOUBLE) >= {threshold}
     """
 
 
@@ -889,21 +819,25 @@ def e06_range_join(t):
 # ------------------------------------------------- composed pipelines
 
 
-@query(
-    "d15_curation_pipeline",
-    f"""
-    WITH q AS (
+# d15's three curation tiers, shared with d38 (which adds a fourth).
+_CURATION_FIN_SQL = f"""q AS (
       SELECT doc_id, lang, text FROM documents
       WHERE length(string_split(text, ' ')) BETWEEN 20 AND 120
         AND CAST(length(list_filter(string_split(text, ' '),
                                     x -> x IN ({_SW_SQL}))) AS DOUBLE)
             / CAST(length(string_split(text, ' ')) AS DOUBLE) < 0.3
     ),
-    ex AS (SELECT MIN(doc_id) AS doc_id FROM q GROUP BY md5(text)),
+    {ND.reps_sql("q", "ex")},
     e2 AS (SELECT q.doc_id, q.lang, q.text FROM q JOIN ex USING (doc_id)),
     nd AS (SELECT MIN(doc_id) AS doc_id FROM e2
            GROUP BY md5(array_to_string(string_split(text,' ')[1:10], ' '))),
-    fin AS (SELECT e2.lang, e2.text FROM e2 JOIN nd USING (doc_id))
+    fin AS (SELECT e2.doc_id, e2.lang, e2.text FROM e2 JOIN nd USING (doc_id))"""
+
+
+@query(
+    "d15_curation_pipeline",
+    f"""
+    WITH {_CURATION_FIN_SQL}
     SELECT lang, COUNT(*) AS n_docs,
            CAST(SUM(length(string_split(text, ' '))) AS BIGINT) AS total_tokens
     FROM fin GROUP BY lang
@@ -1214,18 +1148,8 @@ def e08_rolling_1h_per_user(t):
 @query(
     "d20_dedup_clusters",
     f"""
-    WITH RECURSIVE pairs AS ({_minhash_oracle()}),
-    edges AS (
-      SELECT doc_a AS e_src, doc_b AS e_dst FROM pairs
-      UNION SELECT doc_b, doc_a FROM pairs
-    ),
-    nodes AS (SELECT DISTINCT e_src AS node FROM edges),
-    walk(node, comp) AS (
-      SELECT node, node FROM nodes
-      UNION
-      SELECT e.e_dst, w.comp FROM walk w JOIN edges e ON e.e_src = w.node
-    ),
-    lab AS (SELECT node, MIN(comp) AS component FROM walk GROUP BY node)
+    WITH RECURSIVE {_NEARDUP_CTES},
+    {ND.components_sql()}
     SELECT component, COUNT(*) AS cluster_size,
            CAST(MIN(node) AS BIGINT) AS canonical_doc,
            CAST(MAX(node) AS BIGINT) AS max_doc
@@ -1380,24 +1304,10 @@ def d23_dedup_edit_distance(t):
     )
 
 
-_SHINGLE_CTES = """
-    w AS (
-      SELECT doc_id, unnest(string_split(text,' ')) AS wd,
-             generate_subscripts(string_split(text,' '),1) AS i
-      FROM documents
-    ),
-    sh AS (
-      SELECT doc_id,
-             wd || ' ' || lead(wd,1) OVER win || ' ' || lead(wd,2) OVER win AS shingle
-      FROM w WINDOW win AS (PARTITION BY doc_id ORDER BY i)
-      QUALIFY lead(wd,2) OVER win IS NOT NULL
-    )"""
-
-
 @query(
     "d24_repetition_ratio",
     f"""
-    WITH {_SHINGLE_CTES},
+    WITH {ND.shingles_sql()},
     per AS (SELECT doc_id, shingle, COUNT(*) AS n FROM sh GROUP BY 1, 2)
     SELECT doc_id,
            CAST(SUM(n) AS BIGINT) AS n_shingles,
@@ -1436,12 +1346,8 @@ def d24_repetition_ratio(t):
 @query(
     "d25_decontamination",
     f"""
-    WITH {_SHINGLE_CTES},
-    shd AS (SELECT DISTINCT doc_id, shingle FROM sh),
-    informative AS (
-      SELECT shingle FROM shd GROUP BY shingle
-      HAVING COUNT(*) <= 50 AND COUNT(*) > 1
-    ),
+    WITH {ND.shingles_sql()},
+    {ND.informative_sql()},
     shf AS (
       SELECT shd.doc_id, shd.shingle, {_ORACLE_BUCKET} AS bucket
       FROM shd JOIN informative USING (shingle)
@@ -1503,18 +1409,8 @@ def d25_decontamination(t):
 @query(
     "d26_quality_survivor",
     f"""
-    WITH RECURSIVE pairs AS ({_minhash_oracle()}),
-    edges AS (
-      SELECT doc_a AS e_src, doc_b AS e_dst FROM pairs
-      UNION SELECT doc_b, doc_a FROM pairs
-    ),
-    nodes AS (SELECT DISTINCT e_src AS node FROM edges),
-    walk(node, comp) AS (
-      SELECT node, node FROM nodes
-      UNION
-      SELECT e.e_dst, w.comp FROM walk w JOIN edges e ON e.e_src = w.node
-    ),
-    lab AS (SELECT node, MIN(comp) AS component FROM walk GROUP BY node),
+    WITH RECURSIVE {_NEARDUP_CTES},
+    {ND.components_sql()},
     scored AS (
       SELECT l.component, l.node,
              length(string_split(d.text, ' ')) AS n_words
@@ -1721,70 +1617,26 @@ def d28_embedding_int8_quantization(t):
     )
 
 
-def _minhash_estimator_oracle(num_hashes: int = 8, bands: int = 4) -> str:
-    r = num_hashes // bands
-    sig_cols = ", ".join(
-        f"min(md5('{k}:' || shingle)) AS mh{k}" for k in range(num_hashes)
-    )
-    band_selects = "\n      UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, md5({key}) AS key FROM sig".format(
-            b=b,
-            key=" || '|' || ".join(f"mh{b * r + i}" for i in range(r)),
-        )
-        for b in range(bands)
-    )
-    est = " + ".join(
-        f"(CASE WHEN sa.mh{k} = sb.mh{k} THEN 1 ELSE 0 END)" for k in range(num_hashes)
-    )
-    return f"""
-    WITH w AS (
-      SELECT doc_id, unnest(string_split(text,' ')) AS wd,
-             generate_subscripts(string_split(text,' '),1) AS i
-      FROM documents
-    ),
-    sh AS (
-      SELECT doc_id,
-             wd || ' ' || lead(wd,1) OVER win || ' ' || lead(wd,2) OVER win AS shingle
-      FROM w WINDOW win AS (PARTITION BY doc_id ORDER BY i)
-      QUALIFY lead(wd,2) OVER win IS NOT NULL
-    ),
-    sig AS (SELECT doc_id, {sig_cols} FROM sh GROUP BY doc_id),
-    bands AS ({band_selects}),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-    ),
-    shd AS (SELECT DISTINCT doc_id, shingle FROM sh),
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM shd GROUP BY doc_id),
-    inter AS (
-      SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-      FROM cand c
-      JOIN shd xa ON xa.doc_id = c.doc_a
-      JOIN shd xb ON xb.doc_id = c.doc_b AND xb.shingle = xa.shingle
-      GROUP BY c.doc_a, c.doc_b
-    ),
-    ex AS (
-      SELECT i.doc_a, i.doc_b,
-             CAST(i.n_inter AS DOUBLE)
-               / CAST(za.n_sh + zb.n_sh - i.n_inter AS DOUBLE) AS jaccard
-      FROM inter i
-      JOIN sizes za ON za.doc_id = i.doc_a
-      JOIN sizes zb ON zb.doc_id = i.doc_b
-    )
-    SELECT e.doc_a, e.doc_b,
-           CAST({est} AS DOUBLE) / {num_hashes} AS est_jaccard,
-           e.jaccard,
-           ABS(CAST({est} AS DOUBLE) / {num_hashes} - e.jaccard) AS abs_err
-    FROM ex e
-    JOIN sig sa ON sa.doc_id = e.doc_a
-    JOIN sig sb ON sb.doc_id = e.doc_b
-    """
+# signature-agreement count between the two sides' MinHash columns
+_D29_AGREE = " + ".join(
+    f"(CASE WHEN sa.mh{k} = sb.mh{k} THEN 1 ELSE 0 END)" for k in range(8)
+)
 
 
 @query(
     "d29_minhash_estimator_quality",
-    _minhash_estimator_oracle(),
+    f"""
+    WITH {ND.shingles_sql()},
+    {ND.minhash_sql()},
+    {ND.verify_self_sql(None)}
+    SELECT e.doc_a, e.doc_b,
+           CAST({_D29_AGREE} AS DOUBLE) / 8 AS est_jaccard,
+           e.jaccard,
+           ABS(CAST({_D29_AGREE} AS DOUBLE) / 8 - e.jaccard) AS abs_err
+    FROM ver e
+    JOIN sig sa ON sa.doc_id = e.doc_a
+    JOIN sig sb ON sb.doc_id = e.doc_b
+    """,
     tags=("llm", "dedup", "eval"),
 )
 def d29_minhash_estimator_quality(t):
@@ -2090,37 +1942,13 @@ def d33_source_token_budget(t):
 
 @query(
     "d34_containment_dedup",
-    """
-    WITH w AS (
-      SELECT doc_id, unnest(string_split(text,' ')) AS wd,
-             generate_subscripts(string_split(text,' '),1) AS i
-      FROM documents
-    ),
-    sh AS (
-      SELECT doc_id,
-             wd || ' ' || lead(wd,1) OVER win || ' ' || lead(wd,2) OVER win AS shingle
-      FROM w WINDOW win AS (PARTITION BY doc_id ORDER BY i)
-      QUALIFY lead(wd,2) OVER win IS NOT NULL
-    ),
-    shd AS (SELECT DISTINCT doc_id, shingle FROM sh),
-    informative AS (
-      SELECT shingle FROM shd GROUP BY shingle
-      HAVING COUNT(*) <= 50 AND COUNT(*) > 1
-    ),
-    shf AS (SELECT shd.doc_id, shd.shingle FROM shd JOIN informative USING (shingle)),
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM shf GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-      FROM shf a JOIN shf b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
-    SELECT i.doc_a, i.doc_b,
-           CAST(i.n_inter AS DOUBLE) / CAST(least(za.n_sh, zb.n_sh) AS DOUBLE)
-             AS containment
-    FROM inter i
-    JOIN sizes za ON za.doc_id = i.doc_a
-    JOIN sizes zb ON zb.doc_id = i.doc_b
-    WHERE CAST(i.n_inter AS DOUBLE) / CAST(least(za.n_sh, zb.n_sh) AS DOUBLE) >= 0.6
+    f"""
+    WITH {ND.shingles_sql()},
+    {ND.inverted_pairs_sql()}
+    SELECT doc_a, doc_b,
+           CAST(n_inter AS DOUBLE) / CAST(least(n_a, n_b) AS DOUBLE) AS containment
+    FROM pstats
+    WHERE CAST(n_inter AS DOUBLE) / CAST(least(n_a, n_b) AS DOUBLE) >= 0.6
     """,
     tags=("llm", "dedup"),
 )
@@ -2190,17 +2018,7 @@ def d35_char_class_profile(t):
 @query(
     "d36_ngram_novelty",
     f"""
-    WITH w AS (
-      SELECT doc_id, unnest(string_split(text,' ')) AS wd,
-             generate_subscripts(string_split(text,' '),1) AS i
-      FROM documents
-    ),
-    sh AS (
-      SELECT doc_id,
-             wd || ' ' || lead(wd,1) OVER win || ' ' || lead(wd,2) OVER win AS shingle
-      FROM w WINDOW win AS (PARTITION BY doc_id ORDER BY i)
-      QUALIFY lead(wd,2) OVER win IS NOT NULL
-    ),
+    WITH {ND.shingles_sql()},
     shd AS (SELECT DISTINCT doc_id, shingle FROM sh),
     b AS (SELECT doc_id, lang, {_ORACLE_BUCKET} AS bucket FROM documents),
     shl AS (SELECT shd.shingle, b.lang, b.bucket FROM shd JOIN b USING (doc_id)),
@@ -2272,21 +2090,6 @@ def d37_ann_ivf_nprobe2(t):
     return SIM.ivf_topk(emb.filter(F.col("vec_id") < 10), emb, k=3, nprobe=2)
 
 
-# d15's three curation tiers, shared with d38 (which adds a fourth).
-_CURATION_FIN_SQL = f"""q AS (
-      SELECT doc_id, lang, text FROM documents
-      WHERE length(string_split(text, ' ')) BETWEEN 20 AND 120
-        AND CAST(length(list_filter(string_split(text, ' '),
-                                    x -> x IN ({_SW_SQL}))) AS DOUBLE)
-            / CAST(length(string_split(text, ' ')) AS DOUBLE) < 0.3
-    ),
-    ex AS (SELECT MIN(doc_id) AS doc_id FROM q GROUP BY md5(text)),
-    e2 AS (SELECT q.doc_id, q.lang, q.text FROM q JOIN ex USING (doc_id)),
-    nd AS (SELECT MIN(doc_id) AS doc_id FROM e2
-           GROUP BY md5(array_to_string(string_split(text,' ')[1:10], ' '))),
-    fin AS (SELECT e2.doc_id, e2.lang, e2.text FROM e2 JOIN nd USING (doc_id))"""
-
-
 def _curated_fin(t):
     """Spark twin of _CURATION_FIN_SQL: quality filter (d02 criteria) →
     exact dedup keep-first → prefix near-dup removal. Returns the
@@ -2309,26 +2112,10 @@ def _curated_fin(t):
     "d38_curation_containment",
     f"""
     WITH {_CURATION_FIN_SQL},
-    w AS (SELECT doc_id, unnest(string_split(text,' ')) AS wd,
-                 generate_subscripts(string_split(text,' '),1) AS i
-          FROM fin),
-    sh AS (SELECT doc_id,
-                  wd || ' ' || lead(wd,1) OVER win || ' ' || lead(wd,2) OVER win AS shingle
-           FROM w WINDOW win AS (PARTITION BY doc_id ORDER BY i)
-           QUALIFY lead(wd,2) OVER win IS NOT NULL),
-    shd AS (SELECT DISTINCT doc_id, shingle FROM sh),
-    informative AS (SELECT shingle FROM shd GROUP BY shingle
-                    HAVING COUNT(*) <= 50 AND COUNT(*) > 1),
-    shf AS (SELECT shd.doc_id, shd.shingle FROM shd JOIN informative USING (shingle)),
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM shf GROUP BY doc_id),
-    inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-              FROM shf a JOIN shf b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-              GROUP BY 1, 2),
-    cpairs AS (SELECT doc_a, doc_b FROM inter
-               JOIN sizes za ON za.doc_id = inter.doc_a
-               JOIN sizes zb ON zb.doc_id = inter.doc_b
-               WHERE CAST(n_inter AS DOUBLE)
-                       / CAST(LEAST(za.n_sh, zb.n_sh) AS DOUBLE) >= 0.25),
+    {ND.shingles_sql("fin")},
+    {ND.inverted_pairs_sql()},
+    cpairs AS (SELECT doc_a, doc_b FROM pstats
+               WHERE CAST(n_inter AS DOUBLE) / CAST(LEAST(n_a, n_b) AS DOUBLE) >= 0.25),
     toks AS (SELECT doc_id, length(string_split(text, ' ')) AS tok FROM fin),
     drops AS (SELECT DISTINCT CASE WHEN ta.tok < tb.tok
                                    THEN doc_a ELSE doc_b END AS doc_id
@@ -2480,16 +2267,9 @@ def d39_pii_redaction(t):
 
 @query(
     "d40_boilerplate_ngrams",
-    """
-    WITH w AS (
-      SELECT doc_id, lang, unnest(string_split(text,' ')) AS wd,
-             generate_subscripts(string_split(text,' '),1) AS i
-      FROM documents
-    ), sh AS (
-      SELECT doc_id, lang, wd || ' ' || lead(wd,1) OVER win AS shingle
-      FROM w WINDOW win AS (PARTITION BY doc_id ORDER BY i)
-      QUALIFY lead(wd,1) OVER win IS NOT NULL
-    ), shd AS (SELECT DISTINCT doc_id, lang, shingle FROM sh),
+    f"""
+    WITH {ND.shingles_sql(n=2, carry=("lang",))},
+    shd AS (SELECT DISTINCT doc_id, lang, shingle FROM sh),
     nd AS (SELECT lang, COUNT(*) AS n_docs FROM documents GROUP BY lang),
     df AS (SELECT lang, shingle, COUNT(*) AS cnt FROM shd GROUP BY 1, 2),
     boiler AS (
@@ -2894,12 +2674,8 @@ def epoch_shuffle_profile(docs, seed: str):
 @query(
     "d46_leakage_severity_histogram",
     f"""
-    WITH {_SHINGLE_CTES},
-    shd AS (SELECT DISTINCT doc_id, shingle FROM sh),
-    informative AS (
-      SELECT shingle FROM shd GROUP BY shingle
-      HAVING COUNT(*) <= 50 AND COUNT(*) > 1
-    ),
+    WITH {ND.shingles_sql()},
+    {ND.informative_sql()},
     shf AS (
       SELECT shd.doc_id, shd.shingle, {_ORACLE_BUCKET} AS bucket
       FROM shd JOIN informative USING (shingle)
@@ -3094,18 +2870,8 @@ def d47_chunk_substring_dedup(t):
 
 @query(
     "d48_source_overlap_matrix",
-    """
-    WITH w AS (
-      SELECT doc_id, source, unnest(string_split(text,' ')) AS wd,
-             generate_subscripts(string_split(text,' '),1) AS i
-      FROM documents
-    ),
-    sh AS (
-      SELECT source,
-             wd || ' ' || lead(wd,1) OVER win || ' ' || lead(wd,2) OVER win AS shingle
-      FROM w WINDOW win AS (PARTITION BY doc_id ORDER BY i)
-      QUALIFY lead(wd,2) OVER win IS NOT NULL
-    ),
+    f"""
+    WITH {ND.shingles_sql(carry=("source",))},
     ss AS (SELECT DISTINCT source, shingle FROM sh),
     shc AS (SELECT source, COUNT(*) AS n_sh FROM ss GROUP BY source),
     srcs AS (SELECT source FROM documents GROUP BY source),
@@ -3977,12 +3743,8 @@ def d54_rare_token_mass(t):
 @query(
     "d55_clean_train_split",
     f"""
-    WITH {_SHINGLE_CTES},
-    shd AS (SELECT DISTINCT doc_id, shingle FROM sh),
-    informative AS (
-      SELECT shingle FROM shd GROUP BY shingle
-      HAVING COUNT(*) <= 50 AND COUNT(*) > 1
-    ),
+    WITH {ND.shingles_sql()},
+    {ND.informative_sql()},
     shf AS (
       SELECT shd.doc_id, shd.shingle, {_ORACLE_BUCKET} AS bucket
       FROM shd JOIN informative USING (shingle)
@@ -4178,12 +3940,8 @@ _D56_SEED = "d56epoch1|"
 @query(
     "d56_end_to_end_curation",
     f"""
-    WITH {_SHINGLE_CTES},
-    shd AS (SELECT DISTINCT doc_id, shingle FROM sh),
-    informative AS (
-      SELECT shingle FROM shd GROUP BY shingle
-      HAVING COUNT(*) <= 50 AND COUNT(*) > 1
-    ),
+    WITH {ND.shingles_sql()},
+    {ND.informative_sql()},
     shf AS (
       SELECT shd.doc_id, shd.shingle, {_ORACLE_BUCKET} AS bucket
       FROM shd JOIN informative USING (shingle)
@@ -5111,23 +4869,8 @@ def d60_semdedup(t):
 @query(
     "d61_decontamination_span_masking",
     f"""
-    WITH w AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS wd,
-             generate_subscripts(string_split(text, ' '), 1) AS i
-      FROM documents
-    ),
-    sh3 AS (
-      SELECT doc_id, i,
-             wd || ' ' || lead(wd, 1) OVER win || ' ' || lead(wd, 2) OVER win
-               AS shingle
-      FROM w WINDOW win AS (PARTITION BY doc_id ORDER BY i)
-      QUALIFY lead(wd, 2) OVER win IS NOT NULL
-    ),
-    shd AS (SELECT DISTINCT doc_id, shingle FROM sh3),
-    informative AS (
-      SELECT shingle FROM shd GROUP BY shingle
-      HAVING COUNT(*) <= 50 AND COUNT(*) > 1
-    ),
+    WITH {ND.shingles_sql()},
+    {ND.informative_sql()},
     test_sh AS (
       SELECT DISTINCT s.shingle
       FROM shd s JOIN informative USING (shingle)
@@ -5135,7 +4878,7 @@ def d60_semdedup(t):
     ),
     hits AS (
       SELECT s.doc_id, s.i
-      FROM sh3 s JOIN test_sh USING (shingle)
+      FROM sh s JOIN test_sh USING (shingle)
       WHERE ({_ORACLE_BUCKET.replace('doc_id', 's.doc_id')}) < 80
     ),
     pos AS (
@@ -5637,83 +5380,11 @@ def d63_split_drift_ks(t):
 
 # ------------------------------------------- near-dup doc clusters
 
-def _minhash_graph_ctes(
-    num_hashes: int = 8,
-    bands: int = 4,
-    threshold: float = 0.5,
-    source: str = "documents",
-    prelude: str = "",
-) -> str:
-    """The shared verified-near-dup-graph CTE prefix (shingles ->
-    MinHash signatures -> banded candidates -> exact-Jaccard verified
-    pairs -> undirected edges -> recursive-walk component labels) —
-    one definition behind the d65, d74, and d89 oracles. ``source``
-    names the (doc_id, text) relation the graph builds over;
-    ``prelude`` injects CTEs ahead of it (d89's exact-dup collapse)."""
-    r = num_hashes // bands
-    sig_cols = ", ".join(
-        f"min(md5('{k}:' || shingle)) AS mh{k}" for k in range(num_hashes)
-    )
-    band_selects = "\n      UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, md5({key}) AS key FROM sig".format(
-            b=b,
-            key=" || '|' || ".join(f"mh{b * r + i}" for i in range(r)),
-        )
-        for b in range(bands)
-    )
-    return f"""
-    WITH RECURSIVE {prelude}w AS (
-      SELECT doc_id, unnest(string_split(text,' ')) AS wd,
-             generate_subscripts(string_split(text,' '),1) AS i
-      FROM {source}
-    ),
-    sh AS (
-      SELECT doc_id,
-             wd || ' ' || lead(wd,1) OVER win || ' ' || lead(wd,2) OVER win AS shingle
-      FROM w WINDOW win AS (PARTITION BY doc_id ORDER BY i)
-      QUALIFY lead(wd,2) OVER win IS NOT NULL
-    ),
-    sig AS (SELECT doc_id, {sig_cols} FROM sh GROUP BY doc_id),
-    bands AS ({band_selects}),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-    ),
-    shd AS (SELECT DISTINCT doc_id, shingle FROM sh),
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM shd GROUP BY doc_id),
-    inter AS (
-      SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-      FROM cand c
-      JOIN shd sa ON sa.doc_id = c.doc_a
-      JOIN shd sb ON sb.doc_id = c.doc_b AND sb.shingle = sa.shingle
-      GROUP BY c.doc_a, c.doc_b
-    ),
-    vp AS (
-      SELECT i.doc_a, i.doc_b
-      FROM inter i
-      JOIN sizes za ON za.doc_id = i.doc_a
-      JOIN sizes zb ON zb.doc_id = i.doc_b
-      WHERE CAST(i.n_inter AS DOUBLE)
-              / CAST(za.n_sh + zb.n_sh - i.n_inter AS DOUBLE) >= {threshold}
-    ),
-    edges AS (
-      SELECT doc_a AS e_src, doc_b AS e_dst FROM vp
-      UNION SELECT doc_b, doc_a FROM vp
-    ),
-    nodes AS (SELECT DISTINCT e_src AS node FROM edges),
-    walk(node, comp) AS (
-      SELECT node, node FROM nodes
-      UNION
-      SELECT e.e_dst, w2.comp FROM walk w2 JOIN edges e ON e.e_src = w2.node
-    ),
-    lab AS (SELECT node, MIN(comp) AS component FROM walk GROUP BY node)"""
-
-
-def _minhash_cluster_oracle(
-    num_hashes: int = 8, bands: int = 4, threshold: float = 0.5
-) -> str:
-    return f"""{_minhash_graph_ctes(num_hashes, bands, threshold)},
+@query(
+    "d65_neardup_doc_clusters",
+    f"""
+    WITH RECURSIVE {_NEARDUP_CTES},
+    {ND.components_sql()},
     tk AS (SELECT doc_id, length(string_split(text, ' ')) AS n_tokens
            FROM documents)
     SELECT CAST(lab.component AS BIGINT) AS component,
@@ -5724,12 +5395,7 @@ def _minhash_cluster_oracle(
                     THEN tk.n_tokens ELSE 0 END) AS BIGINT) AS dup_tokens
     FROM lab JOIN tk ON tk.doc_id = lab.node
     GROUP BY lab.component ORDER BY component
-    """
-
-
-@query(
-    "d65_neardup_doc_clusters",
-    _minhash_cluster_oracle(),
+    """,
     tags=("llm", "dedup", "graph"),
     tier="diagnostic",
     production_twin="d99_weighted_neardup_clusters",
@@ -6300,16 +5966,8 @@ def e21_activation_latency(t):
 @query(
     "d68_test_doc_bigram_novelty",
     f"""
-    WITH w AS (
-      SELECT doc_id, unnest(string_split(text,' ')) AS wd,
-             generate_subscripts(string_split(text,' '),1) AS i
-      FROM documents
-    ),
-    bg AS (
-      SELECT doc_id, i, wd || ' ' || lead(wd,1) OVER win AS bigram
-      FROM w WINDOW win AS (PARTITION BY doc_id ORDER BY i)
-      QUALIFY lead(wd,1) OVER win IS NOT NULL
-    ),
+    WITH {ND.shingles_sql(n=2)},
+    bg AS (SELECT doc_id, i, shingle AS bigram FROM sh),
     b AS (SELECT doc_id, lang, {_ORACLE_BUCKET} AS bucket FROM documents),
     train_bg AS (
       SELECT DISTINCT bigram FROM bg JOIN b USING (doc_id)
@@ -6885,17 +6543,8 @@ _HLL_REG_SPARK, _HLL_RHO_SPARK = _hll_fields_sql("sh", "string")
 @query(
     "d72_hll_distinct_sketch",
     f"""
-    WITH w AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS wd,
-             generate_subscripts(string_split(text, ' '), 1) AS i
-      FROM documents
-    ),
-    occ AS (
-      SELECT wd || ' ' || lead(wd, 1) OVER win || ' '
-                || lead(wd, 2) OVER win AS sh
-      FROM w WINDOW win AS (PARTITION BY doc_id ORDER BY i)
-      QUALIFY lead(wd, 2) OVER win IS NOT NULL
-    ),
+    WITH {ND.shingles_sql()},
+    occ AS (SELECT shingle AS sh FROM sh),
     hashed AS (
       SELECT sh, ({_HLL_REG_SQL}) AS reg, ({_HLL_RHO_SQL}) AS rho FROM occ
     ),
@@ -7192,7 +6841,9 @@ def _pr_iter_sql(k: int, weighted: bool = False) -> str:
 
 @query(
     "d74_pagerank_canonical_doc",
-    f"""{_minhash_graph_ctes()},
+    f"""
+    WITH RECURSIVE {_NEARDUP_CTES},
+    {ND.components_sql()},
     deg AS (SELECT e_src, CAST(COUNT(*) AS BIGINT) AS deg
             FROM edges GROUP BY e_src),
     r0 AS (SELECT node, CAST({_PR_SCALE} AS BIGINT) AS r FROM nodes),
@@ -7780,12 +7431,8 @@ def d77_ivfpq_rerank_topk(t):
 @query(
     "d78_decontamination_certificate",
     f"""
-    WITH {_SHINGLE_CTES},
-    shd AS (SELECT DISTINCT doc_id, shingle FROM sh),
-    informative AS (
-      SELECT shingle FROM shd GROUP BY shingle
-      HAVING COUNT(*) <= 50 AND COUNT(*) > 1
-    ),
+    WITH {ND.shingles_sql()},
+    {ND.informative_sql()},
     shf AS (
       SELECT shd.doc_id, shd.shingle, {_ORACLE_BUCKET} AS bucket
       FROM shd JOIN informative USING (shingle)
@@ -9576,16 +9223,12 @@ _D87_REVIEW_MAX = 8
 @query(
     "d87_bigram_surprisal_filter",
     f"""
-    WITH w AS (
-      SELECT doc_id, unnest(string_split(text,' ')) AS wd,
-             generate_subscripts(string_split(text,' '),1) AS i
-      FROM documents
-    ),
-    bgx AS (
+    WITH {ND.words_sql()},
+    bg AS (
       SELECT doc_id, wd AS w1, lead(wd,1) OVER win AS w2
       FROM w WINDOW win AS (PARTITION BY doc_id ORDER BY i)
+      QUALIFY lead(wd,1) OVER win IS NOT NULL
     ),
-    bg AS (SELECT doc_id, w1, w2 FROM bgx WHERE w2 IS NOT NULL),
     b AS (SELECT doc_id, lang, {_ORACLE_BUCKET} AS bucket FROM documents),
     train AS (
       SELECT bg.w1, bg.w2 FROM bg JOIN b USING (doc_id)
@@ -10032,17 +9675,19 @@ def d88_heaps_vocab_growth(t):
 
 # -------------------- d89: weighted PageRank over collapsed dup nodes
 
-_D89_PRELUDE = """reps AS (
-      SELECT MIN(doc_id) AS doc_id, MIN(text) AS text,
-             CAST(COUNT(*) AS BIGINT) AS wt
-      FROM documents GROUP BY md5(text)
-    ),
-    """
+# The d89/d99 graph: exact-dup collapse, then d07's chain and the
+# component walk over the representatives.
+_REP_GRAPH_CTES = f"""{ND.reps_sql()},
+    {ND.shingles_sql("reps")},
+    {ND.minhash_sql()},
+    {ND.verify_self_sql(0.5)},
+    {ND.components_sql()}"""
 
 
 @query(
     "d89_weighted_pagerank_canonical",
-    f"""{_minhash_graph_ctes(source="reps", prelude=_D89_PRELUDE)},
+    f"""
+    WITH RECURSIVE {_REP_GRAPH_CTES},
     deg AS (SELECT e_src, CAST(COUNT(*) AS BIGINT) AS deg
             FROM edges GROUP BY e_src),
     nw AS (SELECT doc_id AS node, wt FROM reps),
@@ -10098,13 +9743,7 @@ def d89_weighted_pagerank_canonical(t):
     round shuffles the collapsed edge set once. This is the d56
     tier ordering (exact -> near-dup) applied to d74's contract."""
     reps = tracked_persist(
-        t.documents.groupBy(F.md5("text").alias("f"))
-        .agg(
-            F.min("doc_id").alias("doc_id"),
-            F.min("text").alias("text"),
-            F.count(F.lit(1)).alias("wt"),
-        )
-        .select("doc_id", "text", "wt")
+        ND.collapse_exact(t.documents, rep="doc_id").select("doc_id", "text", "wt")
     )
     # localCheckpoint, not persist (r14, guide §3.3/§2.4): the verified
     # pair set is consumed by BOTH PageRank edge building and CC, and
@@ -11238,39 +10877,11 @@ _D96_CUTS = (50, 70, 90)  # Jaccard thresholds, percent
 @query(
     "d96_dedup_threshold_calibration",
     f"""
-    WITH w AS (
-      SELECT doc_id, unnest(string_split(text,' ')) AS wd,
-             generate_subscripts(string_split(text,' '),1) AS i
-      FROM documents
-    ),
-    sh AS (
-      SELECT doc_id,
-             wd || ' ' || lead(wd,1) OVER win || ' ' || lead(wd,2) OVER win
-               AS shingle
-      FROM w WINDOW win AS (PARTITION BY doc_id ORDER BY i)
-      QUALIFY lead(wd,2) OVER win IS NOT NULL
-    ),
-    shd AS (SELECT DISTINCT doc_id, shingle FROM sh),
-    informative AS (
-      SELECT shingle FROM shd GROUP BY shingle
-      HAVING COUNT(*) <= 50 AND COUNT(*) > 1
-    ),
-    shf AS (
-      SELECT shd.doc_id, shd.shingle FROM shd
-      JOIN informative USING (shingle)
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM shf GROUP BY doc_id),
+    WITH {ND.shingles_sql()},
+    {ND.inverted_pairs_sql()},
     stats AS (
-      SELECT i.doc_a, i.doc_b, i.n_inter,
-             za.n_sh + zb.n_sh - i.n_inter AS n_union
-      FROM (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-        FROM shf a JOIN shf b
-          ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-      ) i
-      JOIN sizes za ON za.doc_id = i.doc_a
-      JOIN sizes zb ON zb.doc_id = i.doc_b
+      SELECT doc_a, doc_b, n_inter, n_a + n_b - n_inter AS n_union
+      FROM pstats
     ),
     cuts AS (
       SELECT unnest(ARRAY{list(_D96_CUTS)}) AS threshold_pct
@@ -11574,7 +11185,8 @@ def d98_duplication_profile(t):
 
 @query(
     "d99_weighted_neardup_clusters",
-    f"""{_minhash_graph_ctes(source="reps", prelude=_D89_PRELUDE)},
+    f"""
+    WITH RECURSIVE {_REP_GRAPH_CTES},
     tk AS (SELECT doc_id AS node, wt,
                   length(string_split(text, ' ')) AS n_tok
            FROM reps),
@@ -11635,87 +11247,32 @@ def d99_weighted_neardup_clusters(t):
     rounds; singletons are a broadcast-free left-anti join. Measured
     at 100x duplication in SCALING.md alongside d89."""
     reps = tracked_persist(
-        t.documents.groupBy(F.md5("text").alias("f"))
-        .agg(
-            F.min("doc_id").alias("doc_id"),
-            F.min("text").alias("text"),
-            F.count(F.lit(1)).alias("wt"),
-        )
-        .select("doc_id", "text", "wt")
+        ND.collapse_exact(t.documents, rep="doc_id").select("doc_id", "text", "wt")
     )
     pairs = DD.minhash_lsh_pairs(
         reps, num_hashes=8, bands=4, jaccard_threshold=0.5
     ).select("doc_a", "doc_b")
     comps = GR.connected_components(pairs, pairs_unique=True)
-    singles = (
-        reps.filter(F.col("wt") > 1)
-        .join(comps.select(F.col("node")), reps.doc_id == F.col("node"), "left_anti")
-        .select(
-            F.col("doc_id").alias("node"), F.col("doc_id").alias("component")
-        )
-    )
-    allc = comps.select("node", "component").union(singles)
     tk = reps.select(
         F.col("doc_id").alias("node"),
         "wt",
         T.token_count("text").alias("n_tok"),
     )
-    canon_tok = F.min(
-        F.struct(F.col("node").alias("i"), F.col("n_tok").alias("t"))
-    )["t"]
-    return (
-        allc.join(tk, "node")
-        .groupBy("component")
-        .agg(
-            F.count(F.lit(1)).alias("n_reps"),
-            F.sum("wt").cast("long").alias("total_docs"),
-            F.min("node").alias("canonical_doc"),
-            F.sum(F.col("wt") * F.col("n_tok")).cast("long").alias("total_tokens"),
-            (F.sum(F.col("wt") * F.col("n_tok")) - canon_tok)
-            .cast("long")
-            .alias("dup_tokens"),
-        )
-        .orderBy("component")
-    )
+    return ND.weighted_rollup(tk, comps)
 
 
 # --------- d100: incremental near-dup ingest (new batch vs corpus)
 
 _D100_NH, _D100_NB = 8, 4  # the d07 operating point
 
-
-def _d100_side_ctes(p: str, source: str) -> str:
-    """One side's shingle->signature->band-key CTE chain, suffixed
-    ``p`` — the d65 oracle chain parameterized so the incremental
-    oracle can build it for the incoming batch AND the corpus."""
-    r = _D100_NH // _D100_NB
-    sig_cols = ", ".join(
-        f"min(md5('{k}:' || shingle)) AS mh{k}" for k in range(_D100_NH)
-    )
-    band_selects = "\n      UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, md5({key}) AS key FROM sig{p}".format(
-            b=b,
-            p=p,
-            key=" || '|' || ".join(f"mh{b * r + i}" for i in range(r)),
-        )
-        for b in range(_D100_NB)
-    )
-    return f"""w{p} AS (
-      SELECT doc_id, unnest(string_split(text,' ')) AS wd,
-             generate_subscripts(string_split(text,' '),1) AS i
-      FROM {source}
-    ),
-    sh{p} AS (
-      SELECT doc_id,
-             wd || ' ' || lead(wd,1) OVER win || ' ' || lead(wd,2) OVER win
-               AS shingle
-      FROM w{p} WINDOW win AS (PARTITION BY doc_id ORDER BY i)
-      QUALIFY lead(wd,2) OVER win IS NOT NULL
-    ),
-    shd{p} AS (SELECT DISTINCT doc_id, shingle FROM sh{p}),
-    sig{p} AS (SELECT doc_id, {sig_cols} FROM sh{p} GROUP BY doc_id),
-    bands{p} AS ({band_selects}),
-    sz{p} AS (SELECT doc_id, COUNT(*) AS n FROM shd{p} GROUP BY 1)"""
+# d07's chain built twice — incoming survivors ``rem`` (suffix i) and
+# the corpus ``corp`` (suffix c) — then the one-sided band probe and
+# verify into ``ver``(new_doc, corpus_doc, jaccard). Shared with s24.
+_D100_PROBE_CTES = f"""{ND.shingles_sql("rem", suffix="i")},
+    {ND.minhash_sql(_D100_NH, _D100_NB, suffix="i")},
+    {ND.shingles_sql("corp", suffix="c")},
+    {ND.minhash_sql(_D100_NH, _D100_NB, suffix="c")},
+    {ND.verify_probe_sql("i", "c", 0.5)}"""
 
 
 @query(
@@ -11727,43 +11284,20 @@ def _d100_side_ctes(p: str, source: str) -> str:
     corp AS (
       SELECT doc_id, text FROM documents WHERE {_ORACLE_BUCKET} < 90
     ),
-    cfp AS (
-      SELECT md5(text) AS fp, MIN(doc_id) AS mdoc FROM corp GROUP BY 1
-    ),
+    {ND.reps_sql("corp", "cfp")},
     exact AS (
-      SELECT i.doc_id, c.mdoc FROM inc i JOIN cfp c ON c.fp = md5(i.text)
+      SELECT i.doc_id, c.doc_id AS mdoc
+      FROM inc i JOIN cfp c ON c.fp = md5(i.text)
     ),
     rem AS (
       SELECT doc_id, text FROM inc
       WHERE doc_id NOT IN (SELECT doc_id FROM exact)
     ),
-    {_d100_side_ctes("i", "rem")},
-    {_d100_side_ctes("c", "corp")},
-    cand AS (
-      SELECT DISTINCT a.doc_id AS new_doc, b.doc_id AS corpus_doc
-      FROM bandsi a JOIN bandsc b ON a.band = b.band AND a.key = b.key
-    ),
-    inter AS (
-      SELECT c.new_doc, c.corpus_doc, COUNT(*) AS ni
-      FROM cand c
-      JOIN shdi sa ON sa.doc_id = c.new_doc
-      JOIN shdc sb ON sb.doc_id = c.corpus_doc AND sb.shingle = sa.shingle
-      GROUP BY 1, 2
-    ),
-    ver AS (
-      SELECT i.new_doc, i.corpus_doc,
-             CAST(i.ni AS DOUBLE)
-               / CAST(za.n + zb.n - i.ni AS DOUBLE) AS j
-      FROM inter i
-      JOIN szi za ON za.doc_id = i.new_doc
-      JOIN szc zb ON zb.doc_id = i.corpus_doc
-      WHERE CAST(i.ni AS DOUBLE)
-              / CAST(za.n + zb.n - i.ni AS DOUBLE) >= 0.5
-    ),
+    {_D100_PROBE_CTES},
     best AS (
       SELECT new_doc,
-             (MAX({{'j': j, 'i': -corpus_doc}})).i * -1 AS match_doc,
-             (MAX({{'j': j, 'i': -corpus_doc}})).j AS jaccard
+             (MAX({{'j': jaccard, 'i': -corpus_doc}})).i * -1 AS match_doc,
+             (MAX({{'j': jaccard, 'i': -corpus_doc}})).j AS jaccard
       FROM ver GROUP BY 1
     )
     SELECT i.doc_id,
@@ -11810,9 +11344,7 @@ def d100_incremental_neardup_ingest(t):
     docs = t.documents
     inc = docs.filter(bucket >= 90).select("doc_id", "text")
     corp = docs.filter(bucket < 90).select("doc_id", "text")
-    cfp = corp.groupBy(F.md5("text").alias("fp")).agg(
-        F.min("doc_id").alias("mdoc")
-    )
+    cfp = ND.collapse_exact(corp, rep="mdoc").select("fp", "mdoc")
     exact = (
         inc.select("doc_id", F.md5("text").alias("fp"))
         .join(cfp, "fp")
@@ -11960,19 +11492,6 @@ def _neardup_cluster_store(corpus, split: int):
     )
 
 
-def _collapse_reps(docs):
-    """d99's exact tier: one rep per md5 fingerprint, weight =
-    multiplicity, rep id = min doc_id."""
-    return (
-        docs.groupBy(F.md5("text").alias("fp"))
-        .agg(
-            F.min("doc_id").alias("node"),
-            F.min("text").alias("text"),
-            F.count(F.lit(1)).alias("wt"),
-        )
-    )
-
-
 def _merge_delta_into_clusters(delta, stored_reps, stored_comps, shc, bc):
     """The incremental d99: merge a crawl delta into the STANDING
     weighted cluster state without ever re-pairing the corpus with
@@ -12007,14 +11526,14 @@ def _merge_delta_into_clusters(delta, stored_reps, stored_comps, shc, bc):
       already-converged pointer trees, so rounds stay at the log
       diameter of the NEW merges; no corpus^2 candidate work exists
       anywhere in the plan.
-    - rollup: d99's weighted rollup verbatim over the merged rep set
+    - rollup: d99's weighted_rollup over the merged rep set
       (bumped weights, relabeled nodes, novel singletons with wt > 1
       surfacing as components)."""
     st = _merge_delta_state(
         delta,
         {"reps": stored_reps, "comps": stored_comps, "sh": shc, "bands": bc},
     )
-    return _cluster_rollup(st["reps"], st["comps"])
+    return ND.weighted_rollup(st["reps"], st["comps"])
 
 
 def _merge_delta_state(delta, st):
@@ -12034,7 +11553,7 @@ def _merge_delta_state(delta, st):
         st["sh"],
         st["bands"],
     )
-    dfp = _collapse_reps(delta).select(
+    dfp = ND.collapse_exact(delta).select(
         "fp",
         F.col("node").alias("d_doc"),
         "text",
@@ -12233,34 +11752,6 @@ def durable_cluster_merge_sink(store_root):
     return sink
 
 
-def _cluster_rollup(merged_reps, comps):
-    """d99's weighted rollup verbatim over a merged rep set: exact-dup
-    groups (wt > 1) not in any component surface as singletons."""
-    singles = (
-        merged_reps.filter(F.col("wt") > 1)
-        .join(comps.select("node"), "node", "left_anti")
-        .select("node", F.col("node").alias("component"))
-    )
-    allc = comps.select("node", "component").union(singles)
-    canon_tok = F.min(
-        F.struct(F.col("node").alias("i"), F.col("n_tok").alias("t"))
-    )["t"]
-    return (
-        allc.join(merged_reps, "node")
-        .groupBy("component")
-        .agg(
-            F.count(F.lit(1)).alias("n_reps"),
-            F.sum("wt").cast("long").alias("total_docs"),
-            F.min("node").alias("canonical_doc"),
-            F.sum(F.col("wt") * F.col("n_tok")).cast("long").alias("total_tokens"),
-            (F.sum(F.col("wt") * F.col("n_tok")) - canon_tok)
-            .cast("long")
-            .alias("dup_tokens"),
-        )
-        .orderBy("component")
-    )
-
-
 from data_engineer_project_spark.queries.catalog import QUERIES as _REGISTRY
 
 # d101's contract IS "hash-equal to d99 from scratch on the full
@@ -12324,7 +11815,7 @@ def d101_incremental_cluster_merge(t):
         (p / "_SUCCESS").exists()
         for p in (reps_path, comps_path, sh_path, bands_path)
     ):
-        reps = tracked_persist(_collapse_reps(corpus))
+        reps = tracked_persist(ND.collapse_exact(corpus))
         shc_b = tracked_persist(
             DD.exploded_shingles(
                 reps.select("node", "text"), id_col="node"

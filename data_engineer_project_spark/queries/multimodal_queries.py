@@ -36,6 +36,11 @@ from data_engineer_project_spark.operators.multimodal import (
     sample_frames,
 )
 from data_engineer_project_spark.operators.cache import tracked_persist
+from data_engineer_project_spark.operators.neardup import (
+    collapse_exact,
+    components_sql,
+    reps_sql,
+)
 from data_engineer_project_spark.queries.catalog import query
 
 
@@ -472,17 +477,7 @@ _DHASH_CTES = f"""bl AS (
       FROM hashes a JOIN hashes b
         ON a.doc_id < b.doc_id AND bit_count(xor(a.phash, b.phash)) <= 3
     ),
-    edges AS (
-      SELECT doc_a AS e_src, doc_b AS e_dst FROM pairs
-      UNION SELECT doc_b, doc_a FROM pairs
-    ),
-    nodes AS (SELECT DISTINCT e_src AS node FROM edges),
-    walk(node, comp) AS (
-      SELECT node, node FROM nodes
-      UNION
-      SELECT e.e_dst, w.comp FROM walk w JOIN edges e ON e.e_src = w.node
-    ),
-    lab AS (SELECT node, MIN(comp) AS component FROM walk GROUP BY node)
+    {components_sql("pairs")}
     SELECT CAST(lab.component AS BIGINT) AS component,
            CAST(COUNT(*) AS BIGINT) AS cluster_size,
            CAST(MIN(lab.node) AS BIGINT) AS canonical_doc,
@@ -1297,21 +1292,13 @@ def m17_image_query_retrieval(t):
 # rep-level dHash chain: the m10 CTE constant re-pointed at the
 # exact-content reps (md5 collapse) instead of raw documents, so both
 # engines hash the SAME node set.
-_M18_CTES = (
-    """reps AS (
-      SELECT MIN(doc_id) AS doc_id, MIN(text) AS text,
-             CAST(COUNT(*) AS BIGINT) AS n_docs
-      FROM documents GROUP BY md5(text)
-    ),
-    """
-    + _DHASH_CTES.replace("FROM documents", "FROM reps")
-)
-
+_M18_DHASH_CTES = _DHASH_CTES.replace("FROM documents", "FROM reps")
 
 @query(
     "m18_image_neardup_verified",
     f"""
-    WITH RECURSIVE {_M18_CTES},
+    WITH RECURSIVE {reps_sql()},
+    {_M18_DHASH_CTES},
     hist AS (
       SELECT doc_id, v >> 4 AS bin, CAST(COUNT(*) AS BIGINT) AS c
       FROM bytes GROUP BY 1, 2
@@ -1346,20 +1333,10 @@ _M18_CTES = (
       JOIN sz sb ON sb.doc_id = l1.doc_b
       WHERE 4 * l1.d <= sa.n + sb.n
     ),
-    edges AS (
-      SELECT doc_a AS e_src, doc_b AS e_dst FROM pairs
-      UNION SELECT doc_b, doc_a FROM pairs
-    ),
-    nodes AS (SELECT DISTINCT e_src AS node FROM edges),
-    walk(node, comp) AS (
-      SELECT node, node FROM nodes
-      UNION
-      SELECT e.e_dst, w.comp FROM walk w JOIN edges e ON e.e_src = w.node
-    ),
-    lab AS (SELECT node, MIN(comp) AS component FROM walk GROUP BY node),
+    {components_sql("pairs")},
     singles AS (
       SELECT doc_id AS node, doc_id AS component FROM reps
-      WHERE n_docs > 1 AND doc_id NOT IN (SELECT node FROM nodes)
+      WHERE wt > 1 AND doc_id NOT IN (SELECT node FROM nodes)
     ),
     allc AS (
       SELECT node, component FROM lab
@@ -1367,7 +1344,7 @@ _M18_CTES = (
     )
     SELECT CAST(c.component AS BIGINT) AS component,
            CAST(COUNT(*) AS BIGINT) AS n_reps,
-           CAST(SUM(r.n_docs) AS BIGINT) AS cluster_size,
+           CAST(SUM(r.wt) AS BIGINT) AS cluster_size,
            CAST(MIN(c.node) AS BIGINT) AS canonical_doc
     FROM allc c JOIN reps r ON r.doc_id = c.node
     GROUP BY c.component ORDER BY component
@@ -1413,13 +1390,9 @@ def m18_image_neardup_verified(t):
     )
 
     reps = tracked_persist(
-        t.documents.groupBy(F.md5("text").alias("f"))
-        .agg(
-            F.min("doc_id").alias("doc_id"),
-            F.min("text").alias("text"),
-            F.count(F.lit(1)).alias("n_docs"),
+        collapse_exact(t.documents, rep="doc_id", weight="n_docs").select(
+            "doc_id", "text", "n_docs"
         )
-        .select("doc_id", "text", "n_docs")
     )
     media = reps.select(
         "doc_id", F.encode("text", "UTF-8").alias("media")

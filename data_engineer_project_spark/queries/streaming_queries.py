@@ -1733,7 +1733,9 @@ def s23_stream_nb_quality_gate(t):
     return run_to_memory_table(out, "nb_quality_gate", "append")
 
 
+from data_engineer_project_spark.operators.neardup import reps_sql  # noqa: E402
 from data_engineer_project_spark.queries.llm_pipeline import (  # noqa: E402
+    _D100_PROBE_CTES,
     _ORACLE_BUCKET as _D100_ORACLE_BUCKET,
     _SPARK_BUCKET as _D100_SPARK_BUCKET,
 )
@@ -1748,72 +1750,14 @@ from data_engineer_project_spark.queries.llm_pipeline import (  # noqa: E402
     corp AS (
       SELECT doc_id, text FROM documents WHERE {_D100_ORACLE_BUCKET} < 90
     ),
-    cfp AS (SELECT DISTINCT md5(text) AS fp FROM corp),
+    {reps_sql("corp", "cfp")},
     rem AS (
       SELECT doc_id, text FROM inc
       WHERE md5(text) NOT IN (SELECT fp FROM cfp)
     ),
-    wi AS (
-      SELECT doc_id, unnest(string_split(text,' ')) AS wd,
-             generate_subscripts(string_split(text,' '),1) AS i
-      FROM rem
-    ),
-    shi AS (
-      SELECT DISTINCT doc_id,
-             wd || ' ' || lead(wd,1) OVER win || ' ' || lead(wd,2) OVER win
-               AS shingle
-      FROM wi WINDOW win AS (PARTITION BY doc_id ORDER BY i)
-      QUALIFY lead(wd,2) OVER win IS NOT NULL
-    ),
-    wc AS (
-      SELECT doc_id, unnest(string_split(text,' ')) AS wd,
-             generate_subscripts(string_split(text,' '),1) AS i
-      FROM corp
-    ),
-    shc AS (
-      SELECT DISTINCT doc_id,
-             wd || ' ' || lead(wd,1) OVER win || ' ' || lead(wd,2) OVER win
-               AS shingle
-      FROM wc WINDOW win AS (PARTITION BY doc_id ORDER BY i)
-      QUALIFY lead(wd,2) OVER win IS NOT NULL
-    ),
-    sigi AS (
-      SELECT doc_id,
-             {", ".join(f"min(md5('{k}:' || shingle)) AS mh{k}" for k in range(8))}
-      FROM shi GROUP BY doc_id
-    ),
-    sigc AS (
-      SELECT doc_id,
-             {", ".join(f"min(md5('{k}:' || shingle)) AS mh{k}" for k in range(8))}
-      FROM shc GROUP BY doc_id
-    ),
-    bi AS ({" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, md5(mh{2*b} || '|' || mh{2*b+1}) AS key FROM sigi"
-        for b in range(4))}),
-    bc AS ({" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, md5(mh{2*b} || '|' || mh{2*b+1}) AS key FROM sigc"
-        for b in range(4))}),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS new_doc, b.doc_id AS corpus_doc
-      FROM bi a JOIN bc b ON a.band = b.band AND a.key = b.key
-    ),
-    szi AS (SELECT doc_id, COUNT(*) AS n FROM shi GROUP BY 1),
-    szc AS (SELECT doc_id, COUNT(*) AS n FROM shc GROUP BY 1),
-    inter AS (
-      SELECT c.new_doc, c.corpus_doc, COUNT(*) AS ni
-      FROM cand c
-      JOIN shi sa ON sa.doc_id = c.new_doc
-      JOIN shc sb ON sb.doc_id = c.corpus_doc AND sb.shingle = sa.shingle
-      GROUP BY 1, 2
-    )
-    SELECT i.new_doc, i.corpus_doc,
-           CAST(i.ni AS DOUBLE) / CAST(za.n + zb.n - i.ni AS DOUBLE)
-             AS jaccard
-    FROM inter i
-    JOIN szi za ON za.doc_id = i.new_doc
-    JOIN szc zb ON zb.doc_id = i.corpus_doc
-    WHERE CAST(i.ni AS DOUBLE) / CAST(za.n + zb.n - i.ni AS DOUBLE) >= 0.5
-    ORDER BY i.new_doc, i.corpus_doc
+    {_D100_PROBE_CTES}
+    SELECT new_doc, corpus_doc, jaccard FROM ver
+    ORDER BY new_doc, corpus_doc
     """,
     tags=("streaming", "llm", "dedup", "incremental"),
 )
@@ -1994,9 +1938,8 @@ def s25_stream_cluster_maintenance(t):
     import data_engineer_project_spark.operators.graph as GR
     from data_engineer_project_spark.functions import text as T
     from data_engineer_project_spark.operators.cache import tracked_persist
+    from data_engineer_project_spark.operators import neardup as ND
     from data_engineer_project_spark.queries.llm_pipeline import (
-        _cluster_rollup,
-        _collapse_reps,
         _D100_NB,
         _D100_NH,
         _merge_delta_state,
@@ -2009,7 +1952,7 @@ def s25_stream_cluster_maintenance(t):
 
     # standing state from the corpus partition (d101's cold path,
     # hermetic in-session here; the production form is its store)
-    reps = tracked_persist(_collapse_reps(corpus))
+    reps = tracked_persist(ND.collapse_exact(corpus))
     shc = tracked_persist(
         DD.exploded_shingles(reps.select("node", "text"), id_col="node").distinct()
     )
@@ -2069,7 +2012,7 @@ def s25_stream_cluster_maintenance(t):
             "s25 source: last micro-batch (file source -> foreachBatch)", q
         )
         st = holder["st"]
-        out = _cluster_rollup(st["reps"], st["comps"])
+        out = ND.weighted_rollup(st["reps"], st["comps"])
         # surface the batch count for the multi-batch pytest without
         # changing the driver-facing schema
         out._s25_batches = holder["batches"]

@@ -88,6 +88,58 @@ def test_snowflake_hierarchy_consistent(model):
     assert unresolved.count() == 0
 
 
+def test_unknown_rows_plan_without_python_scan(spark, tmp_path, monkeypatch):
+    """Each dimension's Unknown row is typed literals over a one-row
+    JVM range: the schema and the SK=0 row equal what the
+    createDataFrame form built from the same tuple, and no dimension
+    plans a Python RDD scan. Sources are read back from parquet so
+    only the Unknown branch could contribute one."""
+    from data_engineer_project_spark.plans import star as S
+
+    raw = fixtures.dataframes(spark)
+
+    class FromParquet(dict):
+        def __missing__(self, name):
+            raw[name].write.parquet(str(tmp_path / name))
+            self[name] = spark.read.parquet(str(tmp_path / name))
+            return self[name]
+
+    src = FromParquet()
+    dim_fns = [
+        S.build_dim_date,
+        S.build_dim_member,
+        S.build_dim_plan,
+        S.build_dim_provider,
+        S.build_dim_diagnosis,
+        S.build_dim_procedure,
+        S.build_dim_pos,
+        S.build_dim_quality_measure,
+    ]
+
+    def unknown_row(dim):
+        sk = dim.columns[0]
+        unk = S.UNKNOWN_DATE_SK if sk == "DateSK" else 0
+        return dim.filter(dim[sk] == unk).collect()
+
+    got = {b.__name__: b(src) for b in dim_fns}
+    for name, dim in got.items():
+        plan = dim._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, name
+    with monkeypatch.context() as m:
+        m.setattr(
+            S,
+            "_with_unknown",
+            lambda dim, row: dim.sparkSession.createDataFrame(
+                [row], schema=dim.schema
+            ).union(dim),
+        )
+        before = {b.__name__: b(src) for b in dim_fns}
+    for name, dim in got.items():
+        assert dim.schema == before[name].schema, name
+        row = unknown_row(dim)
+        assert len(row) == 1 and row == unknown_row(before[name]), name
+
+
 @pytest.mark.slow
 def test_write_star_partitioned_roundtrip(spark, tmp_path):
     """DW sink: dims plain parquet, fact_claims_line partitioned by

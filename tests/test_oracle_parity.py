@@ -37,7 +37,7 @@ _RECENTLY_TOUCHED = {
     "d31_semantic_decontamination",
     "d34_containment_dedup",
     "d38_curation_containment",
-    "d65_neardup_clusters",
+    "d65_neardup_doc_clusters",
     "d82_ivfpq_recall",
     "d86_knn_label_probe",
     "d93_train_test_cosine_overlap",
@@ -45,8 +45,33 @@ _RECENTLY_TOUCHED = {
     "d96_dedup_threshold_calibration",
     "d100_incremental_neardup_ingest",
     "m10_image_neardup_clusters",
-    "s24_stream_dedup_gate",
+    "s24_stream_neardup_probe",
     "s25_stream_cluster_maintenance",
+    # ported to the near-dup oracle CTEs (operators/neardup.py):
+    # every query whose oracle text or Spark code changed with it
+    "d04_fingerprints",
+    "d07_dedup_minhash_lsh",
+    "d12_dedup_ngram_jaccard",
+    "d15_curation_pipeline",
+    "d24_repetition_ratio",
+    "d25_decontamination",
+    "d36_ngram_novelty",
+    "d40_boilerplate_ngrams",
+    "d46_leakage_severity_histogram",
+    "d48_source_overlap_matrix",
+    "d55_clean_train_split",
+    "d56_end_to_end_curation",
+    "d61_decontamination_span_masking",
+    "d66_contamination_method_attribution",
+    "d68_test_doc_bigram_novelty",
+    "d72_hll_distinct_sketch",
+    "d74_pagerank_canonical_doc",
+    "d78_decontamination_certificate",
+    "d87_bigram_surprisal_filter",
+    "d89_weighted_pagerank_canonical",
+    "d99_weighted_neardup_clusters",
+    "d101_incremental_cluster_merge",
+    "m18_image_neardup_verified",
 }
 
 _DEFAULT_LANE = set(BENCH_QUERIES) | set(SPOT_CHECK_QUERIES) | _RECENTLY_TOUCHED

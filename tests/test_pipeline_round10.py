@@ -216,8 +216,10 @@ def test_d101_merge_bridges_and_relabels(spark):
     from data_engineer_project_spark.operators import graph as GR
     from data_engineer_project_spark.operators.cache import release_all
     from data_engineer_project_spark.functions import text as T
+    from data_engineer_project_spark.operators.neardup import (
+        collapse_exact as _collapse_reps,
+    )
     from data_engineer_project_spark.queries.llm_pipeline import (
-        _collapse_reps,
         _merge_delta_into_clusters,
     )
 
@@ -1467,9 +1469,11 @@ def test_merge_state_chain_is_partition_invariant(spark):
     from data_engineer_project_spark.functions import text as T
     from data_engineer_project_spark.operators.cache import release_all, tracked_persist
     from data_engineer_project_spark.queries import QUERIES
+    from data_engineer_project_spark.operators.neardup import (
+        collapse_exact as _collapse_reps,
+        weighted_rollup as _cluster_rollup,
+    )
     from data_engineer_project_spark.queries.llm_pipeline import (
-        _cluster_rollup,
-        _collapse_reps,
         _D100_NB,
         _D100_NH,
         _merge_delta_state,

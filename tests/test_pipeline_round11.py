@@ -287,9 +287,11 @@ def test_durable_cluster_merge_survives_midstream_crash(spark, tmp_path):
     from data_engineer_project_spark.functions import text as T
     from data_engineer_project_spark.operators.cache import release_all, tracked_persist
     from data_engineer_project_spark.queries import QUERIES
+    from data_engineer_project_spark.operators.neardup import (
+        collapse_exact as _collapse_reps,
+        weighted_rollup as _cluster_rollup,
+    )
     from data_engineer_project_spark.queries.llm_pipeline import (
-        _cluster_rollup,
-        _collapse_reps,
         _D100_NB,
         _D100_NH,
         _SPARK_BUCKET,
