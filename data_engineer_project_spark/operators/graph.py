@@ -1,8 +1,28 @@
 """Connected components over a pair/edge list — the step that turns
 near-duplicate PAIRS (MinHash-LSH / SimHash output) into duplicate
-CLUSTERS with one canonical survivor each. Spark has no graph operator
-in the DataFrame API; this is iterative min-label propagation built
-from joins + aggregates (SURVEY custom-operator tier (a)).
+CLUSTERS with one canonical survivor each: every node is labeled with
+the minimum node id of its component. Spark has no graph operator in
+the DataFrame API, so the plan is chosen from the edge count seen at
+run time, not fixed up front (Shark's partial-DAG idea, SIGMOD 2013).
+
+DRIVER PATH (graphs of at most ``_LOCAL_MAX_EDGES`` edges — every
+bench-scale consumer). One bounded Arrow collect (``limit(bound + 1)``)
+pulls the edge frame the loop would read to the driver; if it fits, a
+numpy kernel labels it there — dense ids from ``np.unique``, then the
+same min-label + pointer-jump iteration as the loop below, until
+nothing changes — and the labels come back through
+``createDataFrame(pyarrow.Table)``, which plans as a
+``LocalTableScan``: no Python worker, no per-round jobs. At bench scale
+the loop paid for job overhead, not graph work (d99's few hundred edges
+cost 30-31 stages). The gate is the REAL edge count, never a
+source-size estimate: d99's pairs come from a persisted frame with no
+input files, so "no estimate = small" would send any graph to the
+driver. A one-task ``repartition(1).mapInPandas`` form of this path was
+measured and rejected: it brought a Python worker (and its decoder
+sidecar) into d99 and slowed the codec slots that reuse the workers.
+
+LOOP PATH (larger graphs). Iterative min-label propagation built from
+joins + aggregates (SURVEY custom-operator tier (a)).
 
 Each iteration does two label moves: (1) every node takes the minimum
 label among itself and its neighbors (one equi-join + one groupBy-min,
@@ -40,25 +60,94 @@ pairs cannot contain duplicates.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from data_engineer_project_spark.operators import plancap
 
-# Diagnostics of the most recent connected_components call (rounds
-# taken, converged flag). The loop's cost model is O(log diameter)
-# rounds — scale tooling (tools/scale_stress.py, tests) reads this to
-# assert the logarithmic claim empirically instead of trusting the
-# docstring. Overwritten per call; no extra Spark actions.
+# Diagnostics of the most recent connected_components call: the path
+# taken ("driver" or "loop"), rounds (loop rounds, or the driver
+# kernel's iterations — both count the confirming last one) and the
+# converged flag. Both paths cost O(log diameter) rounds — scale
+# tooling (tools/scale_stress.py, tests) reads this to assert the
+# logarithmic claim empirically instead of trusting the docstring.
+# Overwritten per call; no extra Spark actions.
 LAST_RUN_STATS: dict = {}
 
 _INTEGRAL_ID_TYPES = ("byte", "short", "integer", "long", "decimal")
+
+# Largest edge frame labeled on the driver. 1M int64 pairs are ~16 MB
+# of Arrow; their labels (≤ 2M nodes × 16 B) stay under Spark's 48 MB
+# arrow.localRelationThreshold, so the result plans as a LocalTableScan.
+_LOCAL_MAX_EDGES = 1 << 20
+
+
+def _require_integral(df: DataFrame, cols) -> None:
+    # The loop's convergence probe sums labels as decimal; a
+    # non-numeric id type would cast to NULL, make every checksum None,
+    # and stop the loop after one round with wrong components. Enforce
+    # the contract on both paths instead of silently mislabeling
+    # (string ids: map to dense ints first, e.g. xxhash64 or a
+    # zipWithIndex-style dimension).
+    for col in cols:
+        id_type = df.schema[col].dataType.typeName()
+        if id_type not in _INTEGRAL_ID_TYPES:
+            raise ValueError(
+                f"connected_components requires integral node ids, got "
+                f"{id_type} for {col!r}"
+            )
+
+
+def _min_label_kernel(a: np.ndarray, b: np.ndarray, n: int) -> tuple[np.ndarray, int]:
+    """The loop's label moves on the driver, over dense ids ``0..n-1``
+    and undirected edges ``(a[i], b[i])``: every node takes the minimum
+    label among itself and its neighbors, then pointer-jumps (label :=
+    label[label]), until an iteration changes nothing. Returns (labels,
+    iterations including the confirming one) — O(log diameter)
+    iterations, like the loop's rounds."""
+    label = np.arange(n)
+    iters = 0
+    while True:
+        iters += 1
+        hop = label.copy()
+        np.minimum.at(hop, a, label[b])
+        np.minimum.at(hop, b, label[a])
+        hop = hop[hop]
+        if np.array_equal(hop, label):
+            return label, iters
+        label = hop
+
+
+def _solve_on_driver(edges: DataFrame) -> DataFrame | None:
+    """(node, component) for ``edges`` (two id columns of ONE type),
+    labeled on the driver — or None when the frame holds more than
+    ``_LOCAL_MAX_EDGES`` rows or a null id (the loop keeps its
+    semantics for those). Reads at most bound + 1 rows."""
+    tbl = edges.limit(_LOCAL_MAX_EDGES + 1).toArrow()
+    if tbl.num_rows > _LOCAL_MAX_EDGES or any(c.null_count for c in tbl.columns):
+        return None
+    a, b = (c.to_numpy() for c in tbl.columns)
+    # np.unique sorts, so the minimum dense id is the minimum node id
+    nodes, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
+    label, iters = _min_label_kernel(idx[: len(a)], idx[len(a):], len(nodes))
+    LAST_RUN_STATS.clear()
+    LAST_RUN_STATS.update({"path": "driver", "rounds": iters, "converged": True})
+    id_type = edges.schema[0].dataType
+    schema = StructType(
+        [StructField("node", id_type), StructField("component", id_type)]
+    )
+    return edges.sparkSession.createDataFrame(
+        pa.table({"node": nodes, "component": nodes[label]}), schema
+    )
 
 
 def connected_components_from_edges(
     und: DataFrame, max_iter: int = 20
 ) -> DataFrame:
-    """Min-label propagation over a PREBUILT undirected edge set —
+    """Connected components over a PREBUILT undirected edge set —
     the shared-exchange entry point for callers that already hold the
     mirrored edge table for their own use (d89/d74 reuse it across
     the PageRank rounds, so building it twice would double the edge
@@ -66,18 +155,21 @@ def connected_components_from_edges(
 
     ``und`` must have columns ``e_src``/``e_dst`` with BOTH directions
     of every edge present and no duplicate rows; it should be
-    persisted by the caller (it is read every round; this function
-    never unpersists it) and ideally hash-partitioned by ``e_src`` so
-    the per-round neighbor join adds no edge-set exchange. Returns
-    (node, component).
+    persisted by the caller (the driver path reads it once, the loop
+    every round; this function never unpersists it) and ideally
+    hash-partitioned by ``e_src`` so the per-round neighbor join adds
+    no edge-set exchange. Returns (node, component); ``max_iter``
+    bounds the loop's rounds only — the driver kernel always reaches
+    its fixpoint.
     """
-    for col in ("e_src", "e_dst"):
-        id_type = und.schema[col].dataType.typeName()
-        if id_type not in _INTEGRAL_ID_TYPES:
-            raise ValueError(
-                f"connected_components requires integral node ids, got "
-                f"{id_type} for {col!r}"
-            )
+    _require_integral(und, ("e_src", "e_dst"))
+    labels = _solve_on_driver(und.select("e_src", "e_dst"))
+    return labels if labels is not None else _label_loop(und, max_iter)
+
+
+def _label_loop(und: DataFrame, max_iter: int) -> DataFrame:
+    """The distributed min-label + pointer-jump loop over ``und``
+    (see the module docstring)."""
     # plan-audit hook: the edge pipeline is consumed HERE, inside the
     # loop-at-build operator, so this is where its plan is visible
     plancap.grab("cc input pair join", und)
@@ -144,7 +236,7 @@ def connected_components_from_edges(
         prev = cur
 
     LAST_RUN_STATS.clear()
-    LAST_RUN_STATS.update({"rounds": rounds, "converged": converged})
+    LAST_RUN_STATS.update({"path": "loop", "rounds": rounds, "converged": converged})
     if not converged:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
@@ -176,23 +268,13 @@ def connected_components(
     is skipped (performance only; duplicate edges would not change the
     labels, just the per-round cost).
     """
-    # The convergence probe sums labels as decimal; a non-numeric id
-    # type would cast to NULL, make every checksum None, and stop the
-    # loop after one round with wrong components. Enforce the contract
-    # instead of silently mislabeling (string ids: map to dense ints
-    # first, e.g. xxhash64 or a zipWithIndex-style dimension).
-    for col in (src, dst):
-        id_type = pairs.schema[col].dataType.typeName()
-        if id_type not in _INTEGRAL_ID_TYPES:
-            raise ValueError(
-                f"connected_components requires integral node ids, got "
-                f"{id_type} for {col!r}"
-            )
+    _require_integral(pairs, (src, dst))
     # The undirected union scans ``pairs`` TWICE in one materialization
     # — persist it through the union so expensive upstream pair plans
     # (banded LSH with the skew-guard grid, Jaccard verification)
-    # compute once, then release the handle: ``und`` is the persisted
-    # edge set every round actually reads.
+    # compute once, then release the handle: the driver path reads the
+    # forward edges once, and ``und`` is the persisted edge set every
+    # loop round actually reads.
     lvl = pairs.storageLevel
     caller_cached = lvl.useMemory or lvl.useDisk
     plancap.grab("cc input pair join", pairs)
@@ -203,11 +285,20 @@ def connected_components(
     ).repartition(F.col("e_src"))
     if not pairs_unique:
         und = und.dropDuplicates(["e_src", "e_dst"])
-    und = und.persist()
+    # one orientation per pair is enough for the driver kernel; both
+    # ids take the union's (widened) type, as the loop's labels do
+    id_type = und.schema["e_src"].dataType
     try:
-        labels = connected_components_from_edges(und, max_iter)
+        labels = _solve_on_driver(
+            fwd.select(*(F.col(c).cast(id_type) for c in ("e_src", "e_dst")))
+        )
+        if labels is None:
+            und = und.persist()
+            try:
+                labels = _label_loop(und, max_iter)
+            finally:
+                und.unpersist()
     finally:
-        und.unpersist()
         if not caller_cached:
             pairs_c.unpersist()
     return labels

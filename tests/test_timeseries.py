@@ -196,19 +196,24 @@ def test_connected_components_chain_and_islands(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
-def test_connected_components_long_chain_converges(spark):
+def test_connected_components_long_chain_converges(spark, monkeypatch):
     """A 100-edge path graph (diameter 100 >> max_iter) must still
     fully collapse: pointer jumping doubles label reach per round, so
     20 rounds cover diameters up to ~2^20. Plain one-hop min-label
     propagation would exhaust the budget and (before the fix) SILENTLY
     return a partially-merged labeling — the m10 Hamming-chain graphs
-    hit exactly this at sf0.1."""
+    hit exactly this at sf0.1. The driver-path bound is set to 0 so
+    this graph takes the distributed loop."""
+    from data_engineer_project_spark.operators import graph as G
     from data_engineer_project_spark.operators.graph import connected_components
+
+    monkeypatch.setattr(G, "_LOCAL_MAX_EDGES", 0)
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(100)], "doc_a bigint, doc_b bigint"
     )
     rows = connected_components(pairs).collect()
+    assert G.LAST_RUN_STATS["path"] == "loop"
     assert len(rows) == 101
     assert {r["component"] for r in rows} == {0}
 
@@ -295,14 +300,17 @@ def test_ohlc_order_key_handles_negative_event_ids(spark):
     assert got.close == 40.0  # same-ts tie broken by id: 4 > -7
 
 
-def test_connected_components_rounds_grow_logarithmically(spark):
+def test_connected_components_rounds_grow_logarithmically(spark, monkeypatch):
     """Round-6 scale pin: pointer jumping must converge in O(log D)
     rounds on a path graph of diameter D — the property that keeps m10
     viable on long Hamming chains. Measure rounds at D = 8, 64, 512 via
     graph.LAST_RUN_STATS: each 8x diameter step may add only a few
-    rounds (log2(8) = 3), never scale with D itself."""
+    rounds (log2(8) = 3), never scale with D itself. The driver-path
+    bound is set to 0 so these graphs take the distributed loop (the
+    driver kernel's twin pin is in test_graph_cc.py)."""
     from data_engineer_project_spark.operators import graph as G
 
+    monkeypatch.setattr(G, "_LOCAL_MAX_EDGES", 0)
     rounds = {}
     for d in (8, 64, 512):
         pairs = spark.createDataFrame(
@@ -314,6 +322,7 @@ def test_connected_components_rounds_grow_logarithmically(spark):
         }
         assert set(labels.values()) == {0}  # one component, min label
         assert G.LAST_RUN_STATS["converged"]
+        assert G.LAST_RUN_STATS["path"] == "loop"
         rounds[d] = G.LAST_RUN_STATS["rounds"]
     import math
 

@@ -34,7 +34,7 @@ This tool synthesizes a breadth decade from sf0.1:
 
 Measured slots (>= 6 per the round-9 verdict "done" bar), each with the
 invariants that certify linear behavior: wall time, output rows,
-CC rounds (graph.LAST_RUN_STATS), candidate-pair volume (d07), and
+CC path and rounds (graph.LAST_RUN_STATS), candidate-pair volume (d07), and
 skew-guard probe records (dedup.GUARD_STATS_LOG).
 
 Usage: python tools/breadth_stress.py [factor] [sf_dir] [runs]
@@ -207,6 +207,7 @@ def measure_media(spark, sf_dir: str, scale_label: str, runs: int = 2) -> None:
             dt = time.time() - t0
             extra = {
                 "n_clusters": len(rows),
+                "cc_path": G.LAST_RUN_STATS.get("path"),
                 "cc_rounds": G.LAST_RUN_STATS.get("rounds"),
             }
             best = dt if best is None else min(best, dt)
@@ -255,6 +256,7 @@ def measure(
         "d99_weighted_neardup_clusters",
         lambda rows: {
             "n_clusters": len(rows),
+            "cc_path": G.LAST_RUN_STATS.get("path"),
             "cc_rounds": G.LAST_RUN_STATS.get("rounds"),
             "converged": G.LAST_RUN_STATS.get("converged"),
         },
@@ -263,6 +265,7 @@ def measure(
         "m10_image_neardup_clusters",
         lambda rows: {
             "n_clusters": len(rows),
+            "cc_path": G.LAST_RUN_STATS.get("path"),
             "cc_rounds": G.LAST_RUN_STATS.get("rounds"),
             "converged": G.LAST_RUN_STATS.get("converged"),
         },
@@ -271,6 +274,7 @@ def measure(
         "d89_weighted_pagerank_canonical",
         lambda rows: {
             "n_clusters": len(rows),
+            "cc_path": G.LAST_RUN_STATS.get("path"),
             "cc_rounds": G.LAST_RUN_STATS.get("rounds"),
         },
     )
@@ -278,6 +282,7 @@ def measure(
         "d74_pagerank_canonical_doc",
         lambda rows: {
             "n_clusters": len(rows),
+            "cc_path": G.LAST_RUN_STATS.get("path"),
             "cc_rounds": G.LAST_RUN_STATS.get("rounds"),
         },
     )

@@ -10,7 +10,7 @@ replica cliques for the near-dup graph), events replicated with shifted
 event/user ids and time-shifted stamps (10x distinct users => 10x
 streaming state; 10x distinct hours) — then measures:
 
-- m10_image_neardup_clusters: wall time + CC rounds (graph.LAST_RUN_STATS),
+- m10_image_neardup_clusters: wall time + CC path and rounds (graph.LAST_RUN_STATS),
   asserting rounds stay in the O(log diameter) regime;
 - d47_chunk_substring_dedup: wall time (keep-first min(struct) under 10x
   hot-chunk multiplicity);
@@ -135,6 +135,7 @@ def measure(spark, sf_dir: str, scale_label: str, runs: int = 2) -> list[dict]:
     run_query(
         "m10_image_neardup_clusters",
         lambda rows: {
+            "cc_path": G.LAST_RUN_STATS.get("path"),
             "cc_rounds": G.LAST_RUN_STATS.get("rounds"),
             "converged": G.LAST_RUN_STATS.get("converged"),
             "n_clusters": len(rows),
@@ -188,6 +189,7 @@ def measure(spark, sf_dir: str, scale_label: str, runs: int = 2) -> list[dict]:
     run_query(
         "d65_neardup_doc_clusters",
         lambda rows: {
+            "cc_path": G.LAST_RUN_STATS.get("path"),
             "cc_rounds": G.LAST_RUN_STATS.get("rounds"),
             "converged": G.LAST_RUN_STATS.get("converged"),
             "n_clusters": len(rows),
@@ -241,6 +243,7 @@ def measure(spark, sf_dir: str, scale_label: str, runs: int = 2) -> list[dict]:
     run_query(
         "d74_pagerank_canonical_doc",
         lambda rows: {
+            "cc_path": G.LAST_RUN_STATS.get("path"),
             "cc_rounds": G.LAST_RUN_STATS.get("rounds"),
             "n_clusters": len(rows),
             "agree_pct": round(
