@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 
 from data_engineer_project_spark.functions import text as T
 from data_engineer_project_spark.operators.cache import tracked_persist
-from data_engineer_project_spark.operators.fanout import fanout_small_scan
+from data_engineer_project_spark.operators.fanout import is_large_source
 
 
 def exploded_shingles(
@@ -50,7 +50,6 @@ def exploded_shingles(
     text_col: str = "text",
     n: int = 3,
     extra_cols: tuple[str, ...] = (),
-    fanout: bool = False,
 ) -> DataFrame:
     """(id, [extra_cols...,] shingle) rows via posexplode + windowed
     lead — the relational shingle builder. ``extra_cols`` are carried
@@ -63,17 +62,6 @@ def exploded_shingles(
     whole-stage codegen; the lead window shuffles by doc id once and
     is what the DuckDB oracles compute too.
     """
-    # Guarded fan-out (r14, guide §2.4/§6), OPT-IN: the split+posexplode
-    # stage is welded to the scan, and a sub-split-size corpus arrives
-    # as ONE partition — the explode and the shuffle write feeding the
-    # lead window would run on one core regardless of cluster size.
-    # Callers set ``fanout=True`` only when ``df`` is scan-shaped (a
-    # base table or a filter over one): the guard introspects partition
-    # count via ``df.rdd``, and under AQE that MATERIALIZES any
-    # upstream exchanges — free on a scan, but a measured +0.5 s of
-    # duplicated stage work on intermediates (d101, r14 A/B).
-    if fanout:
-        df = fanout_small_scan(df)
     w = df.select(
         F.col(id_col),
         *[F.col(c) for c in extra_cols],
@@ -194,6 +182,36 @@ def _has_identityless_leaf(analyzed_plan: str) -> bool:
     )
 
 
+def _record_guard(stats: dict) -> None:
+    LAST_GUARD_STATS.clear()
+    LAST_GUARD_STATS.update(stats)
+    GUARD_STATS_LOG.append(stats)
+    del GUARD_STATS_LOG[:-_GUARD_LOG_MAX]
+
+
+def _plain_self_pairs(
+    rows: DataFrame, key_cols: list[str], id_col: str, carry: tuple[str, ...]
+) -> DataFrame:
+    """The unguarded self-equi-join: every (doc_a < doc_b) pair sharing
+    ``key_cols``, keys dropped — the guard's path whenever no bucket is
+    over the cap (probed or cached verdict)."""
+    a = rows.select(
+        *key_cols,
+        F.col(id_col).alias("doc_a"),
+        *[F.col(c).alias(f"{c}_a") for c in carry],
+    )
+    b = rows.select(
+        *key_cols,
+        F.col(id_col).alias("doc_b"),
+        *[F.col(c).alias(f"{c}_b") for c in carry],
+    )
+    return (
+        a.join(b, list(key_cols))
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .drop(*key_cols)
+    )
+
+
 def skew_guarded_self_pairs(
     rows: DataFrame,
     key_cols: list[str],
@@ -267,32 +285,16 @@ def skew_guarded_self_pairs(
             ident = None
     ck = (consumer, tuple(key_cols), id_col, cap, ident) if ident else None
     if ck is not None and _PROBE_VERDICT_CACHE.get(ck) == "plain":
-        stats = {
-            "consumer": consumer,
-            "hot_buckets": 0,
-            "max_nsplit": 0,
-            "path": "plain",
-            "cached": True,
-        }
-        LAST_GUARD_STATS.clear()
-        LAST_GUARD_STATS.update(stats)
-        GUARD_STATS_LOG.append(stats)
-        del GUARD_STATS_LOG[:-_GUARD_LOG_MAX]
-        a = rows.select(
-            *key_cols,
-            F.col(id_col).alias("doc_a"),
-            *[F.col(c).alias(f"{c}_a") for c in carry],
+        _record_guard(
+            {
+                "consumer": consumer,
+                "hot_buckets": 0,
+                "max_nsplit": 0,
+                "path": "plain",
+                "cached": True,
+            }
         )
-        b = rows.select(
-            *key_cols,
-            F.col(id_col).alias("doc_b"),
-            *[F.col(c).alias(f"{c}_b") for c in carry],
-        )
-        return (
-            a.join(b, list(key_cols))
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .drop(*key_cols)
-        )
+        return _plain_self_pairs(rows, key_cols, id_col, carry)
     lvl = rows.storageLevel
     if not (lvl.useMemory or lvl.useDisk):  # caller may have persisted
         rows = tracked_persist(rows)
@@ -319,30 +321,13 @@ def skew_guarded_self_pairs(
         "max_nsplit": int(probe["mx"]) if probe["mx"] is not None else 0,
         "path": "grid" if probe["n"] else "plain",
     }
-    LAST_GUARD_STATS.clear()
-    LAST_GUARD_STATS.update(stats)
-    GUARD_STATS_LOG.append(stats)
-    del GUARD_STATS_LOG[:-_GUARD_LOG_MAX]
-    if ck is not None and stats["path"] == "plain":
-        if len(_PROBE_VERDICT_CACHE) >= 256:
-            _PROBE_VERDICT_CACHE.clear()
-        _PROBE_VERDICT_CACHE[ck] = "plain"
+    _record_guard(stats)
     if stats["path"] == "plain":
-        a = rows.select(
-            *key_cols,
-            F.col(id_col).alias("doc_a"),
-            *[F.col(c).alias(f"{c}_a") for c in carry],
-        )
-        b = rows.select(
-            *key_cols,
-            F.col(id_col).alias("doc_b"),
-            *[F.col(c).alias(f"{c}_b") for c in carry],
-        )
-        return (
-            a.join(b, list(key_cols))
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .drop(*key_cols)
-        )
+        if ck is not None:
+            if len(_PROBE_VERDICT_CACHE) >= 256:
+                _PROBE_VERDICT_CACHE.clear()
+            _PROBE_VERDICT_CACHE[ck] = "plain"
+        return _plain_self_pairs(rows, key_cols, id_col, carry)
     keyed = (
         rows.join(hot, list(key_cols), "left")
         .withColumn("_nsplit", F.coalesce("_nsplit", F.lit(1)))
@@ -404,34 +389,6 @@ def band_candidates(
     ).distinct()
 
 
-# Size gate for exact_jaccard's candidate-id semi-join prefilter
-# (r15, guide §3.2): below this shingle-source size the prefilter's
-# extra stages (two id projections + distinct + semi-join) cost more
-# than the pruned by-id exchange saves — the r14 A/B measured exactly
-# that for d99 (9.86 s with vs 6.96 s without), which is why the
-# prefilter is BOTH opt-in per call site AND size-gated. Above it, a
-# delta-sized candidate set probing a corpus-scale shingle table (the
-# d101/s25 warm path) drops the non-candidate ~90%+ of the corpus
-# shingle table BEFORE it is exchanged by doc id for the sizes
-# aggregate and the verify-join sides. Parameterized for deployments
-# (bytes; local default keeps the bench at the measured-faster shape).
-JACCARD_PREFILTER_MIN_BYTES = 256 << 20
-
-
-def _jaccard_prefilter_min_bytes() -> int:
-    import os
-
-    try:
-        return int(
-            os.environ.get(
-                "SPARK_GRAFT_JACCARD_PREFILTER_MIN_BYTES",
-                str(JACCARD_PREFILTER_MIN_BYTES),
-            )
-        )
-    except ValueError:
-        return JACCARD_PREFILTER_MIN_BYTES
-
-
 def exact_jaccard(
     cand: DataFrame,
     sh: DataFrame,
@@ -452,20 +409,19 @@ def exact_jaccard(
     candidate set is much smaller than the shingle table (the
     incremental-merge warm path, where cand is delta-sized and sh
     unions the full corpus shingle artifact); for corpus-sized cand
-    the ids distinct costs more than the pruning saves (r14 A/B)."""
-    if prefilter:
-        from data_engineer_project_spark.operators.fanout import (
-            estimated_source_bytes,
-        )
+    the ids distinct costs more than the pruning saves (r14 A/B).
 
-        src_bytes = estimated_source_bytes(sh)
-        if src_bytes is not None and src_bytes >= _jaccard_prefilter_min_bytes():
-            ids = (
-                cand.select(F.col("doc_a").alias(id_col))
-                .union(cand.select(F.col("doc_b").alias(id_col)))
-                .distinct()
-            )
-            sh = sh.join(ids, id_col, "left_semi")
+    The size gate is ``fanout.is_large_source(sh)``: on a small
+    source the prefilter's extra stages (two id projections + distinct
+    + semi-join) cost more than the pruned by-id exchange saves (r14:
+    d99 at 9.86 s with vs 6.96 s without)."""
+    if prefilter and is_large_source(sh):
+        ids = (
+            cand.select(F.col("doc_a").alias(id_col))
+            .union(cand.select(F.col("doc_b").alias(id_col)))
+            .distinct()
+        )
+        sh = sh.join(ids, id_col, "left_semi")
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
 
     sa = sh.alias("sa")
@@ -532,16 +488,10 @@ def minhash_lsh_pairs(
     num_hashes: int = 8,
     bands: int | None = None,
     jaccard_threshold: float = 0.5,
-    fanout: bool = False,
 ) -> DataFrame:
     """MinHash + LSH near-duplicate pairs with exact-Jaccard verify.
     ``bands=None`` → plan_lsh_bands picks the S-curve split for the
     threshold (see minhash_lsh_pairs_from_shingles).
-
-    ``fanout=True`` applies the guarded small-scan fan-out to ``df``
-    before the shingle explode — pass it ONLY when ``df`` is
-    scan-shaped (a base table or a filter over one); see
-    :func:`exploded_shingles`.
 
     Pipeline: per-doc distinct shingles → ``num_hashes`` salted-md5
     minima (minhash_signatures) → LSH band self-join candidates
@@ -555,70 +505,38 @@ def minhash_lsh_pairs(
     # same pipeline is minhash_lsh_pairs_from_shingles over
     # shingle_table).
     sh = tracked_persist(
-        exploded_shingles(df, id_col, text_col, fanout=fanout).distinct()
+        exploded_shingles(df, id_col, text_col).distinct()
     )
     return minhash_lsh_pairs_from_shingles(
         sh, id_col, num_hashes, bands, jaccard_threshold
     )
 
 
-# Size gate for the shingle-partitioned cache layout (r15, closing the
-# r14 d12 regression): below this source size the plain ``distinct()``
-# wins — its map-side partial aggregate collapses in-doc duplicate
-# shingles BEFORE the exchange, and the downstream shingle-keyed
-# exchanges it leaves in place move only a few MB — while the
-# repartition(shingle) layout gives that combine up for exchange reuse
-# that saves nothing at this scale (driver-measured: d12 2.19 → 2.91 s).
-# Above it the reused partitioning removes full-shingle-table shuffles
-# from all three inverted-index consumers (guide §2.4), which dominates.
-# Parameterized for deployments (bytes; local default keeps the bench
-# at the measured-faster small shape).
-SHINGLE_PARTITION_MIN_BYTES = 256 << 20
-
-
-def _shingle_partition_min_bytes() -> int:
-    import os
-
-    try:
-        return int(
-            os.environ.get(
-                "SPARK_GRAFT_SHINGLE_PARTITION_MIN_BYTES",
-                str(SHINGLE_PARTITION_MIN_BYTES),
-            )
-        )
-    except ValueError:
-        return SHINGLE_PARTITION_MIN_BYTES
-
-
 def _shingle_set_partitioned_by_shingle(
-    df: DataFrame, id_col: str, text_col: str, fanout: bool = False
+    df: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """The distinct (id, shingle) set cached for the inverted-index
-    consumers, in one of two layouts chosen by a SIZE GATE over the
-    source's on-disk bytes (metadata-only estimate; results identical
-    either way — only the physical partitioning differs):
+    consumers, in one of two layouts chosen by ``fanout.is_large_source``
+    over the source's on-disk bytes (metadata-only estimate; results
+    identical either way — only the physical partitioning differs):
 
-    - big corpus (≥ the gate): hash-partitioned by ``shingle`` — the
-      key every consumer (the df-count aggregate, the informative
-      join, the intra-shingle self-join) reuses instead of
-      re-exchanging the widest intermediate (r14, guide §2.4);
-      repartition + dropDuplicates dedups with no extra exchange
-      (hash(shingle) already clusters equal (id, shingle) rows).
-    - small corpus (below the gate, or no file lineage): plain
-      ``distinct()`` — keeps the map-side partial-dedup combine, which
-      at bench scale beats the exchange reuse (the r14 driver measured
-      the unconditional partitioned layout as a 25% d12 regression).
+    - big corpus: hash-partitioned by ``shingle`` — the key every
+      consumer (the df-count aggregate, the informative join, the
+      intra-shingle self-join) reuses instead of re-exchanging the
+      widest intermediate (r14, guide §2.4); repartition +
+      dropDuplicates dedups with no extra exchange (hash(shingle)
+      already clusters equal (id, shingle) rows).
+    - small corpus (or no file lineage): plain ``distinct()`` — its
+      map-side partial aggregate collapses in-doc duplicate shingles
+      BEFORE the exchange, which at bench scale beats the exchange
+      reuse (the r14 driver measured the unconditional partitioned
+      layout as a d12 regression, 2.19 → 2.91 s).
 
     The minhash path keeps the plain ``distinct()`` regardless — its
     verify join probes by (id, shingle), which that layout serves
     directly."""
-    sh = exploded_shingles(df, id_col, text_col, fanout=fanout)
-    from data_engineer_project_spark.operators.fanout import (
-        estimated_source_bytes,
-    )
-
-    src_bytes = estimated_source_bytes(df)
-    if src_bytes is not None and src_bytes >= _shingle_partition_min_bytes():
+    sh = exploded_shingles(df, id_col, text_col)
+    if is_large_source(df):
         return tracked_persist(
             sh.repartition(F.col("shingle")).dropDuplicates([id_col, "shingle"])
         )
@@ -708,11 +626,9 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     jaccard_threshold: float = 0.5,
     max_df: int = 50,
-    fanout: bool = False,
 ) -> DataFrame:
     """Exact n-gram-Jaccard near-dup pairs via an inverted shingle
-    index (no MinHash approximation). ``fanout`` as in
-    :func:`minhash_lsh_pairs` (scan-shaped inputs only).
+    index (no MinHash approximation).
 
     Candidate pairs come from docs *sharing an informative shingle*:
     shingles with document frequency > ``max_df`` are dropped before
@@ -723,7 +639,7 @@ def ngram_jaccard_pairs(
     oracle SQL mirrors the semantics exactly.
     """
     # feeds the df-count AND the filtered index build
-    sh = _shingle_set_partitioned_by_shingle(df, id_col, text_col, fanout=fanout)
+    sh = _shingle_set_partitioned_by_shingle(df, id_col, text_col)
     return ngram_jaccard_pairs_from_shingles(sh, id_col, jaccard_threshold, max_df)
 
 
@@ -746,7 +662,6 @@ def containment_pairs(
     text_col: str = "text",
     overlap_threshold: float = 0.6,
     max_df: int = 50,
-    fanout: bool = False,
 ) -> DataFrame:
     """Subsumption-style near-dup pairs by shingle OVERLAP COEFFICIENT:
     |sh(A) ∩ sh(B)| / min(|sh(A)|, |sh(B)|) ≥ ``overlap_threshold``.
@@ -759,7 +674,7 @@ def containment_pairs(
     generation stays corpus-linear; sizes are over the SAME informative
     sets, keeping the oracle SQL exact. Returns (doc_a, doc_b,
     containment), a < b, integer-ratio doubles (engine-exact)."""
-    sh = _shingle_set_partitioned_by_shingle(df, id_col, text_col, fanout=fanout)
+    sh = _shingle_set_partitioned_by_shingle(df, id_col, text_col)
     return containment_pairs_from_shingles(sh, id_col, overlap_threshold, max_df)
 
 
@@ -902,7 +817,6 @@ def ngram_pair_stats(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_df: int = 50,
-    fanout: bool = False,
 ) -> DataFrame:
     """INTEGER sufficient statistics for every inverted-index candidate
     pair: (doc_a, doc_b, n_inter, n_union) over the informative-shingle
@@ -914,7 +828,7 @@ def ngram_pair_stats(
     Built on the same ``_inverted_index_pair_stats`` core as the
     jaccard/containment scorers — identical candidates by
     construction."""
-    sh = _shingle_set_partitioned_by_shingle(df, id_col, text_col, fanout=fanout)
+    sh = _shingle_set_partitioned_by_shingle(df, id_col, text_col)
     st = _inverted_index_pair_stats(sh, id_col, max_df)
     return st.select(
         "doc_a",

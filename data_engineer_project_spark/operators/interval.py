@@ -23,8 +23,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from data_engineer_project_spark.operators.fanout import fanout_small_scan
-
 _BUCKET = "__rj_bucket"
 
 
@@ -41,7 +39,6 @@ def range_join(
     bucket_width: str = "1 hour",
     extra_keys: list[str] | None = None,
     how_points: str = "inner",
-    fanout: bool = False,
 ) -> DataFrame:
     """Join each ``points`` row to every ``intervals`` row whose
     ``[start_col, end_col)`` timestamp range contains ``point_ts``
@@ -59,10 +56,9 @@ def range_join(
     bucket candidates fail the exact predicate, so the left path is
     built as inner-match ∪ null-safe anti-join of the point side.
 
-    ``fanout=True`` applies the guarded small-scan fan-out to the
-    interval side — pass it ONLY when ``intervals`` is scan-shaped (a
-    base table or a filter over one); see
-    :func:`~data_engineer_project_spark.operators.dedup.exploded_shingles`.
+    The interval side is usually the probe side (the planner
+    broadcasts whichever side is smaller), so its partitioning sets the
+    parallelism of explode + probe + residual.
     """
     if how_points not in ("inner", "left"):
         raise ValueError(
@@ -70,18 +66,6 @@ def range_join(
         )
     width_us = F.lit(_interval_to_us(bucket_width))
     keys = extra_keys or []
-
-    # The interval side is usually the probe side (the planner
-    # broadcasts whichever side is smaller), and a sub-split-size scan
-    # arrives as ONE partition — so explode + probe + residual +
-    # partial-agg all run on one core regardless of cluster size
-    # (guide §2.4/§6; the m22 shape). Guarded AND opt-in (r15, aligned
-    # with the shingle family's contract): the guard's ``df.rdd``
-    # introspection materializes upstream exchanges under AQE, so a
-    # caller passing a join/agg intermediate must be able to keep the
-    # default. A no-op at real split counts, so no shuffle at 100 TB.
-    if fanout:
-        intervals = fanout_small_scan(intervals)
 
     iv = intervals.withColumn(
         _BUCKET,

@@ -46,6 +46,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from data_engineer_project_spark.operators.fanout import fanout_small
+
 FORMATS = ("png", "jpeg", "webp")
 
 
@@ -56,7 +58,7 @@ def attach_media(documents: DataFrame) -> DataFrame:
     ("pixels"), dimensions derive deterministically from doc_id. All
     JVM-side expressions — no Python in this hot path.
 
-    Deliberately NOT behind fanout_small_scan (A/B-measured round 14,
+    Deliberately NOT behind fanout_small (A/B-measured round 14,
     BASELINE.md): unlike the real-codec attach paths, the downstream
     fake-decode Arrow stages are microseconds per payload, so the
     guarded exchange costs more than the parallelism buys (m02
@@ -2986,16 +2988,6 @@ _ENCODERS = {
 }
 
 
-# Guarded small-scan/stream fan-out: born here in round 13 for the
-# codec Arrow stages; round 14 made the text/similarity/interval
-# operators consumers too, so the implementation moved to
-# operators/fanout.py. Re-exported so existing imports keep working.
-from data_engineer_project_spark.operators.fanout import (  # noqa: E402,F401
-    fanout_small_scan,
-    fanout_small_stream,
-)
-
-
 def attach_real_media(documents: DataFrame) -> DataFrame:
     """Wrap each document's UTF-8 bytes in a REAL image container —
     doc_id % 6 rotates through a P5 PNM (ASCII header), an 8-bit BMP
@@ -3014,7 +3006,7 @@ def attach_real_media(documents: DataFrame) -> DataFrame:
 
     This is corpus prep (the stand-in for reading real blobs), not the
     operator under test; it runs as one Arrow stage behind the guarded
-    small-scan fan-out (fanout_small_scan — round 13)."""
+    small-scan fan-out (fanout_small — round 13)."""
 
     def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -3050,7 +3042,7 @@ def attach_real_media(documents: DataFrame) -> DataFrame:
                 }
             )
 
-    return fanout_small_scan(
+    return fanout_small(
         documents.select("doc_id", "lang", "text")
     ).mapInPandas(stage, _REAL_MEDIA_SCHEMA)
 
@@ -3110,7 +3102,7 @@ def attach_webp_media(documents: DataFrame) -> DataFrame:
                 }
             )
 
-    return fanout_small_scan(
+    return fanout_small(
         documents.select("doc_id", "lang", "text")
     ).mapInPandas(stage, _REAL_MEDIA_SCHEMA)
 

@@ -3,9 +3,9 @@
 Two paths:
 - brute-force cosine top-k — the exact baseline; a broadcast of the
   (small) query set against the corpus, ranked per query. Correct at
-  any corpus size: the corpus is never shuffled (except the guarded
-  opt-in ``fanout=True`` exchange for single-split scans, a no-op at
-  real split counts), scores reduce via a per-query top-k window.
+  any corpus size: the operator never shuffles the corpus (callers
+  may pass it through ``fanout.fanout_small`` first), scores reduce
+  via a per-query top-k window.
 - sign-LSH bucketed ANN — the scale path: R deterministic ±1
   hyperplanes → R sign bits → bucket key; candidates equi-join on the
   bucket (hash shuffle), so cost is corpus-linear + per-bucket work.
@@ -41,7 +41,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_engineer_project_spark.functions.text import hyperplane
-from data_engineer_project_spark.operators.fanout import fanout_small_scan
 from data_engineer_project_spark.operators.topk import grouped_topk
 
 
@@ -68,21 +67,13 @@ def brute_force_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    fanout: bool = False,
 ) -> DataFrame:
     """Exact cosine top-k: broadcast the query set over the corpus.
 
     Returns (query_id, neighbor_id, score). Self-matches excluded.
-    Deterministic: ties broken by neighbor id.
-
-    ``fanout=True`` applies the guarded small-scan fan-out to the
-    corpus (probe) side before the broadcast join — pass it ONLY when
-    ``corpus`` is scan-shaped (a base table or a filter over one): the
-    guard introspects partition count via ``df.rdd``, which under AQE
-    materializes upstream exchanges on intermediates (the shingle
-    family's measured hazard, r14). With the guard off — or on at real
-    split counts — the corpus never shuffles: scores reduce via the
-    per-query top-k alone.
+    Deterministic: ties broken by neighbor id. The corpus is the probe
+    side of the broadcast join, so its partitioning sets the scoring
+    parallelism; the corpus itself never shuffles.
     """
     # Norms hoisted out of the pair loop (the ivf_assign_n move): |q|
     # folds once per query (on the broadcast side), |c| once per corpus
@@ -93,12 +84,6 @@ def brute_force_topk(
         F.col(vec_col).alias("qvec"),
         norm(F.col(vec_col)).alias("qnrm"),
     )
-    # Guarded fan-out (r14, guide §2.4/§6), OPT-IN since r15: the
-    # corpus is the probe side of the broadcast join, and a
-    # sub-split-size scan arrives as ONE partition — the per-pair
-    # cosine folds would run on one core. No-op at real split counts.
-    if fanout:
-        corpus = fanout_small_scan(corpus)
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cvec"),
@@ -183,11 +168,12 @@ def _banded_sigs_arrow(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """Arrow-engine twin of the HOF signature build (r15, guide §4.2):
+    """The signature build of ``banded_lsh_sigs`` (r15, guide §4.2):
     one ``mapInPandas`` stage computes, per input row, the norm and
     ALL ``num_bands`` bucket ids with vectorized numpy; the per-band
-    explode stays in the JVM. BIT-IDENTICAL to the HOF form by
-    construction:
+    explode stays in the JVM. BIT-IDENTICAL to the interpreted-HOF
+    form (sign-dot ``F.aggregate`` folds, kept as the reference fold
+    in tests/test_round15_opt.py) by construction:
 
     - products: Spark's ``dot`` computes x.cast(double) * plane_i with
       plane_i ∈ {±1.0} — exact in IEEE double; numpy's float64
@@ -198,7 +184,7 @@ def _banded_sigs_arrow(
       blocking, so every intermediate rounding step matches.
     - the sign test (> 0), the bit weights (1 << r), and
       sqrt-of-self-fold for the norm are single IEEE ops, identical in
-      both engines. Parity is pinned by
+      both forms. Parity is pinned by
       tests/test_round15_opt.py::test_banded_sigs_arrow_matches_hof
       and by the DuckDB oracle hashes of every consumer (d10/d16/…).
 
@@ -231,7 +217,7 @@ def _banded_sigs_arrow(
             )
             if v.ndim != 2 or v.shape[1] != pm.shape[1]:
                 raise ValueError(
-                    f"banded_lsh_sigs(engine='arrow') needs fixed-dim "
+                    f"banded_lsh_sigs needs fixed-dim "
                     f"{pm.shape[1]} vectors, got shape {v.shape}"
                 )
             # strict left-fold per plane: cumsum's last element
@@ -262,7 +248,6 @@ def banded_lsh_sigs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     planes: int | None = None,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Banded adaptive sign-LSH signatures: one (vid, vec, band,
     bucket) row per input row per band.
@@ -286,49 +271,17 @@ def banded_lsh_sigs(
     MIN_PLANES. ``num_bands`` defaults to adaptive_bands(planes) so
     recall co-scales with the plane count (see adaptive_bands).
 
-    ``engine`` picks the fold implementation — identical bits either
-    way (pinned by test + every consumer's oracle hash):
-
-    - ``"arrow"`` (default since r15): one vectorized mapInPandas
-      stage (see _banded_sigs_arrow) — the sign folds were the d10
-      slot's dominant cost as interpreted HOFs, and at the 24-plane
-      cap the HOF form pays ~3,000 interpreted lambda steps per
-      corpus row.
-    - ``"hof"``: the pure-relational JVM form (no Python worker
-      dependency) — kept as the exactness anchor and for plan-shape
-      comparisons."""
+    The sign folds run in one vectorized Arrow stage
+    (``_banded_sigs_arrow``): as interpreted HOFs they were the d10
+    slot's dominant cost, ~3,000 interpreted lambda steps per corpus
+    row at the 24-plane cap. ``nrm`` rides along so downstream verify
+    joins score pairs with one dot fold (|v| computed once per input
+    row, BEFORE the per-band explode fans it out)."""
     if planes is None:
         planes = adaptive_planes(count_ref.count())
     if num_bands is None:
         num_bands = adaptive_bands(planes)
-    if engine == "arrow":
-        return _banded_sigs_arrow(df, num_bands, planes, dim, id_col, vec_col)
-    if engine != "hof":
-        raise ValueError(f"engine must be 'arrow' or 'hof', got {engine!r}")
-    buckets = []
-    for bnd in range(num_bands):
-        bucket = F.lit(0)
-        for r in range(planes):
-            plane = F.array(
-                *[F.lit(float(v)) for v in hyperplane(bnd * MAX_PLANES + r, dim)]
-            )
-            bucket = bucket + F.when(
-                dot(F.col("vec"), plane) > 0, F.lit(1 << r)
-            ).otherwise(F.lit(0))
-        buckets.append(bucket.cast("int"))
-    # ``nrm`` rides along so downstream verify joins score pairs with
-    # one dot fold (|v| computed once per input row, BEFORE the
-    # per-band explode fans it out) — the ivf_assign_n hoist.
-    return df.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("vec"),
-        norm(F.col(vec_col)).alias("nrm"),
-    ).select(
-        "vid",
-        "vec",
-        "nrm",
-        F.posexplode(F.array(*buckets)).alias("band", "bucket"),
-    )
+    return _banded_sigs_arrow(df, num_bands, planes, dim, id_col, vec_col)
 
 
 def cosine_near_dup_pairs(
@@ -1010,7 +963,7 @@ def lsh_topk(
         "band",
         "bucket",
     )
-    # NOT fanned out (A/B-measured r14): fanout_small_scan(corpus) here
+    # NOT fanned out (A/B-measured r14): fanout_small(corpus) here
     # read 2.40/2.51 s vs 2.17 s without, in matched in-group runs —
     # the sig fold + probe work this would parallelize is small at
     # bench scale, and the slot's real cost is interpreted-HOF

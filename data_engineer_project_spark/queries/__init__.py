@@ -179,7 +179,7 @@ _REGATE_ROUND.update(
 # -- round 13 --
 # The real-container attach paths now fan small scans out to the
 # session's core count before the codec Arrow stage
-# (fanout_small_scan — the m22 closing run measured a 32x idle-core
+# (fanout_small — the m22 closing run measured a 32x idle-core
 # waste on single-split parquet); same rows, new executing plan, so
 # the consumers regate per the round-9 skew-guard precedent. (m22 is
 # round-13-new and has no prior green to supersede.)
@@ -191,15 +191,16 @@ _REGATE_ROUND.update(
     }
 )
 # -- round 14 --
-# The streaming media gates now ride the source-size-guarded stream
-# fan-out (fanout_small_stream — a micro-batch inherits the file
-# source's single split, so the VP8L codec Arrow stages ran on one
-# of 32 cores; measured: s27 10.33 s -> 4.56 s in headline context).
+# The streaming media gates now ride the guarded stream fan-out
+# (fanout_small, sized by a batch scan of the stream's source — a
+# micro-batch inherits the file source's single split, so the VP8L
+# codec Arrow stages ran on one of 32 cores; measured: s27 10.33 s ->
+# 4.56 s in headline context).
 # s26's executing plan gained the exchange, so it regates per the
 # round-9/13 precedent; s27 is round-14-new (no prior green).
 _REGATE_ROUND.update({"s26_stream_media_integrity_gate": 14})
 # Otherwise no regates: the r13 verdict's item-4 follow-up (extend
-# fanout_small_scan to the FAKE-payload attach_media path) was
+# fanout_small to the FAKE-payload attach_media path) was
 # A/B-measured and REVERTED — the fake-decode Arrow stages are
 # microseconds per payload, so the guarded exchange cost more than
 # the parallelism bought (m02 idle min-of-6 0.573 s without vs

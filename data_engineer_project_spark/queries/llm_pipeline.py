@@ -22,6 +22,7 @@ from data_engineer_project_spark.functions import text as T
 from data_engineer_project_spark.functions.numeric import money
 from data_engineer_project_spark.operators import dedup as DD
 from data_engineer_project_spark.operators.cache import tracked_persist
+from data_engineer_project_spark.operators.fanout import fanout_small
 from data_engineer_project_spark.operators import graph as GR
 from data_engineer_project_spark.operators import linalg as LA
 from data_engineer_project_spark.operators import neardup as ND
@@ -235,8 +236,7 @@ def d07_dedup_minhash_lsh(t):
     candidate equi-join → relational Jaccard ≥ 0.5. No all-pairs step
     anywhere, so the plan survives corpus-scale fan-out."""
     return DD.minhash_lsh_pairs(
-        t.documents, num_hashes=8, bands=4, jaccard_threshold=0.5,
-        fanout=True,
+        fanout_small(t.documents), num_hashes=8, bands=4, jaccard_threshold=0.5
     )
 
 
@@ -316,7 +316,7 @@ def d09_cosine_topk_bruteforce(t):
     per-query windowed top-k."""
     emb = t.embeddings
     queries = emb.filter(F.col("vec_id") < 10)
-    return SIM.brute_force_topk(queries, emb, k=5, fanout=True)
+    return SIM.brute_force_topk(queries, fanout_small(emb), k=5)
 
 
 def _banded_lsh_sig_sql(dim: int = 64) -> str:
@@ -466,7 +466,7 @@ def d12_dedup_ngram_jaccard(t):
     and > 1) become candidates; Jaccard over those shingle sets. No
     approximation — the exact-tier complement of d07's MinHash."""
     return DD.ngram_jaccard_pairs(
-        t.documents, jaccard_threshold=0.5, max_df=50, fanout=True
+        fanout_small(t.documents), jaccard_threshold=0.5, max_df=50
     )
 
 
@@ -807,8 +807,8 @@ def e06_range_join(t):
     )
     hits = e.select(F.col("ts").alias("hit_ts"), F.col("value").alias("hit_value"))
     j = range_join(
-        errs, hits, "err_ts", "err_end", "hit_ts",
-        bucket_width="1 hour", fanout=True,
+        fanout_small(errs), hits, "err_ts", "err_end", "hit_ts",
+        bucket_width="1 hour",
     )
     return j.groupBy("err_id").agg(
         F.count(F.lit(1)).alias("n_hits"),
@@ -902,7 +902,7 @@ def d16_ann_recall(t):
     parity."""
     emb = t.embeddings
     queries = emb.filter(F.col("vec_id") < 10)
-    bf = SIM.brute_force_topk(queries, emb, k=3, fanout=True).select(
+    bf = SIM.brute_force_topk(queries, fanout_small(emb), k=3).select(
         "query_id", "neighbor_id"
     )
     lsh = SIM.lsh_topk(queries, emb, k=3, dim=64).select(
@@ -1165,8 +1165,7 @@ def d20_dedup_clusters(t):
     The oracle replays the propagation as a recursive CTE to fixpoint;
     both sides compute the same exact min-label result."""
     pairs = DD.minhash_lsh_pairs(
-        t.documents, num_hashes=8, bands=4, jaccard_threshold=0.5,
-        fanout=True,
+        fanout_small(t.documents), num_hashes=8, bands=4, jaccard_threshold=0.5
     )
     comps = GR.connected_components(pairs, pairs_unique=True)
     return comps.groupBy("component").agg(
@@ -1437,8 +1436,7 @@ def d26_quality_survivor(t):
     argmax partitioned by component — no new shuffle surface beyond
     d20's."""
     pairs = DD.minhash_lsh_pairs(
-        t.documents, num_hashes=8, bands=4, jaccard_threshold=0.5,
-        fanout=True,
+        fanout_small(t.documents), num_hashes=8, bands=4, jaccard_threshold=0.5
     )
     comps = GR.connected_components(pairs, pairs_unique=True)
     scored = comps.join(
@@ -1960,7 +1958,7 @@ def d34_containment_dedup(t):
     so pair generation stays corpus-linear; the exact-tier complement
     for snippet/quote subsumption."""
     return DD.containment_pairs(
-        t.documents, overlap_threshold=0.6, max_df=50, fanout=True
+        fanout_small(t.documents), overlap_threshold=0.6, max_df=50
     )
 
 
@@ -4079,7 +4077,7 @@ def d56_end_to_end_curation(t):
     # `.distinct()` cached by (doc_id, shingle), a layout nothing
     # downstream could reuse.
     sh = tracked_persist(
-        DD.exploded_shingles(docs, "doc_id", "text", 3, fanout=True)
+        DD.exploded_shingles(fanout_small(docs), "doc_id", "text", 3)
         .repartition(F.col("shingle"))
         .dropDuplicates(["doc_id", "shingle"])
     )
@@ -5427,8 +5425,7 @@ def d65_neardup_doc_clusters(t):
     d99_weighted_neardup_clusters (exact-dup collapse first, measured
     flat at 100× duplication)."""
     pairs = DD.minhash_lsh_pairs(
-        t.documents, num_hashes=8, bands=4, jaccard_threshold=0.5,
-        fanout=True,
+        fanout_small(t.documents), num_hashes=8, bands=4, jaccard_threshold=0.5
     ).select("doc_a", "doc_b")
     comps = GR.connected_components(pairs, pairs_unique=True)
     toks = t.documents.select(
@@ -6899,8 +6896,7 @@ def d74_pagerank_canonical_doc(t):
     # set, and share it between the PR rounds and CC — per round only
     # the node-sized rank table shuffles (guide §2.4).
     pairs = DD.minhash_lsh_pairs(
-        t.documents, num_hashes=8, bands=4, jaccard_threshold=0.5,
-        fanout=True,
+        fanout_small(t.documents), num_hashes=8, bands=4, jaccard_threshold=0.5
     ).select("doc_a", "doc_b").localCheckpoint()
     edges = tracked_persist(
         pairs.selectExpr("doc_a AS e_src", "doc_b AS e_dst")
@@ -8536,7 +8532,7 @@ def d82_ivfpq_recall(t):
     emb = t.embeddings
     queries = emb.filter(F.col("vec_id") < 10)
     n_q = queries.count()
-    bf = SIM.brute_force_topk(queries, emb, k=_D82_K, fanout=True).select(
+    bf = SIM.brute_force_topk(queries, fanout_small(emb), k=_D82_K).select(
         "query_id", "neighbor_id"
     )
     # ONE widest-probe ADC frame; each arm is a probe_rank filter of
@@ -9082,7 +9078,7 @@ def d86_knn_label_probe(t):
     ranks over panel x k rows."""
     emb = t.embeddings
     queries = emb.filter(F.col("vec_id") < 10)
-    top = SIM.brute_force_topk(queries, emb, k=5, fanout=True).select(
+    top = SIM.brute_force_topk(queries, fanout_small(emb), k=5).select(
         "query_id", "neighbor_id"
     )
     lab = emb.select("vec_id", "label")
@@ -10951,7 +10947,7 @@ def d96_dedup_threshold_calibration(t):
     (a x3 constant fan-out on the bounded pair set, never a rescan);
     removal/token rollups are small keyed folds. At 100 TB this query
     IS the nightly report next to the persisted shingle table."""
-    stats = DD.ngram_pair_stats(t.documents, max_df=50, fanout=True)
+    stats = DD.ngram_pair_stats(fanout_small(t.documents), max_df=50)
     cuts = F.explode(
         F.array(*[F.lit(c) for c in _D96_CUTS])
     ).alias("threshold_pct")
@@ -11758,6 +11754,9 @@ from data_engineer_project_spark.queries.catalog import QUERIES as _REGISTRY
 # table", so its oracle is d99's oracle verbatim.
 _D101_ORACLE = _REGISTRY["d99_weighted_neardup_clusters"].oracle
 
+# md5(doc_id) bucket (0-99) at which the delta starts: the top decile.
+_D101_SPLIT = 90
+
 
 @query(
     "d101_incremental_cluster_merge",
@@ -11781,9 +11780,7 @@ def d101_incremental_cluster_merge(t):
     parity pytest pins Spark-vs-Spark equality too.
 
     Corpus/delta split: md5(doc_id) buckets (d100's convention),
-    delta = top decile by default; SPARK_GRAFT_D101_SPLIT overrides
-    the threshold so the delta-decade stress can vary delta size
-    against a near-constant corpus.
+    delta = the top decile (buckets >= ``_D101_SPLIT``).
 
     Scale shape: the store holds reps + components + the corpus
     shingle and band-key tables (shingle_table's 100 TB form), and the
@@ -11797,17 +11794,11 @@ def d101_incremental_cluster_merge(t):
     merges only. Measured in SCALING.md: warm runtime is FLAT as the
     delta grows 10x (1% -> 10% of the table) and beats the d99 full
     rebuild it replaces."""
-    import os
-
-    try:
-        split = int(os.environ.get("SPARK_GRAFT_D101_SPLIT", "90"))
-    except ValueError:
-        split = 90
     bucket = F.expr(_SPARK_BUCKET)
     docs = t.documents
-    corpus = docs.filter(bucket < split).select("doc_id", "text")
-    delta = docs.filter(bucket >= split).select("doc_id", "text")
-    store = _neardup_cluster_store(corpus, split)
+    corpus = docs.filter(bucket < _D101_SPLIT).select("doc_id", "text")
+    delta = docs.filter(bucket >= _D101_SPLIT).select("doc_id", "text")
+    store = _neardup_cluster_store(corpus, _D101_SPLIT)
     reps_path, comps_path = store / "reps", store / "comps"
     spark = docs.sparkSession
     sh_path, bands_path = store / "shingles", store / "bands"

@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_engineer_project_spark.operators import plancap
+from data_engineer_project_spark.operators import fanout, plancap
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
@@ -101,6 +101,9 @@ def read_document_stream(
 
     normalize_session(spark)
 
+    def _batch(p: str, g: str) -> DataFrame:
+        return spark.read.schema(DOC_RAW_SCHEMA).option("pathGlobFilter", g).parquet(p)
+
     def _matches(p: str, g: str) -> bool:
         # schema-only listing (no data scan, no footer read needed).
         # Only "nothing there" maps to False; any OTHER failure
@@ -111,12 +114,7 @@ def read_document_stream(
         from pyspark.errors import AnalysisException
 
         try:
-            return bool(
-                spark.read.schema(DOC_RAW_SCHEMA)
-                .option("pathGlobFilter", g)
-                .parquet(p)
-                .inputFiles()
-            )
+            return bool(_batch(p, g).inputFiles())
         except AnalysisException as exc:
             if "PATH_NOT_FOUND" in str(exc) or "UNABLE_TO_INFER_SCHEMA" in str(exc):
                 return False
@@ -145,11 +143,9 @@ def read_document_stream(
         # re-creates the single-core shape (r14 review). Cheap
         # fake-decode consumers must NOT set this: the exchange costs
         # more than it buys there (BASELINE.md round-14 negative A/B).
-        from data_engineer_project_spark.operators.multimodal import (
-            fanout_small_stream,
-        )
-
-        stream = fanout_small_stream(stream, target, eff_glob)
+        # A micro-batch inherits the source's split count, which the
+        # batch read of the same files reports.
+        stream = fanout.fanout_small(stream, scan=_batch(target, eff_glob))
     return stream
 
 

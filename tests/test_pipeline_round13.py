@@ -426,27 +426,25 @@ def test_sidecar_server_rejection_keeps_jvm(monkeypatch):
 def test_fanout_small_scan_guard(spark, tmp_path):
     """The closing-run discovery: a sub-128MB parquet arrives as one
     input split, so a per-payload codec Arrow stage after it runs on
-    ONE core regardless of cluster size. fanout_small_scan must
+    ONE core regardless of cluster size. fanout_small must
     repartition such a scan up to the default parallelism — and must
     NOT touch a frame that already has at least that many partitions
     (at 100 TB split counts the fan-out is a plan no-op; no shuffle
     may be added there)."""
     import pandas as pd
 
-    from data_engineer_project_spark.operators.multimodal import (
-        fanout_small_scan,
-    )
+    from data_engineer_project_spark.operators.fanout import fanout_small
 
     p = str(tmp_path / "small.parquet")
     pd.DataFrame({"doc_id": range(100), "text": ["x"] * 100}).to_parquet(p)
     small = spark.read.parquet(p)
     target = spark.sparkContext.defaultParallelism
     assert small.rdd.getNumPartitions() < target
-    fanned = fanout_small_scan(small)
+    fanned = fanout_small(small)
     assert fanned.rdd.getNumPartitions() == target
     assert fanned.count() == 100
 
     wide = spark.range(1000).repartition(target + 4)
-    same = fanout_small_scan(wide)
+    same = fanout_small(wide)
     # no repartition added: the plan object is returned unchanged
     assert same is wide

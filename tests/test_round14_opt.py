@@ -122,12 +122,13 @@ def _skip_unless_parallel(spark):
 
 def test_shingle_fanout_optin_identical_rows_and_plan_shape(spark, tmp_path):
     """The opt-in scan fan-out must change ONLY the physical layout:
-    exploded_shingles(fanout=True) over a single-split scan returns
+    exploded_shingles(fanout_small(scan)) over a single-split scan returns
     exactly the rows of the unfanned form, and its plan carries the
     guarded RoundRobin exchange while the unfanned plan does not.
     On an input that already has >= defaultParallelism partitions the
     guard must be a plan no-op (the 100 TB contract)."""
     from data_engineer_project_spark.operators.dedup import exploded_shingles
+    from data_engineer_project_spark.operators.fanout import fanout_small
 
     _skip_unless_parallel(spark)
     p = str(tmp_path / "docs.parquet")
@@ -138,8 +139,8 @@ def test_shingle_fanout_optin_identical_rows_and_plan_shape(spark, tmp_path):
     docs = spark.read.parquet(p)
     assert docs.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
 
-    plain = exploded_shingles(docs, fanout=False)
-    fanned = exploded_shingles(docs, fanout=True)
+    plain = exploded_shingles(docs)
+    fanned = exploded_shingles(fanout_small(docs))
     assert "roundrobinpartitioning" not in plain._jdf.queryExecution(
     ).executedPlan().toString().lower()
     assert "roundrobinpartitioning" in fanned._jdf.queryExecution(
@@ -149,12 +150,12 @@ def test_shingle_fanout_optin_identical_rows_and_plan_shape(spark, tmp_path):
     )
 
     wide = docs.repartition(spark.sparkContext.defaultParallelism)
-    noop = exploded_shingles(wide, fanout=True)
+    noop = exploded_shingles(fanout_small(wide))
     # the guard fires on partition COUNT, so the only RoundRobin in the
     # plan is the caller's own repartition — same count as unfanned
     assert noop._jdf.queryExecution().executedPlan().toString().lower().count(
         "roundrobinpartitioning"
-    ) == exploded_shingles(wide, fanout=False)._jdf.queryExecution(
+    ) == exploded_shingles(wide)._jdf.queryExecution(
     ).executedPlan().toString().lower().count("roundrobinpartitioning")
 
 
@@ -162,10 +163,12 @@ def test_range_join_fans_single_split_interval_side(spark, tmp_path):
     """range_join's interval-side fan-out is OPT-IN (r15, aligned with
     the shingle family's contract): the default plan carries NO
     RoundRobin exchange even over a single-split interval scan;
-    ``fanout=True`` adds the guarded exchange; and the join result is
-    identical across default, fanned, and prefanned inputs."""
+    wrapping it in ``fanout_small`` adds the guarded exchange; and the
+    join result is identical across default, fanned, and prefanned
+    inputs."""
     import datetime as dt
 
+    from data_engineer_project_spark.operators.fanout import fanout_small
     from data_engineer_project_spark.operators.interval import range_join
 
     _skip_unless_parallel(spark)
@@ -191,7 +194,7 @@ def test_range_join_fans_single_split_interval_side(spark, tmp_path):
     ).executedPlan().toString().lower()
 
     j = range_join(
-        intervals, points, "s", "e", "ts", bucket_width="1 hour", fanout=True
+        fanout_small(intervals), points, "s", "e", "ts", bucket_width="1 hour"
     )
     assert "roundrobinpartitioning" in j._jdf.queryExecution(
     ).executedPlan().toString().lower()
@@ -200,7 +203,7 @@ def test_range_join_fans_single_split_interval_side(spark, tmp_path):
         spark.sparkContext.defaultParallelism
     )
     j2 = range_join(
-        prefanned, points, "s", "e", "ts", bucket_width="1 hour", fanout=True
+        fanout_small(prefanned), points, "s", "e", "ts", bucket_width="1 hour"
     )
     ref = sorted(map(tuple, plain.collect()))
     assert sorted(map(tuple, j.collect())) == ref

@@ -4,7 +4,6 @@ r15 change — the size-gated exact_jaccard prefilter (guide §3.2), the
 size-gated shingle cache layout (§2.4 vs map-side combine), the
 Arrow signature engine (§4.2), and the opt-in fan-out alignment."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from tests.test_round14_opt import _skip_unless_parallel
@@ -20,6 +19,7 @@ def test_exact_jaccard_prefilter_same_scores_and_semijoin_plan(
     prune of the shingle side. Below the gate (default threshold, tiny
     file) the plan must be byte-identical to prefilter=False."""
     from data_engineer_project_spark.operators import dedup as DD
+    from data_engineer_project_spark.operators import fanout
 
     sh_rows = [
         (1, "a b c"), (1, "b c d"), (1, "c d e"),
@@ -44,7 +44,7 @@ def test_exact_jaccard_prefilter_same_scores_and_semijoin_plan(
     assert "LeftSemi" not in ungated._jdf.queryExecution().executedPlan().toString()
 
     # force the gate: the semi-join prune appears, scores unchanged
-    monkeypatch.setenv("SPARK_GRAFT_JACCARD_PREFILTER_MIN_BYTES", "0")
+    monkeypatch.setattr(fanout, "LARGE_SOURCE_BYTES", 0)
     pref = DD.exact_jaccard(cand, sh, prefilter=True)
     assert "LeftSemi" in pref._jdf.queryExecution().executedPlan().toString()
     got = {(r.doc_a, r.doc_b): r.jaccard for r in pref.collect()}
@@ -59,6 +59,7 @@ def test_shingle_cache_layout_size_gate(spark, tmp_path, monkeypatch):
     shingle-partitioned layout (the §2.4 exchange-reuse shape), and
     the cached ROWS are identical either way."""
     from data_engineer_project_spark.operators import dedup as DD
+    from data_engineer_project_spark.operators import fanout
     from data_engineer_project_spark.operators.cache import release_all
 
     rows = [(i, f"w{i} w{i+1} w{i+2} w{i+3} w{i+4}") for i in range(30)]
@@ -72,12 +73,53 @@ def test_shingle_cache_layout_size_gate(spark, tmp_path, monkeypatch):
     small_rows = sorted(map(tuple, small.collect()))
     release_all()
 
-    monkeypatch.setenv("SPARK_GRAFT_SHINGLE_PARTITION_MIN_BYTES", "0")
+    monkeypatch.setattr(fanout, "LARGE_SOURCE_BYTES", 0)
     big = DD._shingle_set_partitioned_by_shingle(docs, "doc_id", "text")
     big_plan = big._jdf.queryExecution().executedPlan().toString()
     assert "hashpartitioning(shingle" in big_plan
     assert sorted(map(tuple, big.collect())) == small_rows
     release_all()
+
+
+def _banded_sigs_hof(df, num_bands=None, planes=None, dim=64):
+    """The pure-relational reference fold for ``banded_lsh_sigs``: per
+    band, sum the sign bits of ``planes`` interpreted-HOF dot folds
+    (``F.aggregate``'s strict left fold) — the JVM form the Arrow
+    engine replaced, kept here as its exactness anchor."""
+    from data_engineer_project_spark.functions.text import hyperplane
+    from data_engineer_project_spark.operators.similarity import (
+        MAX_PLANES,
+        adaptive_bands,
+        adaptive_planes,
+        dot,
+        norm,
+    )
+
+    if planes is None:
+        planes = adaptive_planes(df.count())
+    if num_bands is None:
+        num_bands = adaptive_bands(planes)
+    buckets = []
+    for bnd in range(num_bands):
+        bucket = F.lit(0)
+        for r in range(planes):
+            plane = F.array(
+                *[F.lit(float(v)) for v in hyperplane(bnd * MAX_PLANES + r, dim)]
+            )
+            bucket = bucket + F.when(
+                dot(F.col("vec"), plane) > 0, F.lit(1 << r)
+            ).otherwise(F.lit(0))
+        buckets.append(bucket.cast("int"))
+    return df.select(
+        F.col("vec_id").alias("vid"),
+        F.col("embedding").alias("vec"),
+        norm(F.col("embedding")).alias("nrm"),
+    ).select(
+        "vid",
+        "vec",
+        "nrm",
+        F.posexplode(F.array(*buckets)).alias("band", "bucket"),
+    )
 
 
 def test_banded_sigs_arrow_matches_hof(spark):
@@ -102,28 +144,27 @@ def test_banded_sigs_arrow_matches_hof(spark):
         )
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     for kwargs in ({}, {"num_bands": 4, "planes": 9}):
-        hof = banded_lsh_sigs(emb, emb, engine="hof", **kwargs).select(
+        hof = _banded_sigs_hof(emb, **kwargs).select(
             "vid", "nrm", "band", "bucket"
         )
-        arrow = banded_lsh_sigs(emb, emb, engine="arrow", **kwargs).select(
+        arrow = banded_lsh_sigs(emb, emb, **kwargs).select(
             "vid", "nrm", "band", "bucket"
         )
         a = sorted(map(tuple, hof.collect()))
         b = sorted(map(tuple, arrow.collect()))
         assert a == b, kwargs
-    with pytest.raises(ValueError, match="engine"):
-        banded_lsh_sigs(emb, emb, engine="nope").collect()
 
 
 def test_brute_force_topk_fanout_optin_identical_rows_and_plan_shape(
     spark, tmp_path
 ):
     """brute_force_topk's corpus fan-out is OPT-IN (r15): the default
-    plan never shuffles the corpus (no RoundRobin), ``fanout=True``
-    over a single-split corpus scan adds the guarded exchange, and the
+    plan never shuffles the corpus (no RoundRobin), a ``fanout_small``
+    single-split corpus scan adds the guarded exchange, and the
     (query_id, neighbor_id, score) rows are bit-identical either way."""
     import random
 
+    from data_engineer_project_spark.operators.fanout import fanout_small
     from data_engineer_project_spark.operators.similarity import (
         brute_force_topk,
     )
@@ -141,7 +182,7 @@ def test_brute_force_topk_fanout_optin_identical_rows_and_plan_shape(
     queries = emb.filter(F.col("vec_id") < 3)
 
     plain = brute_force_topk(queries, emb, k=3)
-    fanned = brute_force_topk(queries, emb, k=3, fanout=True)
+    fanned = brute_force_topk(queries, fanout_small(emb), k=3)
     assert "roundrobinpartitioning" not in plain._jdf.queryExecution(
     ).executedPlan().toString().lower()
     assert "roundrobinpartitioning" in fanned._jdf.queryExecution(

@@ -10,6 +10,7 @@ deterministic) and reading with maxFilesPerTrigger=1.
 from __future__ import annotations
 
 
+import contextlib
 import os
 
 import pyarrow as pa
@@ -908,50 +909,64 @@ def test_s27_multibatch_in_order_equals_single_batch(spark, tmp_path):
     assert got == expected
 
 
-def test_fanout_small_stream_guard_decisions(spark, tmp_path, monkeypatch):
-    """The streaming fan-out guard decides from SOURCE file sizes
-    (streams can't be introspected): a single sub-split parquet fires
-    the repartition; a source estimated at >= default-parallelism
-    splits passes through untouched (the 100 TB no-op contract); a
-    batch frame delegates to the introspecting batch guard."""
-    from data_engineer_project_spark.operators import multimodal as mm
+@contextlib.contextmanager
+def _split_conf(spark, max_part: int, open_cost: int):
+    """Set the real file-split confs for the block, restoring the
+    session's values afterwards."""
+    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    old = [spark.conf.get(k) for k in keys]
+    try:
+        for k, v in zip(keys, (max_part, open_cost)):
+            spark.conf.set(k, str(v))
+        yield
+    finally:
+        for k, v in zip(keys, old):
+            spark.conf.set(k, v)
+
+
+def test_fanout_small_stream_guard_decisions(spark, tmp_path):
+    """The stream fan-out guard decides from the split count Spark
+    reports for the batch scan of the stream's source (streams can't
+    be introspected): a single-split source fires the repartition; a
+    source Spark already splits >= default-parallelism ways passes
+    through untouched (the 100 TB no-op contract); a stream with no
+    scan, or a scan that cannot be sized, passes through; a batch
+    frame is sized by its own scan."""
+    from data_engineer_project_spark.operators.fanout import fanout_small
     from data_engineer_project_spark.streaming import read_document_stream
 
     src = f"{SF}/documents.parquet"
+    target = spark.sparkContext.defaultParallelism
     stream = read_document_stream(spark, SF)
-    # tiny flat file -> fires: the returned frame is a new plan node
-    fanned = mm.fanout_small_stream(stream, src)
+    # tiny flat file -> one split -> fires: the returned frame is a new plan node
+    assert spark.read.parquet(src).rdd.getNumPartitions() == 1 < target
+    fanned = fanout_small(stream, scan=spark.read.parquet(src))
     assert fanned is not stream
     assert fanned.isStreaming
-    # shrink the split size so the same file estimates >= cores splits
-    monkeypatch.setattr(
-        spark.conf, "get", lambda k, d=None: "1k", raising=False
-    )
-    assert mm.fanout_small_stream(stream, src) is stream
-    # missing source -> conservative pass-through
-    assert (
-        mm.fanout_small_stream(stream, str(tmp_path / "nope.parquet"))
-        is stream
-    )
-    # batch frames route through the batch guard (introspection path)
+    # shrink the split size so Spark splits the same file >= cores ways
+    with _split_conf(spark, 1024, 1024):
+        scan = spark.read.parquet(src)
+        assert scan.rdd.getNumPartitions() >= target
+        assert fanout_small(stream, scan=scan) is stream
+    # no scan, or a scan Spark cannot size -> conservative pass-through
+    assert fanout_small(stream) is stream
+    assert fanout_small(stream, scan=stream) is stream
+    # batch frames are sized by their own scan
     batch = spark.read.parquet(src)
-    out = mm.fanout_small_stream(batch, src)
+    out = fanout_small(batch)
     assert not out.isStreaming
 
 
 def test_fanout_stream_estimator_tracks_spark_partitioning(spark, tmp_path):
-    """The guard's split estimate mirrors Spark's FilePartition math
-    (min(maxPartitionBytes, max(openCost, bytesPerCore))) — validated
-    against the ACTUAL partition count of a batch scan over the same
-    files, in BOTH regimes the guard distinguishes: split-starved
-    (estimate and Spark below the core count -> the fan-out fires)
-    and healthily-split (both at/above -> the guard is a no-op; the
-    r14 review's failure band was re-shuffling sources Spark already
-    delivers cores-way)."""
-    import glob as g
-    import os as o
-
+    """The stream guard's decision follows the ACTUAL partition count
+    of a batch scan over the same files, in BOTH regimes it
+    distinguishes: split-starved (Spark below the core count -> the
+    fan-out fires on the stream) and healthily-split (at/above -> the
+    guard is a no-op; the r14 review's failure band was re-shuffling
+    sources Spark already delivers cores-way)."""
     import pyspark.sql.functions as SF
+
+    from data_engineer_project_spark.operators.fanout import fanout_small
 
     src = tmp_path / "docs"
     src.mkdir()
@@ -959,36 +974,47 @@ def test_fanout_stream_estimator_tracks_spark_partitioning(spark, tmp_path):
         SF.col("id").alias("doc_id"),
         SF.repeat(SF.lit("x"), 200).alias("text"),
     ).coalesce(1).write.mode("overwrite").parquet(str(src))
-    sizes = [
-        o.path.getsize(f)
-        for f in g.glob(str(src / "**" / "*.parquet"), recursive=True)
-    ]
     target = spark.sparkContext.defaultParallelism
+    stream = spark.readStream.schema("doc_id long, text string").parquet(str(src))
 
-    def estimate(max_part, open_cost):
-        total = sum(sizes) + open_cost * len(sizes)
-        max_split = min(max_part, max(open_cost, total // target))
-        return -(-total // max_split)
+    for max_part, open_cost, starved in (
+        # defaults: one ~80 KB file is a single split, starved
+        (134217728, 4194304, True),
+        # shrunk splits: Spark delivers >= cores partitions
+        (2048, 1024, False),
+    ):
+        with _split_conf(spark, max_part, open_cost):
+            scan = spark.read.parquet(str(src))
+            actual = scan.rdd.getNumPartitions()
+            fired = fanout_small(stream, scan=scan) is not stream
+        assert fired == (actual < target), (max_part, open_cost, actual, target)
+        assert (actual < target) == starved, (actual, target, starved)
 
-    old_max = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    old_open = spark.conf.get("spark.sql.files.openCostInBytes")
-    try:
-        for max_part, open_cost, starved in (
-            # defaults: one ~80 KB file is a single split, starved
-            (134217728, 4194304, True),
-            # shrunk splits: Spark delivers >= cores partitions
-            (2048, 1024, False),
-        ):
-            spark.conf.set("spark.sql.files.maxPartitionBytes", str(max_part))
-            spark.conf.set("spark.sql.files.openCostInBytes", str(open_cost))
-            actual = spark.read.parquet(str(src)).rdd.getNumPartitions()
-            est = estimate(max_part, open_cost)
-            # the guard only consumes which SIDE of the threshold the
-            # source falls on — estimator and engine must agree there
-            assert (est >= target) == (actual >= target), (
-                max_part, open_cost, est, actual, target
-            )
-            assert (actual < target) == starved, (actual, target, starved)
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", old_max)
-        spark.conf.set("spark.sql.files.openCostInBytes", old_open)
+
+def test_fanout_fires_on_a_source_split_fewer_ways_than_cores(spark, tmp_path):
+    """The layout a hand copy of Spark's FilePartition math got wrong:
+    one file Spark splits 3 ways (split size = openCostInBytes = 0.4 x
+    the file) while ``total / split`` with the open cost added rounds
+    up to 4. On 4 cores the copy called the source healthy; the guard
+    reads Spark's own count, so it must fan the stream out."""
+    import pandas as pd
+
+    from data_engineer_project_spark.operators.fanout import fanout_small
+
+    target = spark.sparkContext.defaultParallelism
+    if target < 4:
+        pytest.skip("a 3-split source is only starved at >= 4 cores")
+    src = tmp_path / "docs"
+    src.mkdir()
+    p = src / "part-0.parquet"
+    pd.DataFrame(
+        {"doc_id": range(5000), "text": [f"doc {i} " * 8 for i in range(5000)]}
+    ).to_parquet(p)
+    size = os.path.getsize(p)
+    stream = spark.readStream.schema("doc_id long, text string").parquet(str(src))
+    with _split_conf(spark, 134217728, size * 2 // 5):
+        scan = spark.read.parquet(str(src))
+        assert scan.rdd.getNumPartitions() == 3
+        fanned = fanout_small(stream, scan=scan)
+    assert fanned is not stream
+    assert fanned.isStreaming

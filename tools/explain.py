@@ -9,17 +9,45 @@ strategy (BroadcastHashJoin vs SortMergeJoin vs *NestedLoop*), partial
 aggregation, and exchange count. The plan-quality regression suite
 (tests/test_plans.py) pins the properties that must not rot; this CLI
 is for eyeballing new queries while writing them.
+
+Plans captured while the query was built (``operators/plancap``: the
+connected-components loop, streaming micro-batches) follow the query's
+own plan. Every dump is normalized: expression ids (``#NNN``),
+``plan_id=`` and ``RDD[NNN]`` numbers, run UUIDs and JVM object hash
+codes differ between two runs of the same code, so they are replaced
+by fixed tokens. Two checkouts' dumps of the same query then ``diff``
+clean unless the plan really changed. Naming a query twice builds it twice in one session
+(e.g. d99's probe pass, then its verdict-cache hit).
 """
 
 from __future__ import annotations
 
+import contextlib
+import io
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from data_engineer_project_spark.operators import plancap  # noqa: E402
 from data_engineer_project_spark.queries import QUERIES  # noqa: E402
 from data_engineer_project_spark.session import get_spark  # noqa: E402
+
+_VOLATILE = (
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}"), "UUID"),
+    (re.compile(r"@[0-9a-f]{1,8}\b"), "@H"),  # JVM identity hash codes
+)
+
+
+def normalize(plan: str) -> str:
+    """``plan`` with the run-specific numbers replaced by fixed tokens."""
+    for pattern, token in _VOLATILE:
+        plan = pattern.sub(token, plan)
+    return plan
 
 
 def main() -> None:
@@ -43,8 +71,17 @@ def main() -> None:
             continue
         for m in matches:
             print(f"\n{'=' * 70}\n{m}\n{'=' * 70}")
-            df = QUERIES[m].fn(spark, sf_dir)
-            df.explain("formatted")
+            plancap.enable()
+            try:
+                df = QUERIES[m].fn(spark, sf_dir)
+            finally:
+                plancap.disable()
+            out = io.StringIO()
+            with contextlib.redirect_stdout(out):
+                df.explain("formatted")
+            print(normalize(out.getvalue()))
+            for label, plan in plancap.CAPTURES:
+                print(f"--- captured: {label}\n{normalize(plan)}")
 
 
 if __name__ == "__main__":
