@@ -31,6 +31,20 @@ _BUILD_CONF = {
     # filter that prunes fact row groups before the join shuffle — the
     # difference between scanning 100 TB and scanning the matching slice.
     "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+    # Generated-code cache sized to the working set of one JVM. Spark's
+    # default keeps 100 compiled whole-stage classes; one perfbench `dw`
+    # pass needs ~161 and one `llm` pass ~130, so a repeated pass missed
+    # on every access and recompiled everything (~5 ms of Janino each,
+    # then C2 JIT again on the fresh classes). The 37 bench.py slots at
+    # sf0.1 need ~1,010-1,140 classes (~1,015 cold plus 60-120 warm-path
+    # and AQE variants, mostly d56, d101 and d89), so 1000 would thrash
+    # again. Three 37-slot passes in one session on 4 cores compiled
+    # 1,333 -> 1,297 -> 1,291 classes at 100 and 1,014 -> 89 -> 32 here,
+    # for 8 MB more Metaspace (SCALING.md, "Codegen cache sized to the
+    # working set"). Static conf: read once when the session is built,
+    # so it cannot join _RUNTIME_CONF and driver-provided sessions keep
+    # their own value.
+    "spark.sql.codegen.cache.maxEntries": "4096",
 }
 
 # Conf we also force onto *driver-provided* sessions (runtime-settable).

@@ -204,3 +204,39 @@ def test_hq30_readmission_flags_planted_cases(spark):
     # facility 22: encounters 5,6,7 -> readmit 1 (enc 5, inclusive day 30)
     assert (got["22"].n_discharges, got["22"].n_readmissions) == (3, 1)
     assert got["22"].readmit_rate == 1 / 3
+
+
+def test_warm_dw_pass_compiles_no_new_code(spark, sf_dir, tmp_path):
+    """A second identical pass of the warehouse operation set (star
+    build, claims fact written, hq06/q21/e06 collected) reuses every
+    generated class from the first: zero new Janino compiles. Spark's
+    default 100-entry codegen cache is smaller than this working set,
+    so under it every warm pass recompiled everything."""
+    from data_engineer_project_spark.operators.cache import release_all
+    from data_engineer_project_spark.plans.star import write_star
+    from data_engineer_project_spark.queries import QUERIES
+
+    compiles = (
+        spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    queries = [
+        QUERIES[n]
+        for n in QUERIES
+        if n.split("_", 1)[0] in ("hq06", "q21", "e06")
+    ]
+    assert len(queries) == 3
+
+    def one_pass(out):
+        dw = build_star(fixtures.dataframes(spark))
+        write_star({"fact_claims_line": dw["fact_claims_line"]}, out)
+        for q in queries:
+            q.fn(spark, sf_dir).collect()
+            release_all()
+        for df in dw.values():
+            df.unpersist()
+
+    one_pass(str(tmp_path / "cold"))
+    before = compiles.getCount()
+    one_pass(str(tmp_path / "warm"))
+    assert compiles.getCount() - before == 0

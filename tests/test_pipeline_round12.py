@@ -267,14 +267,17 @@ def test_rank_names_staleness_breaks_count_ties():
     assert order[1:] == ["p01_x", "p02_x", "e01_x"]  # stalest first
 
 
-def test_registry_gate_prefix_contains_stale_practice_rows():
+def test_registry_gate_prefix_contains_stale_practice_rows(past_gate_prefix):
     """The driver's ~50-slot sample (a prefix of queries()) must
     surface the stalest families: with 34 p-rows whose only driver
-    green is round 1, the live registry's first 50 names include
-    p-rows (the r11 sample drew only recently-regated families)."""
-    from data_engineer_project_spark.queries import QUERIES
+    green is round 1, the first 50 names include p-rows (the r11
+    sample drew only recently-regated families).
 
-    first50 = list(QUERIES)[:50]
+    Pinned to the view the round-12 gate ranked: the r1-r11 evidence
+    files, the names they record, and the contract/regate cutoffs as
+    of round 11. Ranking the live registry broke once r12 re-greened
+    the p-rows and moved the first one past slot 170."""
+    first50 = past_gate_prefix(evidence_round=11, cutoff_round=11)
     assert any(n.startswith("p") for n in first50), first50
 
 

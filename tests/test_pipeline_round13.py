@@ -16,7 +16,6 @@ tier; the fuzz test here pins that envelope.
 
 from __future__ import annotations
 
-import json
 import struct
 
 import numpy as np
@@ -29,7 +28,9 @@ import data_engineer_project_spark.operators.native_codec as nc
 # ---------------------------------------------------------------- gate
 
 
-def test_registry_gate_prefix_draws_stale_q_and_regated_hq_rows(tmp_path):
+def test_registry_gate_prefix_draws_stale_q_and_regated_hq_rows(
+    past_gate_prefix,
+):
     """r12 verdict items 3+5: given the evidence state the round-13
     gate ran against (rounds 1-12 only), the 50-slot prefix must
     surface (a) the 13 TPC-H q-rows whose only driver green was round
@@ -46,36 +47,7 @@ def test_registry_gate_prefix_draws_stale_q_and_regated_hq_rows(tmp_path):
     moment CORRECTNESS_r13.json landed; the first fix froze only the
     evidence files and would have broken on ordinary catalog growth
     (r14 review: the 13th q-row sat at slot 47 of 50)."""
-    import shutil
-    from pathlib import Path
-
-    from data_engineer_project_spark.queries import (
-        _CONTRACT_CHANGED_ROUND,
-        _REGATE_ROUND,
-        _green_counts_both,
-        rank_names,
-    )
-
-    repo_root = Path(__file__).resolve().parents[1]
-    names: set[str] = set()
-    for f in sorted(repo_root.glob("CORRECTNESS_r*.json")):
-        if int(f.stem.split("_r")[-1]) <= 12:
-            shutil.copy(f, tmp_path / f.name)
-            names.update(json.loads(f.read_text()))
-    frozen_cutoffs = {
-        n: r
-        for n in names
-        if (
-            r := max(
-                _CONTRACT_CHANGED_ROUND.get(n, 0), _REGATE_ROUND.get(n, 0)
-            )
-        )
-        <= 13
-    }
-    eff, hist, last = _green_counts_both(
-        repo_root=tmp_path, cutoffs=frozen_cutoffs
-    )
-    first50 = rank_names(sorted(names), eff, hist, last)[:50]
+    first50 = past_gate_prefix(evidence_round=12, cutoff_round=13)
     q_rows = [n for n in first50 if n[0] == "q"]
     hq_rows = [n for n in first50 if n.startswith("hq")]
     assert len(q_rows) == 13, q_rows
