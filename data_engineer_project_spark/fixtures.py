@@ -21,6 +21,8 @@ import datetime as dt
 from decimal import Decimal
 from functools import lru_cache
 
+import pyarrow as pa
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BooleanType,
     DateType,
@@ -387,15 +389,30 @@ def rows(n_members: int = DEFAULT_MEMBERS) -> dict[str, list[tuple]]:
 def dataframes(spark, n_members: int = DEFAULT_MEMBERS):
     """All 50 tables as Spark DataFrames with explicit schemas.
 
-    Plain createDataFrame on purpose: local rows become a LocalRelation
-    that Catalyst constant-folds and broadcasts optimally — wrapping in
-    coalesce/repartition would demote it to an RDD scan and cost ~4× on
-    the DW build.
+    Each table goes in as an Arrow table on purpose: Spark plans it as a
+    LocalRelation (up to arrow.localRelationThreshold, 48 MB) that
+    carries its size, so Catalyst constant-folds it and picks its
+    broadcasts at planning time. ``createDataFrame`` over the Python
+    rows would plan as ``Scan ExistingRDD`` with no size estimate: every
+    join on it is then chosen by AQE at run time, and the plan depends
+    on which input stage happens to finish first — hq06 ran one of two
+    plans per pass (4 extra generated classes) on the same data.
+    Wrapping in coalesce/repartition would demote it to an RDD scan
+    too.
     """
     return {
-        name: spark.createDataFrame(data or [], schema=ALL_TABLES[name])
+        name: spark.createDataFrame(_arrow_table(data or [], ALL_TABLES[name]))
         for name, data in rows(n_members).items()
     }
+
+
+def _arrow_table(data: list[tuple], schema: StructType) -> pa.Table:
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*data)) if data else [()] * len(schema.fields)
+    return pa.table(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema, strict=True)],
+        schema=arrow_schema,
+    )
 
 
 def register_views(spark, n_members: int = DEFAULT_MEMBERS) -> None:

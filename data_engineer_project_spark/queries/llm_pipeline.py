@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from data_engineer_project_spark.functions import text as T
 from data_engineer_project_spark.functions.numeric import money
+from data_engineer_project_spark.operators import curation as CUR
 from data_engineer_project_spark.operators import dedup as DD
 from data_engineer_project_spark.operators.cache import tracked_persist
 from data_engineer_project_spark.operators.fanout import fanout_small
@@ -972,47 +973,17 @@ def d17_approx_aggregates(t):
 
 # ------------------------------------------------ reproducible splits
 
-# Content-addressed bucketing: two md5 hex digits of the document id →
-# 0..255 → % 100. Pure engine-portable SQL (md5/substring/instr), so
-# the same doc lands in the same split on Spark, DuckDB, or anything
-# else — the property a training pipeline needs for train/test splits
-# that survive re-sharding, backfills, and engine migrations. (Engine
-# hash() builtins are NOT portable; seeded sample() is not stable
-# across partitionings.)
-
-def _md5_hex_int(
-    id_expr: str, cast_type: str, digits: int = 4, prefix: str = ""
-) -> str:
-    """Engine-portable integer from the first ``digits`` md5 hex digits
-    of ``prefix`` ‖ ``id_expr`` — pure md5/substring/instr arithmetic,
-    identical in Spark SQL (cast_type='string') and DuckDB
-    (cast_type='varchar'). The ONE definition behind every
-    content-addressed bucket/shard key in this module (d18/d19 splits,
-    d25/d31/d36 split reuse, d32 packing shards, d42 sampling buckets,
-    d45 epoch shards) — twin pairs stay identical by construction, not
-    by eyeball."""
-    key = f"cast({id_expr} as {cast_type})"
-    if prefix:
-        key = f"concat('{prefix}', {key})"
-    digit = f"(instr('0123456789abcdef', substring(md5({key}), {{i}}, 1)) - 1)"
-    return " + ".join(
-        f"{digit.format(i=i + 1)} * {16 ** (digits - 1 - i)}"
-        if i < digits - 1
-        else digit.format(i=i + 1)
-        for i in range(digits)
-    )
-
-
-_SPARK_BUCKET = f"({_md5_hex_int('doc_id', 'string', 2)}) % 100"
-_ORACLE_BUCKET = f"({_md5_hex_int('doc_id', 'varchar', 2)}) % 100"
+# Splits, sampling buckets and shards are content-addressed: md5 hex
+# digits of the doc id (operators/curation.py), identical on Spark and
+# DuckDB and stable under re-sharding, backfills and engine swaps.
 
 
 @query(
     "d18_hash_split",
     f"""
     SELECT doc_id, lang,
-           CASE WHEN {_ORACLE_BUCKET} < 80 THEN 'train'
-                WHEN {_ORACLE_BUCKET} < 90 THEN 'valid'
+           CASE WHEN {CUR.ORACLE_BUCKET} < 80 THEN 'train'
+                WHEN {CUR.ORACLE_BUCKET} < 90 THEN 'valid'
                 ELSE 'test' END AS split
     FROM documents
     """,
@@ -1022,7 +993,7 @@ def d18_hash_split(t):
     """Deterministic 80/10/10 train/valid/test assignment per document
     — a narrow map over the scan (no shuffle, no state), stable under
     any partitioning."""
-    b = F.expr(_SPARK_BUCKET)
+    b = F.expr(CUR.SPARK_BUCKET)
     return t.documents.select(
         "doc_id",
         "lang",
@@ -1035,7 +1006,7 @@ def d18_hash_split(t):
     f"""
     SELECT lang, COUNT(*) AS n_sampled,
            CAST(MIN(doc_id) AS BIGINT) AS min_doc, CAST(MAX(doc_id) AS BIGINT) AS max_doc
-    FROM documents WHERE {_ORACLE_BUCKET} < 10
+    FROM documents WHERE {CUR.ORACLE_BUCKET} < 10
     GROUP BY lang
     """,
     tags=("llm", "sample"),
@@ -1045,7 +1016,7 @@ def d19_stratified_sample(t):
     addressed bucket: a pushable filter, so the sample costs one scan
     and strata stay proportional without a per-stratum pass (contrast
     `sampleBy`, whose output changes with partitioning)."""
-    b = F.expr(_SPARK_BUCKET)
+    b = F.expr(CUR.SPARK_BUCKET)
     return (
         t.documents.filter(b < 10)
         .groupBy("lang")
@@ -1346,22 +1317,11 @@ def d24_repetition_ratio(t):
     "d25_decontamination",
     f"""
     WITH {ND.shingles_sql()},
-    {ND.informative_sql()},
-    shf AS (
-      SELECT shd.doc_id, shd.shingle, {_ORACLE_BUCKET} AS bucket
-      FROM shd JOIN informative USING (shingle)
-    ),
-    test_sh AS (SELECT doc_id, shingle FROM shf WHERE bucket >= 90),
-    train_sh AS (SELECT doc_id, shingle FROM shf WHERE bucket < 80),
-    overlap AS (
-      SELECT te.doc_id AS test_doc, tr.doc_id AS train_doc, COUNT(*) AS n_overlap
-      FROM test_sh te JOIN train_sh tr ON te.shingle = tr.shingle
-      GROUP BY 1, 2
-    )
+    {CUR.overlap_sql()}
     SELECT test_doc,
            CAST(COUNT(*) AS BIGINT) AS n_train_matches,
            CAST(MAX(n_overlap) AS BIGINT) AS max_overlap
-    FROM overlap WHERE n_overlap >= 2
+    FROM leaks
     GROUP BY test_doc
     """,
     tags=("llm", "dedup", "eval"),
@@ -1375,28 +1335,11 @@ def d25_decontamination(t):
     shingle index as d12 (df ≤ 50 drops stop-shingles), so the overlap
     join is corpus-linear, never |test|×|train|. Report: per test doc,
     how many train docs collide and the worst overlap."""
-    b = F.expr(_SPARK_BUCKET)
     sh = tracked_persist(
         DD.exploded_shingles(t.documents, "doc_id", "text", 3).distinct()
     )
-    informative = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter((F.col("df") <= 50) & (F.col("df") > 1))
-        .select("shingle")
-    )
-    shf = sh.join(informative, "shingle").withColumn("bucket", b)
-    test_sh = shf.filter(F.col("bucket") >= 90).select("doc_id", "shingle")
-    train_sh = shf.filter(F.col("bucket") < 80).select(
-        F.col("doc_id").alias("train_doc"), "shingle"
-    )
-    overlap = (
-        test_sh.join(train_sh, "shingle")
-        .groupBy(F.col("doc_id").alias("test_doc"), "train_doc")
-        .agg(F.count(F.lit(1)).alias("n_overlap"))
-    )
     return (
-        overlap.filter(F.col("n_overlap") >= 2)
+        CUR.leaking_pairs(sh)
         .groupBy("test_doc")
         .agg(
             F.count(F.lit(1)).alias("n_train_matches"),
@@ -1690,7 +1633,7 @@ def d30_bm25_topk(t):
 
 
 def _semantic_decon_oracle(threshold: float = 0.4, dim: int = 64) -> str:
-    bucket = _ORACLE_BUCKET.replace("doc_id", "e.vec_id")
+    bucket = CUR.ORACLE_BUCKET.replace("doc_id", "e.vec_id")
     return f"""
     WITH {_banded_lsh_sig_sql(dim)},
     v AS (SELECT e.vec_id, e.embedding, b.band, b.bucket, {bucket} AS split_b
@@ -1731,7 +1674,7 @@ def d31_semantic_decontamination(t):
         banded_lsh_sigs,
     )
 
-    b = F.expr(_SPARK_BUCKET.replace("doc_id", "vid"))
+    b = F.expr(CUR.SPARK_BUCKET.replace("doc_id", "vid"))
     v = banded_lsh_sigs(t.embeddings, t.embeddings).withColumn("split_b", b)
     test = v.filter(F.col("split_b") >= 90).select(
         F.col("vid").alias("test_vec"),
@@ -1768,41 +1711,15 @@ def d31_semantic_decontamination(t):
 
 _PACK_BUDGET = 2048
 
-# Packing-shard sizing: the d32 window key must be BOUNDED — a window
-# partitioned by lang alone computes one language's entire prefix sum
-# in one task, and at 100 TB one language can be half the corpus. The
-# shard is content-addressed (4 md5 hex digits of doc_id → 0..65535,
-# the d18 machinery widened to 16 bits) and the shard COUNT doubles
-# with the corpus until each shard holds ~_PACK_SHARD_TARGET docs
-# (integer comparisons ``n > TARGET << j``, the adaptive_planes
-# pattern, so the DuckDB oracle derives the identical count from
-# COUNT(*)). Capped at 2^16 shards by the hash domain — beyond that
-# shards grow linearly but stay 65536× smaller than the corpus.
-_PACK_SHARD_TARGET = 256
-_PACK_SHARD_MAX_BITS = 16
-
-
-def _pack_shards(n: int) -> int:
-    """Shard count for an n-doc corpus: 2^(#{j < 16 : n > 256·2^j})."""
-    return 1 << sum(
-        1 for j in range(_PACK_SHARD_MAX_BITS) if n > (_PACK_SHARD_TARGET << j)
-    )
-
-
-_PACK_SHARDS_SQL = "1 " + " ".join(
-    f"* (CASE WHEN n_docs > {_PACK_SHARD_TARGET << j} THEN 2 ELSE 1 END)"
-    for j in range(_PACK_SHARD_MAX_BITS)
-)
-
 
 @query(
     "d32_sequence_packing",
     f"""
     WITH st AS (SELECT COUNT(*) AS n_docs FROM documents),
-    ns AS (SELECT {_PACK_SHARDS_SQL} AS n_shards FROM st),
+    ns AS (SELECT {CUR.PACK_SHARDS_SQL} AS n_shards FROM st),
     toks AS (
       SELECT doc_id, lang,
-             CAST(({_md5_hex_int('doc_id', 'varchar')}) % n_shards AS BIGINT) AS shard,
+             CAST(({CUR.md5_hex_int('doc_id', 'varchar')}) % n_shards AS BIGINT) AS shard,
              CAST(ceil(length(text) / 4.0) AS BIGINT) AS est_tokens
       FROM documents, ns
     ),
@@ -1848,7 +1765,7 @@ def d32_sequence_packing(t):
     map-side-partial groupBy aggregates per sequence. Per-shard quotas
     still sum exactly to the corpus totals. Output: per-sequence fill
     report (docs, tokens, id range)."""
-    n_shards = _pack_shards(t.documents.count())
+    n_shards = CUR.pack_shards(t.documents.count())
     w = (
         Window.partitionBy("lang", "shard")
         .orderBy("doc_id")
@@ -1857,7 +1774,7 @@ def d32_sequence_packing(t):
     toks = t.documents.select(
         "doc_id",
         "lang",
-        F.expr(f"({_md5_hex_int('doc_id', 'string')}) % {n_shards}")
+        F.expr(f"({CUR.md5_hex_int('doc_id', 'string')}) % {n_shards}")
         .cast("long")
         .alias("shard"),
         T.bpe_token_estimate("text").alias("est_tokens"),
@@ -2018,7 +1935,7 @@ def d35_char_class_profile(t):
     f"""
     WITH {ND.shingles_sql()},
     shd AS (SELECT DISTINCT doc_id, shingle FROM sh),
-    b AS (SELECT doc_id, lang, {_ORACLE_BUCKET} AS bucket FROM documents),
+    b AS (SELECT doc_id, lang, {CUR.ORACLE_BUCKET} AS bucket FROM documents),
     shl AS (SELECT shd.shingle, b.lang, b.bucket FROM shd JOIN b USING (doc_id)),
     test_sh AS (SELECT DISTINCT lang, shingle FROM shl WHERE bucket >= 90),
     train_sh AS (SELECT DISTINCT shingle FROM shl WHERE bucket < 80),
@@ -2044,7 +1961,7 @@ def d36_ngram_novelty(t):
     check is two distinct-projections and a semi join on the shingle
     key — corpus-linear, no doc×doc stage; integer count ratios keep
     the doubles engine-exact."""
-    b = F.expr(_SPARK_BUCKET)
+    b = F.expr(CUR.SPARK_BUCKET)
     docs = t.documents.select("doc_id", "lang", b.alias("bucket"))
     sh = DD.exploded_shingles(t.documents, "doc_id", "text", 3).distinct()
     shl = sh.join(docs, "doc_id")
@@ -2172,28 +2089,17 @@ def d38_curation_containment(t):
 # pipeline (C4/RefinedWeb-style cleanup) not yet covered by d01-d38.
 # ---------------------------------------------------------------------------
 
-_EMAIL_RE = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-_PHONE_RE = "[0-9]{3}-[0-9]{3}-[0-9]{4}"
-
 
 @query(
     "d39_pii_redaction",
     f"""
     WITH injected AS (
-      SELECT doc_id, lang,
-             text || ' contact user' || CAST(doc_id AS VARCHAR)
-                  || '@mail-' || CAST(doc_id % 97 AS VARCHAR) || '.example.com'
-                  || ' call 555-' || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0')
-                  || '-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-               AS pii_text
-      FROM documents
+      SELECT doc_id, lang, {CUR.PII_INJECTED_SQL} AS pii_text FROM documents
     ), red AS (
       SELECT doc_id, lang, pii_text,
-             regexp_replace(
-               regexp_replace(pii_text, '{_EMAIL_RE}', '<EMAIL>', 'g'),
-               '{_PHONE_RE}', '<PHONE>', 'g') AS clean_text,
-             length(regexp_extract_all(pii_text, '{_EMAIL_RE}')) AS n_email,
-             length(regexp_extract_all(pii_text, '{_PHONE_RE}')) AS n_phone
+             {CUR.redacted_sql("pii_text")} AS clean_text,
+             length(regexp_extract_all(pii_text, '{CUR.EMAIL_RE}')) AS n_email,
+             length(regexp_extract_all(pii_text, '{CUR.PHONE_RE}')) AS n_phone
       FROM injected
     )
     SELECT lang,
@@ -2221,33 +2127,15 @@ def d39_pii_redaction(t):
     Scale: stateless row-local string work — single scan, no shuffle
     besides the 5-group rollup; at 100 TB this is the cheapest stage
     of the pipeline and pipelines with any adjacent scan."""
-    d = F.col("doc_id")
     injected = t.documents.select(
-        "doc_id",
-        "lang",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact user"),
-            d.cast("string"),
-            F.lit("@mail-"),
-            (d % 97).cast("string"),
-            F.lit(".example.com"),
-            F.lit(" call 555-"),
-            F.lpad((d % 1000).cast("string"), 3, "0"),
-            F.lit("-"),
-            F.lpad((d % 10000).cast("string"), 4, "0"),
-        ).alias("pii_text"),
+        "doc_id", "lang", CUR.pii_injected().alias("pii_text")
     )
     red = injected.select(
         "lang",
         "pii_text",
-        F.regexp_replace(
-            F.regexp_replace("pii_text", _EMAIL_RE, "<EMAIL>"),
-            _PHONE_RE,
-            "<PHONE>",
-        ).alias("clean_text"),
-        F.regexp_count("pii_text", F.lit(_EMAIL_RE)).alias("n_email"),
-        F.regexp_count("pii_text", F.lit(_PHONE_RE)).alias("n_phone"),
+        CUR.redacted("pii_text").alias("clean_text"),
+        F.regexp_count("pii_text", F.lit(CUR.EMAIL_RE)).alias("n_email"),
+        F.regexp_count("pii_text", F.lit(CUR.PHONE_RE)).alias("n_phone"),
     )
     return (
         red.groupBy("lang")
@@ -2400,43 +2288,18 @@ def d41_length_percentiles(t):
 
 # --------------------------------------------- domain mixture resampling
 
-# Fine-grained content-addressed bucket for sampling thresholds: the
-# first FOUR md5 hex digits of the doc id → 0..65535, so the keep
-# ratio resolves to 1/65536 of a source's mass — fine enough to
-# downsample a source 10^4x larger than the smallest without
-# granularity overshoot. Engine-portable; a doc keeps/drops the same
-# way on any engine, partitioning, or backfill.
-_SPARK_BUCKET64K = f"({_md5_hex_int('doc_id', 'string', 4)})"
-_ORACLE_BUCKET64K = f"({_md5_hex_int('doc_id', 'varchar', 4)})"
-
 
 @query(
     "d42_domain_mixture_downsample",
     f"""
     WITH hist AS (
-      SELECT source, {_ORACLE_BUCKET64K} AS bkt,
+      SELECT source, {CUR.ORACLE_BUCKET64K} AS bkt,
              COUNT(*) AS n,
              SUM(CAST(ceil(length(text) / 4.0) AS BIGINT)) AS tokens
       FROM documents GROUP BY 1, 2
     ),
-    src AS (SELECT source, SUM(n) AS orig_docs, SUM(tokens) AS orig_tokens
-            FROM hist GROUP BY source),
-    mn AS (SELECT MIN(orig_tokens) AS min_tok FROM src),
-    thr AS (SELECT source, orig_docs, orig_tokens,
-                   least(65536, (65536 * min_tok + orig_tokens - 1) // orig_tokens)
-                     AS keep_thr
-            FROM src, mn),
-    kept AS (SELECT h.source, SUM(h.n) AS kept_docs, SUM(h.tokens) AS kept_tokens
-             FROM hist h JOIN thr t ON h.source = t.source AND h.bkt < t.keep_thr
-             GROUP BY h.source)
-    SELECT t.source,
-           CAST(t.orig_docs AS BIGINT) AS orig_docs,
-           CAST(t.orig_tokens AS BIGINT) AS orig_tokens,
-           CAST(t.keep_thr AS BIGINT) AS keep_thr,
-           CAST(COALESCE(k.kept_docs, 0) AS BIGINT) AS kept_docs,
-           CAST(COALESCE(k.kept_tokens, 0) AS BIGINT) AS kept_tokens
-    FROM thr t LEFT JOIN kept k ON t.source = k.source
-    ORDER BY t.source
+    {CUR.mixture_report_sql("source")}
+    SELECT * FROM report ORDER BY source
     """,
     tags=("llm", "curation", "sampling"),
 )
@@ -2461,39 +2324,13 @@ def d42_domain_mixture_downsample(t):
     hist = (
         t.documents.select(
             "source",
-            F.expr(_SPARK_BUCKET64K).alias("bkt"),
+            F.expr(CUR.SPARK_BUCKET64K).alias("bkt"),
             T.bpe_token_estimate("text").alias("tok"),
         )
         .groupBy("source", "bkt")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("tok").alias("tokens"))
     )
-    hist = tracked_persist(hist)
-    src = hist.groupBy("source").agg(
-        F.sum("n").alias("orig_docs"), F.sum("tokens").alias("orig_tokens")
-    )
-    mn = src.agg(F.min("orig_tokens").alias("min_tok"))
-    thr = src.crossJoin(F.broadcast(mn)).withColumn(
-        "keep_thr",
-        F.expr("least(65536, (65536 * min_tok + orig_tokens - 1) div orig_tokens)"),
-    )
-    kept = (
-        hist.join(F.broadcast(thr.select("source", "keep_thr")), "source")
-        .filter(F.col("bkt") < F.col("keep_thr"))
-        .groupBy("source")
-        .agg(F.sum("n").alias("kept_docs"), F.sum("tokens").alias("kept_tokens"))
-    )
-    return (
-        thr.join(F.broadcast(kept), "source", "left")
-        .select(
-            "source",
-            F.col("orig_docs").cast("long").alias("orig_docs"),
-            F.col("orig_tokens").cast("long").alias("orig_tokens"),
-            F.col("keep_thr").cast("long").alias("keep_thr"),
-            F.coalesce("kept_docs", F.lit(0)).cast("long").alias("kept_docs"),
-            F.coalesce("kept_tokens", F.lit(0)).cast("long").alias("kept_tokens"),
-        )
-        .orderBy("source")
-    )
+    return CUR.mixture_report(hist, "source")
 
 
 @query(
@@ -2595,26 +2432,10 @@ _EPOCH_SEED = "epoch7|"
 @query(
     "d45_epoch_shuffle",
     f"""
-    WITH st AS (SELECT COUNT(*) AS n_docs FROM documents),
-    ns AS (SELECT {_PACK_SHARDS_SQL} AS n_shards FROM st),
-    keyed AS (
-      SELECT doc_id, source,
-             ({_md5_hex_int('doc_id', 'varchar', 4, prefix=_EPOCH_SEED)})
-               % n_shards AS shard,
-             md5(concat('{_EPOCH_SEED}', cast(doc_id AS varchar))) AS okey
-      FROM documents, ns
-    ),
-    ranked AS (
-      SELECT doc_id, source, shard,
-             ROW_NUMBER() OVER (PARTITION BY shard ORDER BY okey, doc_id) AS rnk
-      FROM keyed
-    )
-    SELECT shard,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(COUNT(DISTINCT source) AS BIGINT) AS n_sources,
-           CAST(MAX(CASE WHEN rnk = 1 THEN doc_id END) AS BIGINT) AS first_doc,
-           CAST(SUM(rnk * doc_id) AS BIGINT) AS order_checksum
-    FROM ranked GROUP BY shard ORDER BY shard
+    WITH {CUR.shard_deal_sql(
+        "documents", _EPOCH_SEED, "CAST(COUNT(DISTINCT source) AS BIGINT) AS n_sources"
+    )}
+    SELECT * FROM deal ORDER BY shard
     """,
     tags=("llm", "sampling"),
 )
@@ -2637,35 +2458,10 @@ def d45_epoch_shuffle(t):
     stays bounded at any scale — a trainer reads shard files in rank
     order, so no global sort ever materializes. One scan, one shuffle
     on shard."""
-    return epoch_shuffle_profile(t.documents, _EPOCH_SEED)
-
-
-def epoch_shuffle_profile(docs, seed: str):
-    """The d45 plan for an arbitrary epoch ``seed`` (tests vary the
-    seed to pin that each epoch yields a different permutation while
-    any single epoch is deterministic under repartitioning)."""
-    n_shards = _pack_shards(docs.count())
-    keyed = docs.select(
-        "doc_id",
-        "source",
-        F.md5(F.concat(F.lit(seed), F.col("doc_id").cast("string"))).alias("okey"),
-    ).withColumn(
-        "shard",
-        F.expr(f"({_md5_hex_int('doc_id', 'string', 4, prefix=seed)}) % {n_shards}"),
-    )
-    w = Window.partitionBy("shard").orderBy("okey", "doc_id")
-    ranked = keyed.withColumn("rnk", F.row_number().over(w))
-    return (
-        ranked.groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.countDistinct("source").alias("n_sources"),
-            F.max(F.when(F.col("rnk") == 1, F.col("doc_id")))
-            .cast("long")
-            .alias("first_doc"),
-            F.sum(F.col("rnk") * F.col("doc_id")).alias("order_checksum"),
-        )
-        .orderBy("shard")
+    return CUR.shard_deal(
+        t.documents.select("doc_id", "source"),
+        _EPOCH_SEED,
+        F.countDistinct("source").alias("n_sources"),
     )
 
 
@@ -2673,19 +2469,8 @@ def epoch_shuffle_profile(docs, seed: str):
     "d46_leakage_severity_histogram",
     f"""
     WITH {ND.shingles_sql()},
-    {ND.informative_sql()},
-    shf AS (
-      SELECT shd.doc_id, shd.shingle, {_ORACLE_BUCKET} AS bucket
-      FROM shd JOIN informative USING (shingle)
-    ),
-    test_sh AS (SELECT doc_id, shingle FROM shf WHERE bucket >= 90),
-    train_sh AS (SELECT doc_id, shingle FROM shf WHERE bucket < 80),
+    {CUR.overlap_sql()},
     sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM test_sh GROUP BY doc_id),
-    overlap AS (
-      SELECT te.doc_id AS test_doc, tr.doc_id AS train_doc, COUNT(*) AS n_overlap
-      FROM test_sh te JOIN train_sh tr ON te.shingle = tr.shingle
-      GROUP BY 1, 2
-    ),
     mo AS (SELECT test_doc, MAX(n_overlap) AS max_ov FROM overlap GROUP BY test_doc),
     sev AS (
       SELECT s.doc_id,
@@ -2710,28 +2495,12 @@ def d46_leakage_severity_histogram(t):
     index as d12/d25, so the overlap join stays corpus-linear; the
     quartile is pure integer arithmetic (no float ratios to drift
     cross-engine)."""
-    b = F.expr(_SPARK_BUCKET)
     sh = tracked_persist(
         DD.exploded_shingles(t.documents, "doc_id", "text", 3).distinct()
     )
-    informative = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter((F.col("df") <= 50) & (F.col("df") > 1))
-        .select("shingle")
-    )
-    shf = sh.join(informative, "shingle").withColumn("bucket", b)
-    test_sh = shf.filter(F.col("bucket") >= 90).select("doc_id", "shingle")
-    train_sh = shf.filter(F.col("bucket") < 80).select(
-        F.col("doc_id").alias("train_doc"), "shingle"
-    )
+    test_sh, _ = CUR.split_shingles(sh)
     sizes = test_sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    overlap = (
-        test_sh.join(train_sh, "shingle")
-        .groupBy(F.col("doc_id").alias("test_doc"), "train_doc")
-        .agg(F.count(F.lit(1)).alias("n_overlap"))
-    )
-    mo = overlap.groupBy("test_doc").agg(F.max("n_overlap").alias("max_ov"))
+    mo = CUR.overlap(sh).groupBy("test_doc").agg(F.max("n_overlap").alias("max_ov"))
     sev = sizes.join(mo, sizes.doc_id == mo.test_doc, "left").select(
         F.coalesce(
             F.expr("(4 * max_ov) div n_sh").cast("int"), F.lit(-1)
@@ -2744,34 +2513,12 @@ def d46_leakage_severity_histogram(t):
     )
 
 
-_CHUNK_WORDS = 8
 
 
 @query(
     "d47_chunk_substring_dedup",
     f"""
-    WITH w AS (
-      SELECT doc_id, lang, string_split(text, ' ') AS words FROM documents
-    ),
-    c AS (
-      SELECT doc_id, lang,
-             unnest(generate_series(0, (len(words) - 1) // {_CHUNK_WORDS})) AS pos,
-             words
-      FROM w
-    ),
-    ch AS (
-      SELECT doc_id, lang, pos,
-             array_to_string(
-               words[pos * {_CHUNK_WORDS} + 1 : (pos + 1) * {_CHUNK_WORDS}], ' '
-             ) AS chunk,
-             least({_CHUNK_WORDS}, len(words) - pos * {_CHUNK_WORDS}) AS n_words
-      FROM c
-    ),
-    r AS (
-      SELECT doc_id, lang, n_words,
-             ROW_NUMBER() OVER (PARTITION BY chunk ORDER BY doc_id, pos) AS rn
-      FROM ch
-    )
+    WITH {CUR.chunks_sql("documents", "text", ("lang",))}
     SELECT lang,
            CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
            CAST(COUNT(*) AS BIGINT) AS total_chunks,
@@ -2780,7 +2527,7 @@ _CHUNK_WORDS = 8
              AS removed_words,
            CAST(SUM(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS DOUBLE)
              / CAST(COUNT(*) AS DOUBLE) AS frac_kept
-    FROM r GROUP BY lang ORDER BY lang
+    FROM cranked GROUP BY lang ORDER BY lang
     """,
     tags=("llm", "dedup"),
 )
@@ -2807,36 +2554,21 @@ def d47_chunk_substring_dedup(t):
     as total_words − survivor_words. No all-pairs surface anywhere;
     cost is linear in corpus tokens. frac_kept is the only float:
     bigint/bigint → double."""
-    cw = _CHUNK_WORDS
-    d = t.documents.select(
-        "doc_id", "lang", F.split(F.col("text"), " ").alias("words")
-    )
-    ch = d.select(
-        "doc_id",
-        "lang",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, (size(words)-1) div {cw}),"
-                f" j -> struct(concat_ws(' ', slice(words, j*{cw}+1, {cw})) AS chunk,"
-                f" least({cw}, size(words) - j*{cw}) AS n_words))"
-            )
-        ).alias("pos", "c"),
-    ).select("doc_id", "lang", "pos", "c.chunk", "c.n_words")
+    ch = CUR.chunks(t.documents, "text", ("lang",))
     # per-lang occurrence totals: one map-side-partial shuffle on lang
     occ = ch.groupBy("lang").agg(
         F.countDistinct("doc_id").alias("n_docs"),
         F.count(F.lit(1)).alias("total_chunks"),
         F.sum("n_words").alias("total_words"),
     )
-    # one survivor per chunk: min over (doc_id, pos); lang/n_words ride
-    # along as trailing struct fields (n_words is a function of the
-    # chunk text, so the survivor's value is THE value)
-    firsts = ch.groupBy("chunk").agg(
-        F.min(F.struct("doc_id", "pos", "lang", "n_words")).alias("first")
-    )
-    kept = firsts.groupBy(F.col("first.lang").alias("k_lang")).agg(
-        F.count(F.lit(1)).alias("kept_chunks"),
-        F.sum("first.n_words").alias("kept_words"),
+    # one survivor per chunk; lang rides along in the min struct
+    kept = (
+        CUR.first_chunks(ch, "lang")
+        .groupBy(F.col("first.lang").alias("k_lang"))
+        .agg(
+            F.count(F.lit(1)).alias("kept_chunks"),
+            F.sum("first.n_words").alias("kept_words"),
+        )
     )
     zero = F.lit(0).cast("long")
     return (
@@ -3187,7 +2919,7 @@ _RH_MOD = 2_147_483_647  # Mersenne prime 2^31 - 1; acc*BASE + x < 2^52
            CAST(list_reduce(
              list_prepend(CAST(0 AS BIGINT),
                list_transform(string_split(text, ' '),
-                 w -> CAST({_md5_hex_int('w', 'varchar', 8)} AS BIGINT))),
+                 w -> CAST({CUR.md5_hex_int('w', 'varchar', 8)} AS BIGINT))),
              (acc, x) -> (acc * {_RH_BASE} + x) % {_RH_MOD}) AS BIGINT)
              AS rolling_fp
     FROM documents ORDER BY doc_id
@@ -3533,7 +3265,7 @@ def d52_quality_tiered_mixture(t):
     "d53_corpus_snapshot_diff",
     f"""
     WITH b AS (
-      SELECT doc_id, lang, text, {_ORACLE_BUCKET} AS bk FROM documents
+      SELECT doc_id, lang, text, {CUR.ORACLE_BUCKET} AS bk FROM documents
     ),
     snap_a AS (
       SELECT doc_id, lang, md5(text) AS fp FROM b WHERE bk < 90
@@ -3576,7 +3308,7 @@ def d53_corpus_snapshot_diff(t):
     langs × 4 rows. This is s11's batch complement: s11 gates NEW docs
     against a corpus incrementally, d53 reconciles two full versions."""
     b = t.documents.select(
-        "doc_id", "lang", "text", F.expr(_SPARK_BUCKET).alias("bk")
+        "doc_id", "lang", "text", F.expr(CUR.SPARK_BUCKET).alias("bk")
     )
     snap_a = b.filter(F.col("bk") < 90).select(
         "doc_id", "lang", F.md5("text").alias("fp")
@@ -3742,25 +3474,10 @@ def d54_rare_token_mass(t):
     "d55_clean_train_split",
     f"""
     WITH {ND.shingles_sql()},
-    {ND.informative_sql()},
-    shf AS (
-      SELECT shd.doc_id, shd.shingle, {_ORACLE_BUCKET} AS bucket
-      FROM shd JOIN informative USING (shingle)
-    ),
-    test_sh AS (SELECT doc_id, shingle FROM shf WHERE bucket >= 90),
-    train_sh AS (SELECT doc_id, shingle FROM shf WHERE bucket < 80),
-    overlap AS (
-      SELECT tr.doc_id AS train_doc, te.doc_id AS test_doc,
-             COUNT(*) AS n_overlap
-      FROM test_sh te JOIN train_sh tr ON te.shingle = tr.shingle
-      GROUP BY 1, 2
-    ),
-    leaky AS (
-      SELECT DISTINCT train_doc FROM overlap WHERE n_overlap >= 2
-    ),
+    {CUR.overlap_sql()},
     tr AS (
       SELECT doc_id, lang, length(string_split(text, ' ')) AS nw
-      FROM documents WHERE {_ORACLE_BUCKET} < 80
+      FROM documents WHERE {CUR.ORACLE_BUCKET} < 80
     )
     SELECT tr.lang,
            CAST(COUNT(*) AS BIGINT) AS n_train,
@@ -3794,30 +3511,11 @@ def d55_clean_train_split(t):
     forced broadcast hint: AQE broadcasts it when it is actually
     small and falls back to a sort-merge join on doc_id otherwise.
     The per-lang rollup is map-side-combined."""
-    b = F.expr(_SPARK_BUCKET)
     sh = tracked_persist(
         DD.exploded_shingles(t.documents, "doc_id", "text", 3).distinct()
     )
-    informative = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter((F.col("df") <= 50) & (F.col("df") > 1))
-        .select("shingle")
-    )
-    shf = sh.join(informative, "shingle").withColumn("bucket", b)
-    test_sh = shf.filter(F.col("bucket") >= 90).select("doc_id", "shingle")
-    train_sh = shf.filter(F.col("bucket") < 80).select(
-        F.col("doc_id").alias("train_doc"), "shingle"
-    )
-    leaky = (
-        test_sh.join(train_sh, "shingle")
-        .groupBy("train_doc", F.col("doc_id").alias("test_doc"))
-        .agg(F.count(F.lit(1)).alias("n_overlap"))
-        .filter(F.col("n_overlap") >= 2)
-        .select("train_doc")
-        .distinct()
-    )
-    tr = t.documents.filter(b < 80).select(
+    leaky = CUR.leaky(sh)
+    tr = t.documents.filter(F.expr(CUR.SPARK_BUCKET) < 80).select(
         "doc_id", "lang", T.token_count("text").alias("nw")
     )
     # No broadcast hint: the leaky set is data-dependent (a contaminated
@@ -3939,101 +3637,33 @@ _D56_SEED = "d56epoch1|"
     "d56_end_to_end_curation",
     f"""
     WITH {ND.shingles_sql()},
-    {ND.informative_sql()},
-    shf AS (
-      SELECT shd.doc_id, shd.shingle, {_ORACLE_BUCKET} AS bucket
-      FROM shd JOIN informative USING (shingle)
-    ),
-    test_sh AS (SELECT doc_id, shingle FROM shf WHERE bucket >= 90),
-    train_sh AS (SELECT doc_id, shingle FROM shf WHERE bucket < 80),
-    overlap AS (
-      SELECT tr.doc_id AS train_doc, te.doc_id AS test_doc,
-             COUNT(*) AS n_overlap
-      FROM test_sh te JOIN train_sh tr ON te.shingle = tr.shingle
-      GROUP BY 1, 2
-    ),
-    leaky AS (SELECT DISTINCT train_doc FROM overlap WHERE n_overlap >= 2),
+    {CUR.overlap_sql()},
     clean AS (
       SELECT doc_id, lang, source, text FROM documents
-      WHERE {_ORACLE_BUCKET} < 80
+      WHERE {CUR.ORACLE_BUCKET} < 80
         AND doc_id NOT IN (SELECT train_doc FROM leaky)
     ),
     red AS (
-      SELECT doc_id, lang, source,
-             regexp_replace(
-               regexp_replace(
-                 text || ' contact user' || CAST(doc_id AS VARCHAR)
-                      || '@mail-' || CAST(doc_id % 97 AS VARCHAR)
-                      || '.example.com'
-                      || ' call 555-'
-                      || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0')
-                      || '-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0'),
-                 '{_EMAIL_RE}', '<EMAIL>', 'g'),
-               '{_PHONE_RE}', '<PHONE>', 'g') AS ctext
-      FROM clean
+      SELECT doc_id, lang, source, {CUR.PII_REDACTED_SQL} AS ctext FROM clean
     ),
-    w2 AS (SELECT doc_id, source, string_split(ctext, ' ') AS words FROM red),
-    c2 AS (
-      SELECT doc_id, source,
-             unnest(generate_series(0, (len(words) - 1) // {_CHUNK_WORDS})) AS pos,
-             words
-      FROM w2
-    ),
-    ch2 AS (
-      SELECT doc_id, source, pos,
-             array_to_string(
-               words[pos * {_CHUNK_WORDS} + 1 : (pos + 1) * {_CHUNK_WORDS}], ' '
-             ) AS chunk,
-             least({_CHUNK_WORDS}, len(words) - pos * {_CHUNK_WORDS}) AS n_words
-      FROM c2
-    ),
-    r2 AS (
-      SELECT doc_id, n_words,
-             ROW_NUMBER() OVER (PARTITION BY chunk ORDER BY doc_id, pos) AS rn
-      FROM ch2
-    ),
+    {CUR.chunks_sql("red", "ctext", ())},
     kpd AS (
       SELECT doc_id, SUM(n_words) AS kept_words
-      FROM r2 WHERE rn = 1 GROUP BY doc_id
+      FROM cranked WHERE rn = 1 GROUP BY doc_id
     ),
     surv AS (
       SELECT red.doc_id, red.source, kpd.kept_words
       FROM red JOIN kpd USING (doc_id)
     ),
     srcs AS (SELECT source, SUM(kept_words) AS orig_tokens FROM surv GROUP BY source),
-    mn2 AS (SELECT MIN(orig_tokens) AS min_tok FROM srcs),
-    thr2 AS (
-      SELECT source,
-             least(65536, (65536 * min_tok + orig_tokens - 1) // orig_tokens)
-               AS keep_thr
-      FROM srcs, mn2
-    ),
-    fin AS (
-      SELECT s.doc_id, s.source, s.kept_words
-      FROM surv s JOIN thr2 tt USING (source)
-      WHERE ({_ORACLE_BUCKET64K}) < tt.keep_thr
-    ),
-    nf AS (SELECT COUNT(*) AS n_docs FROM fin),
-    ns2 AS (SELECT {_PACK_SHARDS_SQL} AS n_shards FROM nf),
-    keyed AS (
-      SELECT doc_id, source, kept_words,
-             ({_md5_hex_int('doc_id', 'varchar', 4, prefix=_D56_SEED)})
-               % n_shards AS shard,
-             md5(concat('{_D56_SEED}', cast(doc_id AS varchar))) AS okey
-      FROM fin, ns2
-    ),
-    rk AS (
-      SELECT doc_id, source, kept_words, shard,
-             ROW_NUMBER() OVER (PARTITION BY shard ORDER BY okey, doc_id) AS rnk
-      FROM keyed
-    )
-    SELECT shard,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(COUNT(DISTINCT source) AS BIGINT) AS n_sources,
-           CAST(SUM(kept_words) AS BIGINT) AS kept_tokens,
-           CAST(MAX(CASE WHEN rnk = 1 THEN doc_id END) AS BIGINT) AS first_doc,
-           CAST(SUM(rnk * doc_id) AS BIGINT) AS order_checksum
-    FROM rk GROUP BY shard ORDER BY shard
+    {CUR.mixture_keep_sql("surv", "srcs")},
+    {CUR.shard_deal_sql(
+        "kept",
+        _D56_SEED,
+        "CAST(COUNT(DISTINCT source) AS BIGINT) AS n_sources",
+        "CAST(SUM(kept_words) AS BIGINT) AS kept_tokens",
+    )}
+    SELECT * FROM deal ORDER BY shard
     """,
     tags=("llm", "curation", "pipeline"),
 )
@@ -4065,7 +3695,6 @@ def d56_end_to_end_curation(t):
     shards. The one driver sync — the final doc count that sizes the
     shard count — reads a persisted intermediate the shuffle stage
     reuses (the d32/d45 metadata-count pattern)."""
-    b = F.expr(_SPARK_BUCKET)
     docs = t.documents
     # decontaminated train split (d55 machinery). r14 (guide §2.4):
     # every consumer of the cached shingle set keys by `shingle`
@@ -4081,126 +3710,38 @@ def d56_end_to_end_curation(t):
         .repartition(F.col("shingle"))
         .dropDuplicates(["doc_id", "shingle"])
     )
-    informative = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter((F.col("df") <= 50) & (F.col("df") > 1))
-        .select("shingle")
-    )
-    shf = sh.join(informative, "shingle").withColumn("bucket", b)
-    test_sh = shf.filter(F.col("bucket") >= 90).select("doc_id", "shingle")
-    train_sh = shf.filter(F.col("bucket") < 80).select(
-        F.col("doc_id").alias("train_doc"), "shingle"
-    )
-    leaky = (
-        test_sh.join(train_sh, "shingle")
-        .groupBy("train_doc", F.col("doc_id").alias("test_doc"))
-        .agg(F.count(F.lit(1)).alias("n_overlap"))
-        .filter(F.col("n_overlap") >= 2)
-        .select("train_doc")
-        .distinct()
-    )
+    # leaky feeds clean -> red, which three later branches read (the
+    # chunks, the survivors and, through them, the thresholds and the
+    # deal): persisted, the test x train overlap aggregate runs once
+    # instead of once per branch.
+    leaky = tracked_persist(CUR.leaky(sh))
     # No broadcast hint on the data-dependent leaky set (see d55): AQE
     # broadcasts it when small, shuffle-anti-join otherwise.
-    clean = docs.filter(b < 80).join(
+    clean = docs.filter(F.expr(CUR.SPARK_BUCKET) < 80).join(
         leaky,
         docs.doc_id == leaky.train_doc,
         "left_anti",
     )
-    # PII redaction (d39 machinery) on the surviving train docs
-    d = F.col("doc_id")
-    pii_text = F.concat(
-        F.col("text"),
-        F.lit(" contact user"),
-        d.cast("string"),
-        F.lit("@mail-"),
-        (d % 97).cast("string"),
-        F.lit(".example.com"),
-        F.lit(" call 555-"),
-        F.lpad((d % 1000).cast("string"), 3, "0"),
-        F.lit("-"),
-        F.lpad((d % 10000).cast("string"), 4, "0"),
-    )
+    # PII redaction (d39) on the surviving train docs
     red = clean.select(
-        "doc_id",
-        "source",
-        F.regexp_replace(
-            F.regexp_replace(pii_text, _EMAIL_RE, "<EMAIL>"),
-            _PHONE_RE,
-            "<PHONE>",
-        ).alias("ctext"),
+        "doc_id", "source", CUR.redacted(CUR.pii_injected()).alias("ctext")
     )
-    # chunk-granular keep-first dedup (d47 machinery) on redacted text
-    cw = _CHUNK_WORDS
-    ch = (
-        red.select("doc_id", "source", F.split("ctext", " ").alias("words"))
-        .select(
-            "doc_id",
-            "source",
-            F.posexplode(
-                F.expr(
-                    f"transform(sequence(0, (size(words)-1) div {cw}),"
-                    f" j -> struct(concat_ws(' ', slice(words, j*{cw}+1, {cw})) AS chunk,"
-                    f" least({cw}, size(words) - j*{cw}) AS n_words))"
-                )
-            ).alias("pos", "c"),
-        )
-        .select("doc_id", "source", "pos", "c.chunk", "c.n_words")
-    )
-    firsts = ch.groupBy("chunk").agg(
-        F.min(F.struct("doc_id", "pos", "n_words")).alias("first")
-    )
-    kpd = firsts.groupBy(F.col("first.doc_id").alias("doc_id")).agg(
-        F.sum("first.n_words").alias("kept_words")
+    # chunk-granular keep-first dedup (d47) on the redacted text
+    kpd = (
+        CUR.first_chunks(CUR.chunks(red, "ctext", ()))
+        .groupBy(F.col("first.doc_id").alias("doc_id"))
+        .agg(F.sum("first.n_words").alias("kept_words"))
     )
     surv = red.select("doc_id", "source").join(kpd, "doc_id")
-    # domain-mixture rebalance (d42 machinery) on surviving token mass.
-    # min-across-sources via a window over the per-source aggregate:
-    # the frame spans <= #sources rows (driver-scale metadata), so the
-    # single-partition window is bounded by design — and unlike d42's
-    # equivalent scalar crossJoin it keeps the cached-lineage plan free
-    # of BroadcastNestedLoopJoin nodes the audit would have to parse
-    # inside the InMemoryRelation printout.
+    # domain-mixture rebalance (d42) on surviving token mass, then the
+    # epoch-seeded deal (d45) of the persisted survivors
     srcs = surv.groupBy("source").agg(F.sum("kept_words").alias("orig_tokens"))
-    thr = srcs.withColumn(
-        "min_tok", F.min("orig_tokens").over(Window.partitionBy(F.lit(1)))
-    ).withColumn(
-        "keep_thr",
-        F.expr("least(65536, (65536 * min_tok + orig_tokens - 1) div orig_tokens)"),
-    )
-    fin = tracked_persist(
-        surv.withColumn("bkt", F.expr(_SPARK_BUCKET64K))
-        .join(F.broadcast(thr.select("source", "keep_thr")), "source")
-        .filter(F.col("bkt") < F.col("keep_thr"))
-        .select("doc_id", "source", "kept_words")
-    )
-    # epoch-seeded shuffle (d45 machinery) into corpus-derived shards
-    n_shards = _pack_shards(fin.count())
-    keyed = fin.select(
-        "doc_id",
-        "source",
-        "kept_words",
-        F.md5(
-            F.concat(F.lit(_D56_SEED), F.col("doc_id").cast("string"))
-        ).alias("okey"),
-        F.expr(
-            f"({_md5_hex_int('doc_id', 'string', 4, prefix=_D56_SEED)}) % {n_shards}"
-        ).alias("shard"),
-    )
-    w = Window.partitionBy("shard").orderBy("okey", "doc_id")
-    ranked = keyed.withColumn("rnk", F.row_number().over(w))
-    return (
-        ranked.groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.countDistinct("source").alias("n_sources"),
-            F.sum("kept_words").cast("long").alias("kept_tokens"),
-            F.max(F.when(F.col("rnk") == 1, F.col("doc_id")))
-            .cast("long")
-            .alias("first_doc"),
-            F.sum(F.col("rnk") * F.col("doc_id")).alias("order_checksum"),
-        )
-        .orderBy("shard")
+    fin = tracked_persist(CUR.mixture_keep(surv, srcs))
+    return CUR.shard_deal(
+        fin,
+        _D56_SEED,
+        F.countDistinct("source").alias("n_sources"),
+        F.sum("kept_words").cast("long").alias("kept_tokens"),
     )
 
 
@@ -4872,12 +4413,12 @@ def d60_semdedup(t):
     test_sh AS (
       SELECT DISTINCT s.shingle
       FROM shd s JOIN informative USING (shingle)
-      WHERE ({_ORACLE_BUCKET.replace('doc_id', 's.doc_id')}) >= 90
+      WHERE ({CUR.ORACLE_BUCKET.replace('doc_id', 's.doc_id')}) >= 90
     ),
     hits AS (
       SELECT s.doc_id, s.i
       FROM sh s JOIN test_sh USING (shingle)
-      WHERE ({_ORACLE_BUCKET.replace('doc_id', 's.doc_id')}) < 80
+      WHERE ({CUR.ORACLE_BUCKET.replace('doc_id', 's.doc_id')}) < 80
     ),
     pos AS (
       SELECT DISTINCT doc_id, i + off AS p
@@ -4901,7 +4442,7 @@ def d60_semdedup(t):
     train AS (
       SELECT doc_id, lang,
              CAST(length(string_split(text, ' ')) AS BIGINT) AS n_tokens
-      FROM documents WHERE ({_ORACLE_BUCKET}) < 80
+      FROM documents WHERE ({CUR.ORACLE_BUCKET}) < 80
     )
     SELECT tr.lang,
            CAST(COUNT(*) AS BIGINT) AS n_train_docs,
@@ -4940,7 +4481,7 @@ def d61_decontamination_span_masking(t):
     per_doc set is data-dependent (heavy contamination makes it
     corpus-proportional), so AQE decides; the per-lang rollup is
     map-side-combined."""
-    b = F.expr(_SPARK_BUCKET)
+    b = F.expr(CUR.SPARK_BUCKET)
     w = t.documents.select(
         "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("i", "wd")
     )
@@ -5268,10 +4809,10 @@ def e19_top_user_paths(t):
     f"""
     WITH s AS (
       SELECT lang, n_chars, doc_id,
-             CASE WHEN ({_ORACLE_BUCKET}) < 80 THEN 1 ELSE 0 END AS is_train,
-             CASE WHEN ({_ORACLE_BUCKET}) >= 90 THEN 1 ELSE 0 END AS is_test
+             CASE WHEN ({CUR.ORACLE_BUCKET}) < 80 THEN 1 ELSE 0 END AS is_train,
+             CASE WHEN ({CUR.ORACLE_BUCKET}) >= 90 THEN 1 ELSE 0 END AS is_test
       FROM documents
-      WHERE ({_ORACLE_BUCKET}) < 80 OR ({_ORACLE_BUCKET}) >= 90
+      WHERE ({CUR.ORACLE_BUCKET}) < 80 OR ({CUR.ORACLE_BUCKET}) >= 90
     ),
     tot AS (
       SELECT lang,
@@ -5323,7 +4864,7 @@ def d63_split_drift_ks(t):
     extraction genuinely needs a per-language global order; the
     honest 100 TB form is sort-within-language); everything after the
     window is a map-side-combining max per ≤ #langs keys."""
-    b = F.expr(_SPARK_BUCKET)
+    b = F.expr(CUR.SPARK_BUCKET)
     s = t.documents.filter((b < 80) | (b >= 90)).select(
         "lang",
         "n_chars",
@@ -5609,7 +5150,7 @@ def _d66_oracle() -> str:
     return f"""
     WITH ex AS (SELECT test_doc AS doc_id FROM ({ex})),
     sem AS (SELECT test_vec AS doc_id FROM ({sem})),
-    td AS (SELECT doc_id FROM documents WHERE {_ORACLE_BUCKET} >= 90),
+    td AS (SELECT doc_id FROM documents WHERE {CUR.ORACLE_BUCKET} >= 90),
     cls AS (
       SELECT td.doc_id,
              CASE WHEN e.doc_id IS NOT NULL AND s.doc_id IS NOT NULL
@@ -5660,7 +5201,7 @@ def d66_contamination_method_attribution(t):
     sem = d31_semantic_decontamination(t).select(
         F.col("test_vec").alias("doc_id"), F.lit(1).alias("sem_hit")
     )
-    b = F.expr(_SPARK_BUCKET)
+    b = F.expr(CUR.SPARK_BUCKET)
     td = t.documents.filter(b >= 90).select("doc_id")
     cls = (
         td.join(ex, "doc_id", "left")
@@ -5965,7 +5506,7 @@ def e21_activation_latency(t):
     f"""
     WITH {ND.shingles_sql(n=2)},
     bg AS (SELECT doc_id, i, shingle AS bigram FROM sh),
-    b AS (SELECT doc_id, lang, {_ORACLE_BUCKET} AS bucket FROM documents),
+    b AS (SELECT doc_id, lang, {CUR.ORACLE_BUCKET} AS bucket FROM documents),
     train_bg AS (
       SELECT DISTINCT bigram FROM bg JOIN b USING (doc_id)
       WHERE b.bucket < 80
@@ -6028,7 +5569,7 @@ def d68_test_doc_bigram_novelty(t):
         .filter(F.col("nxt").isNotNull())
         .drop("nxt")
     )
-    b = F.expr(_SPARK_BUCKET)
+    b = F.expr(CUR.SPARK_BUCKET)
     docs = t.documents.select("doc_id", "lang").withColumn("bucket", b)
     train_bg = (
         bg.join(docs.filter(F.col("bucket") < 80).select("doc_id"), "doc_id")
@@ -6228,9 +5769,9 @@ _BLOOM_K = 3
 def _bloom_positions_sql(text_expr: str) -> list[str]:
     """k bit positions for ``text_expr`` — 4 md5 hex digits of
     (seed || text) mod m, identical integer derivation on both
-    engines (the _md5_hex_int machinery with a per-hash seed)."""
+    engines (the curation.md5_hex_int machinery with a per-hash seed)."""
     return [
-        f"({_md5_hex_int(text_expr, 'varchar', 4, prefix=f'bl{j}|')})"
+        f"({CUR.md5_hex_int(text_expr, 'varchar', 4, prefix=f'bl{j}|')})"
         f" % {_BLOOM_BITS}"
         for j in range(_BLOOM_K)
     ]
@@ -6240,11 +5781,11 @@ def _bloom_positions_sql(text_expr: str) -> list[str]:
     "d70_bloom_membership_sketch",
     f"""
     WITH train AS (
-      SELECT md5(text) AS fp, text FROM documents WHERE {_ORACLE_BUCKET} < 80
+      SELECT md5(text) AS fp, text FROM documents WHERE {CUR.ORACLE_BUCKET} < 80
     ),
     test AS (
       SELECT doc_id, md5(text) AS fp, text FROM documents
-      WHERE {_ORACLE_BUCKET} >= 90
+      WHERE {CUR.ORACLE_BUCKET} >= 90
     ),
     pos AS (
       {" UNION ALL ".join(
@@ -6313,14 +5854,14 @@ def d70_bloom_membership_sketch(t):
     positions against the 2048-row bitset (trivially broadcast — the
     entire point of the sketch); ground truth is one fingerprint
     equi-join. Nothing here exceeds corpus-linear."""
-    b = F.expr(_SPARK_BUCKET)
+    b = F.expr(CUR.SPARK_BUCKET)
     train = t.documents.filter(b < 80).select("text", F.md5("text").alias("fp"))
     test = t.documents.filter(b >= 90).select(
         "doc_id", "text", F.md5("text").alias("fp")
     )
     pos_exprs = [
         F.expr(
-            f"({_md5_hex_int('text', 'string', 4, prefix=f'bl{j}|')})"
+            f"({CUR.md5_hex_int('text', 'string', 4, prefix=f'bl{j}|')})"
             f" % {_BLOOM_BITS}"
         )
         for j in range(_BLOOM_K)
@@ -6389,7 +5930,7 @@ _CMS_D = 3  # hash rows
     cells AS (
       {" UNION ALL ".join(
         f"SELECT {j} AS row_j, "
-        f"({_md5_hex_int('wd', 'varchar', 4, prefix=f'cm{j}|')}) % {_CMS_W}"
+        f"({CUR.md5_hex_int('wd', 'varchar', 4, prefix=f'cm{j}|')}) % {_CMS_W}"
         f" AS idx, cnt FROM words"
         for j in range(_CMS_D)
       )}
@@ -6403,7 +5944,7 @@ _CMS_D = 3  # hash rows
     tprobe AS (
       {" UNION ALL ".join(
         f"SELECT wd, cnt, {j} AS row_j, "
-        f"({_md5_hex_int('wd', 'varchar', 4, prefix=f'cm{j}|')}) % {_CMS_W}"
+        f"({CUR.md5_hex_int('wd', 'varchar', 4, prefix=f'cm{j}|')}) % {_CMS_W}"
         f" AS idx FROM top"
         for j in range(_CMS_D)
       )}
@@ -6448,7 +5989,7 @@ def d71_countmin_heavy_hitters(t):
     )
     cell_exprs = [
         F.expr(
-            f"({_md5_hex_int('wd', 'string', 4, prefix=f'cm{j}|')}) % {_CMS_W}"
+            f"({CUR.md5_hex_int('wd', 'string', 4, prefix=f'cm{j}|')}) % {_CMS_W}"
         ).alias(f"idx{j}")
         for j in range(_CMS_D)
     ]
@@ -6515,7 +6056,7 @@ def _hll_fields_sql(item_expr: str, cast_type: str) -> tuple[str, str]:
     derived with TRIM(LEADING '0') + a 4-way CASE on the first
     surviving hex digit, pure string/integer ops identical in Spark
     SQL and DuckDB (no log2, no floats)."""
-    reg = _md5_hex_int(item_expr, cast_type, 2, prefix="hl|")
+    reg = CUR.md5_hex_int(item_expr, cast_type, 2, prefix="hl|")
     tail = (
         f"substring(md5(concat('hl|', cast({item_expr} as {cast_type}))), 3, 10)"
     )
@@ -7428,48 +6969,17 @@ def d77_ivfpq_rerank_topk(t):
     "d78_decontamination_certificate",
     f"""
     WITH {ND.shingles_sql()},
-    {ND.informative_sql()},
-    shf AS (
-      SELECT shd.doc_id, shd.shingle, {_ORACLE_BUCKET} AS bucket
-      FROM shd JOIN informative USING (shingle)
-    ),
-    overlap AS (
-      SELECT tr.doc_id AS train_doc, COUNT(*) AS n_overlap
-      FROM (SELECT doc_id, shingle FROM shf WHERE bucket >= 90) te
-      JOIN (SELECT doc_id, shingle FROM shf WHERE bucket < 80) tr
-        ON te.shingle = tr.shingle
-      GROUP BY tr.doc_id, te.doc_id
-    ),
-    leaky AS (SELECT DISTINCT train_doc FROM overlap WHERE n_overlap >= 2),
-    shd2 AS (
+    {CUR.overlap_sql()},
+    sh2 AS (
       SELECT s.doc_id, s.shingle FROM shd s
       LEFT JOIN leaky l ON l.train_doc = s.doc_id
       WHERE l.train_doc IS NULL
     ),
-    informative2 AS (
-      SELECT shingle FROM shd2 GROUP BY shingle
-      HAVING COUNT(*) <= 50 AND COUNT(*) > 1
-    ),
-    shf2 AS (
-      SELECT shd2.doc_id, shd2.shingle, {_ORACLE_BUCKET.replace(
-          "doc_id", "shd2.doc_id")} AS bucket
-      FROM shd2 JOIN informative2 USING (shingle)
-    ),
-    overlap2 AS (
-      SELECT tr.doc_id AS train_doc, te.doc_id AS test_doc,
-             COUNT(*) AS n_overlap
-      FROM (SELECT doc_id, shingle FROM shf2 WHERE bucket >= 90) te
-      JOIN (SELECT doc_id, shingle FROM shf2 WHERE bucket < 80) tr
-        ON te.shingle = tr.shingle
-      GROUP BY 1, 2
-    ),
-    residual AS (
-      SELECT DISTINCT train_doc FROM overlap2 WHERE n_overlap >= 2
-    ),
+    {CUR.overlap_sql("sh2", "2")},
     clean AS (
       SELECT d.doc_id, d.lang FROM documents d
       LEFT JOIN leaky l ON l.train_doc = d.doc_id
-      WHERE {_ORACLE_BUCKET.replace("doc_id", "d.doc_id")} < 80
+      WHERE {CUR.ORACLE_BUCKET.replace("doc_id", "d.doc_id")} < 80
         AND l.train_doc IS NULL
     )
     SELECT c.lang,
@@ -7478,7 +6988,7 @@ def d77_ivfpq_rerank_topk(t):
                 AS BIGINT) AS residual_leaky,
            CAST(SUM(CASE WHEN r.train_doc IS NOT NULL THEN 1 ELSE 0 END)
                 AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS residual_pct
-    FROM clean c LEFT JOIN residual r ON r.train_doc = c.doc_id
+    FROM clean c LEFT JOIN leaky2 r ON r.train_doc = c.doc_id
     GROUP BY c.lang ORDER BY c.lang
     """,
     tags=("llm", "eval", "split"),
@@ -7502,41 +7012,18 @@ def d78_decontamination_certificate(t):
     leaky/residual sets stay unhinted (data-dependent, the round-6
     lesson) so AQE picks broadcast vs sort-merge; the rollup is
     langs-thin."""
-    b = F.expr(_SPARK_BUCKET)
     sh = tracked_persist(
         DD.exploded_shingles(t.documents, "doc_id", "text", 3).distinct()
     )
-
-    def leaky_of(shd):
-        informative = (
-            shd.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter((F.col("df") <= 50) & (F.col("df") > 1))
-            .select("shingle")
-        )
-        shf = shd.join(informative, "shingle").withColumn("bucket", b)
-        test_sh = shf.filter(F.col("bucket") >= 90).select(
-            "doc_id", "shingle"
-        )
-        train_sh = shf.filter(F.col("bucket") < 80).select(
-            F.col("doc_id").alias("train_doc"), "shingle"
-        )
-        return (
-            test_sh.join(train_sh, "shingle")
-            .groupBy("train_doc", F.col("doc_id").alias("test_doc"))
-            .agg(F.count(F.lit(1)).alias("n_overlap"))
-            .filter(F.col("n_overlap") >= 2)
-            .select("train_doc")
-            .distinct()
-        )
-
-    leaky = leaky_of(sh)
+    # read twice (the round-2 shingle set and the clean split): persist
+    # it so its overlap aggregate runs once
+    leaky = tracked_persist(CUR.leaky(sh))
     sh2 = tracked_persist(
         sh.join(leaky, sh.doc_id == leaky.train_doc, "left_anti")
     )
-    residual = leaky_of(sh2)
+    residual = CUR.leaky(sh2)
     clean = (
-        t.documents.withColumn("bucket", b)
+        t.documents.withColumn("bucket", F.expr(CUR.SPARK_BUCKET))
         .filter(F.col("bucket") < 80)
         .join(leaky, F.col("doc_id") == leaky.train_doc, "left_anti")
         .select("doc_id", "lang")
@@ -8687,29 +8174,13 @@ def d83_hard_negative_mining(t):
     f"""
     WITH {_kmeans_chain(2)},
     hist AS (
-      SELECT a.cid, {_ORACLE_BUCKET64K} AS bkt, COUNT(*) AS n,
+      SELECT a.cid AS cell_id, {CUR.ORACLE_BUCKET64K} AS bkt, COUNT(*) AS n,
              SUM(CAST(ceil(length(text) / 4.0) AS BIGINT)) AS tokens
       FROM documents JOIN asg a ON a.vec_id = doc_id
       GROUP BY 1, 2
     ),
-    cell AS (SELECT cid, SUM(n) AS orig_docs, SUM(tokens) AS orig_tokens
-             FROM hist GROUP BY cid),
-    mn AS (SELECT MIN(orig_tokens) AS min_tok FROM cell),
-    thr AS (SELECT cid, orig_docs, orig_tokens,
-                   least(65536, (65536 * min_tok + orig_tokens - 1) // orig_tokens)
-                     AS keep_thr
-            FROM cell, mn),
-    kept AS (SELECT h.cid, SUM(h.n) AS kept_docs, SUM(h.tokens) AS kept_tokens
-             FROM hist h JOIN thr t ON h.cid = t.cid AND h.bkt < t.keep_thr
-             GROUP BY h.cid)
-    SELECT t.cid AS cell_id,
-           CAST(t.orig_docs AS BIGINT) AS orig_docs,
-           CAST(t.orig_tokens AS BIGINT) AS orig_tokens,
-           CAST(t.keep_thr AS BIGINT) AS keep_thr,
-           CAST(COALESCE(k.kept_docs, 0) AS BIGINT) AS kept_docs,
-           CAST(COALESCE(k.kept_tokens, 0) AS BIGINT) AS kept_tokens
-    FROM thr t LEFT JOIN kept k ON t.cid = k.cid
-    ORDER BY t.cid
+    {CUR.mixture_report_sql("cell_id")}
+    SELECT * FROM report ORDER BY cell_id
     """,
     tags=("llm", "curation", "sampling"),
 )
@@ -8736,52 +8207,19 @@ def d84_cluster_balanced_sampling(t):
     emb = t.embeddings
     cents = SIM.materialized_centroids(emb)
     asg = SIM.ivf_assign(emb, cents).select(
-        F.col("vec_id").alias("doc_id"), "cid"
+        F.col("vec_id").alias("doc_id"), F.col("cid").alias("cell_id")
     )
     hist = (
         t.documents.select(
             "doc_id",
-            F.expr(_SPARK_BUCKET64K).alias("bkt"),
+            F.expr(CUR.SPARK_BUCKET64K).alias("bkt"),
             T.bpe_token_estimate("text").alias("tok"),
         )
         .join(asg, "doc_id")
-        .groupBy("cid", "bkt")
+        .groupBy("cell_id", "bkt")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("tok").alias("tokens"))
     )
-    hist = tracked_persist(hist)
-    cell = hist.groupBy("cid").agg(
-        F.sum("n").alias("orig_docs"), F.sum("tokens").alias("orig_tokens")
-    )
-    mn = cell.agg(F.min("orig_tokens").alias("min_tok"))
-    thr = cell.crossJoin(F.broadcast(mn)).withColumn(
-        "keep_thr",
-        F.expr(
-            "least(65536, (65536 * min_tok + orig_tokens - 1) div orig_tokens)"
-        ),
-    )
-    kept = (
-        hist.join(F.broadcast(thr.select("cid", "keep_thr")), "cid")
-        .filter(F.col("bkt") < F.col("keep_thr"))
-        .groupBy("cid")
-        .agg(
-            F.sum("n").alias("kept_docs"),
-            F.sum("tokens").alias("kept_tokens"),
-        )
-    )
-    return (
-        thr.join(F.broadcast(kept), "cid", "left")
-        .select(
-            F.col("cid").alias("cell_id"),
-            F.col("orig_docs").cast("long").alias("orig_docs"),
-            F.col("orig_tokens").cast("long").alias("orig_tokens"),
-            F.col("keep_thr").cast("long").alias("keep_thr"),
-            F.coalesce("kept_docs", F.lit(0)).cast("long").alias("kept_docs"),
-            F.coalesce("kept_tokens", F.lit(0))
-            .cast("long")
-            .alias("kept_tokens"),
-        )
-        .orderBy("cell_id")
-    )
+    return CUR.mixture_report(hist, "cell_id")
 
 
 @query(
@@ -9225,7 +8663,7 @@ _D87_REVIEW_MAX = 8
       FROM w WINDOW win AS (PARTITION BY doc_id ORDER BY i)
       QUALIFY lead(wd,1) OVER win IS NOT NULL
     ),
-    b AS (SELECT doc_id, lang, {_ORACLE_BUCKET} AS bucket FROM documents),
+    b AS (SELECT doc_id, lang, {CUR.ORACLE_BUCKET} AS bucket FROM documents),
     train AS (
       SELECT bg.w1, bg.w2 FROM bg JOIN b USING (doc_id)
       WHERE b.bucket < 80
@@ -9311,7 +8749,7 @@ def d87_bigram_surprisal_filter(t):
         ).filter(F.col("w2").isNotNull())
     )
     docs = t.documents.select("doc_id", "lang").withColumn(
-        "bucket", F.expr(_SPARK_BUCKET)
+        "bucket", F.expr(CUR.SPARK_BUCKET)
     )
     train = bg.join(
         docs.filter(F.col("bucket") < 80).select("doc_id"), "doc_id"
@@ -9561,7 +8999,7 @@ _D88_DECILE_ORACLE = "bucket // 10"
       SELECT doc_id, unnest(string_split(text,' ')) AS wd
       FROM documents
     ),
-    b AS (SELECT doc_id, {_ORACLE_BUCKET} AS bucket FROM documents),
+    b AS (SELECT doc_id, {CUR.ORACLE_BUCKET} AS bucket FROM documents),
     occ AS (
       SELECT w.wd, b.bucket // 10 AS decile
       FROM w JOIN b USING (doc_id)
@@ -9631,7 +9069,7 @@ def d88_heaps_vocab_growth(t):
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("wd")
     )
     b = t.documents.select("doc_id").withColumn(
-        "decile", F.expr(f"({_SPARK_BUCKET}) div 10")
+        "decile", F.expr(f"({CUR.SPARK_BUCKET}) div 10")
     )
     occ = w.join(b, "doc_id").select("wd", "decile")
     first_seen = occ.groupBy("wd").agg(F.min("decile").alias("first_decile"))
@@ -9825,7 +9263,7 @@ def _bitlen(col):
 # confusion rollup, d97's threshold calibration, and s23's streaming
 # gate oracle — one derivation, three consumers, zero drift.
 _D90_SCORED_CTES = f"""docs AS (
-      SELECT doc_id, lang, {_ORACLE_BUCKET} AS bucket FROM documents
+      SELECT doc_id, lang, {CUR.ORACLE_BUCKET} AS bucket FROM documents
     ),
     tok AS (
       SELECT doc_id,
@@ -9950,7 +9388,7 @@ def _d90_scored_frame(t):
     derivation behind d90's confusion rollup and d97's threshold
     calibration — the Spark twin of ``_D90_SCORED_CTES``."""
     docs = t.documents.select("doc_id", "lang").withColumn(
-        "bucket", F.expr(_SPARK_BUCKET)
+        "bucket", F.expr(CUR.SPARK_BUCKET)
     )
     # Deliberately NOT persisted (the d30 trade): the token explode is
     # read twice (train fold + holdout scoring join), but both are
@@ -10023,13 +9461,13 @@ _D91_SHARDS = 16
 # order-independent sum-checksums: one over the payload, one binding
 # (doc_id, n_chars) so an id remap or metadata drift is caught even
 # when every payload byte survives.
-_D91_SHARD_S = f"({_md5_hex_int('text', 'string', 2)}) % {_D91_SHARDS}"
-_D91_SHARD_O = f"({_md5_hex_int('text', 'varchar', 2)}) % {_D91_SHARDS}"
-_D91_PAY_S = _md5_hex_int("text", "string", 4)
-_D91_PAY_O = _md5_hex_int("text", "varchar", 4)
+_D91_SHARD_S = f"({CUR.md5_hex_int('text', 'string', 2)}) % {_D91_SHARDS}"
+_D91_SHARD_O = f"({CUR.md5_hex_int('text', 'varchar', 2)}) % {_D91_SHARDS}"
+_D91_PAY_S = CUR.md5_hex_int("text", "string", 4)
+_D91_PAY_O = CUR.md5_hex_int("text", "varchar", 4)
 _D91_IDK = "concat(cast(doc_id as string), ':', cast(n_chars as string))"
-_D91_ID_S = _md5_hex_int(_D91_IDK, "string", 4)
-_D91_ID_O = _md5_hex_int(_D91_IDK, "varchar", 4)
+_D91_ID_S = CUR.md5_hex_int(_D91_IDK, "string", 4)
+_D91_ID_O = CUR.md5_hex_int(_D91_IDK, "varchar", 4)
 
 
 @query(
@@ -11275,10 +10713,10 @@ _D100_PROBE_CTES = f"""{ND.shingles_sql("rem", suffix="i")},
     "d100_incremental_neardup_ingest",
     f"""
     WITH inc AS (
-      SELECT doc_id, text FROM documents WHERE {_ORACLE_BUCKET} >= 90
+      SELECT doc_id, text FROM documents WHERE {CUR.ORACLE_BUCKET} >= 90
     ),
     corp AS (
-      SELECT doc_id, text FROM documents WHERE {_ORACLE_BUCKET} < 90
+      SELECT doc_id, text FROM documents WHERE {CUR.ORACLE_BUCKET} < 90
     ),
     {ND.reps_sql("corp", "cfp")},
     exact AS (
@@ -11336,7 +10774,7 @@ def d100_incremental_neardup_ingest(t):
     skew by splitting the probe side; the corpus build path keeps the
     skew_guarded grid). Here both sides derive from one scan split by
     the md5 bucket."""
-    bucket = F.expr(_SPARK_BUCKET)
+    bucket = F.expr(CUR.SPARK_BUCKET)
     docs = t.documents
     inc = docs.filter(bucket >= 90).select("doc_id", "text")
     corp = docs.filter(bucket < 90).select("doc_id", "text")
@@ -11794,7 +11232,7 @@ def d101_incremental_cluster_merge(t):
     merges only. Measured in SCALING.md: warm runtime is FLAT as the
     delta grows 10x (1% -> 10% of the table) and beats the d99 full
     rebuild it replaces."""
-    bucket = F.expr(_SPARK_BUCKET)
+    bucket = F.expr(CUR.SPARK_BUCKET)
     docs = t.documents
     corpus = docs.filter(bucket < _D101_SPLIT).select("doc_id", "text")
     delta = docs.filter(bucket >= _D101_SPLIT).select("doc_id", "text")

@@ -13,11 +13,12 @@ covered by tests/test_streaming.py with a controlled multi-file input.
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from data_engineer_project_spark.functions.ordering import OHLC_KEY_SQL
 from data_engineer_project_spark.functions.text import STOPWORDS as T_STOPWORDS
+from data_engineer_project_spark.operators import curation as CUR
+from data_engineer_project_spark.operators.cache import tracked_persist
 from data_engineer_project_spark.queries.catalog import query
 from data_engineer_project_spark.streaming import (
     enrich_with_static,
@@ -448,14 +449,6 @@ def s12_stream_append_final_windows(t):
     )
 
 
-from data_engineer_project_spark.queries.llm_pipeline import (  # noqa: E402
-    _ORACLE_BUCKET64K,
-    _SPARK_BUCKET64K,
-)
-
-_S13_BUCKET = _ORACLE_BUCKET64K.replace("doc_id", "d.doc_id")
-
-
 @query(
     "s13_stream_mixture_gate",
     f"""
@@ -464,14 +457,8 @@ _S13_BUCKET = _ORACLE_BUCKET64K.replace("doc_id", "d.doc_id")
              SUM(CAST(ceil(length(text) / 4.0) AS BIGINT)) AS orig_tokens
       FROM documents GROUP BY source
     ),
-    mn AS (SELECT MIN(orig_tokens) AS min_tok FROM toks),
-    thr AS (SELECT source,
-                   least(65536, (65536 * min_tok + orig_tokens - 1) // orig_tokens)
-                     AS keep_thr
-            FROM toks, mn)
-    SELECT d.doc_id, d.source
-    FROM documents d JOIN thr ON d.source = thr.source
-    WHERE ({_S13_BUCKET}) < thr.keep_thr
+    {CUR.mixture_keep_sql("documents", "toks")}
+    SELECT doc_id, source FROM kept
     """,
     tags=("streaming", "curation", "sampling"),
 )
@@ -490,26 +477,13 @@ def s13_stream_mixture_gate(t):
     from data_engineer_project_spark.functions import text as T
     from data_engineer_project_spark.streaming import read_document_stream
 
-    docs = t.documents
-    src = docs.groupBy("source").agg(
+    src = t.documents.groupBy("source").agg(
         F.sum(T.bpe_token_estimate("text")).alias("orig_tokens")
     )
-    mn = src.agg(F.min("orig_tokens").alias("min_tok"))
-    thr = src.crossJoin(F.broadcast(mn)).select(
-        "source",
-        F.expr(
-            "least(65536, (65536 * min_tok + orig_tokens - 1) div orig_tokens)"
-        ).alias("keep_thr"),
+    kept = CUR.mixture_keep(read_document_stream(t._spark, t._sf_dir), src)
+    return run_to_memory_table(
+        kept.select("doc_id", "source"), "mixture_gate", "append"
     )
-    incoming = read_document_stream(t._spark, t._sf_dir).withColumn(
-        "bkt", F.expr(_SPARK_BUCKET64K)
-    )
-    kept = (
-        incoming.join(F.broadcast(thr), "source")
-        .filter(F.col("bkt") < F.col("keep_thr"))
-        .select("doc_id", "source")
-    )
-    return run_to_memory_table(kept, "mixture_gate", "append")
 
 
 @query(
@@ -639,56 +613,56 @@ def s15_stream_ohlc_bars(t):
 
 # ---------------------------------------- composed streaming front door
 
-from data_engineer_project_spark.queries.llm_pipeline import (  # noqa: E402
-    _EMAIL_RE,
-    _PHONE_RE,
-)
 
-# The d39 inject+redact expression in DuckDB SQL (text/doc_id columns in
-# scope); the Spark twin is _s16_redact below. Shared shape with d56's
-# batch composition.
-_S16_RED_SQL = (
-    "regexp_replace(regexp_replace("
-    "text || ' contact user' || CAST(doc_id AS VARCHAR)"
-    " || '@mail-' || CAST(doc_id % 97 AS VARCHAR) || '.example.com'"
-    " || ' call 555-' || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0')"
-    " || '-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0'),"
-    f" '{_EMAIL_RE}', '<EMAIL>', 'g'),"
-    f" '{_PHONE_RE}', '<PHONE>', 'g')"
-)
+def s16_door_survivors(t, incoming):
+    """The s16 front door applied to ``incoming`` docs (a stream or a
+    batch) against artifacts FROZEN from the stored corpus (bucket <
+    50): redaction (row-local) → quality gate (s10's d02 filter, scored
+    on the redacted text) → exact-dedup against the store's redacted
+    fingerprints → mixture gate with per-source thresholds computed
+    from the store. Because every gate is either row-local or a join
+    against the frozen store artifacts — never a function of other
+    increment rows — the survivor set is increment-SLICING-INVARIANT:
+    door(inc₁ ∪ inc₂) = door(inc₁) ∪ door(inc₂), the property that
+    makes micro-batches and daily increments composable. Returns
+    (doc_id, lang, source, kept_tokens)."""
+    from data_engineer_project_spark.functions import text as T
 
-
-def _s16_redact():
-    d = F.col("doc_id")
-    pii = F.concat(
-        F.col("text"),
-        F.lit(" contact user"),
-        d.cast("string"),
-        F.lit("@mail-"),
-        (d % 97).cast("string"),
-        F.lit(".example.com"),
-        F.lit(" call 555-"),
-        F.lpad((d % 1000).cast("string"), 3, "0"),
-        F.lit("-"),
-        F.lpad((d % 10000).cast("string"), 4, "0"),
+    corpus = t.documents.withColumn("bucket", F.expr(_S11_BUCKET)).filter(
+        F.col("bucket") < 50
     )
-    return F.regexp_replace(
-        F.regexp_replace(pii, _EMAIL_RE, "<EMAIL>"), _PHONE_RE, "<PHONE>"
+    cred = corpus.select(
+        F.md5(CUR.redacted(CUR.pii_injected())).alias("fp")
+    ).distinct()
+    src = corpus.groupBy("source").agg(
+        F.sum(T.bpe_token_estimate("text")).alias("orig_tokens")
+    )
+    inc = incoming.withColumn(
+        "ctext", CUR.redacted(CUR.pii_injected())
+    ).select("doc_id", "lang", "source", "ctext")
+    n_words = T.token_count("ctext")
+    sr = T.stopword_count("ctext").cast("double") / n_words.cast("double")
+    q = inc.filter(n_words.between(20, 120) & (sr < 0.3))
+    dd = q.withColumn("fp", F.md5("ctext")).join(cred, "fp", "left_anti")
+    return CUR.mixture_keep(dd, src).select(
+        "doc_id",
+        "lang",
+        "source",
+        T.bpe_token_estimate("ctext").cast("long").alias("kept_tokens"),
     )
 
 
-@query(
-    "s16_stream_curation_front_door",
-    f"""
-    WITH corpus AS (
+# The door in DuckDB: ``corpus`` (the store), ``inc`` (the arrivals)
+# and ``kept``, the door's survivors (doc_id, lang, source, ctext).
+_DOOR_SQL = f"""corpus AS (
       SELECT doc_id, source, text FROM documents WHERE {_S11_BUCKET_DUCK} < 50
     ),
     inc AS (
       SELECT doc_id, lang, source, text FROM documents
       WHERE {_S11_BUCKET_DUCK} >= 50
     ),
-    cred AS (SELECT DISTINCT md5({_S16_RED_SQL}) AS fp FROM corpus),
-    ired AS (SELECT doc_id, lang, source, {_S16_RED_SQL} AS ctext FROM inc),
+    cred AS (SELECT DISTINCT md5({CUR.PII_REDACTED_SQL}) AS fp FROM corpus),
+    ired AS (SELECT doc_id, lang, source, {CUR.PII_REDACTED_SQL} AS ctext FROM inc),
     q AS (
       SELECT * FROM ired
       WHERE len(string_split(ctext, ' ')) BETWEEN 20 AND 120
@@ -705,16 +679,29 @@ def _s16_redact():
              SUM(CAST(ceil(length(text) / 4.0) AS BIGINT)) AS orig_tokens
       FROM corpus GROUP BY source
     ),
-    mn AS (SELECT MIN(orig_tokens) AS min_tok FROM toks),
-    thr AS (SELECT source,
-                   least(65536, (65536 * min_tok + orig_tokens - 1) // orig_tokens)
-                     AS keep_thr
-            FROM toks, mn),
-    kept AS (
-      SELECT dd.doc_id, dd.lang, dd.source, dd.ctext
-      FROM dd JOIN thr ON dd.source = thr.source
-      WHERE ({_ORACLE_BUCKET64K}) < thr.keep_thr
+    {CUR.mixture_keep_sql("dd", "toks")}"""
+
+
+def s16_door_tally(t, stream):
+    """Per (source, lang): the doc count and token mass of the door's
+    survivors among the arrivals (bucket >= 50) of ``stream``."""
+    incoming = stream.withColumn("bucket", F.expr(_S11_BUCKET)).filter(
+        F.col("bucket") >= 50
     )
+    return (
+        s16_door_survivors(t, incoming)
+        .groupBy("source", "lang")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("kept_tokens").alias("survivor_tokens"),
+        )
+    )
+
+
+@query(
+    "s16_stream_curation_front_door",
+    f"""
+    WITH {_DOOR_SQL}
     SELECT source, lang,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(CAST(ceil(length(ctext) / 4.0) AS BIGINT)) AS BIGINT)
@@ -746,43 +733,9 @@ def s16_stream_curation_front_door(t):
     pure function of doc_id as d42/d45, so a batch replay of the
     stream produces doc-for-doc identical survivors (the oracle IS
     that batch form)."""
-    from data_engineer_project_spark.functions import text as T
     from data_engineer_project_spark.streaming import read_document_stream
 
-    b = F.expr(_S11_BUCKET)
-    corpus = t.documents.withColumn("bucket", b).filter(F.col("bucket") < 50)
-    cred = corpus.select(F.md5(_s16_redact()).alias("fp")).distinct()
-    incoming = (
-        read_document_stream(t._spark, t._sf_dir)
-        .withColumn("bucket", b)
-        .filter(F.col("bucket") >= 50)
-        .withColumn("ctext", _s16_redact())
-        .select("doc_id", "lang", "source", "ctext")
-    )
-    n_words = T.token_count("ctext")
-    sr = T.stopword_count("ctext").cast("double") / n_words.cast("double")
-    q = incoming.filter(n_words.between(20, 120) & (sr < 0.3))
-    dd = q.withColumn("fp", F.md5("ctext")).join(cred, "fp", "left_anti")
-    src = corpus.groupBy("source").agg(
-        F.sum(T.bpe_token_estimate("text")).alias("orig_tokens")
-    )
-    thr = src.withColumn(
-        "min_tok", F.min("orig_tokens").over(Window.partitionBy(F.lit(1)))
-    ).select(
-        "source",
-        F.expr(
-            "least(65536, (65536 * min_tok + orig_tokens - 1) div orig_tokens)"
-        ).alias("keep_thr"),
-    )
-    kept = (
-        dd.withColumn("bkt", F.expr(_SPARK_BUCKET64K))
-        .join(F.broadcast(thr), "source")
-        .filter(F.col("bkt") < F.col("keep_thr"))
-    )
-    tally = kept.groupBy("source", "lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(T.bpe_token_estimate("ctext")).alias("survivor_tokens"),
-    )
+    tally = s16_door_tally(t, read_document_stream(t._spark, t._sf_dir))
     return run_to_memory_table(tally, "curation_door", "complete").orderBy(
         "source", "lang"
     )
@@ -873,133 +826,30 @@ def s17_stream_ivf_cell_ingestion(t):
 
 # ------------------------------- incremental curation rebuild (batch)
 
-from data_engineer_project_spark.queries.llm_pipeline import (  # noqa: E402
-    _PACK_SHARDS_SQL,
-    _md5_hex_int,
-    _pack_shards,
-)
-from data_engineer_project_spark.operators.cache import (  # noqa: E402
-    tracked_persist,
-)
-
 _D64_SEED = "d64incr1|"
-
-
-def s16_door_survivors(t, incoming):
-    """The s16 front door in BATCH form, applied to ``incoming`` docs
-    against artifacts FROZEN from the stored corpus (bucket < 50):
-    redaction (row-local) → quality gate → exact-dedup against the
-    store's redacted fingerprints → mixture gate with per-source
-    thresholds computed from the store. Because every gate is either
-    row-local or a join against the frozen store artifacts — never a
-    function of other increment rows — the survivor set is increment-
-    SLICING-INVARIANT: door(inc₁ ∪ inc₂) = door(inc₁) ∪ door(inc₂),
-    the property that makes daily increments composable and is pinned
-    at the DAG level in tests/test_streaming_extra.py."""
-    from data_engineer_project_spark.functions import text as T
-
-    b = F.expr(_S11_BUCKET)
-    corpus = t.documents.withColumn("bucket", b).filter(F.col("bucket") < 50)
-    cred = corpus.select(F.md5(_s16_redact()).alias("fp")).distinct()
-    src = corpus.groupBy("source").agg(
-        F.sum(T.bpe_token_estimate("text")).alias("orig_tokens")
-    )
-    thr = src.withColumn(
-        "min_tok", F.min("orig_tokens").over(Window.partitionBy(F.lit(1)))
-    ).select(
-        "source",
-        F.expr(
-            "least(65536, (65536 * min_tok + orig_tokens - 1) div orig_tokens)"
-        ).alias("keep_thr"),
-    )
-    inc = incoming.withColumn("ctext", _s16_redact()).select(
-        "doc_id", "lang", "source", "ctext"
-    )
-    n_words = T.token_count("ctext")
-    sr = T.stopword_count("ctext").cast("double") / n_words.cast("double")
-    q = inc.filter(n_words.between(20, 120) & (sr < 0.3))
-    dd = q.withColumn("fp", F.md5("ctext")).join(cred, "fp", "left_anti")
-    return (
-        dd.withColumn("bkt", F.expr(_SPARK_BUCKET64K))
-        .join(F.broadcast(thr), "source")
-        .filter(F.col("bkt") < F.col("keep_thr"))
-        .select(
-            "doc_id",
-            "source",
-            T.bpe_token_estimate("ctext").cast("long").alias("kept_tokens"),
-        )
-    )
 
 
 @query(
     "d64_incremental_curation_rebuild",
     f"""
-    WITH corpus AS (
-      SELECT doc_id, source, text FROM documents WHERE {_S11_BUCKET_DUCK} < 50
-    ),
-    inc AS (
-      SELECT doc_id, lang, source, text FROM documents
-      WHERE {_S11_BUCKET_DUCK} >= 50
-    ),
-    cred AS (SELECT DISTINCT md5({_S16_RED_SQL}) AS fp FROM corpus),
-    ired AS (SELECT doc_id, lang, source, {_S16_RED_SQL} AS ctext FROM inc),
-    q AS (
-      SELECT * FROM ired
-      WHERE len(string_split(ctext, ' ')) BETWEEN 20 AND 120
-        AND CAST(length(list_filter(string_split(ctext, ' '),
-                                    x -> x IN ({_S10_SW}))) AS DOUBLE)
-            / CAST(len(string_split(ctext, ' ')) AS DOUBLE) < 0.3
-    ),
-    dd AS (
-      SELECT q.* FROM q LEFT JOIN cred c ON md5(q.ctext) = c.fp
-      WHERE c.fp IS NULL
-    ),
-    toks AS (
-      SELECT source,
-             SUM(CAST(ceil(length(text) / 4.0) AS BIGINT)) AS orig_tokens
-      FROM corpus GROUP BY source
-    ),
-    mn AS (SELECT MIN(orig_tokens) AS min_tok FROM toks),
-    thr AS (SELECT source,
-                   least(65536, (65536 * min_tok + orig_tokens - 1) // orig_tokens)
-                     AS keep_thr
-            FROM toks, mn),
-    kept AS (
-      SELECT dd.doc_id, dd.source,
-             CAST(ceil(length(dd.ctext) / 4.0) AS BIGINT) AS kept_tokens
-      FROM dd JOIN thr ON dd.source = thr.source
-      WHERE ({_ORACLE_BUCKET64K}) < thr.keep_thr
-    ),
+    WITH {_DOOR_SQL},
     un AS (
       SELECT doc_id, source,
              CAST(ceil(length(text) / 4.0) AS BIGINT) AS kept_tokens,
              1 AS is_base
       FROM corpus
       UNION ALL
-      SELECT doc_id, source, kept_tokens, 0 AS is_base FROM kept
+      SELECT doc_id, source, CAST(ceil(length(ctext) / 4.0) AS BIGINT), 0
+      FROM kept
     ),
-    nf AS (SELECT COUNT(*) AS n_docs FROM un),
-    ns AS (SELECT {_PACK_SHARDS_SQL} AS n_shards FROM nf),
-    keyed AS (
-      SELECT doc_id, source, kept_tokens, is_base,
-             ({_md5_hex_int('doc_id', 'varchar', 4, prefix=_D64_SEED)})
-               % n_shards AS shard,
-             md5(concat('{_D64_SEED}', cast(doc_id AS varchar))) AS okey
-      FROM un, ns
-    ),
-    rk AS (
-      SELECT doc_id, source, kept_tokens, is_base, shard,
-             ROW_NUMBER() OVER (PARTITION BY shard ORDER BY okey, doc_id) AS rnk
-      FROM keyed
-    )
-    SELECT shard,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(is_base) AS BIGINT) AS n_base,
-           CAST(SUM(1 - is_base) AS BIGINT) AS n_new,
-           CAST(SUM(kept_tokens) AS BIGINT) AS kept_tokens,
-           CAST(MAX(CASE WHEN rnk = 1 THEN doc_id END) AS BIGINT) AS first_doc,
-           CAST(SUM(rnk * doc_id) AS BIGINT) AS order_checksum
-    FROM rk GROUP BY shard ORDER BY shard
+    {CUR.shard_deal_sql(
+        "un",
+        _D64_SEED,
+        "CAST(SUM(is_base) AS BIGINT) AS n_base",
+        "CAST(SUM(1 - is_base) AS BIGINT) AS n_new",
+        "CAST(SUM(kept_tokens) AS BIGINT) AS kept_tokens",
+    )}
+    SELECT * FROM deal ORDER BY shard
     """,
     tags=("llm", "curation", "pipeline"),
 )
@@ -1046,36 +896,12 @@ def d64_incremental_curation_rebuild(t):
     ).select(
         "doc_id", "source", "kept_tokens", F.lit(0).cast("int").alias("is_base")
     )
-    un = tracked_persist(base.unionByName(newd))
-    n_shards = _pack_shards(un.count())
-    keyed = un.select(
-        "doc_id",
-        "source",
-        "kept_tokens",
-        "is_base",
-        F.md5(
-            F.concat(F.lit(_D64_SEED), F.col("doc_id").cast("string"))
-        ).alias("okey"),
-        F.expr(
-            f"({_md5_hex_int('doc_id', 'string', 4, prefix=_D64_SEED)})"
-            f" % {n_shards}"
-        ).alias("shard"),
-    )
-    w = Window.partitionBy("shard").orderBy("okey", "doc_id")
-    ranked = keyed.withColumn("rnk", F.row_number().over(w))
-    return (
-        ranked.groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("is_base").cast("long").alias("n_base"),
-            F.sum(1 - F.col("is_base")).cast("long").alias("n_new"),
-            F.sum("kept_tokens").cast("long").alias("kept_tokens"),
-            F.max(F.when(F.col("rnk") == 1, F.col("doc_id")))
-            .cast("long")
-            .alias("first_doc"),
-            F.sum(F.col("rnk") * F.col("doc_id")).alias("order_checksum"),
-        )
-        .orderBy("shard")
+    return CUR.shard_deal(
+        tracked_persist(base.unionByName(newd)),
+        _D64_SEED,
+        F.sum("is_base").cast("long").alias("n_base"),
+        F.sum(1 - F.col("is_base")).cast("long").alias("n_new"),
+        F.sum("kept_tokens").cast("long").alias("kept_tokens"),
     )
 
 
@@ -1158,7 +984,6 @@ from data_engineer_project_spark.queries.llm_pipeline import (  # noqa: E402
     _BLOOM_BITS,
     _BLOOM_K,
     _bloom_positions_sql,
-    _md5_hex_int,
 )
 
 
@@ -1171,7 +996,7 @@ def _s19_bloom_words(t) -> list[int]:
     train = t.documents.withColumn("bucket", b).filter(F.col("bucket") < 50)
     pos_exprs = [
         F.expr(
-            f"({_md5_hex_int('text', 'string', 4, prefix=f'bl{j}|')})"
+            f"({CUR.md5_hex_int('text', 'string', 4, prefix=f'bl{j}|')})"
             f" % {_BLOOM_BITS}"
         )
         for j in range(_BLOOM_K)
@@ -1262,9 +1087,9 @@ def s19_stream_bloom_gate(t):
     cond = None
     for j in range(_BLOOM_K):
         bit = F.expr(f"(shiftright(element_at(blm, cast(("
-                     f"{_md5_hex_int('text', 'string', 4, prefix=f'bl{j}|')})"
+                     f"{CUR.md5_hex_int('text', 'string', 4, prefix=f'bl{j}|')})"
                      f" % {_BLOOM_BITS} / 32 as int) + 1),"
-                     f" ({_md5_hex_int('text', 'string', 4, prefix=f'bl{j}|')})"
+                     f" ({CUR.md5_hex_int('text', 'string', 4, prefix=f'bl{j}|')})"
                      f" % {_BLOOM_BITS} % 32) & 1) = 1")
         cond = bit if cond is None else (cond & bit)
     survivors = probed.filter(~cond).select("doc_id", "lang")
@@ -1387,7 +1212,7 @@ def _s21_cell_sql(j: int, cast_type: str) -> str:
     """One CMS cell index for a user id — d71's md5-derived column,
     seeded 'sc{j}|' so the stream sketch decorrelates from d71's."""
     return (
-        f"({_md5_hex_int('user_id', cast_type, 4, prefix=f'sc{j}|')})"
+        f"({CUR.md5_hex_int('user_id', cast_type, 4, prefix=f'sc{j}|')})"
         f" % {_CMS_W}"
     )
 
@@ -1608,7 +1433,6 @@ def s22_stream_shard_manifest(t):
 from data_engineer_project_spark.queries.llm_pipeline import (  # noqa: E402
     _D90_BUCKETS,
     _D90_SCORED_CTES,
-    _SPARK_BUCKET as _S23_SPLIT,
 )
 
 
@@ -1619,7 +1443,7 @@ def _s23_model_literals(t):
     row-locally (the s19 Bloom-bitset move). Bounded driver collect:
     <= {_D90_BUCKETS} model rows + two 1-row aggregates."""
     docs = t.documents.select("doc_id", "lang").withColumn(
-        "bucket", F.expr(_S23_SPLIT)
+        "bucket", F.expr(CUR.SPARK_BUCKET)
     )
     tok = t.documents.select(
         "doc_id", F.explode(F.split("text", " ")).alias("wd")
@@ -1693,13 +1517,10 @@ def s23_stream_nb_quality_gate(t):
     size; streaming work is per-token arithmetic, embarrassingly
     row-local. Refreshing the model is an offline re-train + plan
     redeploy, exactly how production quality filters roll."""
-    from data_engineer_project_spark.queries.llm_pipeline import (
-        _md5_hex_int,
-    )
     from data_engineer_project_spark.streaming import read_document_stream
 
     bits_en, bits_ot, prior_en, prior_ot = _s23_model_literals(t)
-    bidx = _md5_hex_int("w", "string", 2)
+    bidx = CUR.md5_hex_int("w", "string", 2)
 
     def fold(bits):
         arr = ", ".join(str(v) + "L" for v in bits)
@@ -1711,7 +1532,7 @@ def s23_stream_nb_quality_gate(t):
 
     incoming = (
         read_document_stream(t._spark, t._sf_dir)
-        .withColumn("split_bucket", F.expr(_S23_SPLIT))
+        .withColumn("split_bucket", F.expr(CUR.SPARK_BUCKET))
         .filter(F.col("split_bucket") >= 90)
     )
     scored = incoming.select(
@@ -1736,8 +1557,6 @@ def s23_stream_nb_quality_gate(t):
 from data_engineer_project_spark.operators.neardup import reps_sql  # noqa: E402
 from data_engineer_project_spark.queries.llm_pipeline import (  # noqa: E402
     _D100_PROBE_CTES,
-    _ORACLE_BUCKET as _D100_ORACLE_BUCKET,
-    _SPARK_BUCKET as _D100_SPARK_BUCKET,
 )
 
 
@@ -1745,10 +1564,10 @@ from data_engineer_project_spark.queries.llm_pipeline import (  # noqa: E402
     "s24_stream_neardup_probe",
     f"""
     WITH inc AS (
-      SELECT doc_id, text FROM documents WHERE {_D100_ORACLE_BUCKET} >= 90
+      SELECT doc_id, text FROM documents WHERE {CUR.ORACLE_BUCKET} >= 90
     ),
     corp AS (
-      SELECT doc_id, text FROM documents WHERE {_D100_ORACLE_BUCKET} < 90
+      SELECT doc_id, text FROM documents WHERE {CUR.ORACLE_BUCKET} < 90
     ),
     {reps_sql("corp", "cfp")},
     rem AS (
@@ -1831,7 +1650,7 @@ def s24_stream_neardup_probe(t):
             )
         ).alias("bk")
 
-    bucket = F.expr(_D100_SPARK_BUCKET)
+    bucket = F.expr(CUR.SPARK_BUCKET)
     corp = t.documents.filter(bucket < 90).select("doc_id", "text")
     cfp = corp.select(F.md5("text").alias("fp")).distinct()
     csh = corp.select(
@@ -1937,7 +1756,6 @@ def s25_stream_cluster_maintenance(t):
     import data_engineer_project_spark.operators.dedup as DD
     import data_engineer_project_spark.operators.graph as GR
     from data_engineer_project_spark.functions import text as T
-    from data_engineer_project_spark.operators.cache import tracked_persist
     from data_engineer_project_spark.operators import neardup as ND
     from data_engineer_project_spark.queries.llm_pipeline import (
         _D100_NB,
@@ -1945,7 +1763,7 @@ def s25_stream_cluster_maintenance(t):
         _merge_delta_state,
     )
 
-    bucket = F.expr(_D100_SPARK_BUCKET)
+    bucket = F.expr(CUR.SPARK_BUCKET)
     docs = t.documents
     corpus = docs.filter(bucket < 90).select("doc_id", "text")
     delta = docs.filter(bucket >= 90).select("doc_id", "text")

@@ -73,6 +73,12 @@ _RECENTLY_TOUCHED = {
     "d99_weighted_neardup_clusters",
     "d101_incremental_cluster_merge",
     "m18_image_neardup_verified",
+    # ported to the curation stages (operators/curation.py)
+    "d39_pii_redaction",
+    "d45_epoch_shuffle",
+    "d84_cluster_balanced_sampling",
+    "s13_stream_mixture_gate",
+    "s16_stream_curation_front_door",
 }
 
 _DEFAULT_LANE = set(BENCH_QUERIES) | set(SPOT_CHECK_QUERIES) | _RECENTLY_TOUCHED

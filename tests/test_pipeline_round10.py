@@ -1473,16 +1473,16 @@ def test_merge_state_chain_is_partition_invariant(spark):
         collapse_exact as _collapse_reps,
         weighted_rollup as _cluster_rollup,
     )
+    from data_engineer_project_spark.operators.curation import SPARK_BUCKET
     from data_engineer_project_spark.queries.llm_pipeline import (
         _D100_NB,
         _D100_NH,
         _merge_delta_state,
-        _SPARK_BUCKET,
     )
 
     sf = "/root/testdata/sf0.001"
     docs = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
-    bucket = F.expr(_SPARK_BUCKET)
+    bucket = F.expr(SPARK_BUCKET)
     corpus = docs.filter(bucket < 90)
     delta = docs.filter(bucket >= 90).collect()
 

@@ -291,10 +291,10 @@ def test_durable_cluster_merge_survives_midstream_crash(spark, tmp_path):
         collapse_exact as _collapse_reps,
         weighted_rollup as _cluster_rollup,
     )
+    from data_engineer_project_spark.operators.curation import SPARK_BUCKET
     from data_engineer_project_spark.queries.llm_pipeline import (
         _D100_NB,
         _D100_NH,
-        _SPARK_BUCKET,
         _state_latest_batch,
         _state_publish,
         _state_read,
@@ -303,7 +303,7 @@ def test_durable_cluster_merge_survives_midstream_crash(spark, tmp_path):
 
     sf = "/root/testdata/sf0.001"
     docs = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
-    bucket = F.expr(_SPARK_BUCKET)
+    bucket = F.expr(SPARK_BUCKET)
     corpus = docs.filter(bucket < 90)
     delta = docs.filter(bucket >= 90)
 

@@ -11,8 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from data_engineer_project_spark.operators import curation as CUR
 from data_engineer_project_spark.queries import QUERIES
-from data_engineer_project_spark.queries.llm_pipeline import _EMAIL_RE, _PHONE_RE
 from data_engineer_project_spark.sources.registry import load_tables
 
 
@@ -35,16 +35,9 @@ def test_d39_clean_text_has_no_residual_matches(spark, sf_dir):
     """Redaction is a fixpoint: re-scanning the cleaned text finds
     nothing (the corpus itself contains no digits or '@')."""
     docs = load_tables(spark, sf_dir).documents
-    d = F.col("doc_id")
-    pii = F.concat(
-        F.col("text"), F.lit(" contact user"), d.cast("string"), F.lit("@mail-"),
-        (d % 97).cast("string"), F.lit(".example.com"), F.lit(" call 555-"),
-        F.lpad((d % 1000).cast("string"), 3, "0"), F.lit("-"),
-        F.lpad((d % 10000).cast("string"), 4, "0"),
-    )
-    clean = F.regexp_replace(F.regexp_replace(pii, _EMAIL_RE, "<EMAIL>"), _PHONE_RE, "<PHONE>")
+    clean = CUR.redacted(CUR.pii_injected())
     residual = docs.select(
-        (F.regexp_count(clean, F.lit(_EMAIL_RE)) + F.regexp_count(clean, F.lit(_PHONE_RE))).alias("n")
+        (F.regexp_count(clean, F.lit(CUR.EMAIL_RE)) + F.regexp_count(clean, F.lit(CUR.PHONE_RE))).alias("n")
     ).agg(F.sum("n").alias("total")).collect()[0]["total"]
     assert residual == 0
 
@@ -227,17 +220,13 @@ def test_d45_epoch_shuffle_seed_and_determinism(spark, sf_dir):
     """One epoch's permutation is deterministic under a different input
     partitioning; a different seed yields a different permutation
     (checksums differ somewhere) while total doc count is conserved."""
-    from data_engineer_project_spark.queries.llm_pipeline import (
-        epoch_shuffle_profile,
-    )
-
     t = load_tables(spark, sf_dir)
-    docs = t.documents
-    base = epoch_shuffle_profile(docs, "epoch7|").collect()
-    repart = epoch_shuffle_profile(docs.repartition(7, "lang"), "epoch7|").collect()
+    docs = t.documents.select("doc_id", "source", "lang")
+    base = CUR.shard_deal(docs, "epoch7|").collect()
+    repart = CUR.shard_deal(docs.repartition(7, "lang"), "epoch7|").collect()
     assert [tuple(r) for r in base] == [tuple(r) for r in repart]
 
-    other = epoch_shuffle_profile(docs, "epoch8|").collect()
+    other = CUR.shard_deal(docs, "epoch8|").collect()
     assert sum(r["n_docs"] for r in base) == sum(r["n_docs"] for r in other)
     assert {r["shard"]: r["order_checksum"] for r in base} != {
         r["shard"]: r["order_checksum"] for r in other
@@ -245,13 +234,11 @@ def test_d45_epoch_shuffle_seed_and_determinism(spark, sf_dir):
 
 
 def test_md5_hex_int_cross_engine(spark, sf_dir):
-    """The shared _md5_hex_int generator produces identical values on
+    """The shared md5_hex_int generator produces identical values on
     Spark and DuckDB for every (digits, prefix) shape used in the
     module — the twin pairs are identical by construction, this pins
     the construction itself."""
     import duckdb
-
-    from data_engineer_project_spark.queries.llm_pipeline import _md5_hex_int
 
     t = load_tables(spark, sf_dir)
     con = duckdb.connect()
@@ -259,8 +246,8 @@ def test_md5_hex_int_cross_engine(spark, sf_dir):
         f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
     )
     for digits, prefix in [(1, ""), (2, ""), (4, ""), (1, "epoch7|"), (3, "s|")]:
-        sx = _md5_hex_int("doc_id", "string", digits, prefix)
-        ox = _md5_hex_int("doc_id", "varchar", digits, prefix)
+        sx = CUR.md5_hex_int("doc_id", "string", digits, prefix)
+        ox = CUR.md5_hex_int("doc_id", "varchar", digits, prefix)
         sv = {
             r["doc_id"]: r["v"]
             for r in t.documents.selectExpr(
@@ -309,7 +296,6 @@ def test_d46_quartiles_partition_the_test_split(spark, sf_dir):
     assert all(-1 <= r["quartile"] <= 4 for r in rows)
 
     from data_engineer_project_spark.operators import dedup as DD
-    from data_engineer_project_spark.queries.llm_pipeline import _SPARK_BUCKET
 
     t = load_tables(spark, sf_dir)
     sh = DD.exploded_shingles(t.documents, "doc_id", "text", 3).distinct()
@@ -321,7 +307,7 @@ def test_d46_quartiles_partition_the_test_split(spark, sf_dir):
     )
     n_test_docs = (
         sh.join(informative, "shingle")
-        .withColumn("bucket", F.expr(_SPARK_BUCKET))
+        .withColumn("bucket", F.expr(CUR.SPARK_BUCKET))
         .filter(F.col("bucket") >= 90)
         .select("doc_id")
         .distinct()
@@ -797,14 +783,13 @@ def test_d53_statuses_partition_the_union_and_match_buckets(spark, sf_dir):
     added == buckets 90-99, removed == 0-9, changed == 50-59 (mutated
     slice present on both sides), unchanged == the rest; totals
     partition the union of both snapshots."""
-    from data_engineer_project_spark.queries.llm_pipeline import _SPARK_BUCKET
 
     got = {}
     for r in QUERIES["d53_corpus_snapshot_diff"].fn(spark, sf_dir).collect():
         got[r["status"]] = got.get(r["status"], 0) + r["n_docs"]
     bk = (
         load_tables(spark, sf_dir)
-        .documents.select(F.expr(_SPARK_BUCKET).alias("bk"))
+        .documents.select(F.expr(CUR.SPARK_BUCKET).alias("bk"))
         .collect()
     )
     from collections import Counter
@@ -1007,11 +992,10 @@ def test_d55_removal_accounting(spark, sf_dir):
     count of distinct leaky train docs derived independently through
     the d25-style overlap (grouped the opposite way)."""
     from data_engineer_project_spark.operators import dedup as DD
-    from data_engineer_project_spark.queries.llm_pipeline import _SPARK_BUCKET
 
     out = {r["lang"]: r for r in QUERIES["d55_clean_train_split"].fn(spark, sf_dir).collect()}
     docs = load_tables(spark, sf_dir).documents
-    b = F.expr(_SPARK_BUCKET)
+    b = F.expr(CUR.SPARK_BUCKET)
     train = docs.filter(b < 80)
     per_lang = {r["lang"]: r["n"] for r in train.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()}
     assert set(out) == set(per_lang)

@@ -53,14 +53,12 @@ def test_d56_epoch_seed_changes_permutation_not_membership(spark, sf_dir):
     curation stages, the shuffle only permutes. Re-run the final stage
     with a different seed via the d45 helper on the same fixture and
     compare: total docs equal, per-shard checksums differ."""
-    from data_engineer_project_spark.queries.llm_pipeline import (
-        epoch_shuffle_profile,
-    )
+    from data_engineer_project_spark.operators.curation import shard_deal
     from data_engineer_project_spark.sources.registry import load_tables
 
-    t = load_tables(spark, sf_dir)
-    a = epoch_shuffle_profile(t.documents, "pinA|").collect()
-    b = epoch_shuffle_profile(t.documents, "pinB|").collect()
+    docs = load_tables(spark, sf_dir).documents.select("doc_id", "source")
+    a = shard_deal(docs, "pinA|").collect()
+    b = shard_deal(docs, "pinB|").collect()
     assert sum(r.n_docs for r in a) == sum(r.n_docs for r in b)
     assert {r.shard: r.order_checksum for r in a} != {
         r.shard: r.order_checksum for r in b
@@ -80,11 +78,8 @@ def test_s16_multibatch_stream_equals_single_batch(spark, tmp_path, sf_dir):
 
     import pyarrow.parquet as pq
 
-    from data_engineer_project_spark.functions import text as T
     from data_engineer_project_spark.queries.streaming_queries import (
-        _S11_BUCKET,
-        _SPARK_BUCKET64K,
-        _s16_redact,
+        s16_door_tally,
     )
     from data_engineer_project_spark.streaming import (
         read_document_stream,
@@ -102,55 +97,20 @@ def test_s16_multibatch_stream_equals_single_batch(spark, tmp_path, sf_dir):
         os.utime(p, (1_700_000_000 + i * 10,) * 2)
 
     t = load_tables(spark, sf_dir)
-    b = F.expr(_S11_BUCKET)
-    corpus = t.documents.withColumn("bucket", b).filter(F.col("bucket") < 50)
-    cred = corpus.select(F.md5(_s16_redact()).alias("fp")).distinct()
-    src = corpus.groupBy("source").agg(
-        F.sum(T.bpe_token_estimate("text")).alias("orig_tokens")
-    )
-    from pyspark.sql import Window
-
-    thr = src.withColumn(
-        "min_tok", F.min("orig_tokens").over(Window.partitionBy(F.lit(1)))
-    ).select(
-        "source",
-        F.expr(
-            "least(65536, (65536 * min_tok + orig_tokens - 1) div orig_tokens)"
-        ).alias("keep_thr"),
-    )
-
-    def door(stream):
-        inc = (
-            stream.withColumn("bucket", b)
-            .filter(F.col("bucket") >= 50)
-            .withColumn("ctext", _s16_redact())
-            .select("doc_id", "lang", "source", "ctext")
-        )
-        n_words = T.token_count("ctext")
-        sr = T.stopword_count("ctext").cast("double") / n_words.cast("double")
-        q = inc.filter(n_words.between(20, 120) & (sr < 0.3))
-        dd = q.withColumn("fp", F.md5("ctext")).join(cred, "fp", "left_anti")
-        kept = (
-            dd.withColumn("bkt", F.expr(_SPARK_BUCKET64K))
-            .join(F.broadcast(thr), "source")
-            .filter(F.col("bkt") < F.col("keep_thr"))
-        )
-        return kept.groupBy("source", "lang").agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(T.bpe_token_estimate("ctext")).alias("survivor_tokens"),
-        )
-
     sliced = run_to_memory_table(
-        door(
+        s16_door_tally(
+            t,
             read_document_stream(
                 spark, str(d), glob="*.parquet", max_files_per_trigger=1
-            )
+            ),
         ),
         "s16_sliced",
         "complete",
     )
     single = run_to_memory_table(
-        door(read_document_stream(spark, sf_dir)), "s16_single", "complete"
+        s16_door_tally(t, read_document_stream(spark, sf_dir)),
+        "s16_single",
+        "complete",
     )
     assert sorted(map(tuple, sliced.collect())) == sorted(
         map(tuple, single.collect())

@@ -9,6 +9,7 @@ from __future__ import annotations
 import numpy as np
 import pyspark.sql.functions as F
 
+from data_engineer_project_spark.operators import curation as CUR
 from data_engineer_project_spark.queries import QUERIES
 
 
@@ -1334,11 +1335,9 @@ def test_s23_streaming_margins_equal_batch_across_batches(
 
     from data_engineer_project_spark.queries.llm_pipeline import (
         _d90_scored_frame,
-        _md5_hex_int,
     )
     from data_engineer_project_spark.queries.streaming_queries import (
         _s23_model_literals,
-        _S23_SPLIT,
     )
     from data_engineer_project_spark.sources.registry import load_tables
     from data_engineer_project_spark.streaming import read_document_stream
@@ -1356,7 +1355,7 @@ def test_s23_streaming_margins_equal_batch_across_batches(
 
     t = load_tables(spark, sf)
     bits_en, bits_ot, prior_en, prior_ot = _s23_model_literals(t)
-    bidx = _md5_hex_int("w", "string", 2)
+    bidx = CUR.md5_hex_int("w", "string", 2)
 
     def fold(bits):
         arr = ", ".join(str(v) + "L" for v in bits)
@@ -1371,7 +1370,7 @@ def test_s23_streaming_margins_equal_batch_across_batches(
             spark, str(d), glob="documents_*.parquet",
             max_files_per_trigger=1,
         )
-        .withColumn("split_bucket", F.expr(_S23_SPLIT))
+        .withColumn("split_bucket", F.expr(CUR.SPARK_BUCKET))
         .filter(F.col("split_bucket") >= 90)
         .select(
             "doc_id",

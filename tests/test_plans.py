@@ -282,6 +282,8 @@ def test_no_forced_broadcast_of_unbounded_frames():
 
     DENY = {"leaky", "dropped", "per_doc"}
     ALLOW = {
+        ("operators/curation.py", "thr"),  # per-group keep thresholds
+        ("operators/curation.py", "kept"),  # per-group keep counts
         ("operators/linalg.py", "n_max"),  # 1-row guard aggregate
         ("operators/linalg.py", "vdir"),  # <= dim-row direction
         ("queries/llm_pipeline.py", "vdir"),  # <= dim-row direction
@@ -315,9 +317,8 @@ def test_no_forced_broadcast_of_unbounded_frames():
         ("queries/llm_pipeline.py", "s"),  # per-lang stats
         ("queries/llm_pipeline.py", "tot"),  # scalar totals
         ("queries/llm_pipeline.py", "nd"),  # per-lang doc counts
-        ("queries/llm_pipeline.py", "mn"),  # 1-row min
-        ("queries/llm_pipeline.py", "thr"),  # per-source thresholds
-        ("queries/llm_pipeline.py", "kept"),  # per-source keep set
+        ("queries/llm_pipeline.py", "thr"),  # d67: 1-row waterfill cap
+        ("queries/llm_pipeline.py", "kept"),  # d47: per-lang keep counts
         ("queries/llm_pipeline.py", "shc"),  # per-source counts
         ("queries/llm_pipeline.py", "sa"),  # source list
         ("queries/llm_pipeline.py", "sb"),
@@ -353,8 +354,6 @@ def test_no_forced_broadcast_of_unbounded_frames():
         ("queries/practice.py", "n"),  # 1-row counts
         ("queries/practice.py", "dim"),
         ("queries/streaming_queries.py", "cms"),  # s21: <= d*w = 3072 grid
-        ("queries/streaming_queries.py", "mn"),
-        ("queries/streaming_queries.py", "thr"),
         ("queries/streaming_queries.py", "policy"),  # per-type policy
         ("queries/tpch.py", "region"),
         ("queries/tpch.py", "nat"),
