@@ -166,8 +166,11 @@ def overlap_sql(source: str = "sh", suffix: str = "") -> str:
 # ---------------------------------------------------- PII inject / redact
 
 # Patterns restricted to the character-class/quantifier subset where
-# Java regex and RE2 agree (no backrefs, no lookaround).
-EMAIL_RE = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
+# Java regex and RE2 agree (no backrefs, no lookaround). The local part
+# is bounded to RFC 5321's 64 characters: unbounded, Java's backtracking
+# matcher is quadratic in a long '@'-less run (a base64 or hex blob),
+# while RE2 stays linear either way.
+EMAIL_RE = "[A-Za-z0-9._%+-]{1,64}@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
 PHONE_RE = "[0-9]{3}-[0-9]{3}-[0-9]{4}"
 
 

@@ -17,9 +17,13 @@ Scale notes (100 TB):
 - Payloads ride in parquet binary columns; scans prune them unless the
   stage touches ``media`` (column pruning keeps metadata-only queries
   cheap — verified in tests via ReadSchema).
-- Every stage is mapInPandas (narrow, no shuffle): media pipelines
-  scale linearly with partitions; only the final scalar aggregations
-  shuffle.
+- Every per-row stage is one ``payload_stage`` (a narrow mapInPandas,
+  no shuffle): it owns the batch loop and the output schema, and each
+  operator supplies only a row function and the types of the columns
+  it adds; pass-through columns keep their input types. Only
+  ``byte_histogram``'s per-batch map-side combine writes its own loop.
+  Media pipelines scale linearly with partitions; only the final
+  scalar aggregations shuffle.
 - ``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds batch memory
   when payloads are large; stages iterate per-batch, never materialize
   a whole partition.
@@ -27,9 +31,10 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import inspect
 import struct
 from bisect import bisect_left
-from typing import Iterator
+from typing import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -38,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
+    DataType,
     DoubleType,
     IntegerType,
     LongType,
@@ -79,17 +85,46 @@ def attach_media(documents: DataFrame) -> DataFrame:
     )
 
 
-_DECODE_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("lang", StringType()),
-        StructField("n_px", LongType()),
-        StructField("sum_px", LongType()),
-        StructField("mean_px", DoubleType()),
-        StructField("min_px", IntegerType()),
-        StructField("max_px", IntegerType()),
-    ]
-)
+def kept_fields(df: DataFrame, cols: list[str]) -> list[StructField]:
+    """Output fields for columns an Arrow stage copies through: each
+    keeps its type in ``df``, so an ``int`` id stays ``int`` and an
+    ``array<double>`` stays double. Nullable, like every declared
+    output field, so downstream null handling is unchanged."""
+    return [StructField(c, df.schema[c].dataType) for c in cols]
+
+
+def payload_stage(
+    df: DataFrame,
+    keep: list[str],
+    adds: dict[str, DataType],
+    row: Callable[..., Iterable[tuple]],
+) -> DataFrame:
+    """One narrow ``mapInPandas`` stage that calls ``row`` per input row.
+
+    ``row``'s parameter names are the input columns it reads. For each
+    input row it yields zero or more tuples of the ``adds`` values;
+    every emitted row starts with that input row's ``keep`` values. The
+    output schema is ``keep`` typed from ``df.schema`` (``kept_fields``)
+    then ``adds`` as declared. What a NULL or empty payload means (no
+    row, zeros, a status) is each ``row``'s own rule. ``df`` is mapped
+    as given, so the plan is ``df``'s plus one MapInPandas."""
+    reads = list(inspect.signature(row).parameters)
+    names = keep + list(adds)
+    schema = StructType(
+        kept_fields(df, keep) + [StructField(c, t) for c, t in adds.items()]
+    )
+    nk = len(keep)
+
+    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = [
+                vals[:nk] + add
+                for vals in zip(*(pdf[c] for c in keep + reads))
+                for add in row(*vals[nk:])
+            ]
+            yield pd.DataFrame.from_records(out, columns=names)
+
+    return df.mapInPandas(stage, schema)
 
 
 # --------------------------------------------------------------------
@@ -2567,14 +2602,6 @@ def encode_wav_pcm8(samples: bytes, rate: int = 8000) -> bytes:
     )
 
 
-_WAV_SAMPLES_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("media", BinaryType()),
-    ]
-)
-
-
 def decode_wav_samples(media: DataFrame) -> DataFrame:
     """Container -> raw sample stream as a ``media`` column, so the
     existing frame operators (sample_frames, frame_byte_sums) consume
@@ -2582,21 +2609,16 @@ def decode_wav_samples(media: DataFrame) -> DataFrame:
     Undecodable payloads emit no row (quarantine is the integrity
     gate's job); one narrow Arrow stage."""
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, outs = [], []
-            for did, m in zip(pdf["doc_id"], pdf["media"]):
-                if m is None or len(m) == 0:
-                    continue
-                try:
-                    s = decode_wav(bytes(m))
-                except (ValueError, NotImplementedError):
-                    continue
-                ids.append(did)
-                outs.append(s.tobytes())
-            yield pd.DataFrame({"doc_id": ids, "media": outs})
+    def row(media):
+        if media is None or len(media) == 0:
+            return
+        try:
+            s = decode_wav(bytes(media))
+        except (ValueError, NotImplementedError):
+            return
+        yield (s.tobytes(),)
 
-    return media.mapInPandas(stage, _WAV_SAMPLES_SCHEMA)
+    return payload_stage(media, ["doc_id"], {"media": BinaryType()}, row)
 
 
 def attach_wav(documents: DataFrame) -> DataFrame:
@@ -2605,18 +2627,12 @@ def attach_wav(documents: DataFrame) -> DataFrame:
     oracles stay container-ignorant). Empty/NULL docs carry a NULL
     payload. One narrow Arrow stage."""
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            medias = []
-            for text in pdf["text"]:
-                raw = (text or "").encode("utf-8")
-                medias.append(encode_wav_pcm8(raw) if raw else None)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "media": medias}
-            )
+    def row(text):
+        raw = (text or "").encode("utf-8")
+        yield (encode_wav_pcm8(raw) if raw else None,)
 
-    return documents.select("doc_id", "text").mapInPandas(
-        stage, _WAV_SAMPLES_SCHEMA
+    return payload_stage(
+        documents.select("doc_id", "text"), ["doc_id"], {"media": BinaryType()}, row
     )
 
 
@@ -2878,8 +2894,8 @@ def _real_decode(payload: bytes, fmt: str, engine: str = "python") -> np.ndarray
     STRICTNESS authority — integrity gates always use engine="python"
     because ImageIO is lenient where these parsers raise (truncated
     JPEG, CRC-lying PNG). That tier rule is ENFORCED in code, not just
-    documented: ``container_integrity`` rejects engine != "python" at
-    the gate boundary (round-13 review finding)."""
+    documented: ``container_integrity`` has no engine parameter, so
+    the gate always decodes with the Python codecs."""
     if engine not in ("python", "native"):
         raise ValueError(f"unknown decode engine {engine!r}")
     if engine == "native":
@@ -2932,49 +2948,32 @@ def decode_media(
     100 TB ingest tier; results over the lossless fixture arms are
     pinned identical to the Python engine."""
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                k: []
-                for k in (
-                    "doc_id", "lang", "n_px", "sum_px", "mean_px",
-                    "min_px", "max_px",
-                )
-            }
-            for did, lang, m, f in zip(
-                pdf["doc_id"], pdf["lang"], pdf["media"], pdf["media_format"]
-            ):
-                if m is None or len(m) == 0:
-                    # NULL/empty payload decodes to no pixels: emit no
-                    # row, matching the oracle's per-byte unnest.
-                    continue
-                a = _real_decode(m, f, engine) if use_real_codec else fake_decode(m)
-                s = int(a.astype(np.int64).sum())
-                out["doc_id"].append(did)
-                out["lang"].append(lang)
-                out["n_px"].append(len(a))
-                out["sum_px"].append(s)
-                # exact-int sum / exact-int count in one double division
-                # — bit-matches the oracle's CAST(SUM(v) AS DOUBLE)/n
-                out["mean_px"].append(s / len(a))
-                out["min_px"].append(int(a.min()))
-                out["max_px"].append(int(a.max()))
-            yield pd.DataFrame(out)
+    def row(media, media_format):
+        if media is None or len(media) == 0:
+            # NULL/empty payload decodes to no pixels: emit no row,
+            # matching the oracle's per-byte unnest.
+            return
+        if use_real_codec:
+            a = _real_decode(media, media_format, engine)
+        else:
+            a = fake_decode(media)
+        s = int(a.astype(np.int64).sum())
+        # exact-int sum / exact-int count in one double division
+        # — bit-matches the oracle's CAST(SUM(v) AS DOUBLE)/n
+        yield len(a), s, s / len(a), int(a.min()), int(a.max())
 
-    return media.mapInPandas(stage, _DECODE_SCHEMA)
-
-
-_REAL_MEDIA_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("lang", StringType()),
-        StructField("media", BinaryType()),
-        StructField("media_format", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("n_bytes", LongType()),
-    ]
-)
+    return payload_stage(
+        media,
+        ["doc_id", "lang"],
+        {
+            "n_px": LongType(),
+            "sum_px": LongType(),
+            "mean_px": DoubleType(),
+            "min_px": IntegerType(),
+            "max_px": IntegerType(),
+        },
+        row,
+    )
 
 
 _CONTAINER_ARMS = ("pgm", "bmp", "png", "jpg", "gif", "tif")
@@ -2988,6 +2987,40 @@ _ENCODERS = {
 }
 
 
+def _attach_container(documents: DataFrame, arm: Callable[[int], tuple]) -> DataFrame:
+    """The image corpus prep of attach_real_media and attach_webp_media:
+    each document's UTF-8 bytes as one logical gray image (width = 16 +
+    doc_id % 48, the text bytes row-major, the final row zero-padded to
+    the width) in the container ``arm(doc_id)`` names, a
+    ``(media_format, encoder)`` pair. Empty/NULL docs carry a NULL
+    payload (no pixels → no decode row, the m04 convention). One Arrow
+    stage behind the guarded small-scan fan-out (fanout_small)."""
+
+    def row(doc_id, text):
+        w = int(16 + doc_id % 48)
+        fmt, encode = arm(doc_id)
+        raw = (text or "").encode("utf-8")
+        if not raw:
+            yield None, fmt, w, 0, 0
+            return
+        h = -(-len(raw) // w)
+        payload = encode(raw + b"\x00" * (w * h - len(raw)), w)
+        yield payload, fmt, w, h, len(payload)
+
+    return payload_stage(
+        fanout_small(documents.select("doc_id", "lang", "text")),
+        ["doc_id", "lang"],
+        {
+            "media": BinaryType(),
+            "media_format": StringType(),
+            "width": IntegerType(),
+            "height": IntegerType(),
+            "n_bytes": LongType(),
+        },
+        row,
+    )
+
+
 def attach_real_media(documents: DataFrame) -> DataFrame:
     """Wrap each document's UTF-8 bytes in a REAL image container —
     doc_id % 6 rotates through a P5 PNM (ASCII header), an 8-bit BMP
@@ -2997,114 +3030,47 @@ def attach_real_media(documents: DataFrame) -> DataFrame:
     crawl format made real and bit-exact), a GIF89a (gray global
     color table, uncompressed-style LZW), and a single-strip TIFF —
     every arm bit-exact, every arm's container size in closed form.
-    The logical image is identical in all six arms: width = 16 +
-    doc_id % 48, the text bytes row-major, the final row zero-padded
-    to the width — so one container-ignorant oracle covers every arm,
-    and parity proves the PARSERS recover exactly the true pixels
-    from six different on-disk layouts. Empty/NULL docs carry a NULL payload (no pixels →
-    no decode row, the m04 convention).
+    The logical image is identical in all six arms (_attach_container),
+    so one container-ignorant oracle covers every arm, and parity
+    proves the PARSERS recover exactly the true pixels from six
+    different on-disk layouts.
 
     This is corpus prep (the stand-in for reading real blobs), not the
-    operator under test; it runs as one Arrow stage behind the guarded
-    small-scan fan-out (fanout_small — round 13)."""
+    operator under test."""
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            medias, fmts, widths, heights, nbytes = [], [], [], [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                w = int(16 + did % 48)
-                fmt = _CONTAINER_ARMS[int(did) % len(_CONTAINER_ARMS)]
-                raw = (text or "").encode("utf-8")
-                if not raw:
-                    medias.append(None)
-                    fmts.append(fmt)
-                    widths.append(w)
-                    heights.append(0)
-                    nbytes.append(0)
-                    continue
-                h = -(-len(raw) // w)
-                px = raw + b"\x00" * (w * h - len(raw))
-                payload = _ENCODERS[fmt](px, w)
-                medias.append(payload)
-                fmts.append(fmt)
-                widths.append(w)
-                heights.append(h)
-                nbytes.append(len(payload))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "lang": pdf["lang"].values,
-                    "media": medias,
-                    "media_format": fmts,
-                    "width": pd.Series(widths, dtype="int32"),
-                    "height": pd.Series(heights, dtype="int32"),
-                    "n_bytes": pd.Series(nbytes, dtype="int64"),
-                }
-            )
+    def arm(doc_id):
+        fmt = _CONTAINER_ARMS[int(doc_id) % len(_CONTAINER_ARMS)]
+        return fmt, _ENCODERS[fmt]
 
-    return fanout_small(
-        documents.select("doc_id", "lang", "text")
-    ).mapInPandas(stage, _REAL_MEDIA_SCHEMA)
+    return _attach_container(documents, arm)
 
 
 def attach_webp_media(documents: DataFrame) -> DataFrame:
     """Wrap each document's UTF-8 bytes in a REAL lossless-webp (VP8L)
     container — the round-13 sibling of attach_real_media for the
     format WEBP.md brings into scope. Same logical image as the m15
-    arms (width = 16 + doc_id % 48, text bytes row-major, final row
-    zero-padded), so the same container-ignorant oracle math applies;
-    the encoder rides a COLOR_INDEXING gray palette, which is also how
-    real lossless gray webp is built. Empty/NULL docs carry a NULL
-    payload (no pixels -> no decode row, the m04 convention). One
-    Arrow stage behind the guarded small-scan fan-out — corpus prep,
-    not the operator under test."""
+    arms, so the same container-ignorant oracle math applies; the
+    encoder rides a COLOR_INDEXING gray palette, which is also how
+    real lossless gray webp is built. Corpus prep, not the operator
+    under test."""
     from data_engineer_project_spark.operators.vp8l import (
         encode_webp_lossless,
         webp_dims,
     )
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            medias, widths, heights, nbytes = [], [], [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                w = int(16 + did % 48)
-                raw = (text or "").encode("utf-8")
-                if not raw:
-                    medias.append(None)
-                    widths.append(w)
-                    heights.append(0)
-                    nbytes.append(0)
-                    continue
-                h = -(-len(raw) // w)
-                px = raw + b"\x00" * (w * h - len(raw))
-                payload = encode_webp_lossless(px, w)
-                if webp_dims(payload) != (w, h):
-                    # emit-time self-check: a header-geometry bug
-                    # must fail corpus prep loudly, not surface as a
-                    # decode-stage hash mismatch three stages later
-                    raise ValueError(
-                        f"webp container declares {webp_dims(payload)}"
-                        f" for a {w}x{h} image (doc {did})"
-                    )
-                medias.append(payload)
-                widths.append(w)
-                heights.append(h)
-                nbytes.append(len(payload))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "lang": pdf["lang"].values,
-                    "media": medias,
-                    "media_format": ["webp"] * len(medias),
-                    "width": pd.Series(widths, dtype="int32"),
-                    "height": pd.Series(heights, dtype="int32"),
-                    "n_bytes": pd.Series(nbytes, dtype="int64"),
-                }
+    def encode(px: bytes, w: int) -> bytes:
+        payload = encode_webp_lossless(px, w)
+        if webp_dims(payload) != (w, len(px) // w):
+            # emit-time self-check: a header-geometry bug must fail
+            # corpus prep loudly, not surface as a decode-stage hash
+            # mismatch three stages later
+            raise ValueError(
+                f"webp container declares {webp_dims(payload)}"
+                f" for a {w}x{len(px) // w} image"
             )
+        return payload
 
-    return fanout_small(
-        documents.select("doc_id", "lang", "text")
-    ).mapInPandas(stage, _REAL_MEDIA_SCHEMA)
+    return _attach_container(documents, lambda doc_id: ("webp", encode))
 
 
 _HIST_SCHEMA = StructType(
@@ -3137,42 +3103,19 @@ def byte_histogram(media: DataFrame) -> DataFrame:
     )
 
 
-_FRAME_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("frame_no", IntegerType()),
-        StructField("frame", BinaryType()),
-    ]
-)
-
-
 def sample_frames(media: DataFrame, frame_bytes: int = 256, every: int = 4) -> DataFrame:
     """Treat the payload as a fixed-stride "video": split into
     ``frame_bytes`` frames, keep every ``every``-th (frame sampling).
     Explodes rows inside mapInPandas — output batches are bounded by
     input batch size × frames-per-doc."""
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_id, out_no, out_fr = [], [], []
-            for did, m in zip(pdf["doc_id"], pdf["media"]):
-                for fno in range(0, (len(m) + frame_bytes - 1) // frame_bytes, every):
-                    out_id.append(did)
-                    out_no.append(fno)
-                    out_fr.append(bytes(m[fno * frame_bytes : (fno + 1) * frame_bytes]))
-            yield pd.DataFrame({"doc_id": out_id, "frame_no": out_no, "frame": out_fr})
+    def row(media):
+        for fno in range(0, (len(media) + frame_bytes - 1) // frame_bytes, every):
+            yield fno, bytes(media[fno * frame_bytes : (fno + 1) * frame_bytes])
 
-    return media.mapInPandas(stage, _FRAME_SCHEMA)
-
-
-_FRAME_SUM_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("frame_no", IntegerType()),
-        StructField("frame_len", IntegerType()),
-        StructField("frame_sum", LongType()),
-    ]
-)
+    return payload_stage(
+        media, ["doc_id"], {"frame_no": IntegerType(), "frame": BinaryType()}, row
+    )
 
 
 def frame_byte_sums(frames: DataFrame) -> DataFrame:
@@ -3181,29 +3124,22 @@ def frame_byte_sums(frames: DataFrame) -> DataFrame:
     per-frame luma means; the stub sums payload bytes — same Arrow
     batch shape, numpy-vectorized). The sum is exact int64
     (≤ frame_bytes·255), so every downstream comparison is
-    engine- and partitioning-independent."""
+    engine- and partitioning-independent. Empty/NULL frames emit
+    zeros."""
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            lens, sums = [], []
-            for f in pdf["frame"]:
-                if f is None or len(f) == 0:
-                    lens.append(0)
-                    sums.append(0)
-                else:
-                    a = np.frombuffer(f, dtype=np.uint8)
-                    lens.append(len(a))
-                    sums.append(int(a.astype(np.int64).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "frame_no": pdf["frame_no"].values,
-                    "frame_len": pd.Series(lens, dtype="int32"),
-                    "frame_sum": pd.Series(sums, dtype="int64"),
-                }
-            )
+    def row(frame):
+        if frame is None or len(frame) == 0:
+            yield 0, 0
+            return
+        a = np.frombuffer(frame, dtype=np.uint8)
+        yield len(a), int(a.astype(np.int64).sum())
 
-    return frames.mapInPandas(stage, _FRAME_SUM_SCHEMA)
+    return payload_stage(
+        frames,
+        ["doc_id", "frame_no"],
+        {"frame_len": IntegerType(), "frame_sum": LongType()},
+        row,
+    )
 
 
 def resize_media(media: DataFrame, keep_every: int = 2) -> DataFrame:
@@ -3211,45 +3147,23 @@ def resize_media(media: DataFrame, keep_every: int = 2) -> DataFrame:
     metadata recomputed to match. Same signature a real resampler has:
     binary in, binary out, meta updated."""
 
-    out_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("lang", StringType()),
-            StructField("media", BinaryType()),
-            StructField("media_format", StringType()),
-            StructField("width", IntegerType()),
-            StructField("height", IntegerType()),
-            StructField("n_bytes", LongType()),
-        ]
+    def row(media, media_format, width):
+        resized = bytes(media[::keep_every])
+        w = max(int(width) // keep_every, 1)
+        yield resized, media_format, w, -(-len(resized) // w), len(resized)
+
+    return payload_stage(
+        media,
+        ["doc_id", "lang"],
+        {
+            "media": BinaryType(),
+            "media_format": media.schema["media_format"].dataType,
+            "width": IntegerType(),
+            "height": IntegerType(),
+            "n_bytes": LongType(),
+        },
+        row,
     )
-
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            resized = [bytes(m[::keep_every]) for m in pdf["media"]]
-            w = (pdf["width"].astype("int64") // keep_every).clip(lower=1).astype("int32")
-            n = pd.Series([len(r) for r in resized], dtype="int64")
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "lang": pdf["lang"].values,
-                    "media": resized,
-                    "media_format": pdf["media_format"].values,
-                    "width": w.values,
-                    "height": (-(-n // w)).astype("int32").values,
-                    "n_bytes": n.values,
-                }
-            )
-
-    return media.mapInPandas(stage, out_schema)
-
-
-_AUDIO_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("n_windows", LongType()),
-        StructField("peak_rms", DoubleType()),
-    ]
-)
 
 
 def audio_window_energy(media: DataFrame, window: int = 64) -> DataFrame:
@@ -3262,39 +3176,44 @@ def audio_window_energy(media: DataFrame, window: int = 64) -> DataFrame:
     result is bit-identical at any partitioning and matches the SQL
     oracle. Same mapInPandas shape a real resampler/VAD stage has."""
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_id, out_nw, out_peak = [], [], []
-            for did, m in zip(pdf["doc_id"], pdf["media"]):
-                if m is None or len(m) == 0:
-                    # NULL/empty payload: emit nothing, matching the SQL
-                    # oracle (its per-character unnest produces no row
-                    # for a charless doc). np.frombuffer would raise on
-                    # None anyway — skipping is the defined semantics.
-                    continue
-                a = np.frombuffer(m, dtype=np.uint8).astype(np.int64)
-                n_w = (len(a) + window - 1) // window
-                peak = 0.0
-                for w0 in range(0, len(a), window):
-                    seg = a[w0 : w0 + window]
-                    peak = max(peak, float(np.sqrt(float((seg * seg).sum()) / len(seg))))
-                out_id.append(did)
-                out_nw.append(n_w)
-                out_peak.append(peak)
-            yield pd.DataFrame(
-                {"doc_id": out_id, "n_windows": out_nw, "peak_rms": out_peak}
-            )
+    def row(media):
+        if media is None or len(media) == 0:
+            # NULL/empty payload: emit nothing, matching the SQL
+            # oracle (its per-character unnest produces no row
+            # for a charless doc).
+            return
+        a = np.frombuffer(media, dtype=np.uint8).astype(np.int64)
+        peak = 0.0
+        for w0 in range(0, len(a), window):
+            seg = a[w0 : w0 + window]
+            peak = max(peak, float(np.sqrt(float((seg * seg).sum()) / len(seg))))
+        yield (len(a) + window - 1) // window, peak
 
-    return media.mapInPandas(stage, _AUDIO_SCHEMA)
+    return payload_stage(
+        media, ["doc_id"], {"n_windows": LongType(), "peak_rms": DoubleType()}, row
+    )
 
 
-_PHASH_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("n_px", LongType()),
-        StructField("phash", LongType()),
-    ]
-)
+_BIT_W = 1 << np.arange(64, dtype=np.uint64)  # bit i weight
+
+
+def _pack_bits(flags: np.ndarray) -> int:
+    """Bit i = ``flags[i]`` (at most 64 flags), folded into the signed
+    two's-complement int64 — bit 63 rides the sign bit, which is what
+    Spark LongType and the SQL twins' BIGINT hold."""
+    bits = int(flags.astype(np.uint64) @ _BIT_W[: len(flags)])
+    return bits - (1 << 64) if bits >= 1 << 63 else bits
+
+
+def _dhash(v: np.ndarray, block_bytes: int, n_bits: int) -> int:
+    """The dHash of byte array ``v``: its leading ``(n_bits+1) *
+    block_bytes`` bytes in fixed-width blocks (absent tail blocks sum
+    to 0), bit i set iff sum(block i) > sum(block i+1)."""
+    padded = np.zeros((n_bits + 1) * block_bytes, dtype=np.int64)
+    head = v[: len(padded)]
+    padded[: len(head)] = head
+    sums = padded.reshape(n_bits + 1, block_bytes).sum(axis=1)
+    return _pack_bits(sums[:-1] > sums[1:])
 
 
 def perceptual_hash(media: DataFrame, n_blocks: int = 32) -> DataFrame:
@@ -3320,40 +3239,24 @@ def perceptual_hash(media: DataFrame, n_blocks: int = 32) -> DataFrame:
     if n_blocks > 64:
         raise ValueError("perceptual_hash packs into int64: n_blocks <= 64")
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_id, out_n, out_h = [], [], []
-            for did, m in zip(pdf["doc_id"], pdf["media"]):
-                if m is None or len(m) == 0:
-                    continue
-                a = np.frombuffer(m, dtype=np.uint8).astype(np.int64)
-                n = len(a)
-                total = int(a.sum())
-                # byte x belongs to block x·n_blocks // n — the same
-                # assignment rule as the SQL twin's ((p-1)·m) // n, so
-                # both engines partition identically (floor-BOUNDARY
-                # spans are a *different* partition; don't mix them)
-                blk = (np.arange(n, dtype=np.int64) * n_blocks) // n
-                bs = np.bincount(blk, weights=a, minlength=n_blocks).astype(np.int64)
-                bn = np.bincount(blk, minlength=n_blocks).astype(np.int64)
-                bits = int(
-                    ((bn > 0) & (bs * n > total * bn)).astype(np.uint64)
-                    @ _DHASH_BIT_W[:n_blocks]
-                )
-                if bits >= 1 << 63:  # two's-complement into int64
-                    bits -= 1 << 64
-                out_id.append(did)
-                out_n.append(n)
-                out_h.append(bits)
-            yield pd.DataFrame(
-                {"doc_id": out_id, "n_px": out_n, "phash": out_h},
-                columns=["doc_id", "n_px", "phash"],
-            )
+    def row(media):
+        if media is None or len(media) == 0:
+            return
+        a = np.frombuffer(media, dtype=np.uint8).astype(np.int64)
+        n = len(a)
+        total = int(a.sum())
+        # byte x belongs to block x·n_blocks // n — the same
+        # assignment rule as the SQL twin's ((p-1)·m) // n, so
+        # both engines partition identically (floor-BOUNDARY
+        # spans are a *different* partition; don't mix them)
+        blk = (np.arange(n, dtype=np.int64) * n_blocks) // n
+        bs = np.bincount(blk, weights=a, minlength=n_blocks).astype(np.int64)
+        bn = np.bincount(blk, minlength=n_blocks).astype(np.int64)
+        yield n, _pack_bits((bn > 0) & (bs * n > total * bn))
 
-    return media.mapInPandas(stage, _PHASH_SCHEMA)
-
-
-_DHASH_BIT_W = 1 << np.arange(64, dtype=np.uint64)  # bit i weight
+    return payload_stage(
+        media, ["doc_id"], {"n_px": LongType(), "phash": LongType()}, row
+    )
 
 
 def difference_hash(
@@ -3382,75 +3285,16 @@ def difference_hash(
     collapse quadratically."""
     if n_bits > 64:
         raise ValueError("difference_hash packs into int64: n_bits <= 64")
-    width = (n_bits + 1) * block_bytes
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_id, out_n, out_h = [], [], []
-            for did, m in zip(pdf["doc_id"], pdf["media"]):
-                if m is None or len(m) == 0:
-                    continue
-                a = np.frombuffer(m[:width], dtype=np.uint8).astype(np.int64)
-                n = len(a)
-                padded = np.zeros(width, dtype=np.int64)
-                padded[:n] = a
-                sums = padded.reshape(n_bits + 1, block_bytes).sum(axis=1)
-                # one vectorized bit pack (was a 64-step Python loop
-                # per payload): compare adjacent block sums, dot with
-                # the bit weights, fold into two's-complement int64
-                bits = int(
-                    (sums[:-1] > sums[1:]).astype(np.uint64)
-                    @ _DHASH_BIT_W[:n_bits]
-                )
-                if bits >= 1 << 63:  # two's-complement into int64
-                    bits -= 1 << 64
-                out_id.append(did)
-                out_n.append(len(m))
-                out_h.append(bits)
-            yield pd.DataFrame(
-                {"doc_id": out_id, "n_px": out_n, "phash": out_h},
-                columns=["doc_id", "n_px", "phash"],
-            )
+    def row(media):
+        if media is None or len(media) == 0:
+            return
+        v = np.frombuffer(media, dtype=np.uint8)
+        yield len(v), _dhash(v, block_bytes, n_bits)
 
-    return media.mapInPandas(stage, _PHASH_SCHEMA)
-
-
-_HIST16_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("hist", ArrayType(LongType())),
-        StructField("n_bytes", LongType()),
-    ]
-)
-
-
-def byte_histogram_16(media: DataFrame) -> DataFrame:
-    """Per-payload 16-bin byte histogram (bin = value >> 4) + total
-    byte count — the cheap pixel-content statistic the VERIFIED image
-    near-dup path (m18) compares after the dHash Hamming gate: a
-    64-bit perceptual hash's accidental collisions grow ~quadratically
-    in corpus size for fixed hash entropy (measured in SCALING.md's
-    breadth decade), and a content-level verify is the production
-    answer. One narrow vectorized Arrow stage (np.bincount per
-    payload); empty/NULL payloads emit no row (no pixels — the m04
-    convention)."""
-
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_id, out_h, out_n = [], [], []
-            for did, m in zip(pdf["doc_id"], pdf["media"]):
-                if m is None or len(m) == 0:
-                    continue
-                v = np.frombuffer(m, dtype=np.uint8)
-                out_id.append(did)
-                out_h.append(np.bincount(v >> 4, minlength=16).astype(np.int64))
-                out_n.append(len(v))
-            yield pd.DataFrame(
-                {"doc_id": out_id, "hist": out_h, "n_bytes": out_n},
-                columns=["doc_id", "hist", "n_bytes"],
-            )
-
-    return media.mapInPandas(stage, _HIST16_SCHEMA)
+    return payload_stage(
+        media, ["doc_id"], {"n_px": LongType(), "phash": LongType()}, row
+    )
 
 
 def gif_frame_fingerprints(media: DataFrame) -> DataFrame:
@@ -3466,28 +3310,21 @@ def gif_frame_fingerprints(media: DataFrame) -> DataFrame:
     Scale shape: one narrow mapInPandas; output bounded by distinct
     frames per doc."""
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            fps: list[int] = []
-            for did, m in zip(pdf["doc_id"], pdf["media"]):
-                if m is None or len(m) == 0:
-                    continue
-                seen = set()
-                try:
-                    for canvas, gray in _gif_walk(bytes(m)):
-                        a = _gif_expand(canvas, gray).astype(np.int64)
-                        npx = len(a)
-                        pos = np.arange(npx, dtype=np.int64)
-                        ws = int((a * (pos + 1)).sum())
-                        seen.add(ws * (npx + 1) + npx)
-                except ValueError:
-                    continue  # hostile/corrupt payload: no frames
-                ids.extend([did] * len(seen))
-                fps.extend(sorted(seen))
-            yield pd.DataFrame({"doc_id": ids, "fp": fps})
+    def row(media):
+        if media is None or len(media) == 0:
+            return
+        seen = set()
+        try:
+            for canvas, gray in _gif_walk(bytes(media)):
+                a = _gif_expand(canvas, gray).astype(np.int64)
+                npx = len(a)
+                pos = np.arange(npx, dtype=np.int64)
+                seen.add(int((a * (pos + 1)).sum()) * (npx + 1) + npx)
+        except ValueError:
+            return  # hostile/corrupt payload: no frames
+        yield from ((fp,) for fp in sorted(seen))
 
-    return media.mapInPandas(stage, _FRAME_FP_SCHEMA)
+    return payload_stage(media, ["doc_id"], {"fp": LongType()}, row)
 
 
 def attach_animated_gif(
@@ -3504,96 +3341,49 @@ def attach_animated_gif(
     if frame_px % width:
         raise ValueError("frame_px must be a multiple of width")
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            medias = []
-            for text in pdf["text"]:
-                raw = (text or "").encode("utf-8")
-                if not raw:
-                    medias.append(None)
-                    continue
-                frames = [
-                    raw[k : k + frame_px].ljust(frame_px, b"\x00")
-                    for k in range(0, len(raw), frame_px)
-                ]
-                medias.append(encode_gif_animated(frames, width))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "media": medias}
-            )
+    def row(text):
+        raw = (text or "").encode("utf-8")
+        if not raw:
+            yield (None,)
+            return
+        frames = [
+            raw[k : k + frame_px].ljust(frame_px, b"\x00")
+            for k in range(0, len(raw), frame_px)
+        ]
+        yield (encode_gif_animated(frames, width),)
 
-    return documents.select("doc_id", "text").mapInPandas(
-        stage,
-        StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField("media", BinaryType()),
-            ]
-        ),
+    return payload_stage(
+        documents.select("doc_id", "text"), ["doc_id"], {"media": BinaryType()}, row
     )
-
-
-_PHASH_HIST_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("phash", LongType()),
-        StructField("hist", ArrayType(LongType())),
-        StructField("n_bytes", LongType()),
-    ]
-)
 
 
 def dhash_with_histogram(
     media: DataFrame, block_bytes: int = 8, n_bits: int = 64
 ) -> DataFrame:
-    """difference_hash + byte_histogram_16 FUSED into one Arrow pass:
-    the verified image near-dup path (m18) needs both per payload, and
-    computing them separately costs a second full scan of the media
-    column plus a join to zip the results back together. Values are
-    bit-identical to the two single-purpose operators (their SQL twins
-    verify both)."""
+    """difference_hash plus a 16-bin byte histogram (bin = value >> 4)
+    and the byte count, in one Arrow pass: the verified image near-dup
+    path (m18) compares the histograms after the dHash Hamming gate,
+    because a 64-bit hash's accidental collisions grow ~quadratically
+    in corpus size (SCALING.md's breadth decade). One pass avoids a
+    second scan of the media column and a join to zip the results
+    back together. The hash is difference_hash's bit for bit (the same
+    ``_dhash``); empty/NULL payloads emit no row."""
     if n_bits > 64:
         raise ValueError("difference_hash packs into int64: n_bits <= 64")
-    width = (n_bits + 1) * block_bytes
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_id, out_h, out_hist, out_n = [], [], [], []
-            for did, m in zip(pdf["doc_id"], pdf["media"]):
-                if m is None or len(m) == 0:
-                    continue
-                v = np.frombuffer(m, dtype=np.uint8)
-                padded = np.zeros(width, dtype=np.int64)
-                head = v[:width]
-                padded[: len(head)] = head
-                sums = padded.reshape(n_bits + 1, block_bytes).sum(axis=1)
-                bits = int(
-                    (sums[:-1] > sums[1:]).astype(np.uint64)
-                    @ _DHASH_BIT_W[:n_bits]
-                )
-                if bits >= 1 << 63:
-                    bits -= 1 << 64
-                out_id.append(did)
-                out_h.append(bits)
-                out_hist.append(
-                    np.bincount(v >> 4, minlength=16).astype(np.int64)
-                )
-                out_n.append(len(v))
-            yield pd.DataFrame(
-                {
-                    "doc_id": out_id,
-                    "phash": out_h,
-                    "hist": out_hist,
-                    "n_bytes": out_n,
-                },
-                columns=["doc_id", "phash", "hist", "n_bytes"],
-            )
+    def row(media):
+        if media is None or len(media) == 0:
+            return
+        v = np.frombuffer(media, dtype=np.uint8)
+        hist = np.bincount(v >> 4, minlength=16).astype(np.int64)
+        yield _dhash(v, block_bytes, n_bits), hist, len(v)
 
-    return media.mapInPandas(stage, _PHASH_HIST_SCHEMA)
-
-
-_FRAME_FP_SCHEMA = StructType(
-    [StructField("doc_id", LongType()), StructField("fp", LongType())]
-)
+    return payload_stage(
+        media,
+        ["doc_id"],
+        {"phash": LongType(), "hist": ArrayType(LongType()), "n_bytes": LongType()},
+        row,
+    )
 
 
 def frame_fingerprints(media: DataFrame, frame_bytes: int = 64) -> DataFrame:
@@ -3615,92 +3405,51 @@ def frame_fingerprints(media: DataFrame, frame_bytes: int = 64) -> DataFrame:
     column, not a plan change. Empty/NULL payloads emit nothing.
     """
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            fps: list[int] = []
-            for did, m in zip(pdf["doc_id"], pdf["media"]):
-                if m is None or len(m) == 0:
-                    continue
-                a = np.frombuffer(m, dtype=np.uint8).astype(np.int64)
-                n = len(a)
-                pos = np.arange(n, dtype=np.int64)
-                ws = np.bincount(
-                    pos // frame_bytes, weights=a * (pos % frame_bytes + 1)
-                ).astype(np.int64)
-                fl = np.bincount(pos // frame_bytes).astype(np.int64)
-                uf = np.unique(ws * (frame_bytes + 1) + fl)
-                ids.extend([did] * len(uf))
-                fps.extend(int(x) for x in uf)
-            yield pd.DataFrame({"doc_id": ids, "fp": fps})
+    def row(media):
+        if media is None or len(media) == 0:
+            return
+        a = np.frombuffer(media, dtype=np.uint8).astype(np.int64)
+        pos = np.arange(len(a), dtype=np.int64)
+        ws = np.bincount(
+            pos // frame_bytes, weights=a * (pos % frame_bytes + 1)
+        ).astype(np.int64)
+        fl = np.bincount(pos // frame_bytes).astype(np.int64)
+        yield from ((int(x),) for x in np.unique(ws * (frame_bytes + 1) + fl))
 
-    return media.mapInPandas(stage, _FRAME_FP_SCHEMA)
+    return payload_stage(media, ["doc_id"], {"fp": LongType()}, row)
 
 
-_INTEGRITY_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("media_format", StringType()),
-        StructField("status", StringType()),
-        StructField("n_px", LongType()),
-        StructField("n_bytes", LongType()),
-    ]
-)
-
-
-def container_integrity(media: DataFrame, engine: str = "python") -> DataFrame:
+def container_integrity(media: DataFrame) -> DataFrame:
     """Decode-level integrity gate over REAL containers (the m13
     metadata gate's deeper sibling): actually PARSE each payload with
-    the PNM/BMP decoders and verify the pixel matrix matches the
+    the strict Python decoders and verify the pixel matrix matches the
     declared (width, height) metadata. Verdicts: 'ok' (parsed, dims
     agree), 'dim_mismatch' (parsed but wrong size), 'corrupt' (parser
     raised — truncated data, botched header), 'empty' (NULL payload).
     One narrow Arrow stage; quarantine decisions never shuffle.
 
-    ``engine`` must be "python": the Python codecs are the strictness
-    authority and the native (ImageIO) tier is lenient — it accepts
+    There is no engine choice: the Python codecs are the strictness
+    authority, and the native (ImageIO) tier is lenient — it accepts
     truncated JPEG and CRC-lying PNG these parsers quarantine — so a
     native-tier integrity gate would silently pass corrupt payloads.
-    Enforced here (not just in docstring convention) per the round-13
-    review; the native tier is for the INGEST data plane
-    (decode_media) only."""
-    if engine != "python":
-        raise ValueError(
-            "container_integrity requires engine='python': the native "
-            "(ImageIO) tier is lenient and would silently accept "
-            "payloads the strict Python parsers quarantine"
-        )
+    The native tier is for the INGEST data plane (decode_media) only."""
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                k: []
-                for k in ("doc_id", "media_format", "status", "n_px", "n_bytes")
-            }
-            for did, m, f, w, h in zip(
-                pdf["doc_id"], pdf["media"], pdf["media_format"],
-                pdf["width"], pdf["height"],
-            ):
-                if m is None or len(m) == 0:
-                    status, n_px, n_bytes = "empty", 0, 0
-                else:
-                    n_bytes = len(m)
-                    try:
-                        a = _real_decode(bytes(m), f)
-                        n_px = len(a)
-                        status = (
-                            "ok" if n_px == int(w) * int(h) else "dim_mismatch"
-                        )
-                    except (ValueError, NotImplementedError, struct.error):
-                        # struct.error: header unpacks on payloads cut
-                        # inside the fixed header region (it is NOT a
-                        # ValueError subclass)
-                        status, n_px = "corrupt", 0
-                out["doc_id"].append(did)
-                out["media_format"].append(f)
-                out["status"].append(status)
-                out["n_px"].append(n_px)
-                out["n_bytes"].append(n_bytes)
-            yield pd.DataFrame(out)
+    def row(media, media_format, width, height):
+        if media is None or len(media) == 0:
+            yield "empty", 0, 0
+            return
+        try:
+            n_px = len(_real_decode(bytes(media), media_format))
+            status = "ok" if n_px == int(width) * int(height) else "dim_mismatch"
+        except (ValueError, NotImplementedError, struct.error):
+            # struct.error: header unpacks on payloads cut inside the
+            # fixed header region (it is NOT a ValueError subclass)
+            status, n_px = "corrupt", 0
+        yield status, n_px, len(media)
 
-    return media.mapInPandas(stage, _INTEGRITY_SCHEMA)
+    return payload_stage(
+        media,
+        ["doc_id", "media_format"],
+        {"status": StringType(), "n_px": LongType(), "n_bytes": LongType()},
+        row,
+    )

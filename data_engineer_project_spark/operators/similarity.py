@@ -39,8 +39,10 @@ import threading
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType, IntegerType, StructField, StructType
 
 from data_engineer_project_spark.functions.text import hyperplane
+from data_engineer_project_spark.operators.multimodal import kept_fields
 from data_engineer_project_spark.operators.topk import grouped_topk
 
 
@@ -195,7 +197,14 @@ def _banded_sigs_arrow(
     This moves the fold to vectorized native code at a cost of one
     narrow (id, vec) Arrow round trip — §4.2's prescription. Heavy
     setup (the plane matrix) is built once per task before the batch
-    loop (§4.5)."""
+    loop (§4.5).
+
+    Precondition: every vector is non-null, finite and ``dim`` long.
+    A null or non-finite (NaN, ±inf, null element) vector raises
+    ValueError naming the first offending ids, as a ragged one does;
+    a sign bit of NaN has no meaning, so no bucket is made up for it.
+    ``vid`` and ``vec`` keep their input types (``kept_fields``), so
+    an ``int`` id stays ``int`` and ``array<double>`` stays double."""
     rows = [
         [float(v) for v in hyperplane(bnd * MAX_PLANES + r, dim)]
         for bnd in range(num_bands)
@@ -211,6 +220,12 @@ def _banded_sigs_arrow(
             n = len(pdf)
             if n == 0:
                 continue
+            null = pdf["vec"].isna().to_numpy()
+            if null.any():
+                raise ValueError(
+                    f"banded_lsh_sigs needs non-null vectors; first null "
+                    f"ids: {pdf['vid'][null].tolist()[:5]}"
+                )
             v = np.asarray(
                 [np.asarray(x, dtype=np.float64) for x in pdf["vec"]],
                 dtype=np.float64,
@@ -219,6 +234,12 @@ def _banded_sigs_arrow(
                 raise ValueError(
                     f"banded_lsh_sigs needs fixed-dim "
                     f"{pm.shape[1]} vectors, got shape {v.shape}"
+                )
+            bad = ~np.isfinite(v).all(axis=1)
+            if bad.any():
+                raise ValueError(
+                    f"banded_lsh_sigs needs finite vectors; first ids with "
+                    f"NaN, inf or null elements: {pdf['vid'][bad].tolist()[:5]}"
                 )
             # strict left-fold per plane: cumsum's last element
             s = np.empty((n, pm.shape[0]), dtype=np.float64)
@@ -232,9 +253,17 @@ def _banded_sigs_arrow(
             out["buckets"] = list(buckets)
             yield out
 
-    base = df.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")
-    ).mapInPandas(fn, "vid long, vec array<float>, nrm double, buckets array<int>")
+    sel = df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
+    base = sel.mapInPandas(
+        fn,
+        StructType(
+            kept_fields(sel, ["vid", "vec"])
+            + [
+                StructField("nrm", DoubleType()),
+                StructField("buckets", ArrayType(IntegerType())),
+            ]
+        ),
+    )
     return base.select(
         "vid", "vec", "nrm", F.posexplode("buckets").alias("band", "bucket")
     )

@@ -1398,8 +1398,8 @@ def m18_image_neardup_verified(t):
         "doc_id", F.encode("text", "UTF-8").alias("media")
     )
     # one fused Arrow pass: hash + histogram + byte count per rep
-    # (values bit-identical to difference_hash ∘ byte_histogram_16,
-    # minus a second media scan and the zip-back join)
+    # (the hash is difference_hash's, without a second media scan and
+    # a zip-back join)
     hh = tracked_persist(
         dhash_with_histogram(media).select(
             "doc_id", "phash", "hist", "n_bytes"

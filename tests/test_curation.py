@@ -102,6 +102,34 @@ def test_pii_inject_and_redact_match_sql(engines):
     assert r.pii.endswith("contact user3@mail-3.example.com call 555-003-0003")
 
 
+def test_redacted_stays_fast_on_long_runs_without_at(spark):
+    """A 200,000-character run of email-class characters with no '@' (a
+    base64 or hex blob in crawled text) redacts in seconds: with the
+    local part bounded, Java's backtracking matcher gives up 64
+    characters past each start, so its work is linear in the run. A
+    65-character local part keeps its first character, in Spark and in
+    DuckDB alike."""
+    import time
+
+    rows = [
+        (1, "x" * 200_000 + " mail bob@example.com now"),
+        (2, "a" * 65 + "@example.com tail"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    t0 = time.monotonic()
+    got = dict(df.select("doc_id", CUR.redacted(F.col("text"))).collect())
+    assert time.monotonic() - t0 < 60
+    con = duckdb.connect()
+    con.register("docs", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    want = dict(
+        con.execute(f"SELECT doc_id, {CUR.redacted_sql('text')} FROM docs").fetchall()
+    )
+    con.close()
+    assert got == want
+    assert got[1] == "x" * 200_000 + " mail <EMAIL> now"
+    assert got[2] == "a<EMAIL> tail"
+
+
 def test_chunks_and_first_chunks_match_sql(engines):
     docs, con = engines
     ch = CUR.chunks(docs, "text", ("lang",))

@@ -10,6 +10,9 @@ import pytest
 from data_engineer_project_spark.operators.multimodal import (
     attach_media,
     decode_media,
+    dhash_with_histogram,
+    frame_fingerprints,
+    payload_stage,
     resize_media,
     sample_frames,
 )
@@ -422,3 +425,56 @@ def test_m17_dhash_ctes_stay_in_sync_with_m10_oracle():
     end = m10.index("pairs AS")
     prefix = m10[start:end].rstrip().rstrip(",").rstrip()
     assert prefix == _DHASH_CTES.strip()
+
+
+def test_payload_stage_keeps_input_types(spark):
+    """Pass-through columns keep their input type: an ``int`` doc id
+    comes back ``int``, not widened to ``long``."""
+    from pyspark.sql.types import IntegerType
+
+    media = spark.createDataFrame(
+        [(7, b"abcdefgh" * 20), (8, None)], "doc_id int, media binary"
+    )
+    out = frame_fingerprints(media, frame_bytes=64)
+    assert out.schema["doc_id"].dataType == IntegerType()
+    # frames 0 and 1 hold the same 64 bytes; frame 2 is a 32-byte tail
+    assert sorted(r.doc_id for r in out.collect()) == [7, 7]
+
+
+def test_payload_stage_aligns_kept_columns_with_emitted_rows(spark):
+    """A row function that yields 0, 1 or several rows per input row:
+    every emitted row carries its own input row's ``keep`` values. The
+    row function reads columns by parameter name, in any order."""
+    from pyspark.sql.types import LongType, StringType
+
+    docs = spark.createDataFrame(
+        [(1, "a", 0), (2, "b", 1), (3, "c", 3), (4, "d", 0), (5, "e", 2)],
+        "doc_id long, tag string, n int",
+    ).coalesce(1)
+
+    def row(n, tag):
+        for i in range(n):
+            yield tag * (i + 1), i
+
+    out = payload_stage(docs, ["doc_id", "tag"], {"rep": StringType(), "i": LongType()}, row)
+    assert out.columns == ["doc_id", "tag", "rep", "i"]
+    assert sorted(map(tuple, out.collect())) == [
+        (2, "b", "b", 0),
+        (3, "c", "c", 0),
+        (3, "c", "cc", 1),
+        (3, "c", "ccc", 2),
+        (5, "e", "e", 0),
+        (5, "e", "ee", 1),
+    ]
+
+
+def test_payload_stage_handles_partitions_that_emit_nothing(spark):
+    """Partitions with no rows, and a batch whose rows all emit nothing,
+    give an empty result, also for an ``array`` output column (Arrow
+    cannot convert an empty float64 column to ``array<bigint>``)."""
+    one = spark.createDataFrame([(1, b"abcdef")], "doc_id long, media binary")
+    assert dhash_with_histogram(one.repartition(4)).count() == 1
+    blank = spark.createDataFrame(
+        [(1, b""), (2, None)], "doc_id long, media binary"
+    ).coalesce(1)
+    assert dhash_with_histogram(blank).collect() == []

@@ -63,13 +63,14 @@ def test_registry_gate_prefix_draws_stale_q_and_regated_hq_rows(
 def test_container_integrity_rejects_native_engine(spark):
     """The integrity gate is the STRICTNESS consumer: the native tier
     (lenient ImageIO) must be rejected in code, not by docstring
-    convention (r12 advice)."""
+    convention. The gate has no engine parameter, so any engine is a
+    call error."""
     docs = spark.createDataFrame(
         [(1, "png", b"x", 1, 1)],
         "doc_id long, media_format string, media binary, "
         "width int, height int",
     )
-    with pytest.raises(ValueError, match="engine='python'"):
+    with pytest.raises(TypeError, match="engine"):
         mm.container_integrity(docs, engine="native")
 
 

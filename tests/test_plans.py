@@ -418,3 +418,17 @@ def test_d45_window_partitioned_by_shard(spark):
 
     wline = next(ln for ln in plan.splitlines() if re.search(r"\bWindow\b", ln))
     assert "shard" in wline
+
+
+def test_explain_normalizes_lambda_suffix_not_column_names():
+    """The number after a lambda variable's name counts the lambdas the
+    process built before, so two checkouts print ``x_39`` and ``x_13``
+    for the same plan; a column's numeric suffix is part of its name."""
+    from tools.explain import normalize
+
+    dump = (
+        "Output [1]: [transform(mh_3#12, lambdafunction((lambda x_39#40L"
+        " + 1), lambda x_39#40L, false)) AS mh_3#13]"
+    )
+    assert normalize(dump) == normalize(dump.replace("x_39", "x_13"))
+    assert normalize(dump) != normalize(dump.replace("mh_3", "mh_4"))

@@ -4,6 +4,7 @@ r15 change — the size-gated exact_jaccard prefilter (guide §3.2), the
 size-gated shingle cache layout (§2.4 vs map-side combine), the
 Arrow signature engine (§4.2), and the opt-in fan-out alignment."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.test_round14_opt import _skip_unless_parallel
@@ -153,6 +154,44 @@ def test_banded_sigs_arrow_matches_hof(spark):
         a = sorted(map(tuple, hof.collect()))
         b = sorted(map(tuple, arrow.collect()))
         assert a == b, kwargs
+
+
+def test_banded_sigs_arrow_keeps_input_types_and_rejects_bad_vectors(spark):
+    """``vid`` and ``vec`` come back in their input types: an ``int`` id
+    stays ``int`` and ``array<double>`` keeps values float32 cannot
+    hold, with rows equal to the HOF reference fold. A null vector and
+    a NaN vector each raise, naming the offending id."""
+    import random
+    import struct
+
+    from pyspark.sql.types import ArrayType, DoubleType, IntegerType
+
+    from data_engineer_project_spark.operators.similarity import (
+        banded_lsh_sigs,
+    )
+
+    rng = random.Random(15)
+    rows = [(i, [rng.gauss(0.0, 1.0) for _ in range(64)]) for i in range(40)]
+    assert any(
+        struct.unpack("f", struct.pack("f", x))[0] != x for x in rows[0][1]
+    )
+    emb = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
+    arrow = banded_lsh_sigs(emb, emb, num_bands=3, planes=5)
+    assert arrow.schema["vid"].dataType == IntegerType()
+    assert arrow.schema["vec"].dataType == ArrayType(DoubleType())
+    got = sorted(map(tuple, arrow.collect()))
+    hof = _banded_sigs_hof(emb, num_bands=3, planes=5)
+    assert got == sorted(map(tuple, hof.collect()))
+    assert {r[0]: r[1] for r in got} == dict(rows)
+
+    ok = [1.0] * 64
+    for bad, why in ((None, "non-null"), ([float("nan")] + ok[1:], "finite")):
+        df = spark.createDataFrame(
+            [(1, ok), (2, bad)], "vec_id int, embedding array<double>"
+        )
+        with pytest.raises(Exception, match=why) as ei:
+            banded_lsh_sigs(df, df, num_bands=2, planes=4).collect()
+        assert "[2]" in str(ei.value)
 
 
 def test_brute_force_topk_fanout_optin_identical_rows_and_plan_shape(

@@ -13,8 +13,9 @@ is for eyeballing new queries while writing them.
 Plans captured while the query was built (``operators/plancap``: the
 connected-components loop, streaming micro-batches) follow the query's
 own plan. Every dump is normalized: expression ids (``#NNN``),
-``plan_id=`` and ``RDD[NNN]`` numbers, run UUIDs and JVM object hash
-codes differ between two runs of the same code, so they are replaced
+``plan_id=`` and ``RDD[NNN]`` numbers, run UUIDs, JVM object hash
+codes and the numeric suffix of lambda variable names (``x_39``)
+differ between two runs of the same code, so they are replaced
 by fixed tokens. Two checkouts' dumps of the same query then ``diff``
 clean unless the plan really changed. Naming a query twice builds it twice in one session
 (e.g. d99's probe pass, then its verdict-cache hit).
@@ -40,6 +41,9 @@ _VOLATILE = (
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}"), "UUID"),
     (re.compile(r"@[0-9a-f]{1,8}\b"), "@H"),  # JVM identity hash codes
+    # lambda variables print as ``lambda x_39#N``: the suffix counts the
+    # lambdas the process built before, not anything in this plan
+    (re.compile(r"(lambda [A-Za-z]+)_\d+#"), r"\1_N#"),
 )
 
 
