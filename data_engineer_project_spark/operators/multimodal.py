@@ -3107,9 +3107,12 @@ def sample_frames(media: DataFrame, frame_bytes: int = 256, every: int = 4) -> D
     """Treat the payload as a fixed-stride "video": split into
     ``frame_bytes`` frames, keep every ``every``-th (frame sampling).
     Explodes rows inside mapInPandas — output batches are bounded by
-    input batch size × frames-per-doc."""
+    input batch size × frames-per-doc. A NULL or empty payload has no
+    frames."""
 
     def row(media):
+        if media is None:
+            return
         for fno in range(0, (len(media) + frame_bytes - 1) // frame_bytes, every):
             yield fno, bytes(media[fno * frame_bytes : (fno + 1) * frame_bytes])
 
@@ -3145,11 +3148,15 @@ def frame_byte_sums(frames: DataFrame) -> DataFrame:
 def resize_media(media: DataFrame, keep_every: int = 2) -> DataFrame:
     """Stub resize: keep every k-th byte (deterministic downsample);
     metadata recomputed to match. Same signature a real resampler has:
-    binary in, binary out, meta updated."""
+    binary in, binary out, meta updated. A NULL payload stays NULL,
+    with NULL height and n_bytes; its width is still resized."""
 
     def row(media, media_format, width):
-        resized = bytes(media[::keep_every])
         w = max(int(width) // keep_every, 1)
+        if media is None:
+            yield None, media_format, w, None, None
+            return
+        resized = bytes(media[::keep_every])
         yield resized, media_format, w, -(-len(resized) // w), len(resized)
 
     return payload_stage(

@@ -6,6 +6,18 @@ first (``collapse_exact``) and the weighted cluster rollup it ends with
 signatures, band keys, candidates, exact-Jaccard verify — is
 ``operators/dedup.py``; connected components is ``operators/graph.py``.
 
+The standing cluster state: the incremental consumers (d101, s25 and
+``durable_cluster_merge_sink``) keep the corpus's clusters as four
+artifacts, named in ``STATE_ARTIFACTS`` — reps (fp, node, wt, n_tok),
+comps (node, component), sh (node, shingle) and bands (node, band,
+key). ``cluster_state`` builds them from a corpus, ``merge_delta``
+folds a delta into them without re-pairing the corpus, and
+``publish_state`` / ``read_state`` / ``state_complete`` store them as
+one unit under the directory ``state_store`` keys by the corpus's file
+manifest. ``NUM_HASHES``/``BANDS`` (the d07 operating point) and
+``DELTA_SPLIT`` (the md5 bucket where the delta starts) are the
+geometry every consumer of the state shares, d100 and s24 included.
+
 DuckDB side: the oracle CTE functions. Each returns comma-joinable
 CTE text (no ``WITH`` keyword) for one stage of the same chain, so an
 oracle is a composition of stage calls instead of a hand-pasted copy:
@@ -35,8 +47,17 @@ shingle counts (``dedup.exact_jaccard``).
 
 from __future__ import annotations
 
+import pathlib
+import shutil
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from data_engineer_project_spark.functions import text as T
+from data_engineer_project_spark.operators import dedup as DD
+from data_engineer_project_spark.operators import graph as GR
+from data_engineer_project_spark.operators import similarity as SIM
+from data_engineer_project_spark.operators.cache import tracked_persist
 
 # ------------------------------------------------------------------ Spark
 
@@ -87,6 +108,321 @@ def weighted_rollup(reps: DataFrame, comps: DataFrame) -> DataFrame:
         )
         .orderBy("component")
     )
+
+
+# ----------------------------------------- the standing cluster state
+
+# The d07 operating point: 8 salted-md5 MinHashes in 4 bands of 2.
+NUM_HASHES, BANDS = 8, 4
+
+# md5(doc_id) bucket (0-99, ``curation.SPARK_BUCKET``) at which the
+# crawl delta starts: the top decile is the delta, the rest the corpus.
+DELTA_SPLIT = 90
+
+STATE_ARTIFACTS = ("reps", "comps", "sh", "bands")
+
+# Folded into every ``state_store`` key: bump it when the artifacts'
+# names or meaning change. write_store_atomic keeps an existing target
+# directory, so a store of the old layout must never be found.
+STATE_VERSION = 3
+
+
+def cluster_state(corpus: DataFrame) -> dict:
+    """The cold build of the standing state over ``corpus`` (doc_id,
+    text): collapse exact copies, shingle the reps, MinHash-band and
+    verify their pairs, connected components, and the reps' band keys.
+    Returns the four artifacts by name (``STATE_ARTIFACTS``)."""
+    reps = tracked_persist(collapse_exact(corpus))
+    sh = tracked_persist(
+        DD.exploded_shingles(reps.select("node", "text"), id_col="node").distinct()
+    )
+    pairs = DD.minhash_lsh_pairs_from_shingles(
+        sh,
+        id_col="node",
+        num_hashes=NUM_HASHES,
+        bands=BANDS,
+        jaccard_threshold=0.5,
+    ).select("doc_a", "doc_b")
+    comps = GR.connected_components(pairs, pairs_unique=True)
+    sig = DD.minhash_signatures(sh, id_col="node", num_hashes=NUM_HASHES)
+    return {
+        "reps": reps.select(
+            "fp", "node", "wt", T.token_count("text").alias("n_tok")
+        ),
+        "comps": comps.select("node", "component"),
+        "sh": sh,
+        "bands": DD.band_key_rows(
+            sig, id_col="node", num_hashes=NUM_HASHES, bands=BANDS
+        ),
+    }
+
+
+def merge_delta(delta: DataFrame, st: dict) -> dict:
+    """Merge a crawl delta (doc_id, text) into the standing state ``st``
+    without ever re-pairing the corpus with itself, returning the
+    UPDATED state. Its ``weighted_rollup`` is hash-equal to d99 run
+    from scratch on corpus + delta. The returned dict has the same
+    shape, with renames applied to the shingle/band node keys, so
+    merges CHAIN: state merged batch by batch equals one merge of the
+    concatenated delta (s25 relies on exactly this — each
+    micro-batch's novels join the band/shingle tables the next batch
+    probes, and weight bumps/renames land on reps keyed by fp).
+
+    The corpus is never re-scanned, let alone self-joined: the work is
+    sized by the DELTA (its shingles/signatures, a one-sided probe into
+    ``bands``, verify joins into ``sh``) plus the star-edge CC pass
+    over the standing components. Why this is exact, case by case (all
+    pinned by the d99-parity pytest):
+    - exact dups: a delta fingerprint matching a corpus rep bumps the
+      rep's weight; identical text means identical signatures, so the
+      rep's connectivity is already encoded in the standing
+      components. If the delta brings a SMALLER doc_id, the rep (and
+      every component label it may have anchored) is relabeled via a
+      rename map — from-scratch reps take min(doc_id) over the full
+      set.
+    - near dups: only NOVEL delta fingerprints are paired — one-sided
+      band probe (delta x corpus, the d100 shape) plus a delta x delta
+      guarded self-join. ALL verified pairs are kept (not d100's best
+      match): a delta doc near TWO standing components is a BRIDGE
+      whose edges must merge them, exactly as from-scratch would.
+    - connectivity: connected components re-runs over (standing
+      membership star edges) ∪ (delta edges) — star edges are
+      already-converged pointer trees, so rounds stay at the log
+      diameter of the NEW merges.
+    - rollup: d99's weighted_rollup over the merged rep set (bumped
+      weights, relabeled nodes, novel singletons with wt > 1
+      surfacing as components)."""
+    stored_reps, stored_comps, shc, bc = (
+        st["reps"],
+        st["comps"],
+        st["sh"],
+        st["bands"],
+    )
+    dfp = collapse_exact(delta).select(
+        "fp",
+        F.col("node").alias("d_doc"),
+        "text",
+        F.col("wt").alias("wt_d"),
+    )
+    matched = stored_reps.join(dfp.select("fp", "d_doc", "wt_d"), "fp")
+    # no broadcast hint: the rename map is sized by the DELTA's
+    # exact-dup fingerprints — delta-proportional, not query-bounded —
+    # so AQE picks the strategy (it broadcasts when genuinely small).
+    rename = matched.filter(F.col("d_doc") < F.col("node")).select(
+        F.col("node").alias("_old"), F.col("d_doc").alias("_new")
+    )
+    novel = dfp.join(stored_reps.select("fp"), "fp", "left_anti").select(
+        "fp",
+        F.col("d_doc").alias("node"),
+        "text",
+        F.col("wt_d").alias("wt"),
+        T.token_count("text").alias("n_tok"),
+    )
+    merged_reps = (
+        stored_reps.join(dfp.select("fp", "d_doc", "wt_d"), "fp", "left")
+        .select(
+            "fp",
+            F.least(F.col("node"), F.coalesce("d_doc", "node")).alias("node"),
+            (F.col("wt") + F.coalesce("wt_d", F.lit(0))).alias("wt"),
+            "n_tok",
+        )
+        .union(novel.select("fp", "node", "wt", "n_tok"))
+    )
+
+    def ren(df, col):
+        return (
+            df.join(rename, df[col] == rename["_old"], "left")
+            .withColumn(col, F.coalesce("_new", col))
+            .drop("_old", "_new")
+        )
+
+    # delta shingles over novels only; the corpus side (shc, bc) comes
+    # from the standing store — nothing corpus-sized is recomputed.
+    shn = tracked_persist(
+        DD.exploded_shingles(novel, id_col="node").distinct()
+    )
+    sign = DD.minhash_signatures(shn, id_col="node", num_hashes=NUM_HASHES)
+    bn = DD.band_key_rows(sign, id_col="node", num_hashes=NUM_HASHES, bands=BANDS)
+    cand_dc = (
+        bn.select(F.col("node").alias("doc_a"), "band", "key")
+        .join(bc.select(F.col("node").alias("doc_b"), "band", "key"), ["band", "key"])
+        .select("doc_a", "doc_b")
+        .distinct()
+    )
+    # prefilter=True: cand_dc is DELTA-sized while sh_all unions the
+    # FULL corpus shingle artifact — the size-gated §3.2 semi-join
+    # prunes the corpus side to candidate docs before exact_jaccard's
+    # by-node exchanges once the store clears the gate (a plan no-op
+    # at bench scale, where the gate keeps the measured-faster shape).
+    sh_all = shn.union(shc)
+    e_dc = (
+        DD.exact_jaccard(cand_dc, sh_all, id_col="node", prefilter=True)
+        .filter(F.col("jaccard") >= 0.5)
+        .select("doc_a", "doc_b")
+    )
+    e_dd = DD.minhash_lsh_pairs_from_shingles(
+        shn, id_col="node", num_hashes=NUM_HASHES, jaccard_threshold=0.5
+    ).select("doc_a", "doc_b")
+    # Star edges drop the root self-loops (node == component): they
+    # carry no connectivity — every root of a ≥2-node standing cluster
+    # still appears as the doc_b of its members' edges — and removing
+    # them makes the mirrored edge union DISTINCT by construction, so
+    # CC can skip its full-edge-set dedup aggregate (r15, §2.4):
+    # each unordered pair appears in exactly ONE source (star pairs
+    # corpus×corpus, e_dc pairs novel×corpus, e_dd pairs novel×novel)
+    # and in one orientation, and the rename map is injective over
+    # disjoint id spaces, so no two pairs collide after relabeling.
+    # pairs_unique is performance-only either way — duplicate edges
+    # could not change the labels (see connected_components).
+    star = stored_comps.filter(F.col("node") != F.col("component")).select(
+        F.col("node").alias("doc_a"), F.col("component").alias("doc_b")
+    )
+    all_edges = (
+        ren(ren(star, "doc_a"), "doc_b")
+        .union(ren(e_dc, "doc_b"))
+        .union(e_dd)
+    )
+    comps = GR.connected_components(all_edges, pairs_unique=True)
+    return {
+        "reps": merged_reps,
+        "comps": comps.select("node", "component"),
+        "sh": ren(shn.union(shc), "node"),
+        "bands": ren(bn.union(bc), "node"),
+    }
+
+
+def _docs_fingerprint(docs: DataFrame) -> tuple[int, int, int]:
+    """(row count, id checksum, text checksum): the text checksum sums
+    the first 8 md5 hex digits of every text as int (order-free
+    integer addition, partition-invariant; 2^32 x 10^7 rows stays far
+    inside int64). The identity of a frame not backed by files
+    (unit-test fixtures); it scans the whole text column."""
+    fp = docs.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("doc_id").alias("s"),
+        F.sum(
+            F.conv(F.substring(F.md5("text"), 1, 8), 16, 10).cast("long")
+        ).alias("v"),
+    ).collect()[0]
+    return int(fp["n"]), int(fp["s"]), int(fp["v"])
+
+
+def corpus_key(docs: DataFrame) -> str:
+    """Identity of the corpus a state is built from. A file-backed frame
+    is keyed without scanning its data by
+    ``similarity.source_manifest_key`` (the files' (uri, size, mtime)
+    manifest plus the plan identity, so a differently filtered frame
+    over the same files gets another key); any other frame by its
+    content fingerprint."""
+    return SIM.source_manifest_key(docs) or "n{}_s{}_v{}".format(
+        *_docs_fingerprint(docs)
+    )
+
+
+def state_store(corpus: DataFrame) -> pathlib.Path:
+    """Warehouse directory of the standing state built from ``corpus``,
+    keyed by ``corpus_key`` and the geometry. The ``*_store`` family
+    name puts it under ``similarity.sweep_stores``' keep-latest-N."""
+    key = (
+        f"a{STATE_VERSION}_{corpus_key(corpus)}"
+        f"_p{DELTA_SPLIT}_h{NUM_HASHES}_b{BANDS}"
+    )
+    return (
+        pathlib.Path(__file__).resolve().parents[2]
+        / "spark-warehouse"
+        / "neardup_cluster_store"
+        / key
+    )
+
+
+def state_complete(root) -> bool:
+    """True when all four artifacts under ``root`` carry their
+    ``_SUCCESS`` marker (write_store_atomic's commit record)."""
+    return all(
+        (pathlib.Path(root) / a / "_SUCCESS").exists() for a in STATE_ARTIFACTS
+    )
+
+
+def read_state(spark, root) -> dict:
+    """The state published under ``root``, one parquet scan each."""
+    return {
+        a: spark.read.parquet(str(pathlib.Path(root) / a)) for a in STATE_ARTIFACTS
+    }
+
+
+def publish_state(state: dict, root) -> None:
+    """Write each artifact missing under ``root`` through
+    write_store_atomic (temp write, rename, ``_SUCCESS``). Each
+    publish is atomic, so a crash between two leaves some artifacts
+    complete and the rest absent; the next publish writes only the
+    absent ones."""
+    for a in STATE_ARTIFACTS:
+        path = pathlib.Path(root) / a
+        if not (path / "_SUCCESS").exists():
+            SIM.write_store_atomic(state[a], path)
+
+
+def _complete_batches(root) -> list[int]:
+    return sorted(
+        int(d.name.split("=", 1)[1])
+        for d in pathlib.Path(root).glob("batch=*")
+        if state_complete(d)
+    )
+
+
+def latest_batch(root) -> int | None:
+    """Highest batch id with a complete state under the batch-versioned
+    ``root`` (``root``/batch=<id>/), or None before the initial state
+    is published."""
+    done = _complete_batches(root)
+    return done[-1] if done else None
+
+
+def durable_cluster_merge_sink(store_root):
+    """foreachBatch sink keeping the standing state DURABLY — the
+    100 TB form of s25's localCheckpoint chain: every micro-batch is
+    merged (``merge_delta``) into the latest complete state and
+    published under ``store_root``/batch=<id>/, so a crash at any
+    point leaves the last COMPLETE batch state readable. The three
+    newest complete batches are kept.
+
+    Exactly-once across restarts is the standard foreachBatch
+    idempotent-write recipe: the stream checkpoint replays any batch
+    whose commit did not land, and the sink SKIPS a replayed batch
+    whose state is already complete (its merge is already in the
+    store) — publish-then-crash and crash-then-publish both converge.
+    On restart the sink reloads the latest complete state, so driver
+    memory holds nothing the store does not.
+
+    Each publish is a full snapshot of the four artifacts; at 100 TB
+    the shingle/band tables are append-dominant (novel rows only) and
+    reps compact periodically — the same artifacts, written
+    incrementally, behind this sink signature.
+
+    The initial (corpus) state must already be published as batch -1
+    (``publish_state(cluster_state(corpus), store_root + "/batch=-1")``)
+    before the stream starts."""
+    root = pathlib.Path(store_root)
+
+    def sink(batch_df, batch_id):
+        if batch_df.isEmpty() or state_complete(root / f"batch={batch_id}"):
+            return  # nothing to merge, or a replay of a published batch
+        prev = latest_batch(root)
+        if prev is None:
+            raise ValueError(
+                "durable_cluster_merge_sink: no complete initial state "
+                f"under {root} (publish it as batch -1 first)"
+            )
+        st = read_state(batch_df.sparkSession, root / f"batch={prev}")
+        # the publish materializes the merge: the store IS the lineage cut
+        publish_state(
+            merge_delta(batch_df.select("doc_id", "text"), st),
+            root / f"batch={batch_id}",
+        )
+        for bid in _complete_batches(root)[:-3]:
+            shutil.rmtree(root / f"batch={bid}", ignore_errors=True)
+
+    return sink
 
 
 # ------------------------------------------------------- DuckDB oracles
@@ -246,6 +582,19 @@ def verify_probe_sql(
         ON a.band = b.band AND a.key = b.key
     ),
     {_verified("new_doc", "corpus_doc", new, corpus, threshold)}"""
+
+
+def probe_sql() -> str:
+    """d07's chain at the standing state's operating point, built over
+    ``rem`` (the incoming survivors, suffix i) and ``corp`` (the
+    corpus, suffix c), then the one-sided band probe and verify into
+    ``ver``(new_doc, corpus_doc, jaccard) — the oracle side of d100's
+    and s24's probe."""
+    return f"""{shingles_sql("rem", suffix="i")},
+    {minhash_sql(NUM_HASHES, BANDS, suffix="i")},
+    {shingles_sql("corp", suffix="c")},
+    {minhash_sql(NUM_HASHES, BANDS, suffix="c")},
+    {verify_probe_sql("i", "c", 0.5)}"""
 
 
 def components_sql(pairs: str = "ver") -> str:

@@ -501,7 +501,7 @@ def d13_embedding_near_dup(t):
     return SIM.cosine_near_dup_pairs(t.embeddings, threshold=0.4, dim=64)
 
 
-def _kmeans_chain(
+def kmeans_chain(
     iters: int = 2,
     src: str = "embeddings",
     prefix: str = "",
@@ -581,12 +581,12 @@ def _ivf_oracle(
     nprobe: int = 1,
 ) -> str:
     """DuckDB twin of ``kmeans_centroids`` + ``ivf_topk``: the shared
-    k-means chain (``_kmeans_chain``) plus the query-side cell probe
+    k-means chain (``kmeans_chain``) plus the query-side cell probe
     and in-cell top-k. ``nprobe`` widens the QUERY side to its nearest
     n cells (corpus stays in one cell), matching
     ``ivf_topk(nprobe=...)``."""
     return f"""
-    WITH {_kmeans_chain(iters)},
+    WITH {kmeans_chain(iters)},
     qasg AS (SELECT vec_id, cid FROM (
               SELECT vec_id, cid,
                      ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -2381,7 +2381,7 @@ def d43_bpe_pair_counts(t):
 @query(
     "d44_semantic_cluster_profile",
     f"""
-    WITH {_kmeans_chain()}
+    WITH {kmeans_chain()}
     SELECT a.cid,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(d.n_chars) AS BIGINT) AS total_chars,
@@ -3757,7 +3757,7 @@ _PQ_SUBS = ",\n    ".join(
     for m in range(_PQ_M)
 )
 _PQ_CHAINS = ",\n    ".join(
-    _kmeans_chain(2, src=f"sub{m}", prefix=f"s{m}_", n_centroids=_PQ_K)
+    kmeans_chain(2, src=f"sub{m}", prefix=f"s{m}_", n_centroids=_PQ_K)
     for m in range(_PQ_M)
 )
 _PQ_CODED = " UNION ALL ".join(
@@ -3806,7 +3806,7 @@ def d57_pq_codebook(t):
     (it is the index format, 4 bits), unlike the IVF cell count which
     scales ~sqrt(N) — exactly how FAISS separates nlist from the PQ
     codebook. The oracle unrolls the mathematically identical chain
-    per subspace via the parameterized _kmeans_chain (same seeds,
+    per subspace via the parameterized kmeans_chain (same seeds,
     same quantized updates, same tie-breaks — the subspace tag only
     fuses the jobs)."""
     _, codes, _ = _pq_train(t.embeddings)
@@ -3962,7 +3962,7 @@ _D58_QSUB = " UNION ALL ".join(
 @query(
     "d58_ivfpq_adc_topk",
     f"""
-    WITH {_kmeans_chain(2)},
+    WITH {kmeans_chain(2)},
     qasg AS (SELECT vec_id, cid FROM (
               SELECT vec_id, cid,
                      ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -4291,7 +4291,7 @@ _SEMDEDUP_TAU = 0.4  # this synthetic corpus has no >0.52 cosine pairs
 @query(
     "d60_semdedup",
     f"""
-    WITH {_kmeans_chain(2)},
+    WITH {kmeans_chain(2)},
     pairs AS (
       SELECT a.vec_id AS id_a, b.vec_id AS id_b
       FROM asg a JOIN asg b ON a.cid = b.cid AND a.vec_id < b.vec_id
@@ -5762,18 +5762,18 @@ def _bpe_train(documents, rounds: int = _BPE_ROUNDS):
 
 # ------------------------------------------------ Bloom membership
 
-_BLOOM_BITS = 1 << 16  # m = 65536 bits -> 2048 32-bit words
-_BLOOM_K = 3
+BLOOM_BITS = 1 << 16  # m = 65536 bits -> 2048 32-bit words
+BLOOM_K = 3
 
 
-def _bloom_positions_sql(text_expr: str) -> list[str]:
+def bloom_positions_sql(text_expr: str) -> list[str]:
     """k bit positions for ``text_expr`` — 4 md5 hex digits of
     (seed || text) mod m, identical integer derivation on both
     engines (the curation.md5_hex_int machinery with a per-hash seed)."""
     return [
         f"({CUR.md5_hex_int(text_expr, 'varchar', 4, prefix=f'bl{j}|')})"
-        f" % {_BLOOM_BITS}"
-        for j in range(_BLOOM_K)
+        f" % {BLOOM_BITS}"
+        for j in range(BLOOM_K)
     ]
 
 
@@ -5789,7 +5789,7 @@ def _bloom_positions_sql(text_expr: str) -> list[str]:
     ),
     pos AS (
       {" UNION ALL ".join(
-        f"SELECT {p} AS idx FROM train" for p in _bloom_positions_sql("text")
+        f"SELECT {p} AS idx FROM train" for p in bloom_positions_sql("text")
       )}
     ),
     bitset AS (
@@ -5800,7 +5800,7 @@ def _bloom_positions_sql(text_expr: str) -> list[str]:
     probe AS (
       {" UNION ALL ".join(
         f"SELECT doc_id, {p} AS idx FROM test"
-        for p in _bloom_positions_sql("text")
+        for p in bloom_positions_sql("text")
       )}
     ),
     hits AS (
@@ -5820,12 +5820,12 @@ def _bloom_positions_sql(text_expr: str) -> list[str]:
     occ AS (SELECT CAST(COUNT(*) AS BIGINT) AS words_occupied FROM (
       SELECT DISTINCT idx FROM pos))
     SELECT CAST(COUNT(*) AS BIGINT) AS n_test,
-           CAST(SUM(CASE WHEN h.k_set = {_BLOOM_K} THEN 1 ELSE 0 END)
+           CAST(SUM(CASE WHEN h.k_set = {BLOOM_K} THEN 1 ELSE 0 END)
                 AS BIGINT) AS n_flagged,
            CAST(SUM(t.is_member) AS BIGINT) AS n_true_members,
-           CAST(SUM(CASE WHEN h.k_set = {_BLOOM_K} AND t.is_member = 0
+           CAST(SUM(CASE WHEN h.k_set = {BLOOM_K} AND t.is_member = 0
                     THEN 1 ELSE 0 END) AS BIGINT) AS n_false_positives,
-           CAST(SUM(CASE WHEN h.k_set = {_BLOOM_K} AND t.is_member = 0
+           CAST(SUM(CASE WHEN h.k_set = {BLOOM_K} AND t.is_member = 0
                     THEN 1 ELSE 0 END) AS DOUBLE)
              / CAST(COUNT(*) AS DOUBLE) AS fp_rate,
            (SELECT words_occupied FROM occ) AS bits_set
@@ -5862,9 +5862,9 @@ def d70_bloom_membership_sketch(t):
     pos_exprs = [
         F.expr(
             f"({CUR.md5_hex_int('text', 'string', 4, prefix=f'bl{j}|')})"
-            f" % {_BLOOM_BITS}"
+            f" % {BLOOM_BITS}"
         )
-        for j in range(_BLOOM_K)
+        for j in range(BLOOM_K)
     ]
     pos = train.select(
         F.explode(F.array(*pos_exprs)).alias("idx")
@@ -5899,8 +5899,8 @@ def d70_bloom_membership_sketch(t):
         "left",
     ).select("doc_id", F.coalesce("hit", F.lit(0)).alias("is_member"))
     occupied = pos.select("idx").distinct().count()
-    flagged = (F.col("k_set") == _BLOOM_K).cast("long")
-    fpos = ((F.col("k_set") == _BLOOM_K) & (F.col("is_member") == 0)).cast(
+    flagged = (F.col("k_set") == BLOOM_K).cast("long")
+    fpos = ((F.col("k_set") == BLOOM_K) & (F.col("is_member") == 0)).cast(
         "long"
     )
     return hits.join(truth, "doc_id").agg(
@@ -5915,8 +5915,8 @@ def d70_bloom_membership_sketch(t):
     )
 
 
-_CMS_W = 1024  # counters per hash row
-_CMS_D = 3  # hash rows
+CMS_W = 1024  # counters per hash row
+CMS_D = 3  # hash rows
 
 
 @query(
@@ -5930,9 +5930,9 @@ _CMS_D = 3  # hash rows
     cells AS (
       {" UNION ALL ".join(
         f"SELECT {j} AS row_j, "
-        f"({CUR.md5_hex_int('wd', 'varchar', 4, prefix=f'cm{j}|')}) % {_CMS_W}"
+        f"({CUR.md5_hex_int('wd', 'varchar', 4, prefix=f'cm{j}|')}) % {CMS_W}"
         f" AS idx, cnt FROM words"
-        for j in range(_CMS_D)
+        for j in range(CMS_D)
       )}
     ),
     cms AS (
@@ -5944,9 +5944,9 @@ _CMS_D = 3  # hash rows
     tprobe AS (
       {" UNION ALL ".join(
         f"SELECT wd, cnt, {j} AS row_j, "
-        f"({CUR.md5_hex_int('wd', 'varchar', 4, prefix=f'cm{j}|')}) % {_CMS_W}"
+        f"({CUR.md5_hex_int('wd', 'varchar', 4, prefix=f'cm{j}|')}) % {CMS_W}"
         f" AS idx FROM top"
-        for j in range(_CMS_D)
+        for j in range(CMS_D)
       )}
     ),
     est AS (
@@ -5989,9 +5989,9 @@ def d71_countmin_heavy_hitters(t):
     )
     cell_exprs = [
         F.expr(
-            f"({CUR.md5_hex_int('wd', 'string', 4, prefix=f'cm{j}|')}) % {_CMS_W}"
+            f"({CUR.md5_hex_int('wd', 'string', 4, prefix=f'cm{j}|')}) % {CMS_W}"
         ).alias(f"idx{j}")
-        for j in range(_CMS_D)
+        for j in range(CMS_D)
     ]
     wpos = tracked_persist(words.select("wd", "cnt", *cell_exprs))
     cells = wpos.select(
@@ -6002,7 +6002,7 @@ def d71_countmin_heavy_hitters(t):
                     F.struct(
                         F.lit(j).alias("row_j"), F.col(f"idx{j}").alias("idx")
                     )
-                    for j in range(_CMS_D)
+                    for j in range(CMS_D)
                 ]
             )
         ).alias("c"),
@@ -6018,7 +6018,7 @@ def d71_countmin_heavy_hitters(t):
                     F.struct(
                         F.lit(j).alias("row_j"), F.col(f"idx{j}").alias("idx")
                     )
-                    for j in range(_CMS_D)
+                    for j in range(CMS_D)
                 ]
             )
         ).alias("c"),
@@ -6038,18 +6038,18 @@ def d71_countmin_heavy_hitters(t):
 
 # ------------------------------------------------ HyperLogLog
 
-_HLL_M = 256  # registers (b = 8 index bits)
+HLL_M = 256  # registers (b = 8 index bits)
 # alpha_256 * m^2 * 2^41, folded to ONE double literal in Python and
 # embedded in scientific notation (which both Spark SQL and DuckDB
 # parse as DOUBLE — plain decimal literals are DECIMAL-typed with
 # engine-specific arithmetic, the drift this avoids). The single
 # division by the exact integer harmonic sum is then IEEE-identical
 # cross-engine.
-_HLL_EST_NUM = repr(0.7213 / (1.0 + 1.079 / 256.0) * 65536.0 * 2199023255552.0)
-assert "e" in _HLL_EST_NUM  # scientific notation => DOUBLE literal
+HLL_EST_NUM = repr(0.7213 / (1.0 + 1.079 / 256.0) * 65536.0 * 2199023255552.0)
+assert "e" in HLL_EST_NUM  # scientific notation => DOUBLE literal
 
 
-def _hll_fields_sql(item_expr: str, cast_type: str) -> tuple[str, str]:
+def hll_fields_sql(item_expr: str, cast_type: str) -> tuple[str, str]:
     """(register, rho) SQL for ``item_expr``: the register is the first
     2 md5 hex digits of ('hl|' || item); rho is 1 + the number of
     leading zero BITS in the next 10 hex digits (a 40-bit window) —
@@ -6074,8 +6074,8 @@ def _hll_fields_sql(item_expr: str, cast_type: str) -> tuple[str, str]:
     return reg, rho
 
 
-_HLL_REG_SQL, _HLL_RHO_SQL = _hll_fields_sql("sh", "varchar")
-_HLL_REG_SPARK, _HLL_RHO_SPARK = _hll_fields_sql("sh", "string")
+_HLL_REG_SQL, _HLL_RHO_SQL = hll_fields_sql("sh", "varchar")
+_HLL_REG_SPARK, _HLL_RHO_SPARK = hll_fields_sql("sh", "string")
 
 
 @query(
@@ -6098,22 +6098,22 @@ _HLL_REG_SPARK, _HLL_RHO_SPARK = _hll_fields_sql("sh", "string")
       FROM regs
     ),
     ex AS (SELECT exact_distinct FROM st)
-    SELECT CAST({_HLL_M} AS BIGINT) AS m_registers,
+    SELECT CAST({HLL_M} AS BIGINT) AS m_registers,
            ex.exact_distinct,
            st.registers_used,
            st.max_rho,
            CAST(st.s_present
-                + ({_HLL_M} - st.registers_used)
+                + ({HLL_M} - st.registers_used)
                   * (CAST(1 AS BIGINT) << 41) AS BIGINT)
              AS harmonic_sum_scaled,
-           {_HLL_EST_NUM}
+           {HLL_EST_NUM}
              / CAST(st.s_present
-                    + ({_HLL_M} - st.registers_used)
+                    + ({HLL_M} - st.registers_used)
                       * (CAST(1 AS BIGINT) << 41) AS DOUBLE)
              AS hll_estimate,
-           ({_HLL_EST_NUM}
+           ({HLL_EST_NUM}
              / CAST(st.s_present
-                    + ({_HLL_M} - st.registers_used)
+                    + ({HLL_M} - st.registers_used)
                       * (CAST(1 AS BIGINT) << 41) AS DOUBLE)
             - CAST(ex.exact_distinct AS DOUBLE))
              / CAST(ex.exact_distinct AS DOUBLE) AS rel_error
@@ -6177,12 +6177,12 @@ def d72_hll_distinct_sketch(t):
     )
     s_total = (
         F.col("s_present")
-        + (F.lit(_HLL_M) - F.col("registers_used"))
+        + (F.lit(HLL_M) - F.col("registers_used"))
         * F.expr("shiftleft(cast(1 as bigint), 41)")
     ).cast("long")
-    est = F.expr(_HLL_EST_NUM) / s_total.cast("double")
+    est = F.expr(HLL_EST_NUM) / s_total.cast("double")
     return st.select(
-        F.lit(_HLL_M).cast("long").alias("m_registers"),
+        F.lit(HLL_M).cast("long").alias("m_registers"),
         F.col("exact_distinct").cast("long").alias("exact_distinct"),
         F.col("registers_used").cast("long").alias("registers_used"),
         "max_rho",
@@ -6821,7 +6821,7 @@ def _ivfpq_rerank_oracle() -> str:
     the d09 exact-cosine fold, and the final top-3 ranks on the
     exact score."""
     return f"""
-    WITH {_kmeans_chain(2)},
+    WITH {kmeans_chain(2)},
     qasg AS (SELECT vec_id, cid FROM (
               SELECT vec_id, cid,
                      ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -7925,7 +7925,7 @@ _D82_K = 10  # shortlist depth scored for recall (d77's shortlist size)
 @query(
     "d82_ivfpq_recall",
     f"""
-    WITH {_kmeans_chain(2)},
+    WITH {kmeans_chain(2)},
     qasgp AS (SELECT vec_id, cid, rn FROM (
               SELECT vec_id, cid,
                      ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -8172,7 +8172,7 @@ def d83_hard_negative_mining(t):
 @query(
     "d84_cluster_balanced_sampling",
     f"""
-    WITH {_kmeans_chain(2)},
+    WITH {kmeans_chain(2)},
     hist AS (
       SELECT a.cid AS cell_id, {CUR.ORACLE_BUCKET64K} AS bkt, COUNT(*) AS n,
              SUM(CAST(ceil(length(text) / 4.0) AS BIGINT)) AS tokens
@@ -9249,7 +9249,7 @@ def d89_weighted_pagerank_canonical(t):
 # Hashed feature space: first two md5 hex digits of each token -> 256
 # buckets. Add-one smoothing is over the BUCKET universe, so the
 # smoothing constant is the fixed table width, not the corpus vocab.
-_D90_BUCKETS = 256
+D90_BUCKETS = 256
 
 
 def _bitlen(col):
@@ -9262,7 +9262,7 @@ def _bitlen(col):
 # keyword): ends in scored(doc_id, lang, margin). Shared by d90's
 # confusion rollup, d97's threshold calibration, and s23's streaming
 # gate oracle — one derivation, three consumers, zero drift.
-_D90_SCORED_CTES = f"""docs AS (
+D90_SCORED_CTES = f"""docs AS (
       SELECT doc_id, lang, {CUR.ORACLE_BUCKET} AS bucket FROM documents
     ),
     tok AS (
@@ -9292,9 +9292,9 @@ _D90_SCORED_CTES = f"""docs AS (
     ),
     sc AS (
       SELECT t.doc_id, d.lang,
-             length(bin(tt.t_en + {_D90_BUCKETS}))
+             length(bin(tt.t_en + {D90_BUCKETS}))
                - length(bin(COALESCE(m.c_en, 0) + 1)) AS bits_en,
-             length(bin(tt.t_ot + {_D90_BUCKETS}))
+             length(bin(tt.t_ot + {D90_BUCKETS}))
                - length(bin(COALESCE(m.c_ot, 0) + 1)) AS bits_ot
       FROM tok t
       JOIN docs d USING (doc_id)
@@ -9320,7 +9320,7 @@ _D90_SCORED_CTES = f"""docs AS (
 @query(
     "d90_hashed_nb_classifier",
     f"""
-    WITH {_D90_SCORED_CTES}
+    WITH {D90_SCORED_CTES}
     SELECT lang,
            CASE WHEN margin >= 0 THEN 'en' ELSE 'other' END AS predicted,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -9344,7 +9344,7 @@ def d90_hashed_nb_classifier(t):
     the label column for a curated quality seed set changes nothing
     structural.
 
-    Mechanics: tokens hash to {_D90_BUCKETS} buckets (two md5 hex
+    Mechanics: tokens hash to {D90_BUCKETS} buckets (two md5 hex
     digits — engine-portable, the d81 feature map); per class the
     bucket counts ARE the model. A held-out doc's class score is the
     add-one-smoothed NB surprisal, quantized to INTEGER BITS per
@@ -9359,10 +9359,10 @@ def d90_hashed_nb_classifier(t):
     end-to-end on both engines; no transcendental libm calls.
 
     Scale shape: training is ONE map-side-combined groupBy over train
-    tokens into a <= {_D90_BUCKETS}-row model + two scalar aggregates;
+    tokens into a <= {D90_BUCKETS}-row model + two scalar aggregates;
     scoring joins the broadcast model to held-out tokens (hash-local,
     never all-pairs) and folds per doc. At 100 TB the model is still
-    {_D90_BUCKETS} rows — the classifier costs two corpus scans total,
+    {D90_BUCKETS} rows — the classifier costs two corpus scans total,
     and the bucket table bucketing co-locates with d81's importance
     sampler so the two stages share a shuffle."""
     scored = _d90_scored_frame(t)
@@ -9386,7 +9386,7 @@ def _d90_scored_frame(t):
     """The shared NB scoring pipeline: per held-out doc, the integer
     margin = score_other - score_en (>= 0 -> predict 'en'). One
     derivation behind d90's confusion rollup and d97's threshold
-    calibration — the Spark twin of ``_D90_SCORED_CTES``."""
+    calibration — the Spark twin of ``D90_SCORED_CTES``."""
     docs = t.documents.select("doc_id", "lang").withColumn(
         "bucket", F.expr(CUR.SPARK_BUCKET)
     )
@@ -9420,7 +9420,7 @@ def _d90_scored_frame(t):
         docs.filter(F.col("bucket") >= 90).select("doc_id", "lang"),
         "doc_id",
     )
-    b = _D90_BUCKETS
+    b = D90_BUCKETS
     sc = (
         test_tok.join(F.broadcast(model), "b", "left")
         .crossJoin(F.broadcast(tot))
@@ -9455,19 +9455,19 @@ def _d90_scored_frame(t):
 
 # ------------------------------- d91: shard manifest with checksums
 
-_D91_SHARDS = 16
+D91_SHARDS = 16
 
 # Content-addressed shard key (payload md5, not doc_id) and two
 # order-independent sum-checksums: one over the payload, one binding
 # (doc_id, n_chars) so an id remap or metadata drift is caught even
 # when every payload byte survives.
-_D91_SHARD_S = f"({CUR.md5_hex_int('text', 'string', 2)}) % {_D91_SHARDS}"
-_D91_SHARD_O = f"({CUR.md5_hex_int('text', 'varchar', 2)}) % {_D91_SHARDS}"
-_D91_PAY_S = CUR.md5_hex_int("text", "string", 4)
-_D91_PAY_O = CUR.md5_hex_int("text", "varchar", 4)
+D91_SHARD_S = f"({CUR.md5_hex_int('text', 'string', 2)}) % {D91_SHARDS}"
+D91_SHARD_O = f"({CUR.md5_hex_int('text', 'varchar', 2)}) % {D91_SHARDS}"
+D91_PAY_S = CUR.md5_hex_int("text", "string", 4)
+D91_PAY_O = CUR.md5_hex_int("text", "varchar", 4)
 _D91_IDK = "concat(cast(doc_id as string), ':', cast(n_chars as string))"
-_D91_ID_S = CUR.md5_hex_int(_D91_IDK, "string", 4)
-_D91_ID_O = CUR.md5_hex_int(_D91_IDK, "varchar", 4)
+D91_ID_S = CUR.md5_hex_int(_D91_IDK, "string", 4)
+D91_ID_O = CUR.md5_hex_int(_D91_IDK, "varchar", 4)
 
 
 @query(
@@ -9475,9 +9475,9 @@ _D91_ID_O = CUR.md5_hex_int(_D91_IDK, "varchar", 4)
     f"""
     WITH assigned AS (
       SELECT doc_id, lang, n_chars,
-             {_D91_SHARD_O} AS shard,
-             {_D91_PAY_O} AS pay_ck,
-             {_D91_ID_O} AS id_ck
+             {D91_SHARD_O} AS shard,
+             {D91_PAY_O} AS pay_ck,
+             {D91_ID_O} AS id_ck
       FROM documents
     ),
     per_shard AS (
@@ -9507,7 +9507,7 @@ def d91_shard_manifest(t):
     pipeline writes next to each output shard so downstream consumers
     can verify what they read without re-scanning it. Shard assignment
     is content-addressed (two md5 hex digits of the PAYLOAD, mod
-    {_D91_SHARDS}) so the same document lands in the same shard across
+    {D91_SHARDS}) so the same document lands in the same shard across
     engines, re-partitionings, and backfills; two ORDER-INDEPENDENT
     sum-checksums travel with each row — one over the payload md5, one
     binding (doc_id, n_chars) — so a consumer detects payload
@@ -9515,13 +9515,13 @@ def d91_shard_manifest(t):
     sums, and shard-level checksums MERGE by addition into a corpus
     checksum (the mergeability property the sketches family already
     relies on). chars_share is the balance audit: content-addressed
-    assignment keeps shards within sampling noise of 1/{_D91_SHARDS}.
+    assignment keeps shards within sampling noise of 1/{D91_SHARDS}.
 
     Exactness: every checksum is a sum of 16-bit md5-prefix integers
     (int64 headroom up to ~1.4e14 docs per shard); the share is one
     double division of exact longs.
 
-    Scale shape: one corpus scan, one {_D91_SHARDS}-group map-side-
+    Scale shape: one corpus scan, one {D91_SHARDS}-group map-side-
     combined aggregate, one broadcast scalar join — no windows, no
     all-pairs, nothing keyed finer than the shard id. The checksums'
     order-independence is what makes the manifest computable
@@ -9530,9 +9530,9 @@ def d91_shard_manifest(t):
         "doc_id",
         "lang",
         "n_chars",
-        F.expr(_D91_SHARD_S).alias("shard"),
-        F.expr(_D91_PAY_S).alias("pay_ck"),
-        F.expr(_D91_ID_S).alias("id_ck"),
+        F.expr(D91_SHARD_S).alias("shard"),
+        F.expr(D91_PAY_S).alias("pay_ck"),
+        F.expr(D91_ID_S).alias("id_ck"),
     )
     per_shard = assigned.groupBy("shard").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -10215,8 +10215,8 @@ def d94_chunk_retrieval_eval(t):
     f"""
     WITH assigned AS (
       SELECT doc_id, lang, n_chars,
-             {_D91_PAY_O} AS pay_ck,
-             {_D91_ID_O} AS id_ck
+             {D91_PAY_O} AS pay_ck,
+             {D91_ID_O} AS id_ck
       FROM documents
     )
     SELECT lang,
@@ -10268,8 +10268,8 @@ def d95_partitioned_roundtrip_audit(t):
     docs = t.documents
     fp = docs.select(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.expr(_D91_PAY_S)).alias("p"),
-        F.sum(F.expr(_D91_ID_S)).alias("i"),
+        F.sum(F.expr(D91_PAY_S)).alias("p"),
+        F.sum(F.expr(D91_ID_S)).alias("i"),
     ).collect()[0]
     key = f"rt{STORE_VERSION}_n{fp.n}_p{fp.p}_i{fp.i}"
     root = (
@@ -10287,8 +10287,8 @@ def d95_partitioned_roundtrip_audit(t):
             "lang",
             "doc_id",
             "n_chars",
-            F.expr(_D91_PAY_S).alias("pay_ck"),
-            F.expr(_D91_ID_S).alias("id_ck"),
+            F.expr(D91_PAY_S).alias("pay_ck"),
+            F.expr(D91_ID_S).alias("id_ck"),
         )
         .groupBy("lang")
         .agg(
@@ -10444,7 +10444,7 @@ _D97_CUTS = (-8, 0, 8)
 @query(
     "d97_classifier_threshold_calibration",
     f"""
-    WITH {_D90_SCORED_CTES},
+    WITH {D90_SCORED_CTES},
     cuts AS (SELECT unnest(ARRAY{list(_D97_CUTS)}) AS tau)
     SELECT c.tau,
            CAST(SUM(CASE WHEN s.margin >= c.tau AND s.lang = 'en'
@@ -10482,7 +10482,7 @@ def d97_classifier_threshold_calibration(t):
     construction.
 
     Exactness: one shared scoring pipeline (``_d90_scored_frame`` /
-    ``_D90_SCORED_CTES``) feeds d90 and this sweep — the margins are
+    ``D90_SCORED_CTES``) feeds d90 and this sweep — the margins are
     identical by construction, not by re-derivation; counts are int64;
     precision/recall are single double divisions (NULL when a cut
     empties its denominator).
@@ -10697,26 +10697,15 @@ def d99_weighted_neardup_clusters(t):
 
 # --------- d100: incremental near-dup ingest (new batch vs corpus)
 
-_D100_NH, _D100_NB = 8, 4  # the d07 operating point
-
-# d07's chain built twice — incoming survivors ``rem`` (suffix i) and
-# the corpus ``corp`` (suffix c) — then the one-sided band probe and
-# verify into ``ver``(new_doc, corpus_doc, jaccard). Shared with s24.
-_D100_PROBE_CTES = f"""{ND.shingles_sql("rem", suffix="i")},
-    {ND.minhash_sql(_D100_NH, _D100_NB, suffix="i")},
-    {ND.shingles_sql("corp", suffix="c")},
-    {ND.minhash_sql(_D100_NH, _D100_NB, suffix="c")},
-    {ND.verify_probe_sql("i", "c", 0.5)}"""
-
 
 @query(
     "d100_incremental_neardup_ingest",
     f"""
     WITH inc AS (
-      SELECT doc_id, text FROM documents WHERE {CUR.ORACLE_BUCKET} >= 90
+      SELECT doc_id, text FROM documents WHERE {CUR.ORACLE_BUCKET} >= {ND.DELTA_SPLIT}
     ),
     corp AS (
-      SELECT doc_id, text FROM documents WHERE {CUR.ORACLE_BUCKET} < 90
+      SELECT doc_id, text FROM documents WHERE {CUR.ORACLE_BUCKET} < {ND.DELTA_SPLIT}
     ),
     {ND.reps_sql("corp", "cfp")},
     exact AS (
@@ -10727,7 +10716,7 @@ _D100_PROBE_CTES = f"""{ND.shingles_sql("rem", suffix="i")},
       SELECT doc_id, text FROM inc
       WHERE doc_id NOT IN (SELECT doc_id FROM exact)
     ),
-    {_D100_PROBE_CTES},
+    {ND.probe_sql()},
     best AS (
       SELECT new_doc,
              (MAX({{'j': jaccard, 'i': -corpus_doc}})).i * -1 AS match_doc,
@@ -10776,8 +10765,8 @@ def d100_incremental_neardup_ingest(t):
     the md5 bucket."""
     bucket = F.expr(CUR.SPARK_BUCKET)
     docs = t.documents
-    inc = docs.filter(bucket >= 90).select("doc_id", "text")
-    corp = docs.filter(bucket < 90).select("doc_id", "text")
+    inc = docs.filter(bucket >= ND.DELTA_SPLIT).select("doc_id", "text")
+    corp = docs.filter(bucket < ND.DELTA_SPLIT).select("doc_id", "text")
     cfp = ND.collapse_exact(corp, rep="mdoc").select("fp", "mdoc")
     exact = (
         inc.select("doc_id", F.md5("text").alias("fp"))
@@ -10787,12 +10776,12 @@ def d100_incremental_neardup_ingest(t):
     rem = inc.join(exact.select("doc_id"), "doc_id", "left_anti")
     shi = tracked_persist(DD.exploded_shingles(rem).distinct())
     shc = tracked_persist(DD.exploded_shingles(corp).distinct())
-    sigi = DD.minhash_signatures(shi, num_hashes=_D100_NH)
-    sigc = DD.minhash_signatures(shc, num_hashes=_D100_NH)
-    bi = DD.band_key_rows(sigi, num_hashes=_D100_NH, bands=_D100_NB).select(
+    sigi = DD.minhash_signatures(shi, num_hashes=ND.NUM_HASHES)
+    sigc = DD.minhash_signatures(shc, num_hashes=ND.NUM_HASHES)
+    bi = DD.band_key_rows(sigi, num_hashes=ND.NUM_HASHES, bands=ND.BANDS).select(
         F.col("doc_id").alias("new_doc"), "band", "key"
     )
-    bc = DD.band_key_rows(sigc, num_hashes=_D100_NH, bands=_D100_NB).select(
+    bc = DD.band_key_rows(sigc, num_hashes=ND.NUM_HASHES, bands=ND.BANDS).select(
         F.col("doc_id").alias("corpus_doc"), "band", "key"
     )
     cand = bi.join(bc, ["band", "key"]).select("new_doc", "corpus_doc").distinct()
@@ -10842,358 +10831,11 @@ def d100_incremental_neardup_ingest(t):
 
 # --------- d101: incremental cluster maintenance (d99 ∘ d100)
 
-
-def _docs_fingerprint(docs) -> tuple[int, int, int]:
-    """(row count, id checksum, text checksum) — the corpus_fingerprint
-    recipe adapted to documents: the text checksum sums the first 8 md5
-    hex digits of every text as int (order-free integer addition,
-    partition-invariant; 2^32 x 10^7 rows stays far inside int64).
-
-    This is the FALLBACK corpus identity for frames not backed by
-    files (unit-test fixtures): it full-scans the text column, which
-    at 100 TB would dominate the delta-sized merge it keys — the
-    production path is _corpus_manifest_key's metadata-only manifest."""
-    fp = docs.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("doc_id").alias("s"),
-        F.sum(
-            F.conv(F.substring(F.md5("text"), 1, 8), 16, 10).cast("long")
-        ).alias("v"),
-    ).collect()[0]
-    return int(fp["n"]), int(fp["s"]), int(fp["v"])
-
-
-def _corpus_manifest_key(docs) -> str:
-    """Identity of a file-backed corpus WITHOUT scanning its data: an
-    md5 over the backing files' sorted (uri, size, mtime_ns) manifest
-    PLUS the plan identity (similarity.plan_identity — the
-    cross-session-stable canonicalized-plan hash). The plan term
-    (round 12, closing the r11 verdict's store-keying item) keeps a
-    future caller passing a DIFFERENTLY-FILTERED frame over the same
-    files from silently reusing standing cluster state built for
-    another derivation — the same keying standard source_manifest_key
-    holds for the trained centroid/PQ stores. Costs one driver-side
-    listing (no Spark job, no text bytes) — at 100 TB this is catalog
-    metadata, so the warm merge path never touches the corpus just to
-    find its store. A rewritten file (new size or mtime) changes the
-    key and forces a clean rebuild, the standard manifest-cache
-    contract. Falls back to the content fingerprint for frames with no
-    backing files."""
-    import hashlib
-    import os
-    from urllib.parse import unquote, urlparse
-
-    files = sorted(docs.inputFiles())
-    if not files:
-        n, s, v = _docs_fingerprint(docs)
-        return f"n{n}_s{s}_v{v}"
-    h = hashlib.md5()
-    for uri in files:
-        parsed = urlparse(uri)
-        path = unquote(parsed.path) if parsed.scheme else uri
-        try:
-            st = os.stat(path)
-            h.update(f"{uri}|{st.st_size}|{st.st_mtime_ns}\n".encode())
-        except OSError:
-            # remote/unstattable store: the URI itself still names the
-            # immutable object in every warehouse layout we target
-            h.update(f"{uri}|?\n".encode())
-    pid = SIM.plan_identity(docs)
-    if pid is None:
-        n, s, v = _docs_fingerprint(docs)
-        return f"n{n}_s{s}_v{v}"
-    h.update(pid.encode())
-    return "f" + h.hexdigest()[:20]
-
-
-def _neardup_cluster_store(corpus, split: int):
-    """Warehouse path for the standing near-dup cluster state (reps +
-    components + shingle/band tables), keyed by the corpus MANIFEST
-    (metadata-only — no corpus scan) plus the corpus/delta split
-    threshold and the signature geometry — covered by sweep_stores'
-    keep-latest-N via the *_store naming contract."""
-    import pathlib
-
-    key = (
-        f"a{SIM.STORE_VERSION}_{_corpus_manifest_key(corpus)}"
-        f"_p{split}_h{_D100_NH}_b{_D100_NB}"
-    )
-    return (
-        pathlib.Path(__file__).resolve().parents[2]
-        / "spark-warehouse"
-        / "neardup_cluster_store"
-        / key
-    )
-
-
-def _merge_delta_into_clusters(delta, stored_reps, stored_comps, shc, bc):
-    """The incremental d99: merge a crawl delta into the STANDING
-    weighted cluster state without ever re-pairing the corpus with
-    itself — hash-equal to d99 run from scratch on corpus+delta.
-
-    Inputs: the standing state is FOUR stored artifacts —
-    ``stored_reps`` (fp, node, wt, n_tok), ``stored_comps`` (node,
-    component), ``shc`` (node, shingle: the corpus reps' distinct
-    shingles — the shingle_table artifact), and ``bc`` (node, band,
-    key: the corpus band keys). The corpus is never re-scanned, let
-    alone self-joined: warm-path work is sized by the DELTA (its
-    shingles/signatures, a one-sided probe into ``bc``, verify joins
-    into ``shc``) plus the star-edge CC pass over standing
-    components.
-
-    Why this is exact, case by case (all pinned by the d99-parity
-    pytest):
-    - exact dups: a delta fingerprint matching a corpus rep bumps the
-      rep's weight; identical text means identical signatures, so the
-      rep's connectivity is already encoded in the standing
-      components. If the delta brings a SMALLER doc_id, the rep (and
-      every component label it may have anchored) is relabeled via a
-      broadcast rename map — from-scratch reps take min(doc_id) over
-      the full set.
-    - near dups: only NOVEL delta fingerprints are paired — one-sided
-      band probe (delta x corpus, the d100 shape) plus a delta x delta
-      guarded self-join. ALL verified pairs are kept (not d100's best
-      match): a delta doc near TWO standing components is a BRIDGE
-      whose edges must merge them, exactly as from-scratch would.
-    - connectivity: connected components re-runs over (standing
-      membership star edges) ∪ (delta edges) — star edges are
-      already-converged pointer trees, so rounds stay at the log
-      diameter of the NEW merges; no corpus^2 candidate work exists
-      anywhere in the plan.
-    - rollup: d99's weighted_rollup over the merged rep set
-      (bumped weights, relabeled nodes, novel singletons with wt > 1
-      surfacing as components)."""
-    st = _merge_delta_state(
-        delta,
-        {"reps": stored_reps, "comps": stored_comps, "sh": shc, "bands": bc},
-    )
-    return ND.weighted_rollup(st["reps"], st["comps"])
-
-
-def _merge_delta_state(delta, st):
-    """One merge step of the incremental d99, returning the UPDATED
-    standing state (the d101 docstring's case analysis applies
-    verbatim). ``st`` is the four-artifact dict — reps (fp, node, wt,
-    n_tok), comps (node, component), sh (node, shingle), bands (node,
-    band, key). The returned dict has the same shape with renames
-    applied to the shingle/band node keys, so merges CHAIN: state
-    merged batch-by-batch equals one merge of the concatenated delta
-    (the s25 streaming sibling relies on exactly this — each
-    micro-batch's novels join the band/shingle tables the next batch
-    probes, and weight bumps/renames land on reps keyed by fp)."""
-    stored_reps, stored_comps, shc, bc = (
-        st["reps"],
-        st["comps"],
-        st["sh"],
-        st["bands"],
-    )
-    dfp = ND.collapse_exact(delta).select(
-        "fp",
-        F.col("node").alias("d_doc"),
-        "text",
-        F.col("wt").alias("wt_d"),
-    )
-    matched = stored_reps.join(dfp.select("fp", "d_doc", "wt_d"), "fp")
-    # no broadcast hint: the rename map is sized by the DELTA's
-    # exact-dup fingerprints — delta-proportional, not query-bounded —
-    # so AQE picks the strategy (it broadcasts when genuinely small).
-    rename = matched.filter(F.col("d_doc") < F.col("node")).select(
-        F.col("node").alias("_old"), F.col("d_doc").alias("_new")
-    )
-    novel = dfp.join(stored_reps.select("fp"), "fp", "left_anti").select(
-        "fp",
-        F.col("d_doc").alias("node"),
-        "text",
-        F.col("wt_d").alias("wt"),
-        T.token_count("text").alias("n_tok"),
-    )
-    merged_reps = (
-        stored_reps.join(dfp.select("fp", "d_doc", "wt_d"), "fp", "left")
-        .select(
-            "fp",
-            F.least(F.col("node"), F.coalesce("d_doc", "node")).alias("node"),
-            (F.col("wt") + F.coalesce("wt_d", F.lit(0))).alias("wt"),
-            "n_tok",
-        )
-        .union(novel.select("fp", "node", "wt", "n_tok"))
-    )
-
-    def ren(df, col):
-        return (
-            df.join(rename, df[col] == rename["_old"], "left")
-            .withColumn(col, F.coalesce("_new", col))
-            .drop("_old", "_new")
-        )
-
-    # delta shingles over novels only; the corpus side (shc, bc) comes
-    # from the standing store — nothing corpus-sized is recomputed.
-    shn = tracked_persist(
-        DD.exploded_shingles(novel, id_col="node").distinct()
-    )
-    sign = DD.minhash_signatures(shn, id_col="node", num_hashes=_D100_NH)
-    bn = DD.band_key_rows(sign, id_col="node", num_hashes=_D100_NH, bands=_D100_NB)
-    cand_dc = (
-        bn.select(F.col("node").alias("doc_a"), "band", "key")
-        .join(bc.select(F.col("node").alias("doc_b"), "band", "key"), ["band", "key"])
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    # prefilter=True: cand_dc is DELTA-sized while sh_all unions the
-    # FULL corpus shingle artifact — the size-gated §3.2 semi-join
-    # prunes the corpus side to candidate docs before exact_jaccard's
-    # by-node exchanges once the store clears the gate (a plan no-op
-    # at bench scale, where the gate keeps the measured-faster shape).
-    sh_all = shn.union(shc)
-    e_dc = (
-        DD.exact_jaccard(cand_dc, sh_all, id_col="node", prefilter=True)
-        .filter(F.col("jaccard") >= 0.5)
-        .select("doc_a", "doc_b")
-    )
-    e_dd = DD.minhash_lsh_pairs_from_shingles(
-        shn, id_col="node", num_hashes=_D100_NH, jaccard_threshold=0.5
-    ).select("doc_a", "doc_b")
-    # Star edges drop the root self-loops (node == component): they
-    # carry no connectivity — every root of a ≥2-node standing cluster
-    # still appears as the doc_b of its members' edges — and removing
-    # them makes the mirrored edge union DISTINCT by construction, so
-    # CC can skip its full-edge-set dedup aggregate (r15, §2.4):
-    # each unordered pair appears in exactly ONE source (star pairs
-    # corpus×corpus, e_dc pairs novel×corpus, e_dd pairs novel×novel)
-    # and in one orientation, and the rename map is injective over
-    # disjoint id spaces, so no two pairs collide after relabeling.
-    # pairs_unique is performance-only either way — duplicate edges
-    # could not change the labels (see connected_components).
-    star = stored_comps.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias("doc_a"), F.col("component").alias("doc_b")
-    )
-    all_edges = (
-        ren(ren(star, "doc_a"), "doc_b")
-        .union(ren(e_dc, "doc_b"))
-        .union(e_dd)
-    )
-    comps = GR.connected_components(all_edges, pairs_unique=True)
-    return {
-        "reps": merged_reps,
-        "comps": comps.select("node", "component"),
-        "sh": ren(shn.union(shc), "node"),
-        "bands": ren(bn.union(bc), "node"),
-    }
-
-
-_STATE_ARTIFACTS = ("reps", "comps", "sh", "bands")
-
-
-def _state_batch_complete(root, batch_id: int) -> bool:
-    """A published batch state is complete iff all four artifacts carry
-    their _SUCCESS marker (write_store_atomic's commit record)."""
-    import pathlib
-
-    b = pathlib.Path(root) / f"batch={batch_id}"
-    return all((b / a / "_SUCCESS").exists() for a in _STATE_ARTIFACTS)
-
-
-def _state_latest_batch(root) -> int | None:
-    """Highest COMPLETE batch id under ``root`` (None if no complete
-    publish exists — cold start)."""
-    import pathlib
-
-    best = None
-    for d in pathlib.Path(root).glob("batch=*"):
-        try:
-            bid = int(d.name.split("=", 1)[1])
-        except ValueError:
-            continue
-        if _state_batch_complete(root, bid) and (best is None or bid > best):
-            best = bid
-    return best
-
-
-def _state_read(spark, root, batch_id: int) -> dict:
-    import pathlib
-
-    b = pathlib.Path(root) / f"batch={batch_id}"
-    return {
-        a: spark.read.parquet(str(b / a)) for a in _STATE_ARTIFACTS
-    }
-
-
-def _state_publish(state: dict, root, batch_id: int, keep: int = 3) -> None:
-    """Publish the four-artifact cluster state for ``batch_id``
-    atomically (each artifact via write_store_atomic's temp-write +
-    rename + _SUCCESS marker; the batch is COMPLETE only when all four
-    markers exist, which _state_latest_batch requires before resume),
-    then prune to the newest ``keep`` complete batches."""
-    import pathlib
-    import shutil
-
-    b = pathlib.Path(root) / f"batch={batch_id}"
-    for a in _STATE_ARTIFACTS:
-        SIM.write_store_atomic(state[a], b / a)
-    done = sorted(
-        bid
-        for d in pathlib.Path(root).glob("batch=*")
-        for bid in [int(d.name.split("=", 1)[1])]
-        if _state_batch_complete(root, bid)
-    )
-    for bid in done[:-keep]:
-        shutil.rmtree(pathlib.Path(root) / f"batch={bid}", ignore_errors=True)
-
-
-def durable_cluster_merge_sink(store_root):
-    """foreachBatch sink maintaining the standing near-dup cluster
-    state DURABLY — the 100 TB form of s25's localCheckpoint chain
-    (the round-10 scale note's named open item): every micro-batch
-    merges via _merge_delta_state and publishes the four artifacts
-    under ``store_root``/batch=<id>/ through write_store_atomic, so a
-    crash at any point leaves the last COMPLETE batch state readable.
-
-    Exactly-once across restarts is the standard foreachBatch
-    idempotent-write recipe: the stream checkpoint replays any batch
-    whose commit did not land, and the sink SKIPS a replayed batch
-    whose state directory is already complete (its merge is already in
-    the store) — publish-then-crash and crash-then-publish both
-    converge. On restart the sink reloads the latest complete state,
-    so driver memory holds nothing the store does not.
-
-    Here each publish is a full snapshot of the four artifacts
-    (keep-latest-3 pruned); at 100 TB the shingle/band tables are
-    append-dominant (novel rows only) and reps compact periodically —
-    the same artifacts, written incrementally, behind this exact sink
-    signature.
-
-    The initial (corpus) state must already be published by the caller
-    as batch id -1 (``_state_publish(state, root, -1)``) before the
-    stream starts."""
-
-    def sink(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        if _state_batch_complete(store_root, batch_id):
-            return  # replay of a published batch: already merged
-        spark = batch_df.sparkSession
-        prev = _state_latest_batch(store_root)
-        if prev is None:
-            raise ValueError(
-                "durable_cluster_merge_sink: no complete initial state "
-                f"under {store_root} (publish init_state first)"
-            )
-        st = _state_read(spark, store_root, prev)
-        new = _merge_delta_state(batch_df.select("doc_id", "text"), st)
-        # materialize through the durable publish (replaces the
-        # localCheckpoint: the store IS the lineage cut)
-        _state_publish(new, store_root, batch_id)
-
-    return sink
-
-
 from data_engineer_project_spark.queries.catalog import QUERIES as _REGISTRY
 
 # d101's contract IS "hash-equal to d99 from scratch on the full
 # table", so its oracle is d99's oracle verbatim.
 _D101_ORACLE = _REGISTRY["d99_weighted_neardup_clusters"].oracle
-
-# md5(doc_id) bucket (0-99) at which the delta starts: the top decile.
-_D101_SPLIT = 90
 
 
 @query(
@@ -11209,20 +10851,20 @@ def d101_incremental_cluster_merge(t):
     This query maintains the STANDING weighted cluster table: the
     corpus partition's exact-collapse reps and components live in a
     fingerprint-keyed warehouse store (neardup_cluster_store — built
-    once per corpus by d99's machinery, swept by sweep_stores); each
-    run merges the delta partition in via _merge_delta_into_clusters
-    (exact dups bump weights, near dups attach/bridge through
+    once per corpus by ``neardup.cluster_state``, swept by
+    sweep_stores); each run merges the delta partition in via
+    ``neardup.merge_delta`` (exact dups bump weights, near dups attach/bridge through
     one-sided band probes, novels open singletons) and returns the
     full merged cluster table, HASH-EQUAL to d99 run from scratch on
     all documents — the oracle is d99's oracle verbatim, and the
     parity pytest pins Spark-vs-Spark equality too.
 
     Corpus/delta split: md5(doc_id) buckets (d100's convention),
-    delta = the top decile (buckets >= ``_D101_SPLIT``).
+    delta = the top decile (buckets >= ``neardup.DELTA_SPLIT``).
 
     Scale shape: the store holds reps + components + the corpus
     shingle and band-key tables (shingle_table's 100 TB form), and the
-    store KEY is a metadata-only file manifest (_corpus_manifest_key:
+    store KEY is a metadata-only file manifest (``neardup.corpus_key``:
     driver-side listing, zero Spark jobs — the round-10 version paid a
     full corpus-text checksum scan here every warm run), so the warm
     path touches NOTHING corpus-scale except the star-edge CC pass
@@ -11234,43 +10876,11 @@ def d101_incremental_cluster_merge(t):
     rebuild it replaces."""
     bucket = F.expr(CUR.SPARK_BUCKET)
     docs = t.documents
-    corpus = docs.filter(bucket < _D101_SPLIT).select("doc_id", "text")
-    delta = docs.filter(bucket >= _D101_SPLIT).select("doc_id", "text")
-    store = _neardup_cluster_store(corpus, _D101_SPLIT)
-    reps_path, comps_path = store / "reps", store / "comps"
-    spark = docs.sparkSession
-    sh_path, bands_path = store / "shingles", store / "bands"
-    if not all(
-        (p / "_SUCCESS").exists()
-        for p in (reps_path, comps_path, sh_path, bands_path)
-    ):
-        reps = tracked_persist(ND.collapse_exact(corpus))
-        shc_b = tracked_persist(
-            DD.exploded_shingles(
-                reps.select("node", "text"), id_col="node"
-            ).distinct()
-        )
-        pairs = DD.minhash_lsh_pairs_from_shingles(
-            shc_b,
-            id_col="node",
-            num_hashes=_D100_NH,
-            bands=_D100_NB,
-            jaccard_threshold=0.5,
-        ).select("doc_a", "doc_b")
-        comps = GR.connected_components(pairs, pairs_unique=True)
-        sigc = DD.minhash_signatures(shc_b, id_col="node", num_hashes=_D100_NH)
-        SIM.write_store_atomic(
-            reps.select("fp", "node", "wt", T.token_count("text").alias("n_tok")),
-            reps_path,
-        )
-        SIM.write_store_atomic(comps.select("node", "component"), comps_path)
-        SIM.write_store_atomic(shc_b, sh_path)
-        SIM.write_store_atomic(
-            DD.band_key_rows(
-                sigc, id_col="node", num_hashes=_D100_NH, bands=_D100_NB
-            ),
-            bands_path,
-        )
+    corpus = docs.filter(bucket < ND.DELTA_SPLIT).select("doc_id", "text")
+    delta = docs.filter(bucket >= ND.DELTA_SPLIT).select("doc_id", "text")
+    store = ND.state_store(corpus)
+    if not ND.state_complete(store):
+        ND.publish_state(ND.cluster_state(corpus), store)
         SIM.prune_store(store.parent)
     # Store-read fan-out: measured and REJECTED twice. r14 recorded it
     # as inconclusive (after-readings straddled baseline); the r15
@@ -11281,10 +10891,5 @@ def d101_incremental_cluster_merge(t):
     # any scale where the guard fires, and at real split counts the
     # guard is a no-op anyway — so the fan-out can only ever cost.
     # Do not retry without new evidence.
-    return _merge_delta_into_clusters(
-        delta,
-        spark.read.parquet(str(reps_path)),
-        spark.read.parquet(str(comps_path)),
-        spark.read.parquet(str(sh_path)),
-        spark.read.parquet(str(bands_path)),
-    )
+    st = ND.merge_delta(delta, ND.read_state(docs.sparkSession, store))
+    return ND.weighted_rollup(st["reps"], st["comps"])

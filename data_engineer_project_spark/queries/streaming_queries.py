@@ -742,14 +742,14 @@ def s16_stream_curation_front_door(t):
 
 
 from data_engineer_project_spark.queries.llm_pipeline import (  # noqa: E402
-    _kmeans_chain,
+    kmeans_chain,
 )
 
 
 @query(
     "s17_stream_ivf_cell_ingestion",
     f"""
-    WITH {_kmeans_chain(2)}
+    WITH {kmeans_chain(2)}
     SELECT cid,
            CAST(COUNT(*) AS BIGINT) AS n_vecs,
            CAST(SUM(vec_id) AS BIGINT) AS id_checksum
@@ -981,9 +981,9 @@ def s18_stream_media_integrity_gate(t):
 
 
 from data_engineer_project_spark.queries.llm_pipeline import (  # noqa: E402
-    _BLOOM_BITS,
-    _BLOOM_K,
-    _bloom_positions_sql,
+    BLOOM_BITS,
+    BLOOM_K,
+    bloom_positions_sql,
 )
 
 
@@ -997,9 +997,9 @@ def _s19_bloom_words(t) -> list[int]:
     pos_exprs = [
         F.expr(
             f"({CUR.md5_hex_int('text', 'string', 4, prefix=f'bl{j}|')})"
-            f" % {_BLOOM_BITS}"
+            f" % {BLOOM_BITS}"
         )
-        for j in range(_BLOOM_K)
+        for j in range(BLOOM_K)
     ]
     rows = (
         train.select(F.explode(F.array(*pos_exprs)).alias("idx"))
@@ -1011,7 +1011,7 @@ def _s19_bloom_words(t) -> list[int]:
         )
         .collect()
     )
-    words = [0] * (_BLOOM_BITS // 32)
+    words = [0] * (BLOOM_BITS // 32)
     for r in rows:
         words[r["word_idx"]] = r["bits"]
     return words
@@ -1025,7 +1025,7 @@ def _s19_bloom_words(t) -> list[int]:
     ),
     pos AS (
       {" UNION ALL ".join(
-        f"SELECT {p} AS idx FROM train" for p in _bloom_positions_sql("text")
+        f"SELECT {p} AS idx FROM train" for p in bloom_positions_sql("text")
       )}
     ),
     bitset AS (
@@ -1040,7 +1040,7 @@ def _s19_bloom_words(t) -> list[int]:
     probe AS (
       {" UNION ALL ".join(
         f"SELECT doc_id, {p} AS idx FROM test"
-        for p in _bloom_positions_sql("text")
+        for p in bloom_positions_sql("text")
       )}
     ),
     hits AS (
@@ -1053,7 +1053,7 @@ def _s19_bloom_words(t) -> list[int]:
     )
     SELECT t.doc_id, t.lang
     FROM test t JOIN hits h ON h.doc_id = t.doc_id
-    WHERE h.k_set < {_BLOOM_K}
+    WHERE h.k_set < {BLOOM_K}
     """,
     tags=("streaming", "llm", "dedup", "sketch"),
 )
@@ -1085,25 +1085,25 @@ def s19_stream_bloom_gate(t):
     )
     probed = incoming.withColumn("blm", blm)
     cond = None
-    for j in range(_BLOOM_K):
+    for j in range(BLOOM_K):
         bit = F.expr(f"(shiftright(element_at(blm, cast(("
                      f"{CUR.md5_hex_int('text', 'string', 4, prefix=f'bl{j}|')})"
-                     f" % {_BLOOM_BITS} / 32 as int) + 1),"
+                     f" % {BLOOM_BITS} / 32 as int) + 1),"
                      f" ({CUR.md5_hex_int('text', 'string', 4, prefix=f'bl{j}|')})"
-                     f" % {_BLOOM_BITS} % 32) & 1) = 1")
+                     f" % {BLOOM_BITS} % 32) & 1) = 1")
         cond = bit if cond is None else (cond & bit)
     survivors = probed.filter(~cond).select("doc_id", "lang")
     return run_to_memory_table(survivors, "stream_bloom_gate", "append")
 
 
 from data_engineer_project_spark.queries.llm_pipeline import (  # noqa: E402
-    _HLL_EST_NUM,
-    _HLL_M,
-    _hll_fields_sql,
+    HLL_EST_NUM,
+    HLL_M,
+    hll_fields_sql,
 )
 
-_S20_REG_DUCK, _S20_RHO_DUCK = _hll_fields_sql("user_id", "varchar")
-_S20_REG_SPARK, _S20_RHO_SPARK = _hll_fields_sql("user_id", "string")
+_S20_REG_DUCK, _S20_RHO_DUCK = hll_fields_sql("user_id", "varchar")
+_S20_REG_SPARK, _S20_RHO_SPARK = hll_fields_sql("user_id", "string")
 
 
 @query(
@@ -1130,9 +1130,9 @@ _S20_REG_SPARK, _S20_RHO_SPARK = _hll_fields_sql("user_id", "string")
       FROM events GROUP BY 1
     )
     SELECT st.window_start, ex.exact_users, st.registers_used,
-           {_HLL_EST_NUM}
+           {HLL_EST_NUM}
              / CAST(st.s_present
-                    + ({_HLL_M} - st.registers_used)
+                    + ({HLL_M} - st.registers_used)
                       * (CAST(1 AS BIGINT) << 41) AS DOUBLE)
              AS hll_estimate
     FROM st JOIN ex ON ex.window_start = st.window_start
@@ -1187,7 +1187,7 @@ def s20_stream_hourly_distinct_hll(t):
     ).agg(F.countDistinct("user_id").alias("exact_users"))
     s_total = (
         F.col("s_present")
-        + (F.lit(_HLL_M) - F.col("registers_used"))
+        + (F.lit(HLL_M) - F.col("registers_used"))
         * F.expr("shiftleft(cast(1 as bigint), 41)")
     ).cast("double")
     return (
@@ -1196,15 +1196,15 @@ def s20_stream_hourly_distinct_hll(t):
             "window_start",
             F.col("exact_users").cast("long").alias("exact_users"),
             F.col("registers_used").cast("long").alias("registers_used"),
-            (F.expr(_HLL_EST_NUM) / s_total).alias("hll_estimate"),
+            (F.expr(HLL_EST_NUM) / s_total).alias("hll_estimate"),
         )
         .orderBy("window_start")
     )
 
 
 from data_engineer_project_spark.queries.llm_pipeline import (  # noqa: E402
-    _CMS_D,
-    _CMS_W,
+    CMS_D,
+    CMS_W,
 )
 
 
@@ -1213,7 +1213,7 @@ def _s21_cell_sql(j: int, cast_type: str) -> str:
     seeded 'sc{j}|' so the stream sketch decorrelates from d71's."""
     return (
         f"({CUR.md5_hex_int('user_id', cast_type, 4, prefix=f'sc{j}|')})"
-        f" % {_CMS_W}"
+        f" % {CMS_W}"
     )
 
 
@@ -1229,7 +1229,7 @@ def s21_cms_grid(events_df):
                         F.lit(j).alias("row_j"),
                         F.expr(_s21_cell_sql(j, "string")).alias("idx"),
                     )
-                    for j in range(_CMS_D)
+                    for j in range(CMS_D)
                 ]
             )
         ).alias("c")
@@ -1248,7 +1248,7 @@ def s21_cms_grid(events_df):
     cells AS (
       {" UNION ALL ".join(
         f"SELECT {j} AS row_j, {_s21_cell_sql(j, 'varchar')} AS idx FROM ue"
-        for j in range(_CMS_D)
+        for j in range(CMS_D)
       )}
     ),
     cms AS (
@@ -1264,7 +1264,7 @@ def s21_cms_grid(events_df):
       {" UNION ALL ".join(
         f"SELECT user_id, cnt, {j} AS row_j,"
         f" {_s21_cell_sql(j, 'varchar')} AS idx FROM top"
-        for j in range(_CMS_D)
+        for j in range(CMS_D)
       )}
     ),
     est AS (
@@ -1321,7 +1321,7 @@ def s21_stream_countmin_heavy_users(t):
                         F.lit(j).alias("row_j"),
                         F.expr(_s21_cell_sql(j, "string")).alias("idx"),
                     )
-                    for j in range(_CMS_D)
+                    for j in range(CMS_D)
                 ]
             )
         ).alias("c"),
@@ -1342,13 +1342,13 @@ def s21_stream_countmin_heavy_users(t):
 # --------------------- s22: incremental shard manifest at the door
 
 from data_engineer_project_spark.queries.llm_pipeline import (  # noqa: E402
-    _D91_ID_O,
-    _D91_ID_S,
-    _D91_PAY_O,
-    _D91_PAY_S,
-    _D91_SHARD_O,
-    _D91_SHARD_S,
-    _D91_SHARDS,
+    D91_ID_O,
+    D91_ID_S,
+    D91_PAY_O,
+    D91_PAY_S,
+    D91_SHARD_O,
+    D91_SHARD_S,
+    D91_SHARDS,
 )
 
 
@@ -1357,9 +1357,9 @@ from data_engineer_project_spark.queries.llm_pipeline import (  # noqa: E402
     f"""
     WITH assigned AS (
       SELECT doc_id, n_chars,
-             {_D91_SHARD_O} AS shard,
-             {_D91_PAY_O} AS pay_ck,
-             {_D91_ID_O} AS id_ck
+             {D91_SHARD_O} AS shard,
+             {D91_PAY_O} AS pay_ck,
+             {D91_ID_O} AS id_ck
       FROM documents
     )
     SELECT CAST(shard AS BIGINT) AS shard,
@@ -1387,10 +1387,10 @@ def s22_stream_shard_manifest(t):
     derived share/distinct columns, which a consumer computes from the
     manifest itself).
 
-    Scale shape: state is EXACTLY {_D91_SHARDS} rows of six int64
+    Scale shape: state is EXACTLY {D91_SHARDS} rows of six int64
     registers at any corpus size — the sketch-family bound (s19/s20/
     s21) applied to delivery accounting; the only shuffle is the
-    {_D91_SHARDS}-key aggregate. In production the same plan runs
+    {D91_SHARDS}-key aggregate. In production the same plan runs
     unbounded and each trigger publishes the cumulative manifest next
     to the data files.
 
@@ -1401,9 +1401,9 @@ def s22_stream_shard_manifest(t):
     incoming = read_document_stream(t._spark, t._sf_dir).select(
         "doc_id",
         "n_chars",
-        F.expr(_D91_SHARD_S).alias("shard"),
-        F.expr(_D91_PAY_S).alias("pay_ck"),
-        F.expr(_D91_ID_S).alias("id_ck"),
+        F.expr(D91_SHARD_S).alias("shard"),
+        F.expr(D91_PAY_S).alias("pay_ck"),
+        F.expr(D91_ID_S).alias("id_ck"),
     )
     manifest = (
         incoming.groupBy("shard")
@@ -1431,17 +1431,17 @@ def s22_stream_shard_manifest(t):
 # ------------------ s23: NB quality-classifier gate at the door
 
 from data_engineer_project_spark.queries.llm_pipeline import (  # noqa: E402
-    _D90_BUCKETS,
-    _D90_SCORED_CTES,
+    D90_BUCKETS,
+    D90_SCORED_CTES,
 )
 
 
 def _s23_model_literals(t):
     """Train d90's hashed-NB model on the STATIC corpus and bake it
-    into two {_D90_BUCKETS}-entry integer-bits arrays + two scalar
+    into two {D90_BUCKETS}-entry integer-bits arrays + two scalar
     priors — the broadcast-as-literal form a stream can score with
     row-locally (the s19 Bloom-bitset move). Bounded driver collect:
-    <= {_D90_BUCKETS} model rows + two 1-row aggregates."""
+    <= {D90_BUCKETS} model rows + two 1-row aggregates."""
     docs = t.documents.select("doc_id", "lang").withColumn(
         "bucket", F.expr(CUR.SPARK_BUCKET)
     )
@@ -1468,7 +1468,7 @@ def _s23_model_literals(t):
         .agg(F.count(F.lit(1)).alias("n_train"), F.sum(en).alias("n_en"))
         .collect()[0]
     )
-    B = _D90_BUCKETS
+    B = D90_BUCKETS
     bits_en, bits_ot = [], []
     for i in range(B):
         key = format(i, "02x")
@@ -1491,7 +1491,7 @@ def _s23_model_literals(t):
 @query(
     "s23_stream_nb_quality_gate",
     f"""
-    WITH {_D90_SCORED_CTES}
+    WITH {D90_SCORED_CTES}
     SELECT doc_id, lang, CAST(margin AS BIGINT) AS margin,
            CASE WHEN margin >= 0 THEN 'en' ELSE 'other' END AS predicted
     FROM scored ORDER BY doc_id
@@ -1502,7 +1502,7 @@ def s23_stream_nb_quality_gate(t):
     """d90's quality classifier at the INGEST DOOR — the deployment
     shape a trained filter actually runs in: the model is trained
     OFFLINE on the static corpus (one batch pass), baked into two
-    {_D90_BUCKETS}-entry integer-bits array LITERALS plus two scalar
+    {D90_BUCKETS}-entry integer-bits array LITERALS plus two scalar
     priors, and every arriving held-out doc is scored ROW-LOCALLY —
     tokens fold through element_at(<literal array>, md5-bucket + 1)
     inside whole-stage codegen. No join, no state store, no shuffle;
@@ -1554,27 +1554,24 @@ def s23_stream_nb_quality_gate(t):
     return run_to_memory_table(out, "nb_quality_gate", "append")
 
 
-from data_engineer_project_spark.operators.neardup import reps_sql  # noqa: E402
-from data_engineer_project_spark.queries.llm_pipeline import (  # noqa: E402
-    _D100_PROBE_CTES,
-)
+from data_engineer_project_spark.operators import neardup as ND  # noqa: E402
 
 
 @query(
     "s24_stream_neardup_probe",
     f"""
     WITH inc AS (
-      SELECT doc_id, text FROM documents WHERE {CUR.ORACLE_BUCKET} >= 90
+      SELECT doc_id, text FROM documents WHERE {CUR.ORACLE_BUCKET} >= {ND.DELTA_SPLIT}
     ),
     corp AS (
-      SELECT doc_id, text FROM documents WHERE {CUR.ORACLE_BUCKET} < 90
+      SELECT doc_id, text FROM documents WHERE {CUR.ORACLE_BUCKET} < {ND.DELTA_SPLIT}
     ),
-    {reps_sql("corp", "cfp")},
+    {ND.reps_sql("corp", "cfp")},
     rem AS (
       SELECT doc_id, text FROM inc
       WHERE md5(text) NOT IN (SELECT fp FROM cfp)
     ),
-    {_D100_PROBE_CTES}
+    {ND.probe_sql()}
     SELECT new_doc, corpus_doc, jaccard FROM ver
     ORDER BY new_doc, corpus_doc
     """,
@@ -1631,7 +1628,9 @@ def s24_stream_neardup_probe(t):
                 )
             ).alias(f"mh{k}")
 
-        return [mh(k) for k in range(8)]
+        return [mh(k) for k in range(ND.NUM_HASHES)]
+
+    r = ND.NUM_HASHES // ND.BANDS
 
     def band_structs():
         return F.explode(
@@ -1641,17 +1640,17 @@ def s24_stream_neardup_probe(t):
                         F.lit(b).alias("band"),
                         F.md5(
                             F.concat_ws(
-                                "|", F.col(f"mh{2 * b}"), F.col(f"mh{2 * b + 1}")
+                                "|", *[F.col(f"mh{b * r + j}") for j in range(r)]
                             )
                         ).alias("key"),
                     )
-                    for b in range(4)
+                    for b in range(ND.BANDS)
                 ]
             )
         ).alias("bk")
 
     bucket = F.expr(CUR.SPARK_BUCKET)
-    corp = t.documents.filter(bucket < 90).select("doc_id", "text")
+    corp = t.documents.filter(bucket < ND.DELTA_SPLIT).select("doc_id", "text")
     cfp = corp.select(F.md5("text").alias("fp")).distinct()
     csh = corp.select(
         F.col("doc_id").alias("corpus_doc"),
@@ -1669,7 +1668,7 @@ def s24_stream_neardup_probe(t):
     )
     incoming = (
         read_document_stream(t._spark, t._sf_dir)
-        .filter(bucket >= 90)
+        .filter(bucket >= ND.DELTA_SPLIT)
         .withColumn("fp", F.md5("text"))
         .join(cfp, "fp", "left_anti")  # exact tier: s11's door
         .select(
@@ -1724,14 +1723,14 @@ def s25_stream_cluster_maintenance(t):
     standing weighted near-dup cluster state (reps, components, corpus
     shingle + band-key tables) is maintained across micro-batches of
     newly-landed documents — each foreachBatch merges one batch via
-    _merge_delta_state (exact dups bump weights, novels attach through
+    ``neardup.merge_delta`` (exact dups bump weights, novels attach through
     one-sided band probes, bridges merge standing components) and the
     UPDATED state becomes the corpus side the NEXT batch probes. This
     is the end of the streaming dedup arc: s11 gates exact dups at the
     door, s24 emits near-dup verdicts, s25 folds them into the
     standing cluster table a training-data pipeline actually serves.
 
-    Exactness: _merge_delta_state chains — novels join the band and
+    Exactness: ``merge_delta`` chains — novels join the band and
     shingle tables later batches probe, weight bumps/renames land on
     reps keyed by content fingerprint — so state merged batch-by-batch
     equals one merge of the whole delta, which the d101 parity pytest
@@ -1744,7 +1743,7 @@ def s25_stream_cluster_maintenance(t):
     over already-converged star edges plus the batch's attachments, so
     rounds track the log diameter of NEW merges only. State lives in
     localCheckpoint here (test scale); the 100 TB form is
-    ``durable_cluster_merge_sink`` (llm_pipeline.py) — the same four
+    ``neardup.durable_cluster_merge_sink`` — the same four
     artifacts published per batch through write_store_atomic into a
     batch-versioned store, replay-idempotent and restart-resumable,
     pinned by test_durable_cluster_merge_survives_midstream_crash
@@ -1753,45 +1752,13 @@ def s25_stream_cluster_maintenance(t):
     import shutil
     import tempfile
 
-    import data_engineer_project_spark.operators.dedup as DD
-    import data_engineer_project_spark.operators.graph as GR
-    from data_engineer_project_spark.functions import text as T
-    from data_engineer_project_spark.operators import neardup as ND
-    from data_engineer_project_spark.queries.llm_pipeline import (
-        _D100_NB,
-        _D100_NH,
-        _merge_delta_state,
-    )
-
     bucket = F.expr(CUR.SPARK_BUCKET)
     docs = t.documents
-    corpus = docs.filter(bucket < 90).select("doc_id", "text")
-    delta = docs.filter(bucket >= 90).select("doc_id", "text")
-
+    corpus = docs.filter(bucket < ND.DELTA_SPLIT).select("doc_id", "text")
+    delta = docs.filter(bucket >= ND.DELTA_SPLIT).select("doc_id", "text")
     # standing state from the corpus partition (d101's cold path,
     # hermetic in-session here; the production form is its store)
-    reps = tracked_persist(ND.collapse_exact(corpus))
-    shc = tracked_persist(
-        DD.exploded_shingles(reps.select("node", "text"), id_col="node").distinct()
-    )
-    pairs = DD.minhash_lsh_pairs_from_shingles(
-        shc,
-        id_col="node",
-        num_hashes=_D100_NH,
-        bands=_D100_NB,
-        jaccard_threshold=0.5,
-    ).select("doc_a", "doc_b")
-    sigc = DD.minhash_signatures(shc, id_col="node", num_hashes=_D100_NH)
-    state = {
-        "reps": reps.select(
-            "fp", "node", "wt", T.token_count("text").alias("n_tok")
-        ),
-        "comps": GR.connected_components(pairs, pairs_unique=True).select("node", "component"),
-        "sh": shc,
-        "bands": DD.band_key_rows(
-            sigc, id_col="node", num_hashes=_D100_NH, bands=_D100_NB
-        ),
-    }
+    state = ND.cluster_state(corpus)
 
     tmp = tempfile.mkdtemp(prefix="s25_delta_")
     try:
@@ -1808,9 +1775,7 @@ def s25_stream_cluster_maintenance(t):
         def sink(batch_df, _batch_id):
             if batch_df.isEmpty():
                 return
-            new = _merge_delta_state(
-                batch_df.select("doc_id", "text"), holder["st"]
-            )
+            new = ND.merge_delta(batch_df.select("doc_id", "text"), holder["st"])
             # materialize before the batch context closes (and cut
             # the per-batch lineage growth)
             holder["st"] = {

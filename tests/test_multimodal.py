@@ -68,6 +68,31 @@ def test_resize_keeps_every_kth_byte(docs):
         assert r["n_bytes"] == len(bytes(r["media"]))
 
 
+def _null_text_media(spark):
+    """attach_media over one NULL-text doc: a NULL payload."""
+    return attach_media(
+        spark.createDataFrame(
+            [(7, "en", None)], "doc_id BIGINT, lang STRING, text STRING"
+        )
+    )
+
+
+def test_sample_frames_emits_no_frame_for_null_payload(spark):
+    """A NULL payload has no frames, like the decode and audio stages
+    skip it (m03's oracle has no frame row for a NULL-text doc)."""
+    frames = sample_frames(_null_text_media(spark), frame_bytes=256, every=4)
+    assert frames.collect() == []
+
+
+def test_resize_passes_null_payload_through(spark):
+    """A NULL payload stays NULL with NULL height and n_bytes, and the
+    width is still resized — m05's oracle row for a NULL-text doc."""
+    (r,) = resize_media(_null_text_media(spark), keep_every=2).collect()
+    assert r["doc_id"] == 7 and r["lang"] == "en"
+    assert r["media"] is None and r["height"] is None and r["n_bytes"] is None
+    assert r["width"] == max((16 + 7 % 48) // 2, 1)
+
+
 def test_audio_energy_skips_empty_and_null_payloads(spark):
     """Zero-length / NULL media must produce NO row — the SQL oracle's
     per-character unnest emits nothing for a charless doc, and

@@ -100,3 +100,53 @@ def test_collapse_pairs_rollup_match_oracle_sql(spark):
     }
     assert sorted((r.doc_a, r.doc_b) for r in pairs.collect()) == [(1, 2), (2, 3)]
     assert got == {1: (3, 4, 1), 7: (1, 3, 7), 4: (1, 2, 4)}
+
+
+def test_d101_store_rebuilds_missing_artifact_and_reuses_complete(
+    spark, monkeypatch
+):
+    """d101's standing store as a unit. Each artifact is published by an
+    atomic rename, so a crash between two publishes leaves whole
+    artifacts missing: the next run must rebuild the missing one (and
+    only it) and still equal d99 from scratch. A warm run over a
+    complete store rewrites nothing."""
+    import shutil
+
+    from data_engineer_project_spark.operators.cache import release_all
+
+    sf = "/root/testdata/sf0.001"
+    stores = []
+    state_store = ND.state_store
+
+    def recording_state_store(corpus):
+        stores.append(state_store(corpus))
+        return stores[-1]
+
+    monkeypatch.setattr(ND, "state_store", recording_state_store)
+
+    def run(name):
+        rows = sorted(tuple(r) for r in QUERIES[name].fn(spark, sf).collect())
+        release_all()
+        return rows
+
+    def markers(store):
+        return {
+            a: (store / a / "_SUCCESS").stat().st_mtime_ns
+            for a in ND.STATE_ARTIFACTS
+        }
+
+    want = run("d99_weighted_neardup_clusters")
+    run("d101_incremental_cluster_merge")  # primes the store
+    store = stores[-1]
+    assert ND.state_complete(store)
+    kept = {a: t for a, t in markers(store).items() if a != "sh"}
+
+    shutil.rmtree(store / "sh")
+    assert not ND.state_complete(store)
+    assert run("d101_incremental_cluster_merge") == want
+    assert ND.state_complete(store) and stores[-1] == store
+    assert {a: t for a, t in markers(store).items() if a != "sh"} == kept
+
+    before = markers(store)
+    assert run("d101_incremental_cluster_merge") == want
+    assert markers(store) == before and len(want) > 0

@@ -28,7 +28,7 @@ from data_engineer_project_spark.queries import QUERIES
 # Operator families touched by the r14/r15 optimization rounds — their
 # members stay in the default oracle lane until a quiet round passes.
 # The connected-components consumers (d20, d26, d65, d74, d89, d99,
-# d101, m10, m18, s25; d101 and s25 also run _merge_delta_state) stay
+# d101, m10, m18, s25; d101 and s25 also run neardup.merge_delta) stay
 # here while the driver-path CC is new.
 _RECENTLY_TOUCHED = {
     "d13_embedding_near_dup",

@@ -210,18 +210,8 @@ def test_d101_merge_bridges_and_relabels(spark):
     them (requires ALL verified pairs, not a best-match); (2) RELABEL
     — a delta exact-dup with a smaller doc_id becomes the rep and the
     component label, exactly as from-scratch min-id would."""
-    from pyspark.sql import functions as F
-
-    from data_engineer_project_spark.operators import dedup as DD
-    from data_engineer_project_spark.operators import graph as GR
+    from data_engineer_project_spark.operators import neardup as ND
     from data_engineer_project_spark.operators.cache import release_all
-    from data_engineer_project_spark.functions import text as T
-    from data_engineer_project_spark.operators.neardup import (
-        collapse_exact as _collapse_reps,
-    )
-    from data_engineer_project_spark.queries.llm_pipeline import (
-        _merge_delta_into_clusters,
-    )
 
     w = [f"w{i}" for i in range(1, 46)]
     A1 = " ".join(w[0:30])                      # w1..w30
@@ -235,30 +225,12 @@ def test_d101_merge_bridges_and_relabels(spark):
     delta = spark.createDataFrame(
         [(500, D), (50, A2)], "doc_id long, text string"
     )
-    reps = _collapse_reps(corpus)
-    pairs = DD.minhash_lsh_pairs(
-        reps.select(F.col("node").alias("doc_id"), "text"),
-        num_hashes=8, bands=4, jaccard_threshold=0.5,
-    ).select("doc_a", "doc_b")
-    comps = GR.connected_components(pairs)
+    st = ND.cluster_state(corpus)
     # precondition: two standing components {100,200} and {300,400}
-    standing = {r["node"]: r["component"] for r in comps.collect()}
+    standing = {r["node"]: r["component"] for r in st["comps"].collect()}
     assert standing == {100: 100, 200: 100, 300: 300, 400: 300}
-    stored_reps = reps.select(
-        "fp", "node", "wt", T.token_count("text").alias("n_tok")
-    )
-    shc = DD.exploded_shingles(
-        reps.select("node", "text"), id_col="node"
-    ).distinct()
-    bc = DD.band_key_rows(
-        DD.minhash_signatures(shc, id_col="node", num_hashes=8),
-        id_col="node",
-        num_hashes=8,
-        bands=4,
-    )
-    out = _merge_delta_into_clusters(
-        delta, stored_reps, comps.select("node", "component"), shc, bc
-    ).collect()
+    merged = ND.merge_delta(delta, st)
+    out = ND.weighted_rollup(merged["reps"], merged["comps"]).collect()
     release_all()
     assert len(out) == 1  # bridged into ONE cluster
     row = out[0]
@@ -1456,7 +1428,7 @@ def test_tiff_cross_validated_against_jvm_imageio(spark):
 @pytest.mark.slow
 def test_merge_state_chain_is_partition_invariant(spark):
     """The s25 exactness argument, stressed directly: folding
-    _merge_delta_state over ANY partition of the delta, in ANY batch
+    merge_delta over ANY partition of the delta, in ANY batch
     order, must produce the same rollup as d99 run from scratch on
     corpus+delta — exact-dup weight bumps, rename chains across
     batches, novel-vs-novel near-dup bridges, and band-table growth
@@ -1464,21 +1436,14 @@ def test_merge_state_chain_is_partition_invariant(spark):
     import numpy as np
     from pyspark.sql import functions as F
 
-    import data_engineer_project_spark.operators.dedup as DD
-    import data_engineer_project_spark.operators.graph as GR
-    from data_engineer_project_spark.functions import text as T
-    from data_engineer_project_spark.operators.cache import release_all, tracked_persist
+    from data_engineer_project_spark.operators.cache import release_all
     from data_engineer_project_spark.queries import QUERIES
     from data_engineer_project_spark.operators.neardup import (
-        collapse_exact as _collapse_reps,
+        cluster_state,
+        merge_delta,
         weighted_rollup as _cluster_rollup,
     )
     from data_engineer_project_spark.operators.curation import SPARK_BUCKET
-    from data_engineer_project_spark.queries.llm_pipeline import (
-        _D100_NB,
-        _D100_NH,
-        _merge_delta_state,
-    )
 
     sf = "/root/testdata/sf0.001"
     docs = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
@@ -1486,21 +1451,7 @@ def test_merge_state_chain_is_partition_invariant(spark):
     corpus = docs.filter(bucket < 90)
     delta = docs.filter(bucket >= 90).collect()
 
-    reps = tracked_persist(_collapse_reps(corpus))
-    shc = tracked_persist(
-        DD.exploded_shingles(reps.select("node", "text"), id_col="node").distinct()
-    )
-    pairs = DD.minhash_lsh_pairs_from_shingles(
-        shc, id_col="node", num_hashes=_D100_NH, bands=_D100_NB,
-        jaccard_threshold=0.5,
-    ).select("doc_a", "doc_b")
-    sigc = DD.minhash_signatures(shc, id_col="node", num_hashes=_D100_NH)
-    base_state = {
-        "reps": reps.select("fp", "node", "wt", T.token_count("text").alias("n_tok")),
-        "comps": GR.connected_components(pairs).select("node", "component"),
-        "sh": shc,
-        "bands": DD.band_key_rows(sigc, id_col="node", num_hashes=_D100_NH, bands=_D100_NB),
-    }
+    base_state = cluster_state(corpus)
     base_state = {k: v.localCheckpoint(eager=True) for k, v in base_state.items()}
 
     want = [
@@ -1521,7 +1472,7 @@ def test_merge_state_chain_is_partition_invariant(spark):
             batch = spark.createDataFrame(rows, schema)
             st = {
                 k: v.localCheckpoint(eager=True)
-                for k, v in _merge_delta_state(batch, st).items()
+                for k, v in merge_delta(batch, st).items()
             }
         got = [tuple(r) for r in _cluster_rollup(st["reps"], st["comps"]).collect()]
         release_all()

@@ -221,7 +221,7 @@ def test_d101_warm_path_never_scans_corpus_text(spark, monkeypatch):
     the content fingerprint (a full corpus-text checksum scan — the
     round-10 warm path paid it every run just to FIND its store).
     Pinned by poisoning _docs_fingerprint after a priming run."""
-    import data_engineer_project_spark.queries.llm_pipeline as LP
+    import data_engineer_project_spark.operators.neardup as ND
     from data_engineer_project_spark.operators.cache import release_all
     from data_engineer_project_spark.queries import QUERIES
 
@@ -233,7 +233,7 @@ def test_d101_warm_path_never_scans_corpus_text(spark, monkeypatch):
     def _poisoned(docs):
         raise AssertionError("warm d101 path computed the content fingerprint")
 
-    monkeypatch.setattr(LP, "_docs_fingerprint", _poisoned)
+    monkeypatch.setattr(ND, "_docs_fingerprint", _poisoned)
     b = [tuple(r) for r in fn(spark, sf).collect()]
     release_all()
     assert sorted(a) == sorted(b) and len(a) > 0
@@ -241,7 +241,7 @@ def test_d101_warm_path_never_scans_corpus_text(spark, monkeypatch):
     # the key itself is manifest-based (file-backed corpus -> "f" +
     # md5 prefix), and computing it launches no corpus scan at all
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    key = LP._corpus_manifest_key(docs.select("doc_id", "text"))
+    key = ND.corpus_key(docs.select("doc_id", "text"))
     assert key.startswith("f") and len(key) == 21
 
 
@@ -251,22 +251,22 @@ def test_corpus_manifest_key_tracks_file_changes(spark, tmp_path):
     backing files falls back to the content fingerprint."""
     import pandas as pd
 
-    import data_engineer_project_spark.queries.llm_pipeline as LP
+    import data_engineer_project_spark.operators.neardup as ND
 
     p = str(tmp_path / "docs.parquet")
     pd.DataFrame({"doc_id": [1, 2], "text": ["aa", "bb"]}).to_parquet(p)
-    k1 = LP._corpus_manifest_key(spark.read.parquet(p))
-    k2 = LP._corpus_manifest_key(spark.read.parquet(p))
+    k1 = ND.corpus_key(spark.read.parquet(p))
+    k2 = ND.corpus_key(spark.read.parquet(p))
     assert k1 == k2 and k1.startswith("f")
 
     pd.DataFrame({"doc_id": [1, 2, 3], "text": ["aa", "bb", "cc"]}).to_parquet(p)
-    k3 = LP._corpus_manifest_key(spark.read.parquet(p))
+    k3 = ND.corpus_key(spark.read.parquet(p))
     assert k3 != k1
 
     mem = spark.createDataFrame(
         [(1, "aa"), (2, "bb")], "doc_id long, text string"
     )
-    kf = LP._corpus_manifest_key(mem)
+    kf = ND.corpus_key(mem)
     assert kf.startswith("n") and "_s" in kf  # content-fingerprint form
 
 
@@ -282,24 +282,17 @@ def test_durable_cluster_merge_survives_midstream_crash(spark, tmp_path):
     idempotent-write recipe)."""
     from pyspark.sql import functions as F
 
-    import data_engineer_project_spark.operators.dedup as DD
-    import data_engineer_project_spark.operators.graph as GR
-    from data_engineer_project_spark.functions import text as T
-    from data_engineer_project_spark.operators.cache import release_all, tracked_persist
+    from data_engineer_project_spark.operators.cache import release_all
     from data_engineer_project_spark.queries import QUERIES
     from data_engineer_project_spark.operators.neardup import (
-        collapse_exact as _collapse_reps,
+        cluster_state,
+        durable_cluster_merge_sink,
+        latest_batch,
+        publish_state,
+        read_state,
         weighted_rollup as _cluster_rollup,
     )
     from data_engineer_project_spark.operators.curation import SPARK_BUCKET
-    from data_engineer_project_spark.queries.llm_pipeline import (
-        _D100_NB,
-        _D100_NH,
-        _state_latest_batch,
-        _state_publish,
-        _state_read,
-        durable_cluster_merge_sink,
-    )
 
     sf = "/root/testdata/sf0.001"
     docs = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
@@ -308,24 +301,9 @@ def test_durable_cluster_merge_survives_midstream_crash(spark, tmp_path):
     delta = docs.filter(bucket >= 90)
 
     # corpus state (d101's cold path), published as batch -1
-    reps = tracked_persist(_collapse_reps(corpus))
-    shc = tracked_persist(
-        DD.exploded_shingles(reps.select("node", "text"), id_col="node").distinct()
-    )
-    pairs = DD.minhash_lsh_pairs_from_shingles(
-        shc, id_col="node", num_hashes=_D100_NH, bands=_D100_NB,
-        jaccard_threshold=0.5,
-    ).select("doc_a", "doc_b")
-    sigc = DD.minhash_signatures(shc, id_col="node", num_hashes=_D100_NH)
-    state0 = {
-        "reps": reps.select("fp", "node", "wt", T.token_count("text").alias("n_tok")),
-        "comps": GR.connected_components(pairs).select("node", "component"),
-        "sh": shc,
-        "bands": DD.band_key_rows(sigc, id_col="node", num_hashes=_D100_NH, bands=_D100_NB),
-    }
     store = str(tmp_path / "cluster_store")
-    _state_publish(state0, store, -1)
-    assert _state_latest_batch(store) == -1
+    publish_state(cluster_state(corpus), f"{store}/batch=-1")
+    assert latest_batch(store) == -1
 
     landing = str(tmp_path / "landing")
     ckpt = str(tmp_path / "ckpt")
@@ -352,7 +330,7 @@ def test_durable_cluster_merge_survives_midstream_crash(spark, tmp_path):
     )
     with pytest.raises(Exception):
         q.awaitTermination()
-    assert crashed["flag"] and _state_latest_batch(store) == 0
+    assert crashed["flag"] and latest_batch(store) == 0
 
     # restart from the same checkpoint: batch 0 replays (and is
     # skipped — its state dir is complete), batches 1..2 merge fresh
@@ -366,10 +344,10 @@ def test_durable_cluster_merge_survives_midstream_crash(spark, tmp_path):
         .start()
     )
     q2.awaitTermination()
-    last = _state_latest_batch(store)
+    last = latest_batch(store)
     assert last == 2  # three landing files -> batches 0, 1, 2
 
-    st = _state_read(spark, store, last)
+    st = read_state(spark, f"{store}/batch={last}")
     got = sorted(
         tuple(r) for r in _cluster_rollup(st["reps"], st["comps"]).collect()
     )

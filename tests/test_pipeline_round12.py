@@ -8,7 +8,7 @@ hash is NOT stable across JVMs — the standing stores were silently
 session-local. Round 12 replaces it with `plan_identity` (md5 of the
 canonicalized-plan string + schema JSON, measured byte-identical
 across processes) and extends the same keying standard to
-`_corpus_manifest_key` (d101/s25 cluster store) and the skew-guard
+`neardup.corpus_key` (d101/s25 cluster store) and the skew-guard
 PLAIN-verdict cache.
 """
 
@@ -68,7 +68,7 @@ def test_corpus_manifest_key_distinguishes_derivations(spark, tmp_path):
     filtered frame over the same files gets a DIFFERENT standing-store
     key, so it can never silently reuse cluster state built for
     another derivation."""
-    import data_engineer_project_spark.queries.llm_pipeline as LP
+    import data_engineer_project_spark.operators.neardup as ND
 
     p = str(tmp_path / "docs.parquet")
     pd.DataFrame(
@@ -77,12 +77,12 @@ def test_corpus_manifest_key_distinguishes_derivations(spark, tmp_path):
 
     full = spark.read.parquet(p).select("doc_id", "text")
     half = spark.read.parquet(p).filter("doc_id <= 2").select("doc_id", "text")
-    k_full = LP._corpus_manifest_key(full)
-    k_half = LP._corpus_manifest_key(half)
+    k_full = ND.corpus_key(full)
+    k_half = ND.corpus_key(half)
     assert k_full.startswith("f") and k_half.startswith("f")
     assert k_full != k_half
     # reproducible for the same derivation (fresh plan objects)
-    assert k_full == LP._corpus_manifest_key(
+    assert k_full == ND.corpus_key(
         spark.read.parquet(p).select("doc_id", "text")
     )
 

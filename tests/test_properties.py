@@ -638,10 +638,10 @@ def test_hll_rho_register_sql_matches_python_reference():
     import duckdb
 
     from data_engineer_project_spark.queries.llm_pipeline import (
-        _hll_fields_sql,
+        hll_fields_sql,
     )
 
-    reg_sql, rho_sql = _hll_fields_sql("s", "varchar")
+    reg_sql, rho_sql = hll_fields_sql("s", "varchar")
     con = duckdb.connect()
     rng = random.Random(42)
     alphabet = "abc xyz079_-:/é中"

@@ -754,9 +754,9 @@ def test_s22_manifest_multibatch_equals_batch_and_prefix_exact(
     )
     from pyspark.sql import functions as F
     from data_engineer_project_spark.queries.llm_pipeline import (
-        _D91_ID_S,
-        _D91_PAY_S,
-        _D91_SHARD_S,
+        D91_ID_S,
+        D91_PAY_S,
+        D91_SHARD_S,
     )
 
     tbl = pq.read_table("/root/testdata/sf0.001/documents.parquet")
@@ -771,9 +771,9 @@ def test_s22_manifest_multibatch_equals_batch_and_prefix_exact(
     ).select(
         "doc_id",
         "n_chars",
-        F.expr(_D91_SHARD_S).alias("shard"),
-        F.expr(_D91_PAY_S).alias("pay_ck"),
-        F.expr(_D91_ID_S).alias("id_ck"),
+        F.expr(D91_SHARD_S).alias("shard"),
+        F.expr(D91_PAY_S).alias("pay_ck"),
+        F.expr(D91_ID_S).alias("id_ck"),
     )
     manifest = (
         stream.groupBy("shard")
