@@ -394,10 +394,16 @@ def exact_jaccard(
     sh: DataFrame,
     id_col: str = "doc_id",
     prefilter: bool = False,
+    sh_b: DataFrame | None = None,
 ) -> DataFrame:
     """Exact Jaccard per candidate pair, relationally: |A∩B| via a
     shingle equi-join, |A∪B| = |A|+|B|−|A∩B| — just joins, no per-pair
     array materialization on the driver.
+
+    One-sided form: with ``sh_b``, doc_a's shingles come from ``sh``
+    (the new side) and doc_b's from ``sh_b`` (the corpus side), so the
+    two id spaces may overlap (d100's probe); ``prefilter`` prunes
+    ``sh`` only.
 
     ``prefilter=True`` enables the SIZE-GATED candidate-id semi-join
     prefilter (guide §3.2): when the shingle side's estimated source
@@ -423,9 +429,13 @@ def exact_jaccard(
         )
         sh = sh.join(ids, id_col, "left_semi")
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
+    if sh_b is None:
+        sh_b, sizes_b = sh, sizes
+    else:
+        sizes_b = sh_b.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
 
     sa = sh.alias("sa")
-    sb = sh.alias("sb")
+    sb = sh_b.alias("sb")
     inter = (
         cand.join(sa, F.col("doc_a") == F.col(f"sa.{id_col}"))
         .join(
@@ -438,7 +448,7 @@ def exact_jaccard(
     )
 
     za = sizes.alias("za")
-    zb = sizes.alias("zb")
+    zb = sizes_b.alias("zb")
     return (
         inter.join(za, F.col("doc_a") == F.col(f"za.{id_col}"))
         .join(zb, F.col("doc_b") == F.col(f"zb.{id_col}"))

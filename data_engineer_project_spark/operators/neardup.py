@@ -1,10 +1,15 @@
 """The near-dup chain's shared pieces, in both engines.
 
 Spark side: the exact-dup collapse every weighted near-dup query runs
-first (``collapse_exact``) and the weighted cluster rollup it ends with
-(``weighted_rollup``). The middle of the chain — shingles, MinHash
-signatures, band keys, candidates, exact-Jaccard verify — is
-``operators/dedup.py``; connected components is ``operators/graph.py``.
+first (``collapse_exact``), the weighted cluster rollup it ends with
+(``weighted_rollup``), and the pair stages the consumers compose:
+``verified_pairs`` (d07's MinHash pairs at the ``NUM_HASHES``/``BANDS``
+operating point), ``rank_edges`` (the checkpointed edge set PageRank
+and connected components share), ``set_jaccard_pairs`` (guarded
+set-overlap pairs at Jaccard >= 0.5, the media frame and gram sets) and
+``dhash_band_pairs`` (banded dHash pairs within Hamming 3). They are
+built from the kernels in ``operators/dedup.py``; connected components
+is ``operators/graph.py``.
 
 The standing cluster state: the incremental consumers (d101, s25 and
 ``durable_cluster_merge_sink``) keep the corpus's clusters as four
@@ -35,7 +40,7 @@ MinHash) suffix every CTE they define, so one oracle can build the
 chain twice — the incoming batch and the corpus of the one-sided probe
 (``verify_probe_sql``). The inverted-index tier (``informative_sql``,
 ``inverted_pairs_sql``) is the exact-Jaccard alternative to MinHash
-banding.
+banding; ``set_jaccard_sql`` is ``set_jaccard_pairs``' twin.
 
 The values match the Spark stages exactly: shingles are the
 posexplode + lead word n-grams of ``dedup.exploded_shingles``, the
@@ -58,6 +63,7 @@ from data_engineer_project_spark.operators import dedup as DD
 from data_engineer_project_spark.operators import graph as GR
 from data_engineer_project_spark.operators import similarity as SIM
 from data_engineer_project_spark.operators.cache import tracked_persist
+from data_engineer_project_spark.operators.fanout import fanout_small
 
 # ------------------------------------------------------------------ Spark
 
@@ -110,10 +116,118 @@ def weighted_rollup(reps: DataFrame, comps: DataFrame) -> DataFrame:
     )
 
 
-# ----------------------------------------- the standing cluster state
+# ------------------------------------------------------ pair stages
 
 # The d07 operating point: 8 salted-md5 MinHashes in 4 bands of 2.
 NUM_HASHES, BANDS = 8, 4
+
+
+def set_jaccard_pairs(
+    sets: DataFrame, key: str, size_name: str, consumer: str
+) -> DataFrame:
+    """Near-dup pairs by set overlap over a distinct (doc_id, ``key``)
+    set: every doc pair sharing a key (skew-guarded self-join on
+    ``key``, verdicts cached and logged under ``consumer``), |A∩B| as
+    n_common, kept when 2·n_common >= |A∪B| (Jaccard >= 0.5, integer
+    cross-multiplied). Returns (doc_a, doc_b, n_common,
+    n_<size_name>_a, n_<size_name>_b, jaccard) ordered by (doc_a,
+    doc_b); jaccard is one double division of the integer counts.
+    ``sets`` is persisted: the guard's probe, the sizes and both join
+    sides read it."""
+    sets = tracked_persist(sets)
+    sizes = sets.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    inter = (
+        DD.skew_guarded_self_pairs(sets, [key], "doc_id", consumer=consumer)
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    n_a, n_b = f"n_{size_name}_a", f"n_{size_name}_b"
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias(n_a))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias(n_b))
+    union_n = F.col(n_a) + F.col(n_b) - F.col("n_common")
+    return (
+        inter.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .filter(2 * F.col("n_common") >= union_n)
+        .select(
+            "doc_a",
+            "doc_b",
+            "n_common",
+            n_a,
+            n_b,
+            (F.col("n_common").cast("double") / union_n.cast("double")).alias(
+                "jaccard"
+            ),
+        )
+        .orderBy("doc_a", "doc_b")
+    )
+
+
+def dhash_band_pairs(
+    hashes: DataFrame, id_col: str, carry: tuple[str, ...], consumer: str
+) -> DataFrame:
+    """Pairs (doc_a < doc_b) of ``hashes`` rows whose 64-bit dHash
+    ``phash`` differ in at most 3 bits. Candidates come from the
+    skew-guarded self-join on the four 16-bit bands (bit 63 rides the
+    sign; shift-then-mask gives the logical band value), which cannot
+    miss a radius-3 pair: its ≤3 differing bits leave one band equal.
+    The guard salts a degenerate band value (the all-zero band of
+    blank-ish images) into ≤cap² cells instead of one quadratic task.
+    ``phash`` and the ``carry`` columns come back from both sides as
+    ``{c}_a``/``{c}_b``; a pair sharing several bands appears once per
+    shared band."""
+    band = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(bi).alias("bi"),
+                    F.shiftright("phash", 16 * bi).bitwiseAND(F.lit(65535)).alias("bk"),
+                )
+                for bi in range(4)
+            ]
+        )
+    )
+    bands = hashes.select(id_col, "phash", *carry, band.alias("band")).select(
+        id_col, "phash", *carry, "band.bi", "band.bk"
+    )
+    return DD.skew_guarded_self_pairs(
+        bands, ["bi", "bk"], id_col, carry=("phash", *carry), consumer=consumer
+    ).filter(F.bit_count(F.col("phash_a").bitwiseXOR(F.col("phash_b"))) <= 3)
+
+
+def verified_pairs(docs: DataFrame) -> DataFrame:
+    """d07's verified near-dup pairs (doc_a, doc_b, jaccard) over
+    ``docs`` (doc_id, text): MinHash at the ``NUM_HASHES``/``BANDS``
+    operating point, exact Jaccard >= 0.5, over the fan-out guarded
+    scan."""
+    return DD.minhash_lsh_pairs(
+        fanout_small(docs),
+        num_hashes=NUM_HASHES,
+        bands=BANDS,
+        jaccard_threshold=0.5,
+    )
+
+
+def rank_edges(pairs: DataFrame) -> DataFrame:
+    """The persisted undirected edge set (e_src, e_dst) of verified
+    ``pairs`` (doc_a < doc_b), hash-partitioned by e_src, that the
+    PageRank rounds and connected components share (d74, d89): each
+    round's edge join reuses the partitioning, so only the node-sized
+    rank table shuffles per round. The pairs are localCheckpointed
+    first, not persisted: every round re-references them, and a
+    persist leaves the full LSH and verify lineage in each consumer's
+    plan (d89's composed rollup plan printed 4.1 MB and was re-planned
+    per job). Verified pairs are unique with doc_a < doc_b, so the
+    mirrored union is distinct (the CC contract)."""
+    p = pairs.select("doc_a", "doc_b").localCheckpoint()
+    return tracked_persist(
+        p.selectExpr("doc_a AS e_src", "doc_b AS e_dst")
+        .union(p.selectExpr("doc_b AS e_src", "doc_a AS e_dst"))
+        .repartition(F.col("e_src"))
+    )
+
+
+# ----------------------------------------- the standing cluster state
 
 # md5(doc_id) bucket (0-99, ``curation.SPARK_BUCKET``) at which the
 # crawl delta starts: the top decile is the delta, the rest the corpus.
@@ -327,12 +441,7 @@ def state_store(corpus: DataFrame) -> pathlib.Path:
         f"a{STATE_VERSION}_{corpus_key(corpus)}"
         f"_p{DELTA_SPLIT}_h{NUM_HASHES}_b{BANDS}"
     )
-    return (
-        pathlib.Path(__file__).resolve().parents[2]
-        / "spark-warehouse"
-        / "neardup_cluster_store"
-        / key
-    )
+    return SIM.WAREHOUSE / "neardup_cluster_store" / key
 
 
 def state_complete(root) -> bool:
@@ -522,6 +631,31 @@ def inverted_pairs_sql(max_df: int = 50) -> str:
       ) i
       JOIN sizes za ON za.doc_id = i.doc_a
       JOIN sizes zb ON zb.doc_id = i.doc_b
+    )"""
+
+
+def set_jaccard_sql(sets: str, key: str, size_name: str) -> str:
+    """``set_jaccard_pairs`` over the distinct relation ``sets``(doc_id,
+    ``key``): ``sizes``(doc_id, n), ``inter``(doc_a, doc_b, n_common)
+    and ``sj``(doc_a, doc_b, n_common, n_<size_name>_a,
+    n_<size_name>_b, jaccard), the pairs with 2·n_common >= |A∪B|.
+    Unordered; the oracle ends ``SELECT * FROM sj ORDER BY doc_a,
+    doc_b``."""
+    return f"""sizes AS (SELECT doc_id, COUNT(*) AS n FROM {sets} GROUP BY doc_id),
+    inter AS (
+      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
+      FROM {sets} a JOIN {sets} b ON a.{key} = b.{key} AND a.doc_id < b.doc_id
+      GROUP BY 1, 2
+    ),
+    sj AS (
+      SELECT i.doc_a, i.doc_b, i.n_common,
+             za.n AS n_{size_name}_a, zb.n AS n_{size_name}_b,
+             CAST(i.n_common AS DOUBLE)
+               / CAST(za.n + zb.n - i.n_common AS DOUBLE) AS jaccard
+      FROM inter i
+      JOIN sizes za ON za.doc_id = i.doc_a
+      JOIN sizes zb ON zb.doc_id = i.doc_b
+      WHERE 2 * i.n_common >= za.n + zb.n - i.n_common
     )"""
 
 

@@ -35,7 +35,7 @@ in FLOAT and does NOT match — deliberately avoided.)
 
 from __future__ import annotations
 
-import threading
+import pathlib
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -521,14 +521,9 @@ def kmeans_centroids(
 # previous algorithm under the same corpus fingerprint.
 STORE_VERSION = 2
 
-# plan_identity mutates the SESSION-GLOBAL spark.sql.debug.maxToStringFields
-# for the set/render/restore window; a concurrent renderer (second
-# plan_identity call, or any driver thread printing plans) could otherwise
-# observe the conf restored mid-render and emit a truncated canonicalized
-# string — the exact key-collision bug the raise exists to prevent. The
-# lock serializes the whole window process-wide (it is driver-side only
-# and renders in microseconds, so contention is negligible).
-_PLAN_RENDER_LOCK = threading.Lock()
+# Root of every trained-artifact and state store (the repo's
+# ``spark-warehouse/``, beside the package).
+WAREHOUSE = pathlib.Path(__file__).resolve().parents[2] / "spark-warehouse"
 
 
 def corpus_fingerprint(
@@ -592,37 +587,18 @@ def plan_identity(df: DataFrame) -> str | None:
     maxFields, printOperatorId=false, printOutputColumns=false)`` is
     measured byte-identical to the conf-raised ``toString()`` from the
     main AND worker threads, so existing store keys are unchanged; it
-    mutates nothing, so no lock is needed. ``_PLAN_RENDER_LOCK``
-    guards the conf-mutation fallback kept for JVM builds without the
-    5-arg signature."""
+    mutates nothing, so no lock is needed. A JVM without that
+    signature gets None (callers then key by content fingerprint):
+    the conf-raised render it replaced truncates on worker threads."""
     import hashlib
 
     try:
-        canon_node = df._jdf.queryExecution().analyzed().canonicalized()
-        try:
-            canon = canon_node.treeString(True, False, 1000000, False, False)
-        except Exception:
-            # older/newer treeString signature: fall back to the r12
-            # conf-raised render, serialized so a concurrent caller
-            # can't restore the conf mid-render
-            conf = df.sparkSession.conf
-            key = "spark.sql.debug.maxToStringFields"
-            with _PLAN_RENDER_LOCK:
-                try:
-                    prev = conf.get(key)
-                except Exception:
-                    prev = None
-                conf.set(key, "1000000")
-                try:
-                    canon = canon_node.toString()
-                finally:
-                    try:
-                        if prev is None:
-                            conf.unset(key)
-                        else:
-                            conf.set(key, prev)
-                    except Exception:
-                        pass
+        canon = (
+            df._jdf.queryExecution()
+            .analyzed()
+            .canonicalized()
+            .treeString(True, False, 1000000, False, False)
+        )
         return hashlib.md5(
             canon.encode() + b"\x00" + df.schema.json().encode()
         ).hexdigest()[:20]
@@ -765,15 +741,10 @@ def sweep_stores(spark=None, warehouse=None, keep: int = 8) -> None:
     session start so artifact growth is bounded per FAMILY, not per
     process lifetime. At cluster scale the same contract is a
     catalog-managed retention policy, not a directory walk."""
-    import pathlib
     import shutil
     import time
 
-    root = (
-        pathlib.Path(warehouse)
-        if warehouse
-        else pathlib.Path(__file__).resolve().parents[2] / "spark-warehouse"
-    )
+    root = pathlib.Path(warehouse) if warehouse else WAREHOUSE
     if not root.is_dir():
         return
     shingle_dirs = []
@@ -829,7 +800,6 @@ def prune_store(root, keep: int = 8) -> None:
     9th new corpus's training remain a documented single-session
     assumption — the production form is a catalog-managed table with
     retention, not a directory sweep."""
-    import pathlib
     import shutil
     import time
 
@@ -873,8 +843,6 @@ def materialized_centroids(
     pipeline maintains (refreshed by the nightly training job); this
     helper is that contract in miniature.
     """
-    import pathlib
-
     spark = corpus.sparkSession
     # Store identity (round 11, the d101 store-keying fix applied to
     # the centroid store): prefer the METADATA-ONLY manifest + plan
@@ -895,11 +863,7 @@ def materialized_centroids(
     if n_centroids is None:
         n_centroids = adaptive_centroids(n)
     key = f"a{STORE_VERSION}_{ident}_c{n_centroids}_i{iters}"
-    root = (
-        pathlib.Path(__file__).resolve().parents[2]
-        / "spark-warehouse"
-        / "centroid_store"
-    )
+    root = WAREHOUSE / "centroid_store"
     store = root / key
     if not (store / "_SUCCESS").exists():
         write_store_atomic(

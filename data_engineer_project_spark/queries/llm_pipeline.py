@@ -236,9 +236,7 @@ def d07_dedup_minhash_lsh(t):
     north-star dedup): shingle → salted-md5 signature → band buckets →
     candidate equi-join → relational Jaccard ≥ 0.5. No all-pairs step
     anywhere, so the plan survives corpus-scale fan-out."""
-    return DD.minhash_lsh_pairs(
-        fanout_small(t.documents), num_hashes=8, bands=4, jaccard_threshold=0.5
-    )
+    return ND.verified_pairs(t.documents)
 
 
 def _simhash_oracle(max_hamming: int = 3, bucket_bits: int = 8) -> str:
@@ -1135,9 +1133,7 @@ def d20_dedup_clusters(t):
     the end of the dedup pipeline — what a curation job actually keeps.
     The oracle replays the propagation as a recursive CTE to fixpoint;
     both sides compute the same exact min-label result."""
-    pairs = DD.minhash_lsh_pairs(
-        fanout_small(t.documents), num_hashes=8, bands=4, jaccard_threshold=0.5
-    )
+    pairs = ND.verified_pairs(t.documents)
     comps = GR.connected_components(pairs, pairs_unique=True)
     return comps.groupBy("component").agg(
         F.count(F.lit(1)).alias("cluster_size"),
@@ -1378,9 +1374,7 @@ def d26_quality_survivor(t):
     from the tiny component labels back to documents, then a window
     argmax partitioned by component — no new shuffle surface beyond
     d20's."""
-    pairs = DD.minhash_lsh_pairs(
-        fanout_small(t.documents), num_hashes=8, bands=4, jaccard_threshold=0.5
-    )
+    pairs = ND.verified_pairs(t.documents)
     comps = GR.connected_components(pairs, pairs_unique=True)
     scored = comps.join(
         t.documents.select(
@@ -3831,8 +3825,6 @@ def _pq_codebook_store(emb):
     the PQ config — training is an OFFLINE job; repeated d57/d58/d77
     invocations should read the few-KB artifact, not re-run the
     subspace k-means (the s17 lesson, applied to the PQ layer)."""
-    import pathlib
-
     mk = SIM.source_manifest_key(emb)
     if mk is not None:
         ident = mk
@@ -3840,12 +3832,7 @@ def _pq_codebook_store(emb):
         n, s, v = SIM.corpus_fingerprint(emb)
         ident = f"n{n}_s{s}_v{v}"
     key = f"a{SIM.STORE_VERSION}_{ident}_m{_PQ_M}_k{_PQ_K}_i2"
-    return (
-        pathlib.Path(__file__).resolve().parents[2]
-        / "spark-warehouse"
-        / "pq_codebook_store"
-        / key
-    )
+    return SIM.WAREHOUSE / "pq_codebook_store" / key
 
 
 def _pq_train(emb):
@@ -4965,9 +4952,7 @@ def d65_neardup_doc_clusters(t):
     is the diagnostic tier; the PRODUCTION default is
     d99_weighted_neardup_clusters (exact-dup collapse first, measured
     flat at 100× duplication)."""
-    pairs = DD.minhash_lsh_pairs(
-        fanout_small(t.documents), num_hashes=8, bands=4, jaccard_threshold=0.5
-    ).select("doc_a", "doc_b")
+    pairs = ND.verified_pairs(t.documents).select("doc_a", "doc_b")
     comps = GR.connected_components(pairs, pairs_unique=True)
     toks = t.documents.select(
         "doc_id", T.token_count("text").cast("long").alias("n_tokens")
@@ -6431,19 +6416,7 @@ def d74_pagerank_canonical_doc(t):
     (exact-dup collapse first, measured at 100x). No driver state at
     all — the loop is fully relational, executed once at the final
     action."""
-    # Same r14 layout as d89 (the production twin): checkpoint the
-    # verified pair set (truncates the LSH lineage out of every
-    # downstream plan), build ONE e_src-partitioned undirected edge
-    # set, and share it between the PR rounds and CC — per round only
-    # the node-sized rank table shuffles (guide §2.4).
-    pairs = DD.minhash_lsh_pairs(
-        fanout_small(t.documents), num_hashes=8, bands=4, jaccard_threshold=0.5
-    ).select("doc_a", "doc_b").localCheckpoint()
-    edges = tracked_persist(
-        pairs.selectExpr("doc_a AS e_src", "doc_b AS e_dst")
-        .union(pairs.selectExpr("doc_b AS e_src", "doc_a AS e_dst"))
-        .repartition(F.col("e_src"))
-    )
+    edges = ND.rank_edges(ND.verified_pairs(t.documents))
     deg = edges.groupBy("e_src").agg(F.count(F.lit(1)).alias("deg"))
     ranks = (
         edges.select(F.col("e_src").alias("node"))
@@ -9179,28 +9152,10 @@ def d89_weighted_pagerank_canonical(t):
     reps = tracked_persist(
         ND.collapse_exact(t.documents, rep="doc_id").select("doc_id", "text", "wt")
     )
-    # localCheckpoint, not persist (r14, guide §3.3/§2.4): the verified
-    # pair set is consumed by BOTH PageRank edge building and CC, and
-    # every downstream round re-references it — a persist leaves the
-    # full LSH+verify lineage in every consumer's plan (the composed
-    # rollup plan printed 4.1 MB and re-planned per job); the eager
-    # checkpoint truncates it to a leaf. The pair materialization
-    # itself moves here from CC's first action — same work, done once.
-    pairs = DD.minhash_lsh_pairs(
-        reps, num_hashes=8, bands=4, jaccard_threshold=0.5
-    ).select("doc_a", "doc_b").localCheckpoint()
-    # ONE undirected edge set, hash-partitioned by e_src and shared by
-    # the PR rounds AND connected components (guide §2.4: two
-    # operations keyed the same way share one exchange): each rank
-    # round's edge join reuses this partitioning, so only the
-    # node-sized rank table shuffles per round — previously the edge
-    # set itself was re-exchanged inside every round. Pairs are
-    # verified-unique with doc_a < doc_b, so the mirrored union is
-    # distinct by construction (the CC contract).
-    edges = tracked_persist(
-        pairs.selectExpr("doc_a AS e_src", "doc_b AS e_dst")
-        .union(pairs.selectExpr("doc_b AS e_src", "doc_a AS e_dst"))
-        .repartition(F.col("e_src"))
+    edges = ND.rank_edges(
+        DD.minhash_lsh_pairs(
+            reps, num_hashes=ND.NUM_HASHES, bands=ND.BANDS, jaccard_threshold=0.5
+        )
     )
     deg = edges.groupBy("e_src").agg(F.count(F.lit(1)).alias("deg"))
     nw = reps.select(F.col("doc_id").alias("node"), "wt")
@@ -10257,30 +10212,18 @@ def d95_partitioned_roundtrip_audit(t):
     Scale shape: one write (shuffle-free — partitionBy splits files
     within each task), one read, one lang-keyed fold. The bounded
     driver collect is the 1-row fingerprint aggregate."""
-    import pathlib
-
-    from data_engineer_project_spark.operators.similarity import (
-        STORE_VERSION,
-        prune_store,
-        write_store_atomic,
-    )
-
     docs = t.documents
     fp = docs.select(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.expr(D91_PAY_S)).alias("p"),
         F.sum(F.expr(D91_ID_S)).alias("i"),
     ).collect()[0]
-    key = f"rt{STORE_VERSION}_n{fp.n}_p{fp.p}_i{fp.i}"
-    root = (
-        pathlib.Path(__file__).resolve().parents[2]
-        / "spark-warehouse"
-        / "roundtrip_store"
-    )
+    key = f"rt{SIM.STORE_VERSION}_n{fp.n}_p{fp.p}_i{fp.i}"
+    root = SIM.WAREHOUSE / "roundtrip_store"
     store = root / key
     if not (store / "_SUCCESS").exists():
-        write_store_atomic(docs, store, partition_by=["lang"])
-        prune_store(root)
+        SIM.write_store_atomic(docs, store, partition_by=["lang"])
+        SIM.prune_store(root)
     back = docs.sparkSession.read.parquet(str(store))
     return (
         back.select(
@@ -10684,7 +10627,7 @@ def d99_weighted_neardup_clusters(t):
         ND.collapse_exact(t.documents, rep="doc_id").select("doc_id", "text", "wt")
     )
     pairs = DD.minhash_lsh_pairs(
-        reps, num_hashes=8, bands=4, jaccard_threshold=0.5
+        reps, num_hashes=ND.NUM_HASHES, bands=ND.BANDS, jaccard_threshold=0.5
     ).select("doc_a", "doc_b")
     comps = GR.connected_components(pairs, pairs_unique=True)
     tk = reps.select(
@@ -10779,40 +10722,23 @@ def d100_incremental_neardup_ingest(t):
     sigi = DD.minhash_signatures(shi, num_hashes=ND.NUM_HASHES)
     sigc = DD.minhash_signatures(shc, num_hashes=ND.NUM_HASHES)
     bi = DD.band_key_rows(sigi, num_hashes=ND.NUM_HASHES, bands=ND.BANDS).select(
-        F.col("doc_id").alias("new_doc"), "band", "key"
+        F.col("doc_id").alias("doc_a"), "band", "key"
     )
     bc = DD.band_key_rows(sigc, num_hashes=ND.NUM_HASHES, bands=ND.BANDS).select(
-        F.col("doc_id").alias("corpus_doc"), "band", "key"
+        F.col("doc_id").alias("doc_b"), "band", "key"
     )
-    cand = bi.join(bc, ["band", "key"]).select("new_doc", "corpus_doc").distinct()
-    szi = shi.groupBy("doc_id").agg(F.count(F.lit(1)).alias("na"))
-    szc = shc.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nb"))
-    sa = shi.select(F.col("doc_id").alias("new_doc"), "shingle")
-    sb = shc.select(F.col("doc_id").alias("corpus_doc"), "shingle")
-    inter = (
-        cand.join(sa, "new_doc")
-        .join(sb, ["corpus_doc", "shingle"])
-        .groupBy("new_doc", "corpus_doc")
-        .agg(F.count(F.lit(1)).alias("ni"))
-    )
-    j = F.col("ni").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("ni")
-    ).cast("double")
-    ver = (
-        inter.join(szi.withColumnRenamed("doc_id", "new_doc"), "new_doc")
-        .join(szc.withColumnRenamed("doc_id", "corpus_doc"), "corpus_doc")
-        .select("new_doc", "corpus_doc", j.alias("j"))
-        .filter(F.col("j") >= 0.5)
-    )
+    # doc_a is the incoming doc, doc_b its corpus candidate
+    cand = bi.join(bc, ["band", "key"]).select("doc_a", "doc_b").distinct()
+    ver = DD.exact_jaccard(cand, shi, sh_b=shc).filter(F.col("jaccard") >= 0.5)
     pick = F.max(
-        F.struct(F.col("j").alias("j"), (-F.col("corpus_doc")).alias("i"))
+        F.struct(F.col("jaccard").alias("j"), (-F.col("doc_b")).alias("i"))
     )
-    best = ver.groupBy("new_doc").agg(
+    best = ver.groupBy("doc_a").agg(
         (pick["i"] * -1).alias("match_doc"), pick["j"].alias("jaccard")
     )
     return (
         inc.join(exact, "doc_id", "left")
-        .join(best.withColumnRenamed("new_doc", "doc_id"), "doc_id", "left")
+        .join(best.withColumnRenamed("doc_a", "doc_id"), "doc_id", "left")
         .select(
             "doc_id",
             F.when(F.col("mdoc").isNotNull(), F.lit("exact_dup"))

@@ -32,6 +32,7 @@ from data_engineer_project_spark.operators.multimodal import (
     attach_real_media,
     byte_histogram,
     decode_media,
+    frame_byte_sums,
     resize_media,
     sample_frames,
 )
@@ -39,7 +40,10 @@ from data_engineer_project_spark.operators.cache import tracked_persist
 from data_engineer_project_spark.operators.neardup import (
     collapse_exact,
     components_sql,
+    dhash_band_pairs,
     reps_sql,
+    set_jaccard_pairs,
+    set_jaccard_sql,
 )
 from data_engineer_project_spark.queries.catalog import query
 
@@ -306,8 +310,6 @@ def m08_scene_cut_detection(t):
     per-doc frame counts are bounded by payload size, so no unbounded
     window key; the rollup is a map-side-partial groupBy on doc_id.
     All comparisons exact int64."""
-    from data_engineer_project_spark.operators.multimodal import frame_byte_sums
-
     frames = sample_frames(_media(t), frame_bytes=_CUT_FRAME_BYTES, every=1)
     fs = frame_byte_sums(frames)
     w = Window.partitionBy("doc_id").orderBy("frame_no")
@@ -397,8 +399,6 @@ def m09_audio_activity_segments(t):
     shuffle); both windows partition by doc — per-doc window counts
     are payload-bounded, never corpus-bounded; the rollups are
     map-side-partial groupBys. All comparisons exact int64."""
-    from data_engineer_project_spark.operators.multimodal import frame_byte_sums
-
     frames = sample_frames(_media(t), frame_bytes=_VAD_WINDOW_BYTES, every=1)
     fs = frame_byte_sums(frames)
     act = fs.filter(F.col("frame_sum") > _VAD_THRESHOLD)
@@ -548,40 +548,8 @@ def m10_image_neardup_clusters(t):
             F.count(F.lit(1)).alias("n_docs"),
         )
     )
-    bands = hg.select(
-        "rep",
-        "phash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("bi"),
-                        F.shiftright("phash", 16 * bi)
-                        .bitwiseAND(F.lit(65535))
-                        .alias("bk"),
-                    )
-                    for bi in range(4)
-                ]
-            )
-        ).alias("band"),
-    ).select("rep", "phash", "band.bi", "band.bk")
-    # skew-guarded band self-join: a degenerate band value (all-zero
-    # dHash band from blank-ish images) would otherwise concentrate
-    # the candidate join in one quadratic task even though aggregate
-    # volume is linear — hot buckets are salted into ≤cap² cells with
-    # the pair set unchanged (operators/dedup.py skew_guarded_self_pairs)
-    from data_engineer_project_spark.operators.dedup import (
-        skew_guarded_self_pairs,
-    )
-
     pairs = (
-        skew_guarded_self_pairs(
-            bands, ["bi", "bk"], "rep", carry=("phash",),
-            consumer="m10_dhash_bands",
-        )
-        .filter(
-            F.bit_count(F.col("phash_a").bitwiseXOR(F.col("phash_b"))) <= 3
-        )
+        dhash_band_pairs(hg, "rep", (), "m10_dhash_bands")
         .select("doc_a", "doc_b")
         .distinct()
     )
@@ -619,22 +587,8 @@ def m10_image_neardup_clusters(t):
       FROM bytes GROUP BY 1, 2
     ),
     fp AS (SELECT DISTINCT doc_id, ws * 65 + flen AS fp FROM fr),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM fp GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-      FROM fp a JOIN fp b ON a.fp = b.fp AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
-    SELECT i.doc_a, i.doc_b, CAST(i.n_common AS BIGINT) AS n_common,
-           CAST(sa.n AS BIGINT) AS n_frames_a,
-           CAST(sb.n AS BIGINT) AS n_frames_b,
-           CAST(i.n_common AS DOUBLE)
-             / CAST(sa.n + sb.n - i.n_common AS DOUBLE) AS jaccard
-    FROM inter i
-    JOIN sizes sa ON sa.doc_id = i.doc_a
-    JOIN sizes sb ON sb.doc_id = i.doc_b
-    WHERE 2 * i.n_common >= sa.n + sb.n - i.n_common
-    ORDER BY i.doc_a, i.doc_b
+    {set_jaccard_sql("fp", "fp", "frames")}
+    SELECT * FROM sj ORDER BY doc_a, doc_b
     """,
     tags=("multimodal", "dedup", "video"),
 )
@@ -659,44 +613,11 @@ def m11_video_neardup_pairs(t):
         frame_fingerprints,
     )
 
-    from data_engineer_project_spark.operators.dedup import (
-        skew_guarded_self_pairs,
-    )
-
-    fp = tracked_persist(frame_fingerprints(_media(t), frame_bytes=64))
-    sizes = fp.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     # skew-guarded frame-fingerprint self-join: one ubiquitous frame
     # (a black/blank frame shared by thousands of videos) is a hot key
     # at crawl scale — grid it, pair set unchanged
-    inter = (
-        skew_guarded_self_pairs(fp, ["fp"], "doc_id", consumer="video_frames")
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(
-        F.col("doc_id").alias("doc_a"), F.col("n").alias("n_frames_a")
-    )
-    sb = sizes.select(
-        F.col("doc_id").alias("doc_b"), F.col("n").alias("n_frames_b")
-    )
-    union_n = (
-        F.col("n_frames_a") + F.col("n_frames_b") - F.col("n_common")
-    )
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(2 * F.col("n_common") >= union_n)
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_common",
-            "n_frames_a",
-            "n_frames_b",
-            (F.col("n_common").cast("double") / union_n.cast("double")).alias(
-                "jaccard"
-            ),
-        )
-        .orderBy("doc_a", "doc_b")
+    return set_jaccard_pairs(
+        frame_fingerprints(_media(t), frame_bytes=64), "fp", "frames", "video_frames"
     )
 
 
@@ -853,6 +774,32 @@ def m13_payload_integrity_quarantine(t):
     )
 
 
+def _envelope_grams(media):
+    """Distinct (doc_id, gram) envelope 4-grams of ``media`` (doc_id,
+    media): each 64-byte window's integer energy folds to its
+    mean-amplitude class (energy div 64), and four consecutive classes
+    join with '|' (m14, m20)."""
+    fs = frame_byte_sums(
+        sample_frames(media, frame_bytes=_VAD_WINDOW_BYTES, every=1)
+    )
+    cls = F.expr("cast(frame_sum as bigint) div 64")
+    cl = fs.select("doc_id", "frame_no", cls.alias("c"))
+    w = Window.partitionBy("doc_id").orderBy("frame_no")
+    gram = F.concat_ws(
+        "|",
+        F.col("c").cast("string"),
+        F.lead("c", 1).over(w).cast("string"),
+        F.lead("c", 2).over(w).cast("string"),
+        F.lead("c", 3).over(w).cast("string"),
+    )
+    return (
+        cl.select("doc_id", gram.alias("gram"), F.lead("c", 3).over(w).alias("l3"))
+        .filter(F.col("l3").isNotNull())
+        .select("doc_id", "gram")
+        .distinct()
+    )
+
+
 @query(
     "m14_audio_neardup_pairs",
     f"""
@@ -884,24 +831,8 @@ def m13_payload_integrity_quarantine(t):
       QUALIFY lead(c, 3) OVER win IS NOT NULL
     ),
     gd AS (SELECT DISTINCT doc_id, gram FROM gr),
-    sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM gd
-              GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             CAST(COUNT(*) AS BIGINT) AS n_common
-      FROM gd a JOIN gd b
-        ON a.gram = b.gram AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
-    SELECT i.doc_a, i.doc_b, i.n_common,
-           za.n AS n_grams_a, zb.n AS n_grams_b,
-           CAST(i.n_common AS DOUBLE)
-             / CAST(za.n + zb.n - i.n_common AS DOUBLE) AS jaccard
-    FROM inter i
-    JOIN sizes za ON za.doc_id = i.doc_a
-    JOIN sizes zb ON zb.doc_id = i.doc_b
-    WHERE 2 * i.n_common >= za.n + zb.n - i.n_common
-    ORDER BY i.doc_a, i.doc_b
+    {set_jaccard_sql("gd", "gram", "grams")}
+    SELECT * FROM sj ORDER BY doc_a, doc_b
     """,
     tags=("multimodal", "audio", "dedup"),
 )
@@ -925,60 +856,10 @@ def m14_audio_neardup_pairs(t):
     never all-pairs (d12's shape on the audio modality); windowing is
     one narrow mapInPandas; the class/gram derivation is row-local;
     the verify is one (doc_a, doc_b)-keyed integer aggregate."""
-    from data_engineer_project_spark.operators.multimodal import (
-        frame_byte_sums,
-        sample_frames,
-    )
-
-    fs = frame_byte_sums(
-        sample_frames(_media(t), frame_bytes=_VAD_WINDOW_BYTES, every=1)
-    )
-    cls = F.expr("cast(frame_sum as bigint) div 64")
-    cl = fs.select("doc_id", "frame_no", cls.alias("c"))
-    w = Window.partitionBy("doc_id").orderBy("frame_no")
-    gram = F.concat_ws(
-        "|",
-        F.col("c").cast("string"),
-        F.lead("c", 1).over(w).cast("string"),
-        F.lead("c", 2).over(w).cast("string"),
-        F.lead("c", 3).over(w).cast("string"),
-    )
-    gd = tracked_persist(
-        cl.select("doc_id", gram.alias("gram"), F.lead("c", 3).over(w).alias("l3"))
-        .filter(F.col("l3").isNotNull())
-        .select("doc_id", "gram")
-        .distinct()
-    )
-    sizes = gd.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     # skew-guarded gram self-join (the m11 rationale: a ubiquitous
     # audio gram — silence — is the hot key at crawl scale)
-    from data_engineer_project_spark.operators.dedup import (
-        skew_guarded_self_pairs,
-    )
-
-    inter = (
-        skew_guarded_self_pairs(gd, ["gram"], "doc_id", consumer="audio_grams")
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_grams_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_grams_b"))
-    union_n = F.col("n_grams_a") + F.col("n_grams_b") - F.col("n_common")
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(2 * F.col("n_common") >= union_n)
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_common",
-            "n_grams_a",
-            "n_grams_b",
-            (F.col("n_common").cast("double") / union_n.cast("double")).alias(
-                "jaccard"
-            ),
-        )
-        .orderBy("doc_a", "doc_b")
+    return set_jaccard_pairs(
+        _envelope_grams(_media(t)), "gram", "grams", "audio_grams"
     )
 
 
@@ -1381,9 +1262,6 @@ def m18_image_neardup_verified(t):
     the pair join — no Python in the pair path (histograms come from
     one narrow Arrow stage per rep, corpus-linear); CC is the
     pointer-jumped operator."""
-    from data_engineer_project_spark.operators.dedup import (
-        skew_guarded_self_pairs,
-    )
     from data_engineer_project_spark.operators.graph import connected_components
     from data_engineer_project_spark.operators.multimodal import (
         dhash_with_histogram,
@@ -1405,41 +1283,13 @@ def m18_image_neardup_verified(t):
             "doc_id", "phash", "hist", "n_bytes"
         )
     )
-    bands = hh.select(
-        "doc_id",
-        "phash",
-        "hist",
-        "n_bytes",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("bi"),
-                        F.shiftright("phash", 16 * bi)
-                        .bitwiseAND(F.lit(65535))
-                        .alias("bk"),
-                    )
-                    for bi in range(4)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "phash", "hist", "n_bytes", "band.bi", "band.bk")
     l1 = F.aggregate(
         F.zip_with("hist_a", "hist_b", lambda a, b: F.abs(a - b)),
         F.lit(0).cast("long"),
         lambda acc, v: acc + v,
     )
     pairs = (
-        skew_guarded_self_pairs(
-            bands,
-            ["bi", "bk"],
-            "doc_id",
-            carry=("phash", "hist", "n_bytes"),
-            consumer="m18_dhash_bands",
-        )
-        .filter(
-            F.bit_count(F.col("phash_a").bitwiseXOR(F.col("phash_b"))) <= 3
-        )
+        dhash_band_pairs(hh, "doc_id", ("hist", "n_bytes"), "m18_dhash_bands")
         .filter(l1 * 4 <= F.col("n_bytes_a") + F.col("n_bytes_b"))
         .select("doc_a", "doc_b")
         .distinct()
@@ -1486,22 +1336,8 @@ def m18_image_neardup_verified(t):
     -- position-weighted sum is unchanged (zeros add nothing) and every
     -- frame folds with npx = 64: fp = ws*65 + 64
     fp AS (SELECT DISTINCT doc_id, ws * 65 + 64 AS fp FROM fr),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM fp GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-      FROM fp a JOIN fp b ON a.fp = b.fp AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
-    SELECT i.doc_a, i.doc_b, CAST(i.n_common AS BIGINT) AS n_common,
-           CAST(sa.n AS BIGINT) AS n_frames_a,
-           CAST(sb.n AS BIGINT) AS n_frames_b,
-           CAST(i.n_common AS DOUBLE)
-             / CAST(sa.n + sb.n - i.n_common AS DOUBLE) AS jaccard
-    FROM inter i
-    JOIN sizes sa ON sa.doc_id = i.doc_a
-    JOIN sizes sb ON sb.doc_id = i.doc_b
-    WHERE 2 * i.n_common >= sa.n + sb.n - i.n_common
-    ORDER BY i.doc_a, i.doc_b
+    {set_jaccard_sql("fp", "fp", "frames")}
+    SELECT * FROM sj ORDER BY doc_a, doc_b
     """,
     tags=("multimodal", "dedup", "video", "gif"),
 )
@@ -1527,41 +1363,16 @@ def m19_gif_animation_neardup(t):
     SHARING a frame ever meet); decode + fold is one narrow Arrow
     stage; per-fingerprint multiplicity is the guard's problem at
     crawl scale (a ubiquitous black frame is a hot key)."""
-    from data_engineer_project_spark.operators.dedup import (
-        skew_guarded_self_pairs,
-    )
     from data_engineer_project_spark.operators.multimodal import (
         attach_animated_gif,
         gif_frame_fingerprints,
     )
 
-    fp = tracked_persist(
-        gif_frame_fingerprints(attach_animated_gif(t.documents))
-    )
-    sizes = fp.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    inter = (
-        skew_guarded_self_pairs(fp, ["fp"], "doc_id", consumer="m19_gif_frames")
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_frames_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_frames_b"))
-    union_n = F.col("n_frames_a") + F.col("n_frames_b") - F.col("n_common")
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(2 * F.col("n_common") >= union_n)
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_common",
-            "n_frames_a",
-            "n_frames_b",
-            (F.col("n_common").cast("double") / union_n.cast("double")).alias(
-                "jaccard"
-            ),
-        )
-        .orderBy("doc_a", "doc_b")
+    return set_jaccard_pairs(
+        gif_frame_fingerprints(attach_animated_gif(t.documents)),
+        "fp",
+        "frames",
+        "m19_gif_frames",
     )
 
 
@@ -1596,60 +1407,14 @@ def m20_wav_audio_neardup(t):
 
     Scale shape: identical to m14 plus one narrow Arrow decode
     stage."""
-    from data_engineer_project_spark.operators.dedup import (
-        skew_guarded_self_pairs,
-    )
     from data_engineer_project_spark.operators.multimodal import (
         attach_wav,
         decode_wav_samples,
-        frame_byte_sums,
-        sample_frames,
     )
 
     samples = decode_wav_samples(attach_wav(t.documents))
-    fs = frame_byte_sums(
-        sample_frames(samples, frame_bytes=_VAD_WINDOW_BYTES, every=1)
-    )
-    cls = F.expr("cast(frame_sum as bigint) div 64")
-    cl = fs.select("doc_id", "frame_no", cls.alias("c"))
-    w = Window.partitionBy("doc_id").orderBy("frame_no")
-    gram = F.concat_ws(
-        "|",
-        F.col("c").cast("string"),
-        F.lead("c", 1).over(w).cast("string"),
-        F.lead("c", 2).over(w).cast("string"),
-        F.lead("c", 3).over(w).cast("string"),
-    )
-    gd = tracked_persist(
-        cl.select("doc_id", gram.alias("gram"), F.lead("c", 3).over(w).alias("l3"))
-        .filter(F.col("l3").isNotNull())
-        .select("doc_id", "gram")
-        .distinct()
-    )
-    sizes = gd.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    inter = (
-        skew_guarded_self_pairs(gd, ["gram"], "doc_id", consumer="m20_wav_grams")
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_grams_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_grams_b"))
-    union_n = F.col("n_grams_a") + F.col("n_grams_b") - F.col("n_common")
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(2 * F.col("n_common") >= union_n)
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_common",
-            "n_grams_a",
-            "n_grams_b",
-            (F.col("n_common").cast("double") / union_n.cast("double")).alias(
-                "jaccard"
-            ),
-        )
-        .orderBy("doc_a", "doc_b")
+    return set_jaccard_pairs(
+        _envelope_grams(samples), "gram", "grams", "m20_wav_grams"
     )
 
 

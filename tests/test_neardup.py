@@ -102,6 +102,39 @@ def test_collapse_pairs_rollup_match_oracle_sql(spark):
     assert got == {1: (3, 4, 1), 7: (1, 3, 7), 4: (1, 2, 4)}
 
 
+def test_set_jaccard_pairs_match_oracle_sql(spark):
+    """``set_jaccard_pairs`` against ``set_jaccard_sql``: (1, 2) sits
+    exactly at 2·n_common = |A∪B| (kept), (1, 3) and (2, 3) one below
+    it (dropped), 4 and 5 are single-key docs, key "a" is shared by
+    three docs, and doc 6 shares nothing."""
+    rows = [
+        (1, "a"), (1, "b"), (1, "c"),
+        (2, "a"), (2, "b"), (2, "d"),
+        (3, "a"), (3, "b"), (3, "e"), (3, "f"),
+        (4, "z"),
+        (5, "z"),
+        (6, "y"), (6, "w"),
+    ]
+    sets = spark.createDataFrame(rows, "doc_id long, gram string")
+    pairs = ND.set_jaccard_pairs(sets, "gram", "grams", "test_set_jaccard")
+    assert DD.LAST_GUARD_STATS["consumer"] == "test_set_jaccard"
+
+    con = duckdb.connect()
+    con.register("sets", pd.DataFrame(rows, columns=["doc_id", "gram"]))
+    sql = f"""
+    WITH {ND.set_jaccard_sql("sets", "gram", "grams")}
+    SELECT * FROM sj ORDER BY doc_a, doc_b
+    """
+    assert _fingerprint_df(pairs) == _fingerprint_sql(con, sql)
+    assert [tuple(r) for r in pairs.collect()] == [
+        (1, 2, 2, 3, 3, 0.5),
+        (4, 5, 1, 1, 1, 1.0),
+    ]
+    assert pairs.columns == [
+        "doc_a", "doc_b", "n_common", "n_grams_a", "n_grams_b", "jaccard"
+    ]
+
+
 def test_d101_store_rebuilds_missing_artifact_and_reuses_complete(
     spark, monkeypatch
 ):

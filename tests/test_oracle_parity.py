@@ -73,6 +73,11 @@ _RECENTLY_TOUCHED = {
     "d99_weighted_neardup_clusters",
     "d101_incremental_cluster_merge",
     "m18_image_neardup_verified",
+    # ported to the near-dup pair stages (set_jaccard_pairs)
+    "m11_video_neardup_pairs",
+    "m14_audio_neardup_pairs",
+    "m19_gif_animation_neardup",
+    "m20_wav_audio_neardup",
     # ported to the curation stages (operators/curation.py)
     "d39_pii_redaction",
     "d45_epoch_shuffle",

@@ -432,3 +432,29 @@ def test_explain_normalizes_lambda_suffix_not_column_names():
     )
     assert normalize(dump) == normalize(dump.replace("x_39", "x_13"))
     assert normalize(dump) != normalize(dump.replace("mh_3", "mh_4"))
+
+
+def test_explain_normalizes_call_sites_and_landing_files():
+    """Two runs of the same code print one localCheckpoint RDD's call
+    site as ``NativeMethodAccessorImpl.java:0`` or ``<unknown>:0``, and
+    s25's micro-batch scan names a random mkdtemp dir and whichever
+    part file landed last; the RDD's operation and the rest of the path
+    are part of the plan."""
+    import tempfile
+
+    from tools.explain import normalize
+
+    rdd = "Arguments: [doc_a#12L], MapPartitionsRDD[45] at {} at {}, ExistingRDD"
+    native = rdd.format("localCheckpoint", "NativeMethodAccessorImpl.java:0")
+    assert normalize(native) == normalize(rdd.format("localCheckpoint", "<unknown>:0"))
+    assert normalize(native) != normalize(
+        rdd.format("mapPartitions", "NativeMethodAccessorImpl.java:0")
+    )
+    scan = (
+        "Location: InMemoryFileIndex(1 paths)[file:{}/s25_delta_{}/{}/part-{}-"
+        "744e0c60-b0b9-4512-958..., PartitionFilters: []"
+    )
+    tmp = tempfile.gettempdir()
+    landed = scan.format(tmp, "pb1d5pch", "landing", "00001")
+    assert normalize(landed) == normalize(scan.format(tmp, "x_9y8z7w", "landing", "00002"))
+    assert normalize(landed) != normalize(scan.format(tmp, "pb1d5pch", "archive", "00001"))

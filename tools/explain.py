@@ -14,7 +14,8 @@ Plans captured while the query was built (``operators/plancap``: the
 connected-components loop, streaming micro-batches) follow the query's
 own plan. Every dump is normalized: expression ids (``#NNN``),
 ``plan_id=`` and ``RDD[NNN]`` numbers, run UUIDs, JVM object hash
-codes and the numeric suffix of lambda variable names (``x_39``)
+codes, the numeric suffix of lambda variable names (``x_39``), an
+RDD's call site and a landing file's temp dir and part number
 differ between two runs of the same code, so they are replaced
 by fixed tokens. Two checkouts' dumps of the same query then ``diff``
 clean unless the plan really changed. Naming a query twice builds it twice in one session
@@ -28,6 +29,7 @@ import io
 import os
 import re
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -35,10 +37,18 @@ from data_engineer_project_spark.operators import plancap  # noqa: E402
 from data_engineer_project_spark.queries import QUERIES  # noqa: E402
 from data_engineer_project_spark.session import get_spark  # noqa: E402
 
+_TMP = re.escape(tempfile.gettempdir())
 _VOLATILE = (
+    # a landing file's mkdtemp dir and part number (s25's micro-batch
+    # scan), before the UUID rule sees the part file's (often cut) UUID
+    (re.compile(rf"({_TMP}/\w+?_)[a-z0-9_]{{8}}/"), r"\1X/"),
+    (re.compile(r"part-\d{5}-[0-9a-f-]*"), "part-N-"),
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    # an RDD's call site: the same localCheckpoint prints
+    # ``NativeMethodAccessorImpl.java:0`` or ``<unknown>:0``
+    (re.compile(r"(RDD\[N\] at \w+ at )\S+:\d+"), r"\1SITE"),
     (re.compile(r"[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}"), "UUID"),
     (re.compile(r"@[0-9a-f]{1,8}\b"), "@H"),  # JVM identity hash codes
     # lambda variables print as ``lambda x_39#N``: the suffix counts the
