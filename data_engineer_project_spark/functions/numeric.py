@@ -37,15 +37,3 @@ def avg_money(c: str | Column, alias: str) -> Column:
     """AVG as exact-decimal SUM / COUNT in double space (deterministic)."""
     col = money(c)
     return (F.sum(col).cast("double") / F.count(col).cast("double")).alias(alias)
-
-
-def oracle_sum(expr: str) -> str:
-    """DuckDB twin of :func:`sum_money` for an expression."""
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(18,2))) AS DOUBLE)"
-
-
-def oracle_avg(expr: str) -> str:
-    return (
-        f"CAST(SUM(CAST({expr} AS DECIMAL(18,2))) AS DOUBLE)"
-        f" / CAST(COUNT({expr}) AS DOUBLE)"
-    )

@@ -820,20 +820,6 @@ def _skip_jpeg_entropy(payload: bytes, pos: int) -> int:
     raise ValueError("truncated JPEG: no marker after scan data")
 
 
-def _jpeg_segments(payload: bytes):
-    """Marker walk: yields (marker, segment bytes, position AFTER the
-    segment); stops before the first SOS (entropy data follows) or at
-    EOI. Truncation anywhere raises ValueError."""
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload (no SOI)")
-    pos = 2
-    while True:
-        marker, seg, pos = _next_jpeg_segment(payload, pos)
-        yield marker, seg, pos
-        if marker in (0xD9, 0xDA):  # EOI / SOS: stop
-            return
-
-
 def decode_jpeg(payload: bytes) -> np.ndarray:
     """Parse a JPEG into its flat sample array (row-major top-down;
     RGB interleaved for 3-component frames) — baseline sequential DCT

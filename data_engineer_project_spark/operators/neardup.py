@@ -55,7 +55,7 @@ from __future__ import annotations
 import pathlib
 import shutil
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_engineer_project_spark.functions import text as T
@@ -163,6 +163,24 @@ def set_jaccard_pairs(
     )
 
 
+def dhash_bands() -> Column:
+    """One (bi, bk) struct row per 16-bit band of the 64-bit dHash
+    ``phash`` (explode it, then select ``band.bi``/``band.bk``): bit 63
+    rides the sign, and shift-then-mask gives the logical band value.
+    Two hashes within Hamming radius 3 share at least one band."""
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(bi).alias("bi"),
+                    F.shiftright("phash", 16 * bi).bitwiseAND(F.lit(65535)).alias("bk"),
+                )
+                for bi in range(4)
+            ]
+        )
+    )
+
+
 def dhash_band_pairs(
     hashes: DataFrame, id_col: str, carry: tuple[str, ...], consumer: str
 ) -> DataFrame:
@@ -176,18 +194,7 @@ def dhash_band_pairs(
     ``phash`` and the ``carry`` columns come back from both sides as
     ``{c}_a``/``{c}_b``; a pair sharing several bands appears once per
     shared band."""
-    band = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(bi).alias("bi"),
-                    F.shiftright("phash", 16 * bi).bitwiseAND(F.lit(65535)).alias("bk"),
-                )
-                for bi in range(4)
-            ]
-        )
-    )
-    bands = hashes.select(id_col, "phash", *carry, band.alias("band")).select(
+    bands = hashes.select(id_col, "phash", *carry, dhash_bands().alias("band")).select(
         id_col, "phash", *carry, "band.bi", "band.bk"
     )
     return DD.skew_guarded_self_pairs(

@@ -31,6 +31,16 @@ is bit-identical regardless of partitioning (per-row scalar math), and
 matches DuckDB's unnest-in-order SUM — which is why the oracle queries
 can hash-compare scores exactly. (DuckDB's list_dot_product accumulates
 in FLOAT and does NOT match — deliberately avoided.)
+
+DuckDB twins (CTE builders for the oracle SQL, each beside its Spark
+kernel; they emit ``name AS (...)`` fragments with no ``WITH``):
+- ``cosine_sql`` — the exact-cosine fold of ``cosine`` over a pairs
+  CTE (keys…, qv, cv), giving (keys…, score);
+- ``banded_lsh_sigs_sql`` — the signatures of ``banded_lsh_sigs``;
+- ``nearest_cells_sql`` — the nearest-cell probe of ``ivf_assign_n``;
+- ``kmeans_chain`` — ``kmeans_centroids`` plus the final assignment,
+  unrolled per iteration.
+The product-quantization layer built on them is ``operators/pq.py``.
 """
 
 from __future__ import annotations
@@ -63,67 +73,79 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def brute_force_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact cosine top-k: broadcast the query set over the corpus.
+def cosine_sql(name: str, pairs: str, keys: tuple[str, ...]) -> str:
+    """DuckDB twin of ``cosine``: CTEs ``{name}x`` (one row per
+    component, unnested in array order) and ``{name}`` (keys…, score)
+    over the CTE ``pairs`` (keys…, qv, cv). The three folds SUM in
+    DOUBLE and the score is dot / (sqrt(qq) · sqrt(cc)), the op order
+    of ``cosine`` and of the norm-hoisted Spark forms, so scores
+    hash-compare exactly. A zero-norm vector scores NULL here where
+    Spark raises DIVIDE_BY_ZERO (tests/test_properties.py pins both)."""
+    k = ", ".join(keys)
+    return f"""{name}x AS (SELECT {k}, unnest(qv) AS qx, unnest(cv) AS cx
+             FROM {pairs}),
+    {name} AS (SELECT {k},
+                  SUM(CAST(qx AS DOUBLE) * CAST(cx AS DOUBLE))
+                  / (sqrt(SUM(CAST(qx AS DOUBLE) * CAST(qx AS DOUBLE)))
+                     * sqrt(SUM(CAST(cx AS DOUBLE) * CAST(cx AS DOUBLE))))
+                    AS score
+           FROM {name}x GROUP BY {k})"""
 
-    Returns (query_id, neighbor_id, score). Self-matches excluded.
-    Deterministic: ties broken by neighbor id. The corpus is the probe
-    side of the broadcast join, so its partitioning sets the scoring
-    parallelism; the corpus itself never shuffles.
-    """
-    # Norms hoisted out of the pair loop (the ivf_assign_n move): |q|
-    # folds once per query (on the broadcast side), |c| once per corpus
-    # row instead of once per (query, corpus) pair; dot/(sqrt(aa)·
-    # sqrt(bb)) in the same op order keeps scores bit-identical.
+
+def panel(
+    queries: DataFrame, corpus: DataFrame, carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """The broadcast query panel against the corpus, norms hoisted:
+    every (corpus row, query) pair as (neighbor_id, cvec, c<carry>,
+    cnrm, query_id, qvec, q<carry>, qnrm), scored by ``panel_score``.
+    |q| folds once per query (on the broadcast side), |c| once per
+    corpus row instead of once per pair (the ivf_assign_n move);
+    dot/(sqrt(aa)·sqrt(bb)) in the same op order keeps scores
+    bit-identical. The corpus is the probe side, so its partitioning
+    sets the scoring parallelism and it never shuffles. Callers filter
+    the pairs (self-matches, label predicates) themselves."""
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        norm(F.col(vec_col)).alias("qnrm"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qvec"),
+        *[F.col(k).alias(f"q{k}") for k in carry],
+        norm(F.col("embedding")).alias("qnrm"),
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        norm(F.col(vec_col)).alias("cnrm"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("cvec"),
+        *[F.col(k).alias(f"c{k}") for k in carry],
+        norm(F.col("embedding")).alias("cnrm"),
     )
+    return c.crossJoin(F.broadcast(q))
+
+
+def panel_score() -> Column:
+    """The exact cosine of a (qvec, qnrm) × (cvec, cnrm) pair from its
+    hoisted norms: a ``panel`` pair or an ``lsh_topk`` candidate."""
+    return dot(F.col("qvec"), F.col("cvec")) / (F.col("qnrm") * F.col("cnrm"))
+
+
+def brute_force_topk(queries: DataFrame, corpus: DataFrame, k: int = 5) -> DataFrame:
+    """Exact cosine top-k: broadcast the query set over the corpus
+    (``panel``).
+
+    Returns (query_id, neighbor_id, score). Self-matches excluded.
+    Deterministic: ties broken by neighbor id."""
     scored = (
-        c.crossJoin(F.broadcast(q))
+        panel(queries, corpus)
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                dot(F.col("qvec"), F.col("cvec"))
-                / (F.col("qnrm") * F.col("cnrm"))
-            ).alias("score"),
-        )
+        .select("query_id", "neighbor_id", panel_score().alias("score"))
     )
     return grouped_topk(
-        scored.select("query_id", "neighbor_id", "score"),
+        scored,
         ["query_id"],
         [F.desc("score"), F.asc("neighbor_id")],
         k,
     )
 
 
-def lsh_bucket(vec: Column, num_planes: int = 4, dim: int = 64) -> Column:
-    """Fixed-plane sign-LSH bucket id: bit r = sign(vec · plane_r),
-    planes are deterministic ±1 literals shared with the oracle SQL.
-    Building block only — operators use the adaptive banded form."""
-    bucket = F.lit(0)
-    for r in range(num_planes):
-        plane = F.array(*[F.lit(float(v)) for v in hyperplane(r, dim)])
-        bucket = bucket + F.when(dot(vec, plane) > 0, F.lit(1 << r)).otherwise(F.lit(0))
-    return bucket
-
-
 # Adaptive sign-LSH parameters, shared verbatim with the oracle SQL
-# generators (llm_pipeline._lsh_sig_sql).
+# generator (banded_lsh_sigs_sql).
 TARGET_BUCKET_ROWS = 64  # aim: ~this many corpus rows per bucket
 MIN_PLANES = 4           # floor keeps small/test corpora at today's 16 buckets
 MAX_PLANES = 24          # 16M buckets; bucket ≈ max(64, N/2^24) rows at cap
@@ -313,6 +335,55 @@ def banded_lsh_sigs(
     return _banded_sigs_arrow(df, num_bands, planes, dim, id_col, vec_col)
 
 
+def banded_lsh_sigs_sql(dim: int = 64) -> str:
+    """WITH-clause fragments (stats → pl → ex → dots → buck) computing
+    the banded adaptive sign-LSH signatures over ``embeddings`` —
+    the DuckDB twin of ``banded_lsh_sigs``.
+
+    ``planes`` comes from the corpus count with the same pure-integer
+    comparisons the Spark plan uses (``ceil(n/T) > 2^p ⟺ n > T·2^p``),
+    and ``nbands`` from the planes with the same integer formula as
+    ``adaptive_bands`` (``GREATEST(2, (planes + 2) // 3)``)
+    so both engines derive identical plane AND band counts at ANY
+    scale factor; band b's plane r is hyperplane(b·MAX_PLANES + r) on
+    both sides. All adaptive_bands(MAX_PLANES) possible bands are
+    emitted, each guarded by ``b < nbands`` — inactive bands produce no
+    rows. ``buck`` has one (vec_id, band, bucket) row per active
+    band."""
+    maxb = adaptive_bands(MAX_PLANES)
+    plane_lits = [
+        "[" + ", ".join(f"{float(v)}" for v in hyperplane(j, dim)) + "]"
+        for j in range(maxb * MAX_PLANES)
+    ]
+    dot_terms = ",\n                   ".join(
+        f"SUM(CAST(x AS DOUBLE) * ({plane_lits[j]})[i]) AS d{j}"
+        for j in range(maxb * MAX_PLANES)
+    )
+    planes_expr = f"{MIN_PLANES} + " + " + ".join(
+        f"(CASE WHEN n_vec > {TARGET_BUCKET_ROWS << p} THEN 1 ELSE 0 END)"
+        for p in range(MIN_PLANES, MAX_PLANES)
+    )
+    band_selects = []
+    for b in range(maxb):
+        bucket_expr = " + ".join(
+            f"(CASE WHEN {r} < planes AND d{b * MAX_PLANES + r} > 0 THEN {1 << r} ELSE 0 END)"
+            for r in range(MAX_PLANES)
+        )
+        band_selects.append(
+            f"SELECT vec_id, {b} AS band, CAST({bucket_expr} AS INT) AS bucket"
+            f" FROM dots, pl WHERE {b} < nbands"
+        )
+    buck = "\n      UNION ALL\n      ".join(band_selects)
+    return f"""stats AS (SELECT COUNT(*) AS n_vec FROM embeddings),
+    pl AS (SELECT planes, GREATEST({NUM_BANDS}, (planes + {BAND_PLANES - 1}) // {BAND_PLANES}) AS nbands
+           FROM (SELECT {planes_expr} AS planes FROM stats)),
+    ex AS (SELECT vec_id, unnest(embedding) AS x,
+                  generate_subscripts(embedding, 1) AS i
+           FROM embeddings),
+    dots AS (SELECT vec_id, {dot_terms} FROM ex GROUP BY vec_id),
+    buck AS ({buck})"""
+
+
 def cosine_near_dup_pairs(
     corpus: DataFrame,
     threshold: float = 0.99,
@@ -420,6 +491,19 @@ def ivf_assign(
     return ivf_assign_n(vectors, centroids, 1, id_col, vec_col)
 
 
+def nearest_cells_sql(name: str, scores: str, n: int) -> str:
+    """DuckDB twin of ``ivf_assign_n``: CTE ``{name}`` (vec_id, cid,
+    rn) holding each vector's ``n`` nearest cells, by ``score`` desc
+    with ties to the lowest cid; ``rn`` is the 1-based probe rank.
+    ``scores`` is a ``cosine_sql`` CTE keyed (vec_id, cid), e.g. the
+    final assignment step ``apd{iters}`` of ``kmeans_chain``."""
+    return f"""{name} AS (SELECT vec_id, cid, rn FROM (
+              SELECT vec_id, cid,
+                     ROW_NUMBER() OVER (PARTITION BY vec_id
+                                        ORDER BY score DESC, cid) AS rn
+              FROM {scores}) WHERE rn <= {n})"""
+
+
 # Centroid-update quantization: floor(x · 2^20) is exact in double
 # (power-of-two scaling) and identical in the DuckDB twin, so the
 # per-coordinate sums are exact integers — order-independent under any
@@ -513,6 +597,72 @@ def kmeans_centroids(
             "cid bigint, cvec array<double>",
         )
     return cents
+
+
+def kmeans_chain(
+    iters: int = 2,
+    src: str = "embeddings",
+    prefix: str = "",
+    n_centroids: int | None = None,
+) -> str:
+    """CTE chain (no ``WITH`` keyword) for the DuckDB twin of
+    ``kmeans_centroids`` + final assignment: seed → assign →
+    integer-quantized-sum update, unrolled (c0, apd0, asg0, c1, …),
+    ending in ``{prefix}asg(vec_id, cid)``. Each assign step scores
+    every (vector, centroid) pair with ``cosine_sql`` into
+    ``{prefix}apd{i}`` (vec_id, cid, score) and keeps the nearest cell
+    with ``nearest_cells_sql``; a query-side probe over the final
+    ``apd{iters}`` reuses those scores. floor(x·2^20) sums make the
+    centroid update exact integers on both engines, so assignments
+    bit-match. The centroid count is derived from COUNT(*) with the
+    same pure-integer doubling factors as ``adaptive_centroids``
+    (~sqrt(N) cells), so both engines seed identical cells at ANY
+    scale factor — unless a fixed ``n_centroids`` is passed (the
+    PQ-codebook case, where the code count is the format, not a
+    function of corpus size). ``src`` is any CTE shaped (vec_id,
+    embedding); ``src``/``prefix`` give the per-subspace PQ chains
+    (operators/pq.py)."""
+    quant = KMEANS_QUANT
+    p = prefix
+
+    def assign_ctes(i: int, cents: str) -> str:
+        return f"""{p}ap{i} AS (SELECT e.vec_id, c.cid, e.embedding AS qv, c.cvec AS cv
+             FROM {src} e, {cents} c),
+    {cosine_sql(f"{p}apd{i}", f"{p}ap{i}", ("vec_id", "cid"))},
+    {nearest_cells_sql(f"{p}asg{i}", f"{p}apd{i}", 1)}"""
+
+    if n_centroids is None:
+        n_cent_sql = f"{1 << MIN_CENTROID_BITS} " + " ".join(
+            f"* (CASE WHEN n_vec > {1 << (2 * j)} THEN 2 ELSE 1 END)"
+            for j in range(MIN_CENTROID_BITS, MAX_CENTROID_BITS)
+        )
+        ctes = [
+            f"""{p}cn AS (SELECT {n_cent_sql} AS n_cent
+              FROM (SELECT COUNT(*) AS n_vec FROM {src})),
+    {p}c0 AS (SELECT vec_id AS cid, embedding AS cvec FROM {src}, {p}cn
+              WHERE vec_id < n_cent)"""
+        ]
+    else:
+        ctes = [
+            f"""{p}c0 AS (SELECT vec_id AS cid, embedding AS cvec FROM {src}
+              WHERE vec_id < {n_centroids})"""
+        ]
+    for i in range(iters):
+        ctes.append(assign_ctes(i, f"{p}c{i}"))
+        ctes.append(
+            f"""{p}cs{i + 1} AS (SELECT a.cid, ex.pos,
+                   SUM(CAST(floor(CAST(ex.x AS DOUBLE) * {quant}) AS BIGINT)) AS s
+             FROM (SELECT vec_id, unnest(embedding) AS x,
+                          generate_subscripts(embedding, 1) AS pos
+                   FROM {src}) ex
+             JOIN {p}asg{i} a ON a.vec_id = ex.vec_id
+             GROUP BY a.cid, ex.pos),
+    {p}c{i + 1} AS (SELECT cid, list(CAST(s AS DOUBLE) ORDER BY pos) AS cvec
+             FROM {p}cs{i + 1} GROUP BY cid)"""
+        )
+    ctes.append(assign_ctes(iters, f"{p}c{iters}"))
+    ctes.append(f"{p}asg AS (SELECT vec_id, cid FROM {p}asg{iters})")
+    return ",\n    ".join(ctes)
 
 
 # Version constant folded into every artifact-store key: bump whenever
@@ -975,14 +1125,7 @@ def lsh_topk(
     scored = (
         c.join(F.broadcast(q), ["band", "bucket"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                dot(F.col("qvec"), F.col("cvec"))
-                / (F.col("qnrm") * F.col("cnrm"))
-            ).alias("score"),
-        )
+        .select("query_id", "neighbor_id", panel_score().alias("score"))
         .groupBy("query_id", "neighbor_id")
         .agg(F.max("score").alias("score"))
     )

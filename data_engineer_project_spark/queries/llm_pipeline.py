@@ -27,6 +27,7 @@ from data_engineer_project_spark.operators.fanout import fanout_small
 from data_engineer_project_spark.operators import graph as GR
 from data_engineer_project_spark.operators import linalg as LA
 from data_engineer_project_spark.operators import neardup as ND
+from data_engineer_project_spark.operators import pq as PQ
 from data_engineer_project_spark.operators import retrieval as RET
 from data_engineer_project_spark.operators import similarity as SIM
 from data_engineer_project_spark.operators import topk as TK
@@ -275,11 +276,6 @@ def d08_dedup_simhash(t):
 
 # ------------------------------------------------------------ similarity
 
-_DOT = (
-    "SUM(CAST(qx AS DOUBLE) * CAST(cx AS DOUBLE))"
-)
-
-
 def _cosine_topk_oracle(k: int = 5, query_limit: int = 10) -> str:
     return f"""
     WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
@@ -287,15 +283,7 @@ def _cosine_topk_oracle(k: int = 5, query_limit: int = 10) -> str:
     c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
     pairs AS (SELECT query_id, neighbor_id, qv, cv FROM q, c
               WHERE neighbor_id <> query_id),
-    ex AS (SELECT query_id, neighbor_id,
-                  unnest(qv) AS qx, unnest(cv) AS cx FROM pairs),
-    dots AS (SELECT query_id, neighbor_id,
-                    SUM(CAST(qx AS DOUBLE) * CAST(cx AS DOUBLE)) AS dotp,
-                    SUM(CAST(qx AS DOUBLE) * CAST(qx AS DOUBLE)) AS qq,
-                    SUM(CAST(cx AS DOUBLE) * CAST(cx AS DOUBLE)) AS cc
-             FROM ex GROUP BY query_id, neighbor_id),
-    scored AS (SELECT query_id, neighbor_id,
-                      dotp / (sqrt(qq) * sqrt(cc)) AS score FROM dots)
+    {SIM.cosine_sql("scored", "pairs", ("query_id", "neighbor_id"))}
     SELECT query_id, neighbor_id, score FROM (
       SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
                                    ORDER BY score DESC, neighbor_id) AS rn
@@ -318,63 +306,9 @@ def d09_cosine_topk_bruteforce(t):
     return SIM.brute_force_topk(queries, fanout_small(emb), k=5)
 
 
-def _banded_lsh_sig_sql(dim: int = 64) -> str:
-    """WITH-clause fragments (stats → pl → ex → dots → buck) computing
-    the banded adaptive sign-LSH signatures over ``embeddings`` —
-    the DuckDB twin of ``operators/similarity.banded_lsh_sigs``.
-
-    ``planes`` comes from the corpus count with the same pure-integer
-    comparisons the Spark plan uses (``ceil(n/T) > 2^p ⟺ n > T·2^p``),
-    and ``nbands`` from the planes with the same integer formula as
-    ``similarity.adaptive_bands`` (``GREATEST(2, (planes + 2) // 3)``)
-    so both engines derive identical plane AND band counts at ANY
-    scale factor; band b's plane r is hyperplane(b·MAX_PLANES + r) on
-    both sides. All adaptive_bands(MAX_PLANES) possible bands are
-    emitted, each guarded by ``b < nbands`` — inactive bands produce no
-    rows. ``buck`` has one (vec_id, band, bucket) row per active
-    band."""
-    maxp, minp, target = (
-        SIM.MAX_PLANES,
-        SIM.MIN_PLANES,
-        SIM.TARGET_BUCKET_ROWS,
-    )
-    maxb = SIM.adaptive_bands(maxp)
-    plane_lits = [
-        "[" + ", ".join(f"{float(v)}" for v in T.hyperplane(j, dim)) + "]"
-        for j in range(maxb * maxp)
-    ]
-    dot_terms = ",\n                   ".join(
-        f"SUM(CAST(x AS DOUBLE) * ({plane_lits[j]})[i]) AS d{j}"
-        for j in range(maxb * maxp)
-    )
-    planes_expr = f"{minp} + " + " + ".join(
-        f"(CASE WHEN n_vec > {target << p} THEN 1 ELSE 0 END)"
-        for p in range(minp, maxp)
-    )
-    band_selects = []
-    for b in range(maxb):
-        bucket_expr = " + ".join(
-            f"(CASE WHEN {r} < planes AND d{b * maxp + r} > 0 THEN {1 << r} ELSE 0 END)"
-            for r in range(maxp)
-        )
-        band_selects.append(
-            f"SELECT vec_id, {b} AS band, CAST({bucket_expr} AS INT) AS bucket"
-            f" FROM dots, pl WHERE {b} < nbands"
-        )
-    buck = "\n      UNION ALL\n      ".join(band_selects)
-    return f"""stats AS (SELECT COUNT(*) AS n_vec FROM embeddings),
-    pl AS (SELECT planes, GREATEST({SIM.NUM_BANDS}, (planes + {SIM.BAND_PLANES - 1}) // {SIM.BAND_PLANES}) AS nbands
-           FROM (SELECT {planes_expr} AS planes FROM stats)),
-    ex AS (SELECT vec_id, unnest(embedding) AS x,
-                  generate_subscripts(embedding, 1) AS i
-           FROM embeddings),
-    dots AS (SELECT vec_id, {dot_terms} FROM ex GROUP BY vec_id),
-    buck AS ({buck})"""
-
-
 def _lsh_topk_oracle(k: int = 3, dim: int = 64, query_limit: int = 10) -> str:
     return f"""
-    WITH {_banded_lsh_sig_sql(dim)},
+    WITH {SIM.banded_lsh_sigs_sql(dim)},
     q AS (SELECT e.vec_id AS query_id, e.embedding AS qv, b.band, b.bucket
           FROM embeddings e JOIN buck b ON e.vec_id = b.vec_id
           WHERE e.vec_id < {query_limit}),
@@ -383,15 +317,7 @@ def _lsh_topk_oracle(k: int = 3, dim: int = 64, query_limit: int = 10) -> str:
     pairs AS (SELECT DISTINCT q.query_id, c.neighbor_id, q.qv, c.cv
               FROM q JOIN c ON q.band = c.band AND q.bucket = c.bucket
               WHERE c.neighbor_id <> q.query_id),
-    pex AS (SELECT query_id, neighbor_id,
-                   unnest(qv) AS qx, unnest(cv) AS cx FROM pairs),
-    pd AS (SELECT query_id, neighbor_id,
-                  SUM(CAST(qx AS DOUBLE) * CAST(cx AS DOUBLE)) AS dotp,
-                  SUM(CAST(qx AS DOUBLE) * CAST(qx AS DOUBLE)) AS qq,
-                  SUM(CAST(cx AS DOUBLE) * CAST(cx AS DOUBLE)) AS cc
-           FROM pex GROUP BY query_id, neighbor_id),
-    scored AS (SELECT query_id, neighbor_id,
-                      dotp / (sqrt(qq) * sqrt(cc)) AS score FROM pd)
+    {SIM.cosine_sql("scored", "pairs", ("query_id", "neighbor_id"))}
     SELECT query_id, neighbor_id, score FROM (
       SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
                                    ORDER BY score DESC, neighbor_id) AS rn
@@ -471,21 +397,15 @@ def d12_dedup_ngram_jaccard(t):
 
 def _cosine_near_dup_oracle(threshold: float = 0.4, dim: int = 64) -> str:
     return f"""
-    WITH {_banded_lsh_sig_sql(dim)},
+    WITH {SIM.banded_lsh_sigs_sql(dim)},
     v AS (SELECT e.vec_id, e.embedding, b.band, b.bucket
           FROM embeddings e JOIN buck b ON e.vec_id = b.vec_id),
     pairs AS (SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b,
                      a.embedding AS qv, b.embedding AS cv
               FROM v a JOIN v b ON a.band = b.band AND a.bucket = b.bucket
                                AND a.vec_id < b.vec_id),
-    pex AS (SELECT vec_a, vec_b, unnest(qv) AS qx, unnest(cv) AS cx FROM pairs),
-    pd AS (SELECT vec_a, vec_b,
-                  SUM(CAST(qx AS DOUBLE) * CAST(cx AS DOUBLE)) AS dotp,
-                  SUM(CAST(qx AS DOUBLE) * CAST(qx AS DOUBLE)) AS qq,
-                  SUM(CAST(cx AS DOUBLE) * CAST(cx AS DOUBLE)) AS cc
-           FROM pex GROUP BY vec_a, vec_b)
-    SELECT vec_a, vec_b, dotp / (sqrt(qq) * sqrt(cc)) AS score
-    FROM pd WHERE dotp / (sqrt(qq) * sqrt(cc)) >= {threshold}
+    {SIM.cosine_sql("pd", "pairs", ("vec_a", "vec_b"))}
+    SELECT vec_a, vec_b, score FROM pd WHERE score >= {threshold}
     """
 
 
@@ -499,97 +419,15 @@ def d13_embedding_near_dup(t):
     return SIM.cosine_near_dup_pairs(t.embeddings, threshold=0.4, dim=64)
 
 
-def kmeans_chain(
-    iters: int = 2,
-    src: str = "embeddings",
-    prefix: str = "",
-    n_centroids: int | None = None,
-) -> str:
-    """CTE chain (no ``WITH`` keyword) for the DuckDB twin of
-    ``kmeans_centroids`` + final assignment: seed → assign →
-    integer-quantized-sum update, unrolled (c0, asg0, c1, asg1, …),
-    ending in ``{prefix}asg(vec_id, cid)``. floor(x·2^20) sums make
-    the centroid update exact integers on both engines, so assignments
-    bit-match. The centroid count is derived from COUNT(*) with the
-    same pure-integer doubling factors as
-    ``similarity.adaptive_centroids`` (~sqrt(N) cells), so both
-    engines seed identical cells at ANY scale factor — unless a fixed
-    ``n_centroids`` is passed (the PQ-codebook case, where the code
-    count is the format, not a function of corpus size). Shared by the
-    IVF ANN oracles (which append a query/cell-probe stage referencing
-    ``apd{iters}``), the d44 cluster-profile oracle, and — via
-    ``src``/``prefix`` — the per-subspace chains of the d57 PQ oracle
-    (``src`` is any CTE shaped (vec_id, embedding))."""
-    quant = SIM.KMEANS_QUANT
-    p = prefix
-
-    def assign_ctes(i: int, cents: str) -> str:
-        return f"""{p}ap{i} AS (SELECT e.vec_id, c.cid, e.embedding, c.cvec
-             FROM {src} e, {cents} c),
-    {p}apx{i} AS (SELECT vec_id, cid, unnest(embedding) AS vx, unnest(cvec) AS cx FROM {p}ap{i}),
-    {p}apd{i} AS (SELECT vec_id, cid,
-                   SUM(CAST(vx AS DOUBLE) * CAST(cx AS DOUBLE)) AS dotp,
-                   SUM(CAST(vx AS DOUBLE) * CAST(vx AS DOUBLE)) AS vv,
-                   SUM(CAST(cx AS DOUBLE) * CAST(cx AS DOUBLE)) AS cc
-            FROM {p}apx{i} GROUP BY vec_id, cid),
-    {p}asg{i} AS (SELECT vec_id, cid FROM (
-              SELECT vec_id, cid,
-                     ROW_NUMBER() OVER (PARTITION BY vec_id
-                                        ORDER BY dotp / (sqrt(vv) * sqrt(cc)) DESC, cid) AS rn
-              FROM {p}apd{i}) WHERE rn = 1)"""
-
-    if n_centroids is None:
-        n_cent_sql = f"{1 << SIM.MIN_CENTROID_BITS} " + " ".join(
-            f"* (CASE WHEN n_vec > {1 << (2 * j)} THEN 2 ELSE 1 END)"
-            for j in range(SIM.MIN_CENTROID_BITS, SIM.MAX_CENTROID_BITS)
-        )
-        ctes = [
-            f"""{p}cn AS (SELECT {n_cent_sql} AS n_cent
-              FROM (SELECT COUNT(*) AS n_vec FROM {src})),
-    {p}c0 AS (SELECT vec_id AS cid, embedding AS cvec FROM {src}, {p}cn
-              WHERE vec_id < n_cent)"""
-        ]
-    else:
-        ctes = [
-            f"""{p}c0 AS (SELECT vec_id AS cid, embedding AS cvec FROM {src}
-              WHERE vec_id < {n_centroids})"""
-        ]
-    for i in range(iters):
-        ctes.append(assign_ctes(i, f"{p}c{i}"))
-        ctes.append(
-            f"""{p}cs{i + 1} AS (SELECT a.cid, ex.pos,
-                   SUM(CAST(floor(CAST(ex.x AS DOUBLE) * {quant}) AS BIGINT)) AS s
-             FROM (SELECT vec_id, unnest(embedding) AS x,
-                          generate_subscripts(embedding, 1) AS pos
-                   FROM {src}) ex
-             JOIN {p}asg{i} a ON a.vec_id = ex.vec_id
-             GROUP BY a.cid, ex.pos),
-    {p}c{i + 1} AS (SELECT cid, list(CAST(s AS DOUBLE) ORDER BY pos) AS cvec
-             FROM {p}cs{i + 1} GROUP BY cid)"""
-        )
-    ctes.append(assign_ctes(iters, f"{p}c{iters}"))
-    ctes.append(f"{p}asg AS (SELECT vec_id, cid FROM {p}asg{iters})")
-    return ",\n    ".join(ctes)
-
-
-def _ivf_oracle(
-    k: int = 3,
-    iters: int = 2,
-    query_limit: int = 10,
-    nprobe: int = 1,
-) -> str:
+def _ivf_oracle(k: int = 3, query_limit: int = 10, nprobe: int = 1) -> str:
     """DuckDB twin of ``kmeans_centroids`` + ``ivf_topk``: the shared
     k-means chain (``kmeans_chain``) plus the query-side cell probe
     and in-cell top-k. ``nprobe`` widens the QUERY side to its nearest
     n cells (corpus stays in one cell), matching
     ``ivf_topk(nprobe=...)``."""
     return f"""
-    WITH {kmeans_chain(iters)},
-    qasg AS (SELECT vec_id, cid FROM (
-              SELECT vec_id, cid,
-                     ROW_NUMBER() OVER (PARTITION BY vec_id
-                                        ORDER BY dotp / (sqrt(vv) * sqrt(cc)) DESC, cid) AS rn
-              FROM apd{iters}) WHERE rn <= {nprobe}),
+    WITH {SIM.kmeans_chain(2)},
+    {SIM.nearest_cells_sql("qasg", "apd2", nprobe)},
     q AS (SELECT e.vec_id AS query_id, e.embedding AS qv, a.cid
           FROM embeddings e JOIN qasg a ON e.vec_id = a.vec_id
           WHERE e.vec_id < {query_limit}),
@@ -598,15 +436,7 @@ def _ivf_oracle(
     pairs AS (SELECT q.query_id, c.neighbor_id, q.cid, q.qv, c.cv
               FROM q JOIN c ON q.cid = c.cid
               WHERE c.neighbor_id <> q.query_id),
-    pex AS (SELECT query_id, neighbor_id, cid,
-                   unnest(qv) AS qx, unnest(cv) AS cx FROM pairs),
-    pd AS (SELECT query_id, neighbor_id, cid,
-                  SUM(CAST(qx AS DOUBLE) * CAST(cx AS DOUBLE)) AS dotp,
-                  SUM(CAST(qx AS DOUBLE) * CAST(qx AS DOUBLE)) AS qq,
-                  SUM(CAST(cx AS DOUBLE) * CAST(cx AS DOUBLE)) AS cc
-           FROM pex GROUP BY query_id, neighbor_id, cid),
-    scored AS (SELECT query_id, neighbor_id, cid,
-                      dotp / (sqrt(qq) * sqrt(cc)) AS score FROM pd)
+    {SIM.cosine_sql("scored", "pairs", ("query_id", "neighbor_id", "cid"))}
     SELECT query_id, neighbor_id, cid, score FROM (
       SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
                                    ORDER BY score DESC, neighbor_id) AS rn
@@ -859,20 +689,13 @@ def d15_curation_pipeline(t):
 
 def _ann_recall_oracle(k: int = 3, dim: int = 64, query_limit: int = 10) -> str:
     return f"""
-    WITH {_banded_lsh_sig_sql(dim)},
+    WITH {SIM.banded_lsh_sigs_sql(dim)},
     q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
           WHERE vec_id < {query_limit}),
     c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
     allp AS (SELECT query_id, neighbor_id, qv, cv FROM q, c
              WHERE neighbor_id <> query_id),
-    apex AS (SELECT query_id, neighbor_id, unnest(qv) AS qx, unnest(cv) AS cx FROM allp),
-    apd AS (SELECT query_id, neighbor_id,
-                   SUM(CAST(qx AS DOUBLE) * CAST(cx AS DOUBLE)) AS dotp,
-                   SUM(CAST(qx AS DOUBLE) * CAST(qx AS DOUBLE)) AS qq,
-                   SUM(CAST(cx AS DOUBLE) * CAST(cx AS DOUBLE)) AS cc
-            FROM apex GROUP BY query_id, neighbor_id),
-    scored AS (SELECT query_id, neighbor_id,
-                      dotp / (sqrt(qq) * sqrt(cc)) AS score FROM apd),
+    {SIM.cosine_sql("scored", "allp", ("query_id", "neighbor_id"))},
     bf AS (SELECT query_id, neighbor_id FROM (
              SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
                                           ORDER BY score DESC, neighbor_id) AS rn
@@ -1629,22 +1452,17 @@ def d30_bm25_topk(t):
 def _semantic_decon_oracle(threshold: float = 0.4, dim: int = 64) -> str:
     bucket = CUR.ORACLE_BUCKET.replace("doc_id", "e.vec_id")
     return f"""
-    WITH {_banded_lsh_sig_sql(dim)},
+    WITH {SIM.banded_lsh_sigs_sql(dim)},
     v AS (SELECT e.vec_id, e.embedding, b.band, b.bucket, {bucket} AS split_b
           FROM embeddings e JOIN buck b ON e.vec_id = b.vec_id),
     pairs AS (SELECT DISTINCT te.vec_id AS test_vec, tr.vec_id AS train_vec,
                      te.embedding AS qv, tr.embedding AS cv
               FROM v te JOIN v tr ON te.band = tr.band AND te.bucket = tr.bucket
               WHERE te.split_b >= 90 AND tr.split_b < 80),
-    pex AS (SELECT test_vec, train_vec, unnest(qv) AS qx, unnest(cv) AS cx FROM pairs),
-    pd AS (SELECT test_vec, train_vec,
-                  SUM(CAST(qx AS DOUBLE) * CAST(cx AS DOUBLE)) AS dotp,
-                  SUM(CAST(qx AS DOUBLE) * CAST(qx AS DOUBLE)) AS qq,
-                  SUM(CAST(cx AS DOUBLE) * CAST(cx AS DOUBLE)) AS cc
-           FROM pex GROUP BY test_vec, train_vec)
+    {SIM.cosine_sql("pd", "pairs", ("test_vec", "train_vec"))}
     SELECT test_vec, CAST(COUNT(*) AS BIGINT) AS n_train_matches,
-           MAX(dotp / (sqrt(qq) * sqrt(cc))) AS max_score
-    FROM pd WHERE dotp / (sqrt(qq) * sqrt(cc)) >= {threshold}
+           MAX(score) AS max_score
+    FROM pd WHERE score >= {threshold}
     GROUP BY test_vec
     """
 
@@ -1664,12 +1482,8 @@ def d31_semantic_decontamination(t):
     blocked (bucket count scales with the corpus — candidate volume is
     corpus-linear, never test×train all-pairs), deduped across bands,
     verified by exact cosine."""
-    from data_engineer_project_spark.operators.similarity import (
-        banded_lsh_sigs,
-    )
-
     b = F.expr(CUR.SPARK_BUCKET.replace("doc_id", "vid"))
-    v = banded_lsh_sigs(t.embeddings, t.embeddings).withColumn("split_b", b)
+    v = SIM.banded_lsh_sigs(t.embeddings, t.embeddings).withColumn("split_b", b)
     test = v.filter(F.col("split_b") >= 90).select(
         F.col("vid").alias("test_vec"),
         F.col("vec").alias("qv"),
@@ -1684,11 +1498,9 @@ def d31_semantic_decontamination(t):
         "band",
         "bucket",
     )
-    from data_engineer_project_spark.operators.similarity import dot as _dot
-
     # banded_lsh_sigs hoists |v| per vector before the band explode;
     # one dot fold per verified candidate, same op order → bit-equal
-    score = _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn2"))
+    score = SIM.dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn2"))
     return (
         test.join(train, ["band", "bucket"])
         .select("test_vec", "train_vec", score.alias("score"))
@@ -2375,7 +2187,7 @@ def d43_bpe_pair_counts(t):
 @query(
     "d44_semantic_cluster_profile",
     f"""
-    WITH {kmeans_chain()}
+    WITH {SIM.kmeans_chain()}
     SELECT a.cid,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(d.n_chars) AS BIGINT) AS total_chars,
@@ -3741,35 +3553,16 @@ def d56_end_to_end_curation(t):
 
 # --------------------------------------------- product quantization
 
-_PQ_M = 4  # subspaces
-_PQ_DLEN = 16  # dims per subspace (embeddings are 64-d)
-_PQ_K = 16  # codes per subspace (4-bit codes)
-
-_PQ_SUBS = ",\n    ".join(
-    f"sub{m} AS (SELECT vec_id, embedding[{m * _PQ_DLEN + 1}:{(m + 1) * _PQ_DLEN}]"
-    f" AS embedding FROM embeddings)"
-    for m in range(_PQ_M)
-)
-_PQ_CHAINS = ",\n    ".join(
-    kmeans_chain(2, src=f"sub{m}", prefix=f"s{m}_", n_centroids=_PQ_K)
-    for m in range(_PQ_M)
-)
-_PQ_CODED = " UNION ALL ".join(
-    f"SELECT {m} AS subspace, vec_id, cid FROM s{m}_asg" for m in range(_PQ_M)
-)
-
 
 @query(
     "d57_pq_codebook",
     f"""
-    WITH {_PQ_SUBS},
-    {_PQ_CHAINS},
-    coded AS ({_PQ_CODED})
-    SELECT subspace,
+    WITH {PQ.codes_sql()}
+    SELECT m AS subspace,
            CAST(cid AS BIGINT) AS code,
            CAST(COUNT(*) AS BIGINT) AS n_vecs,
            CAST(SUM(vec_id) AS BIGINT) AS member_id_sum
-    FROM coded GROUP BY subspace, cid ORDER BY subspace, code
+    FROM codes GROUP BY m, cid ORDER BY subspace, code
     """,
     tags=("llm", "similarity", "quantization"),
 )
@@ -3803,7 +3596,7 @@ def d57_pq_codebook(t):
     per subspace via the parameterized kmeans_chain (same seeds,
     same quantized updates, same tie-breaks — the subspace tag only
     fuses the jobs)."""
-    _, codes, _ = _pq_train(t.embeddings)
+    _, codes, _ = PQ.pq_train(t.embeddings)
     return (
         codes.groupBy(
             F.col("m").alias("subspace"), F.col("cid").cast("long").alias("code")
@@ -3816,172 +3609,14 @@ def d57_pq_codebook(t):
     )
 
 
-def _pq_codebook_store(emb):
-    """Warehouse path for the trained PQ codebook, keyed like
-    similarity.materialized_centroids (round 11: the metadata-only
-    manifest + plan key when the corpus is file-backed — no vector
-    scan just to FIND the artifact; the count + id checksum +
-    position-weighted full-vector checksum fallback otherwise) plus
-    the PQ config — training is an OFFLINE job; repeated d57/d58/d77
-    invocations should read the few-KB artifact, not re-run the
-    subspace k-means (the s17 lesson, applied to the PQ layer)."""
-    mk = SIM.source_manifest_key(emb)
-    if mk is not None:
-        ident = mk
-    else:
-        n, s, v = SIM.corpus_fingerprint(emb)
-        ident = f"n{n}_s{s}_v{v}"
-    key = f"a{SIM.STORE_VERSION}_{ident}_m{_PQ_M}_k{_PQ_K}_i2"
-    return SIM.WAREHOUSE / "pq_codebook_store" / key
-
-
-def _pq_train(emb):
-    """The fused subspace-tagged PQ trainer behind d57/d58/d77:
-    returns (codebook DF (m, cid, cvec), corpus codes DF (m, vec_id,
-    sv, cid), cached subvector table (vec_id, m, sv)). One exploded
-    corpus scan; job count independent of the subspace count. The
-    trained codebook is a MATERIALIZED warehouse table (see
-    _pq_codebook_store) — first call per corpus trains and writes the
-    M*K-row artifact; later calls read a few-KB parquet scan and pay
-    only the encode join. Bit-equal either way: the integer-quantized
-    centroid sums round-trip through parquet doubles losslessly."""
-    from data_engineer_project_spark.operators.similarity import cosine
-
-    spark = emb.sparkSession
-    subs = tracked_persist(
-        emb.select(
-            "vec_id",
-            F.posexplode(
-                F.expr(
-                    f"transform(sequence(0, {_PQ_M - 1}),"
-                    f" m -> slice(embedding, m * {_PQ_DLEN} + 1, {_PQ_DLEN}))"
-                )
-            ).alias("m", "sv"),
-        )
-    )
-    cents = subs.filter(F.col("vec_id") < _PQ_K).select(
-        "m", F.col("vec_id").alias("cid"), F.col("sv").alias("cvec")
-    )
-
-    def assign(cent_df):
-        # norms hoisted out of the pair loop (the ivf_assign_n move):
-        # |sv| folds once per subvector, |cvec| once per codebook row;
-        # dot/(sqrt·sqrt) in the same op order keeps results bit-equal.
-        from data_engineer_project_spark.operators.similarity import (
-            dot,
-            norm,
-        )
-
-        cn = cent_df.select("m", "cid", "cvec", norm(F.col("cvec")).alias("cnrm"))
-        scored = (
-            subs.withColumn("qnrm", norm(F.col("sv")))
-            .join(F.broadcast(cn), "m")
-            .select(
-                "m",
-                "vec_id",
-                "sv",
-                "cid",
-                (
-                    dot(F.col("sv"), F.col("cvec"))
-                    / (F.col("qnrm") * F.col("cnrm"))
-                ).alias("cs"),
-            )
-        )
-        w = Window.partitionBy("m", "vec_id").orderBy(F.desc("cs"), F.asc("cid"))
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("m", "vec_id", "sv", "cid")
-        )
-
-    store = _pq_codebook_store(emb)
-    if (store / "_SUCCESS").exists():
-        cents = spark.read.parquet(str(store))
-    else:
-        q = float(SIM.KMEANS_QUANT)
-        for _ in range(2):
-            sums = (
-                assign(cents)
-                .select("m", "cid", F.posexplode("sv").alias("pos", "x"))
-                .groupBy("m", "cid", "pos")
-                .agg(
-                    F.sum(
-                        F.floor(
-                            F.col("x").cast("double") * F.lit(q)
-                        ).cast("long")
-                    ).alias("s")
-                )
-            )
-            upd = sums.groupBy("m", "cid").agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "s"))),
-                    lambda st: st["s"].cast("double"),
-                ).alias("cvec")
-            )
-            # materialize the <= M*K-row codebook between iterations
-            # (the kmeans_centroids pattern: bounded driver state,
-            # lineage cut)
-            cents = spark.createDataFrame(
-                [(r["m"], r["cid"], list(r["cvec"])) for r in upd.collect()],
-                "m int, cid bigint, cvec array<double>",
-            )
-        SIM.write_store_atomic(cents, store)
-        SIM.prune_store(store.parent)
-        cents = spark.read.parquet(str(store))
-    return cents, assign(cents), subs
-
-
-_ADC_SCALE = 1 << 30  # per-subspace cosine -> exact int (order-free sums)
-
-_D58_CODES = " UNION ALL ".join(
-    f"SELECT {m} AS m, vec_id, cid FROM s{m}_asg" for m in range(_PQ_M)
-)
-_D58_CBOOK = " UNION ALL ".join(
-    f"SELECT {m} AS m, cid, cvec FROM s{m}_c2" for m in range(_PQ_M)
-)
-_D58_QSUB = " UNION ALL ".join(
-    f"SELECT {m} AS m, vec_id AS query_id, embedding AS qv FROM sub{m}"
-    f" WHERE vec_id < 10"
-    for m in range(_PQ_M)
-)
-
-
 @query(
     "d58_ivfpq_adc_topk",
     f"""
-    WITH {kmeans_chain(2)},
-    qasg AS (SELECT vec_id, cid FROM (
-              SELECT vec_id, cid,
-                     ROW_NUMBER() OVER (PARTITION BY vec_id
-                                        ORDER BY dotp / (sqrt(vv) * sqrt(cc)) DESC, cid) AS rn
-              FROM apd2) WHERE rn = 1),
-    {_PQ_SUBS},
-    {_PQ_CHAINS},
-    codes AS ({_D58_CODES}),
-    cbook AS ({_D58_CBOOK}),
-    qsub AS ({_D58_QSUB}),
-    lutx AS (SELECT q.query_id, q.m, c.cid AS code,
-                    unnest(q.qv) AS qx, unnest(c.cvec) AS cx
-             FROM qsub q JOIN cbook c ON q.m = c.m),
-    lut AS (SELECT query_id, m, code,
-                   CAST(floor(
-                     (SUM(CAST(qx AS DOUBLE) * CAST(cx AS DOUBLE))
-                      / (sqrt(SUM(CAST(qx AS DOUBLE) * CAST(qx AS DOUBLE)))
-                         * sqrt(SUM(CAST(cx AS DOUBLE) * CAST(cx AS DOUBLE)))))
-                     * {_ADC_SCALE}) AS BIGINT) AS ics
-            FROM lutx GROUP BY query_id, m, code),
-    cand AS (SELECT qa.vec_id AS query_id, a.vec_id AS neighbor_id
-             FROM qasg qa JOIN asg a ON qa.cid = a.cid
-             WHERE qa.vec_id < 10 AND a.vec_id <> qa.vec_id),
-    adc AS (SELECT c.query_id, c.neighbor_id,
-                   CAST(SUM(l.ics) AS BIGINT) AS iscore
-            FROM cand c
-            JOIN codes k ON k.vec_id = c.neighbor_id
-            JOIN lut l ON l.query_id = c.query_id AND l.m = k.m
-                       AND l.code = k.cid
-            GROUP BY c.query_id, c.neighbor_id)
+    WITH {SIM.kmeans_chain(2)},
+    {PQ.pq_lut_sql()},
+    {PQ.adc_sql()}
     SELECT query_id, neighbor_id,
-           CAST(iscore AS DOUBLE) / {_ADC_SCALE} AS adc_score
+           CAST(iscore AS DOUBLE) / {PQ.ADC_SCALE} AS adc_score
     FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
                                        ORDER BY iscore DESC, neighbor_id) AS rn
           FROM adc)
@@ -4011,7 +3646,7 @@ def d58_ivfpq_adc_topk(t):
     aggregate with map-side partials. Nothing all-pairs, nothing
     floating-point per candidate. The oracle composes the identical
     coarse chain, per-subspace PQ chains, LUT, and integer ADC."""
-    adc = _ivfpq_adc(t)
+    adc = PQ.ivfpq_adc(t.embeddings)
     w = Window.partitionBy("query_id").orderBy(
         F.desc("iscore"), F.asc("neighbor_id")
     )
@@ -4021,80 +3656,12 @@ def d58_ivfpq_adc_topk(t):
         .select(
             "query_id",
             "neighbor_id",
-            (F.col("iscore").cast("double") / F.lit(float(_ADC_SCALE))).alias(
+            (F.col("iscore").cast("double") / F.lit(float(PQ.ADC_SCALE))).alias(
                 "adc_score"
             ),
         )
         .orderBy("query_id", "neighbor_id")
     )
-
-
-def _ivfpq_adc(t, nprobe: int = 1, with_probe_rank: bool = False):
-    """The shared IVF-PQ ADC scoring frame (query_id, neighbor_id,
-    iscore): coarse cell probe -> PQ-code candidates -> integer LUT
-    sums. d58 ranks it directly; d77 re-ranks its shortlist with
-    exact cosine; d82 sweeps ``nprobe`` (the query probes its nearest
-    n cells; the corpus stays in one cell, so each (query, neighbor)
-    candidate still arises at most once). ``with_probe_rank`` carries
-    the probed cell's 1-based rank onto every candidate, so a sweep
-    derives each narrower probe by FILTER instead of recomputing the
-    nprobe-independent corpus side (assignment, codes, LUT) per arm —
-    a candidate's cell is unique, so its probe_rank is single-valued
-    and filtering probe_rank <= n is bit-identical to nprobe=n."""
-    from data_engineer_project_spark.operators.similarity import cosine
-
-    emb = t.embeddings
-    # coarse quantizer (d14 machinery)
-    coarse = SIM.materialized_centroids(emb)
-    asg = SIM.ivf_assign(emb, coarse).select("vec_id", "cid")
-    qasg = SIM.ivf_assign_n(
-        emb.filter(F.col("vec_id") < 10),
-        coarse,
-        nprobe,
-        keep_rank=with_probe_rank,
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        "cid",
-        *(["probe_rank"] if with_probe_rank else []),
-    )
-    # PQ codebook + corpus codes (d57 machinery)
-    cbook, codes, subs = _pq_train(emb)
-    qsub = subs.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "m", F.col("sv").alias("qv")
-    )
-    lut = qsub.join(F.broadcast(cbook), "m").select(
-        "query_id",
-        "m",
-        F.col("cid").alias("code"),
-        F.floor(cosine(F.col("qv"), F.col("cvec")) * F.lit(float(_ADC_SCALE)))
-        .cast("long")
-        .alias("ics"),
-    )
-    cand = qasg.join(asg, "cid").filter(
-        F.col("vec_id") != F.col("query_id")
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        *(["probe_rank"] if with_probe_rank else []),
-    )
-    adc = (
-        cand.join(
-            codes.select(F.col("vec_id").alias("neighbor_id"), "m",
-                         F.col("cid").alias("code")),
-            "neighbor_id",
-        )
-        .join(F.broadcast(lut), ["query_id", "m", "code"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(
-            F.sum("ics").alias("iscore"),
-            *(
-                [F.min("probe_rank").alias("probe_rank")]
-                if with_probe_rank
-                else []
-            ),
-        )
-    )
-    return adc
 
 
 @query(
@@ -4278,27 +3845,17 @@ _SEMDEDUP_TAU = 0.4  # this synthetic corpus has no >0.52 cosine pairs
 @query(
     "d60_semdedup",
     f"""
-    WITH {kmeans_chain(2)},
+    WITH {SIM.kmeans_chain(2)},
     pairs AS (
-      SELECT a.vec_id AS id_a, b.vec_id AS id_b
+      SELECT a.vec_id AS id_a, b.vec_id AS id_b, ea.embedding AS qv,
+             eb.embedding AS cv
       FROM asg a JOIN asg b ON a.cid = b.cid AND a.vec_id < b.vec_id
+      JOIN embeddings ea ON ea.vec_id = a.vec_id
+      JOIN embeddings eb ON eb.vec_id = b.vec_id
     ),
-    px AS (
-      SELECT p.id_a, p.id_b, unnest(ea.embedding) AS xa, unnest(eb.embedding) AS xb
-      FROM pairs p
-      JOIN embeddings ea ON ea.vec_id = p.id_a
-      JOIN embeddings eb ON eb.vec_id = p.id_b
-    ),
-    pc AS (
-      SELECT id_a, id_b,
-             SUM(CAST(xa AS DOUBLE) * CAST(xb AS DOUBLE)) AS dotp,
-             SUM(CAST(xa AS DOUBLE) * CAST(xa AS DOUBLE)) AS aa,
-             SUM(CAST(xb AS DOUBLE) * CAST(xb AS DOUBLE)) AS bb
-      FROM px GROUP BY id_a, id_b
-    ),
+    {SIM.cosine_sql("pc", "pairs", ("id_a", "id_b"))},
     dropped AS (
-      SELECT DISTINCT id_b AS vec_id FROM pc
-      WHERE dotp / (sqrt(aa) * sqrt(bb)) >= {_SEMDEDUP_TAU}
+      SELECT DISTINCT id_b AS vec_id FROM pc WHERE score >= {_SEMDEDUP_TAU}
     )
     SELECT d.lang,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -4339,20 +3896,18 @@ def d60_semdedup(t):
     asg = SIM.ivf_assign(emb, cents).select("vec_id", "cid")
     a = asg.select(F.col("vec_id").alias("id_a"), "cid")
     b = asg.select(F.col("vec_id").alias("id_b"), F.col("cid").alias("cid_b"))
-    from data_engineer_project_spark.operators.similarity import dot, norm
-
     # norms computed once per VECTOR before the pair join fans each
     # vector into its cell's pairs (the ivf_assign_n hoist); same
     # dot/(sqrt(aa)·sqrt(bb)) op order → bit-equal with the oracle
     ea = emb.select(
         F.col("vec_id").alias("id_a"),
         F.col("embedding").alias("va"),
-        norm(F.col("embedding")).alias("na"),
+        SIM.norm(F.col("embedding")).alias("na"),
     )
     eb = emb.select(
         F.col("vec_id").alias("id_b"),
         F.col("embedding").alias("vb"),
-        norm(F.col("embedding")).alias("nb"),
+        SIM.norm(F.col("embedding")).alias("nb"),
     )
     pairs = (
         a.join(b, (a.cid == b.cid_b) & (a.id_a < b.id_b))
@@ -4362,7 +3917,7 @@ def d60_semdedup(t):
     )
     dropped = (
         pairs.filter(
-            dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+            SIM.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
             >= _SEMDEDUP_TAU
         )
         .select(F.col("id_b").alias("vec_id"))
@@ -6794,37 +6349,9 @@ def _ivfpq_rerank_oracle() -> str:
     the d09 exact-cosine fold, and the final top-3 ranks on the
     exact score."""
     return f"""
-    WITH {kmeans_chain(2)},
-    qasg AS (SELECT vec_id, cid FROM (
-              SELECT vec_id, cid,
-                     ROW_NUMBER() OVER (PARTITION BY vec_id
-                                        ORDER BY dotp / (sqrt(vv) * sqrt(cc)) DESC, cid) AS rn
-              FROM apd2) WHERE rn = 1),
-    {_PQ_SUBS},
-    {_PQ_CHAINS},
-    codes AS ({_D58_CODES}),
-    cbook AS ({_D58_CBOOK}),
-    qsub AS ({_D58_QSUB}),
-    lutx AS (SELECT q.query_id, q.m, c.cid AS code,
-                    unnest(q.qv) AS qx, unnest(c.cvec) AS cx
-             FROM qsub q JOIN cbook c ON q.m = c.m),
-    lut AS (SELECT query_id, m, code,
-                   CAST(floor(
-                     (SUM(CAST(qx AS DOUBLE) * CAST(cx AS DOUBLE))
-                      / (sqrt(SUM(CAST(qx AS DOUBLE) * CAST(qx AS DOUBLE)))
-                         * sqrt(SUM(CAST(cx AS DOUBLE) * CAST(cx AS DOUBLE)))))
-                     * {_ADC_SCALE}) AS BIGINT) AS ics
-            FROM lutx GROUP BY query_id, m, code),
-    cand AS (SELECT qa.vec_id AS query_id, a.vec_id AS neighbor_id
-             FROM qasg qa JOIN asg a ON qa.cid = a.cid
-             WHERE qa.vec_id < 10 AND a.vec_id <> qa.vec_id),
-    adc AS (SELECT c.query_id, c.neighbor_id,
-                   CAST(SUM(l.ics) AS BIGINT) AS iscore
-            FROM cand c
-            JOIN codes k ON k.vec_id = c.neighbor_id
-            JOIN lut l ON l.query_id = c.query_id AND l.m = k.m
-                       AND l.code = k.cid
-            GROUP BY c.query_id, c.neighbor_id),
+    WITH {SIM.kmeans_chain(2)},
+    {PQ.pq_lut_sql()},
+    {PQ.adc_sql()},
     short AS (SELECT query_id, neighbor_id, iscore,
                      ROW_NUMBER() OVER (PARTITION BY query_id
                                         ORDER BY iscore DESC, neighbor_id)
@@ -6836,16 +6363,10 @@ def _ivfpq_rerank_oracle() -> str:
             FROM sl s
             JOIN embeddings eq ON eq.vec_id = s.query_id
             JOIN embeddings en ON en.vec_id = s.neighbor_id),
-    ex2 AS (SELECT query_id, neighbor_id, iscore, adc_rank,
-                   unnest(qv) AS qx, unnest(cv) AS cx FROM prs),
-    dots2 AS (SELECT query_id, neighbor_id, iscore, adc_rank,
-                     SUM(CAST(qx AS DOUBLE) * CAST(cx AS DOUBLE)) AS dotp,
-                     SUM(CAST(qx AS DOUBLE) * CAST(qx AS DOUBLE)) AS qq,
-                     SUM(CAST(cx AS DOUBLE) * CAST(cx AS DOUBLE)) AS cc
-              FROM ex2 GROUP BY query_id, neighbor_id, iscore, adc_rank),
+    {SIM.cosine_sql("dots2", "prs", ("query_id", "neighbor_id", "iscore", "adc_rank"))},
     rr AS (SELECT query_id, neighbor_id, adc_rank,
-                  CAST(iscore AS DOUBLE) / {_ADC_SCALE} AS adc_score,
-                  dotp / (sqrt(qq) * sqrt(cc)) AS exact_cos
+                  CAST(iscore AS DOUBLE) / {PQ.ADC_SCALE} AS adc_score,
+                  score AS exact_cos
            FROM dots2)
     SELECT query_id, neighbor_id,
            CAST(adc_rank AS BIGINT) AS adc_rank, adc_score, exact_cos,
@@ -6884,25 +6405,23 @@ def d77_ivfpq_rerank_topk(t):
     vector table on its key — at billion-vector scale that is the
     point: full vectors are touched only for queries x 10 rows, so
     they can live in slow storage while codes + LUT stay hot."""
-    from data_engineer_project_spark.operators.similarity import dot, norm
-
-    adc = _ivfpq_adc(t)
+    emb = t.embeddings
+    adc = PQ.ivfpq_adc(emb)
     w_adc = Window.partitionBy("query_id").orderBy(
         F.desc("iscore"), F.asc("neighbor_id")
     )
     sl = adc.withColumn("adc_rank", F.row_number().over(w_adc)).filter(
         F.col("adc_rank") <= _D77_SHORTLIST
     )
-    emb = t.embeddings
     qv = emb.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qv"),
-        norm(F.col("embedding")).alias("qnrm"),
+        SIM.norm(F.col("embedding")).alias("qnrm"),
     )
     cv = emb.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("cv"),
-        norm(F.col("embedding")).alias("cnrm"),
+        SIM.norm(F.col("embedding")).alias("cnrm"),
     )
     rr = (
         sl.join(qv, "query_id")
@@ -6911,11 +6430,11 @@ def d77_ivfpq_rerank_topk(t):
             "query_id",
             "neighbor_id",
             F.col("adc_rank").cast("long").alias("adc_rank"),
-            (F.col("iscore").cast("double") / F.lit(float(_ADC_SCALE))).alias(
+            (F.col("iscore").cast("double") / F.lit(float(PQ.ADC_SCALE))).alias(
                 "adc_score"
             ),
             (
-                dot(F.col("qv"), F.col("cv"))
+                SIM.dot(F.col("qv"), F.col("cv"))
                 / (F.col("qnrm") * F.col("cnrm"))
             ).alias("exact_cos"),
         )
@@ -7898,33 +7417,15 @@ _D82_K = 10  # shortlist depth scored for recall (d77's shortlist size)
 @query(
     "d82_ivfpq_recall",
     f"""
-    WITH {kmeans_chain(2)},
-    qasgp AS (SELECT vec_id, cid, rn FROM (
-              SELECT vec_id, cid,
-                     ROW_NUMBER() OVER (PARTITION BY vec_id
-                                        ORDER BY dotp / (sqrt(vv) * sqrt(cc)) DESC, cid) AS rn
-              FROM apd2 WHERE vec_id < 10) WHERE rn <= 2),
-    {_PQ_SUBS},
-    {_PQ_CHAINS},
-    codes AS ({_D58_CODES}),
-    cbook AS ({_D58_CBOOK}),
-    qsub AS ({_D58_QSUB}),
-    lutx AS (SELECT q.query_id, q.m, c.cid AS code,
-                    unnest(q.qv) AS qx, unnest(c.cvec) AS cx
-             FROM qsub q JOIN cbook c ON q.m = c.m),
-    lut AS (SELECT query_id, m, code,
-                   CAST(floor(
-                     (SUM(CAST(qx AS DOUBLE) * CAST(cx AS DOUBLE))
-                      / (sqrt(SUM(CAST(qx AS DOUBLE) * CAST(qx AS DOUBLE)))
-                         * sqrt(SUM(CAST(cx AS DOUBLE) * CAST(cx AS DOUBLE)))))
-                     * {_ADC_SCALE}) AS BIGINT) AS ics
-            FROM lutx GROUP BY query_id, m, code),
+    WITH {SIM.kmeans_chain(2)},
+    {SIM.nearest_cells_sql("qasgp", "apd2", 2)},
+    {PQ.pq_lut_sql()},
     nprobes AS (SELECT 1 AS np UNION ALL SELECT 2),
     cand AS (SELECT p.np, qa.vec_id AS query_id, a.vec_id AS neighbor_id
              FROM nprobes p
              JOIN qasgp qa ON qa.rn <= p.np
              JOIN asg a ON qa.cid = a.cid
-             WHERE a.vec_id <> qa.vec_id),
+             WHERE qa.vec_id < 10 AND a.vec_id <> qa.vec_id),
     adcx AS (SELECT c.np, c.query_id, c.neighbor_id,
                     CAST(SUM(l.ics) AS BIGINT) AS iscore
              FROM cand c
@@ -7941,18 +7442,11 @@ _D82_K = 10  # shortlist depth scored for recall (d77's shortlist size)
     bfp AS (SELECT q.query_id, e.vec_id AS neighbor_id,
                    q.qv, e.embedding AS cv
             FROM bfq q, embeddings e WHERE e.vec_id <> q.query_id),
-    bfx AS (SELECT query_id, neighbor_id,
-                   unnest(qv) AS qx, unnest(cv) AS cx FROM bfp),
-    bfd AS (SELECT query_id, neighbor_id,
-                   SUM(CAST(qx AS DOUBLE) * CAST(cx AS DOUBLE)) AS dotp,
-                   SUM(CAST(qx AS DOUBLE) * CAST(qx AS DOUBLE)) AS qq,
-                   SUM(CAST(cx AS DOUBLE) * CAST(cx AS DOUBLE)) AS cc
-            FROM bfx GROUP BY query_id, neighbor_id),
+    {SIM.cosine_sql("bfd", "bfp", ("query_id", "neighbor_id"))},
     bf AS (SELECT query_id, neighbor_id FROM (
             SELECT query_id, neighbor_id,
                    ROW_NUMBER() OVER (PARTITION BY query_id
-                                      ORDER BY dotp / (sqrt(qq) * sqrt(cc)) DESC,
-                                               neighbor_id) AS rn
+                                      ORDER BY score DESC, neighbor_id) AS rn
             FROM bfd) WHERE rn <= {_D82_K}),
     hits AS (SELECT s.np, CAST(COUNT(*) AS BIGINT) AS n_hits
              FROM sl s JOIN bf b USING (query_id, neighbor_id)
@@ -8000,7 +7494,7 @@ def d82_ivfpq_recall(t):
     # is unique, so rank <= np IS the nprobe=np candidate set), so the
     # nprobe-independent corpus side (assignment, codes, LUT) runs
     # once, not per arm.
-    adc = tracked_persist(_ivfpq_adc(t, nprobe=2, with_probe_rank=True))
+    adc = tracked_persist(PQ.ivfpq_adc(emb, nprobe=2, with_probe_rank=True))
     arms = []
     for np_ in (1, 2):
         w = Window.partitionBy("query_id").orderBy(
@@ -8056,15 +7550,7 @@ _D83_K = 3  # hard negatives kept per query
     pairs AS (SELECT q.query_id, q.qlabel, c.neighbor_id, c.clabel,
                      q.qv, c.cv
               FROM q JOIN c ON c.clabel <> q.qlabel),
-    pex AS (SELECT query_id, qlabel, neighbor_id, clabel,
-                   unnest(qv) AS qx, unnest(cv) AS cx FROM pairs),
-    pd AS (SELECT query_id, qlabel, neighbor_id, clabel,
-                  SUM(CAST(qx AS DOUBLE) * CAST(cx AS DOUBLE)) AS dotp,
-                  SUM(CAST(qx AS DOUBLE) * CAST(qx AS DOUBLE)) AS qq,
-                  SUM(CAST(cx AS DOUBLE) * CAST(cx AS DOUBLE)) AS cc
-           FROM pex GROUP BY query_id, qlabel, neighbor_id, clabel),
-    scored AS (SELECT query_id, qlabel, neighbor_id, clabel,
-                      dotp / (sqrt(qq) * sqrt(cc)) AS score FROM pd)
+    {SIM.cosine_sql("scored", "pairs", ("query_id", "qlabel", "neighbor_id", "clabel"))}
     SELECT query_id, CAST(qlabel AS INT) AS query_label,
            neighbor_id, CAST(clabel AS INT) AS negative_label,
            CAST(rn AS BIGINT) AS rank, score
@@ -8093,30 +7579,15 @@ def d83_hard_negative_mining(t):
     join (d14) instead of the brute-force scan: nothing here is
     all-pairs in the corpus."""
     emb = t.embeddings
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qvec"),
-        F.col("label").alias("qlabel"),
-        SIM.norm(F.col("embedding")).alias("qnrm"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("cvec"),
-        F.col("label").alias("clabel"),
-        SIM.norm(F.col("embedding")).alias("cnrm"),
-    )
     scored = (
-        c.crossJoin(F.broadcast(q))
+        SIM.panel(emb.filter(F.col("vec_id") < 10), emb, carry=("label",))
         .filter(F.col("clabel") != F.col("qlabel"))
         .select(
             "query_id",
             "qlabel",
             "neighbor_id",
             "clabel",
-            (
-                SIM.dot(F.col("qvec"), F.col("cvec"))
-                / (F.col("qnrm") * F.col("cnrm"))
-            ).alias("score"),
+            SIM.panel_score().alias("score"),
         )
     )
     top = TK.grouped_topk(
@@ -8145,7 +7616,7 @@ def d83_hard_negative_mining(t):
 @query(
     "d84_cluster_balanced_sampling",
     f"""
-    WITH {kmeans_chain(2)},
+    WITH {SIM.kmeans_chain(2)},
     hist AS (
       SELECT a.cid AS cell_id, {CUR.ORACLE_BUCKET64K} AS bkt, COUNT(*) AS n,
              SUM(CAST(ceil(length(text) / 4.0) AS BIGINT)) AS tokens
@@ -8333,23 +7804,16 @@ def e27_cusum_changepoint(t):
 
 @query(
     "d85_embedding_alignment_eval",
-    """
+    f"""
     WITH q AS (SELECT vec_id AS query_id, embedding AS qv, label AS qlabel
                FROM embeddings WHERE vec_id < 10),
     c AS (SELECT vec_id AS neighbor_id, embedding AS cv, label AS clabel
           FROM embeddings),
     pairs AS (SELECT q.query_id, q.qlabel, c.neighbor_id, c.clabel, q.qv, c.cv
               FROM q JOIN c ON c.neighbor_id <> q.query_id),
-    pex AS (SELECT query_id, qlabel, neighbor_id, clabel,
-                   unnest(qv) AS qx, unnest(cv) AS cx FROM pairs),
-    pd AS (SELECT query_id, qlabel, neighbor_id, clabel,
-                  SUM(CAST(qx AS DOUBLE) * CAST(cx AS DOUBLE)) AS dotp,
-                  SUM(CAST(qx AS DOUBLE) * CAST(qx AS DOUBLE)) AS qq,
-                  SUM(CAST(cx AS DOUBLE) * CAST(cx AS DOUBLE)) AS cc
-           FROM pex GROUP BY query_id, qlabel, neighbor_id, clabel),
+    {SIM.cosine_sql("pd", "pairs", ("query_id", "qlabel", "neighbor_id", "clabel"))},
     scored AS (SELECT qlabel, clabel,
-                      CAST(round(dotp / (sqrt(qq) * sqrt(cc)), 9)
-                           AS DECIMAL(18,9)) AS cos9
+                      CAST(round(score, 9) AS DECIMAL(18,9)) AS cos9
                FROM pd),
     rolled AS (
       SELECT qlabel,
@@ -8390,27 +7854,11 @@ def d85_embedding_alignment_eval(t):
     past the 10-query panel and collapses map-side to labels x panel
     rows; nothing all-pairs in the corpus."""
     emb = t.embeddings
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qvec"),
-        F.col("label").alias("qlabel"),
-        SIM.norm(F.col("embedding")).alias("qnrm"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("cvec"),
-        F.col("label").alias("clabel"),
-        SIM.norm(F.col("embedding")).alias("cnrm"),
-    )
-    cos9 = F.round(
-        SIM.dot(F.col("qvec"), F.col("cvec"))
-        / (F.col("qnrm") * F.col("cnrm")),
-        9,
-    ).cast("decimal(18,9)")
+    cos9 = F.round(SIM.panel_score(), 9).cast("decimal(18,9)")
     same = F.col("qlabel") == F.col("clabel")
     zero = F.lit(0).cast("decimal(18,9)")
     rolled = (
-        c.crossJoin(F.broadcast(q))
+        SIM.panel(emb.filter(F.col("vec_id") < 10), emb, carry=("label",))
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("qlabel", same.alias("is_same"), cos9.alias("cos9"))
         .groupBy("qlabel")
@@ -8439,24 +7887,18 @@ def d85_embedding_alignment_eval(t):
 
 @query(
     "d86_knn_label_probe",
-    """
+    f"""
     WITH q AS (SELECT vec_id AS query_id, embedding AS qv, label AS qlabel
                FROM embeddings WHERE vec_id < 10),
     c AS (SELECT vec_id AS neighbor_id, embedding AS cv, label AS clabel
           FROM embeddings),
     pairs AS (SELECT q.query_id, q.qlabel, c.neighbor_id, c.clabel, q.qv, c.cv
               FROM q JOIN c ON c.neighbor_id <> q.query_id),
-    pex AS (SELECT query_id, qlabel, neighbor_id, clabel,
-                   unnest(qv) AS qx, unnest(cv) AS cx FROM pairs),
-    pd AS (SELECT query_id, qlabel, neighbor_id, clabel,
-                  SUM(CAST(qx AS DOUBLE) * CAST(cx AS DOUBLE)) AS dotp,
-                  SUM(CAST(qx AS DOUBLE) * CAST(qx AS DOUBLE)) AS qq,
-                  SUM(CAST(cx AS DOUBLE) * CAST(cx AS DOUBLE)) AS cc
-           FROM pex GROUP BY query_id, qlabel, neighbor_id, clabel),
+    {SIM.cosine_sql("pd", "pairs", ("query_id", "qlabel", "neighbor_id", "clabel"))},
     topk AS (SELECT query_id, qlabel, neighbor_id, clabel FROM (
                SELECT *, ROW_NUMBER() OVER (
                  PARTITION BY query_id
-                 ORDER BY dotp / (sqrt(qq) * sqrt(cc)) DESC, neighbor_id) AS rn
+                 ORDER BY score DESC, neighbor_id) AS rn
                FROM pd) WHERE rn <= 5),
     votes AS (SELECT query_id, qlabel, clabel, COUNT(*) AS v
               FROM topk GROUP BY 1, 2, 3),

@@ -41,6 +41,7 @@ from data_engineer_project_spark.operators.neardup import (
     collapse_exact,
     components_sql,
     dhash_band_pairs,
+    dhash_bands,
     reps_sql,
     set_jaccard_pairs,
     set_jaccard_sql,
@@ -1126,19 +1127,7 @@ def m17_image_query_retrieval(t):
         return df.select(
             F.col("doc_id").alias(id_alias),
             F.col("phash").alias(hash_alias),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(bi).alias("bi"),
-                            F.shiftright("phash", 16 * bi)
-                            .bitwiseAND(F.lit(65535))
-                            .alias("bk"),
-                        )
-                        for bi in range(4)
-                    ]
-                )
-            ).alias("band"),
+            dhash_bands().alias("band"),
         ).select(id_alias, hash_alias, "band.bi", "band.bk")
 
     qp = banded(h.filter(F.col("doc_id") < 10), "query_doc", "q_phash")

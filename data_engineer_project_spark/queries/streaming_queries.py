@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from data_engineer_project_spark.functions.ordering import OHLC_KEY_SQL
 from data_engineer_project_spark.functions.text import STOPWORDS as T_STOPWORDS
 from data_engineer_project_spark.operators import curation as CUR
+from data_engineer_project_spark.operators import similarity as SIM
 from data_engineer_project_spark.operators.cache import tracked_persist
 from data_engineer_project_spark.queries.catalog import query
 from data_engineer_project_spark.streaming import (
@@ -741,15 +742,10 @@ def s16_stream_curation_front_door(t):
     )
 
 
-from data_engineer_project_spark.queries.llm_pipeline import (  # noqa: E402
-    kmeans_chain,
-)
-
-
 @query(
     "s17_stream_ivf_cell_ingestion",
     f"""
-    WITH {kmeans_chain(2)}
+    WITH {SIM.kmeans_chain(2)}
     SELECT cid,
            CAST(COUNT(*) AS BIGINT) AS n_vecs,
            CAST(SUM(vec_id) AS BIGINT) AS id_checksum
@@ -778,8 +774,6 @@ def s17_stream_ivf_cell_ingestion(t):
     same policy-offline / apply-in-stream split as s13/s14."""
     import math
 
-    from data_engineer_project_spark.operators import similarity as SIM
-    from data_engineer_project_spark.operators.similarity import dot, norm
     from data_engineer_project_spark.streaming import read_embedding_stream
 
     cents = SIM.materialized_centroids(t.embeddings).collect()
@@ -801,7 +795,7 @@ def s17_stream_ivf_cell_ingestion(t):
         *[
             F.struct(
                 (
-                    dot(
+                    SIM.dot(
                         F.col("embedding"),
                         F.array(*[F.lit(float(x)) for x in r["cvec"]]),
                     )
@@ -814,7 +808,7 @@ def s17_stream_ivf_cell_ingestion(t):
     )
     stream = (
         read_embedding_stream(t._spark, t._sf_dir)
-        .withColumn("qnrm", norm(F.col("embedding")))
+        .withColumn("qnrm", SIM.norm(F.col("embedding")))
         .withColumn("cid", -F.array_max(scored)["ncid"])
     )
     tally = stream.groupBy("cid").agg(

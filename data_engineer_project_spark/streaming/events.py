@@ -198,10 +198,6 @@ def _cents(col: str = "value"):
     return F.round(F.col(col) * 100).cast("long")
 
 
-def _dollars(cents_col):
-    return (cents_col.cast("double") / 100.0).alias  # caller aliases
-
-
 def tumbling_counts(events: DataFrame, watermark: str = "30 minutes") -> DataFrame:
     """Tumbling 1-hour windows per event_type: count + exact total.
 

@@ -84,6 +84,18 @@ _RECENTLY_TOUCHED = {
     "d84_cluster_balanced_sampling",
     "s13_stream_mixture_gate",
     "s16_stream_curation_front_door",
+    # ported to the retrieval twins (operators/similarity.py, pq.py)
+    "d14_ann_ivf",
+    "d37_ann_ivf_nprobe2",
+    "d44_semantic_cluster_profile",
+    "d57_pq_codebook",
+    "d58_ivfpq_adc_topk",
+    "d60_semdedup",
+    "d77_ivfpq_rerank_topk",
+    "d83_hard_negative_mining",
+    "d85_embedding_alignment_eval",
+    "m17_image_query_retrieval",
+    "s17_stream_ivf_cell_ingestion",
 }
 
 _DEFAULT_LANE = set(BENCH_QUERIES) | set(SPOT_CHECK_QUERIES) | _RECENTLY_TOUCHED

@@ -127,11 +127,11 @@ def test_d57_codes_partition_the_corpus_and_are_nearest(spark, sf_dir):
     argmax-cosine centroid (ties to lowest cid)."""
     import numpy as np
 
-    from data_engineer_project_spark.queries.llm_pipeline import (
-        _PQ_DLEN,
-        _PQ_K,
-        _PQ_M,
-        _pq_train,
+    from data_engineer_project_spark.operators.pq import (
+        PQ_DLEN as _PQ_DLEN,
+        PQ_K as _PQ_K,
+        PQ_M as _PQ_M,
+        pq_train as _pq_train,
     )
     from data_engineer_project_spark.sources.registry import load_tables
 
@@ -185,11 +185,11 @@ def test_d58_adc_scores_and_topk_re_derive_with_numpy(spark, sf_dir):
     import numpy as np
 
     from data_engineer_project_spark.operators import similarity as SIM
-    from data_engineer_project_spark.queries.llm_pipeline import (
-        _ADC_SCALE,
-        _PQ_DLEN,
-        _PQ_M,
-        _pq_train,
+    from data_engineer_project_spark.operators.pq import (
+        ADC_SCALE as _ADC_SCALE,
+        PQ_DLEN as _PQ_DLEN,
+        PQ_M as _PQ_M,
+        pq_train as _pq_train,
     )
     from data_engineer_project_spark.sources.registry import load_tables
 

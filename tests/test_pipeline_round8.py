@@ -48,10 +48,8 @@ def test_d82_recall_is_consistent_and_numpy_grounded(spark, sf_dir):
 
     # independent ground truth: n_hits(np) must equal the overlap of
     # the engine's ADC shortlist with numpy's exact top-10
-    from data_engineer_project_spark.queries.llm_pipeline import (
-        _D82_K,
-        _ivfpq_adc,
-    )
+    from data_engineer_project_spark.operators.pq import ivfpq_adc
+    from data_engineer_project_spark.queries.llm_pipeline import _D82_K
     from data_engineer_project_spark.sources.registry import load_tables
     from pyspark.sql import Window
 
@@ -62,7 +60,7 @@ def test_d82_recall_is_consistent_and_numpy_grounded(spark, sf_dir):
             F.desc("iscore"), F.asc("neighbor_id")
         )
         sl = (
-            _ivfpq_adc(t, nprobe=np_)
+            ivfpq_adc(t.embeddings, nprobe=np_)
             .withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= _D82_K)
             .select("query_id", "neighbor_id")

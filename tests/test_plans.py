@@ -289,6 +289,9 @@ def test_no_forced_broadcast_of_unbounded_frames():
         ("queries/llm_pipeline.py", "vdir"),  # <= dim-row direction
         ("operators/linalg.py", "sa"),  # d column sums
         ("operators/linalg.py", "sb"),
+        ("operators/pq.py", "cbook"),  # M*K PQ codebook
+        ("operators/pq.py", "cn"),  # M*K codebook + norms
+        ("operators/pq.py", "lut"),  # queries x M x K LUT
         ("operators/retrieval.py", "stats"),  # 1-row corpus stats
         ("operators/similarity.py", "q"),  # bounded query set
         ("operators/similarity.py", "c"),  # ~sqrt(N) centroids
@@ -310,7 +313,6 @@ def test_no_forced_broadcast_of_unbounded_frames():
         ("queries/healthcare.py", "mad"),  # hq34: 1-row MAD
         ("queries/healthcare.py", "band"),  # hq35: <= #risk-tiers rows
         ("queries/healthcare.py", "pr"),  # hq35: provider dimension
-        ("queries/llm_pipeline.py", "q"),  # d83: bounded 10-query panel
         ("queries/llm_pipeline.py", "queries"),  # d86: bounded 10-query panel
         ("queries/llm_pipeline.py", "spine"),  # e27: calendar-bounded day spine
         ("queries/llm_pipeline.py", "sketch_df"),  # 1-row sketch
@@ -326,7 +328,6 @@ def test_no_forced_broadcast_of_unbounded_frames():
         ("queries/llm_pipeline.py", "st"),  # per-type stats
         ("queries/llm_pipeline.py", "cut"),  # per-source cutoffs
         ("queries/llm_pipeline.py", "types"),  # event-type dim
-        ("queries/llm_pipeline.py", "cbook"),  # M*K PQ codebook
         ("queries/llm_pipeline.py", "bitset"),  # d70: <= 2048-word Bloom
         ("queries/llm_pipeline.py", "cms"),  # d71: <= d*w = 3072 counters
         ("queries/llm_pipeline.py", "med"),  # d79: per-lang medians
@@ -346,9 +347,7 @@ def test_no_forced_broadcast_of_unbounded_frames():
         ("queries/llm_pipeline.py", "qterms"),  # d94: 10-doc x4-term panel
         ("queries/llm_pipeline.py", "norm"),  # d93: 1-row normalizer sums
         ("queries/llm_pipeline.py", "tend"),  # e26: 1-row study end
-        ("queries/llm_pipeline.py", "cn"),  # M*K codebook + norms
         ("queries/llm_pipeline.py", "cent_df"),  # ~sqrt(N) centroids
-        ("queries/llm_pipeline.py", "lut"),  # queries x M x K LUT
         ("queries/practice.py", "t"),  # small dim tables
         ("queries/practice.py", "p"),
         ("queries/practice.py", "n"),  # 1-row counts

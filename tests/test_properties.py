@@ -528,6 +528,68 @@ def test_s14_integer_cutoff_equals_quadratic_two_sigma(counts):
         assert (c >= c_star) == quadratic, (c, c_star, counts)
 
 
+def _cosine_both_engines(spark, vecs):
+    """Every ordered pair (a, b) of ``vecs`` scored by DuckDB through
+    ``similarity.cosine_sql`` and by Spark through ``similarity.cosine``,
+    both over float32 arrays; returns (duckdb scores, Spark frame)."""
+    import duckdb
+
+    from data_engineer_project_spark.operators.similarity import cosine, cosine_sql
+
+    pairs = [
+        (a, b, vecs[a], vecs[b]) for a in range(len(vecs)) for b in range(len(vecs))
+    ]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE pairs (a INT, b INT, qv FLOAT[], cv FLOAT[])")
+    con.executemany("INSERT INTO pairs VALUES (?, ?, ?, ?)", pairs)
+    duck = {
+        (a, b): s
+        for a, b, s in con.execute(
+            f"WITH {cosine_sql('cs', 'pairs', ('a', 'b'))} SELECT a, b, score FROM cs"
+        ).fetchall()
+    }
+    con.close()
+    df = spark.createDataFrame(pairs, "a int, b int, qv array<float>, cv array<float>")
+    return duck, df.select(
+        "a", "b", cosine(F.col("qv"), F.col("cv")).alias("score")
+    )
+
+
+def test_cosine_sql_matches_spark_cosine_bit_for_bit(spark):
+    """The DuckDB twin ``cosine_sql`` and Spark's ``cosine`` give the
+    same double, bit for bit, on generated float32 vectors with
+    negative components, unequal norms (scales 1e-3 to 50) and one
+    repeated vector (scored against itself and its copy)."""
+    import numpy as np
+
+    rng = np.random.default_rng(12)
+    vecs = [
+        [float(x) for x in (rng.standard_normal(24) * scale).astype(np.float32)]
+        for scale in (1.0, 1e-3, 50.0, 7.5)
+    ]
+    vecs.append(list(vecs[0]))
+    assert any(x < 0 for v in vecs for x in v)
+    duck, df = _cosine_both_engines(spark, vecs)
+    got = {(r["a"], r["b"]): r["score"] for r in df.collect()}
+    assert len(got) == len(duck) == len(vecs) ** 2
+    assert {k: v.hex() for k, v in got.items()} == {
+        k: v.hex() for k, v in duck.items()
+    }
+    assert got[(0, 4)] == got[(0, 0)]
+
+
+def test_cosine_zero_norm_is_null_in_duckdb_and_raises_in_spark(spark):
+    """A zero-norm vector is where the engines part: DuckDB scores
+    0.0 / 0.0 as NULL, while Spark (ANSI mode, the default) raises
+    DIVIDE_BY_ZERO. So a zero-norm embedding fails a Spark retrieval
+    query instead of silently returning rows that the oracle drops."""
+    duck, df = _cosine_both_engines(spark, [[0.0, 0.0], [1.0, -2.0]])
+    assert duck[(0, 1)] is None and duck[(0, 0)] is None
+    assert duck[(1, 1)] is not None and duck[(1, 0)] is None
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        df.collect()
+
+
 def test_plan_lsh_bands_properties():
     """S-curve planner: b·r always equals the signature size; the
     operating split for the pipeline default (8 hashes @ 0.5) is the
