@@ -1,12 +1,13 @@
-"""Data-release governance operators.
+"""Data-release governance operators, in both engines.
 
-``small_cell_suppress`` generalizes the CMS small-cell rule hq45
-introduced (cells under k members suppressed, plus one complementary
-round per stratum so a stratum total with exactly ONE suppressed cell
-cannot be subtracted back) into a composable operator over ANY
-aggregated cell table — the round-8 verdict's ask: member-grain
-healthcare outputs should be able to bolt the release gate on without
-re-implementing the rule.
+``small_cell_suppress`` is the CMS small-cell release gate (cells under
+``MIN_CELL`` members suppressed, plus one complementary round per
+stratum so a stratum total with exactly ONE suppressed cell cannot be
+subtracted back) as a composable operator over ANY aggregated cell
+table; ``small_cell_suppress_sql`` is its DuckDB twin. hq45 (county x
+measure), hq46 (status rosters), hq47 (plan x county cost) and hq48
+(per-plan outliers, global stratum) bolt the gate onto their cell
+tables through this pair instead of re-implementing the rule.
 
 Scale notes (100 TB): suppression runs on an already-aggregated cell
 table (geography × measure × plan-sized — bounded, nowhere near data
@@ -21,10 +22,14 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# The CMS cell-size rule for beneficiary-level derivatives: a cell
+# releases only with at least this many members.
+MIN_CELL = 11
+
 
 def small_cell_suppress(
     cells: DataFrame,
-    k: int = 11,
+    k: int = MIN_CELL,
     stratum_cols: Sequence[str] = ("county",),
     cell_cols: Sequence[str] = ("measure_id",),
     n_col: str = "n",
@@ -78,3 +83,48 @@ def small_cell_suppress(
         .when(is_comp, F.lit("complementary"))
         .alias("suppression"),
     )
+
+
+def small_cell_suppress_sql(
+    cells: str,
+    stratum_cols: Sequence[str],
+    cell_cols: Sequence[str],
+    mask_cols: Sequence[str] = (),
+) -> str:
+    """``small_cell_suppress`` at the default ``k`` over the ``cells``
+    CTE (count column ``n``): CTEs ``prim``, ``cnt`` and ``comp``, then
+    the SELECT of the Spark operator's columns, unordered. An empty
+    ``stratum_cols`` is one global stratum."""
+    cols = (*stratum_cols, *cell_cols)
+    keys = ", ".join(f"p.{c}" for c in cols)
+    strata = "".join(f"{c}, " for c in stratum_cols)
+    group, over = "", ""
+    if stratum_cols:
+        group = f" GROUP BY {', '.join(stratum_cols)}"
+        over = f"PARTITION BY {', '.join(f'p.{c}' for c in stratum_cols)} "
+    on = " AND ".join(f"c.{c} = p.{c}" for c in stratum_cols) or "TRUE"
+    match = " AND ".join(f"co.{c} = p.{c}" for c in cols)
+    order = ", ".join(f"p.{c}" for c in ("n", *cell_cols))
+    released = "".join(
+        f"CASE WHEN p.is_primary OR co.rn_small = 1 THEN NULL ELSE p.{c} END"
+        f" AS released_{c},\n           "
+        for c in ("n", *mask_cols)
+    )
+    return f"""prim AS (SELECT *, n < {MIN_CELL} AS is_primary FROM {cells}),
+    cnt AS (SELECT {strata}SUM(CASE WHEN is_primary THEN 1 ELSE 0 END)
+                   AS n_prim FROM prim{group}),
+    comp AS (
+      SELECT {keys},
+             ROW_NUMBER() OVER ({over}ORDER BY {order}) AS rn_small
+      FROM prim p JOIN cnt c ON {on}
+      WHERE NOT p.is_primary AND c.n_prim = 1
+    )
+    SELECT {keys},
+           {released}CAST(p.is_primary OR COALESCE(co.rn_small, 0) = 1
+                AS BOOLEAN) AS suppressed,
+           CASE WHEN p.is_primary THEN 'primary'
+                WHEN co.rn_small = 1 THEN 'complementary'
+                END AS suppression
+    FROM prim p
+    LEFT JOIN comp co ON {match}
+"""

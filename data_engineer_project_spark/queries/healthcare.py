@@ -19,6 +19,8 @@ from pyspark.sql import functions as F
 
 from data_engineer_project_spark import fixtures
 from data_engineer_project_spark.functions.numeric import money
+from data_engineer_project_spark.operators import governance as GOV
+from data_engineer_project_spark.operators import robust as ROB
 from data_engineer_project_spark.operators.asof import asof_join
 from data_engineer_project_spark.operators.cache import tracked_persist
 from data_engineer_project_spark.plans.quality import fk_violations
@@ -1413,7 +1415,7 @@ def hq31_pmpm_cost_trend(t):
 @query(
     "hq32_gap_closure_velocity",
     _oracle(
-        """
+        f"""
         , closed AS (
           SELECT g.MeasureID,
                  CAST(date_diff('day', g.PeriodStart, g.ClosedDate) AS BIGINT)
@@ -1421,18 +1423,12 @@ def hq31_pmpm_cost_trend(t):
                  g.GapID
           FROM s3_cca_care_gap g WHERE g.Status = 'CLOSED'
         ),
-        ranked AS (
-          SELECT MeasureID, days_to_close,
-                 row_number() OVER (PARTITION BY MeasureID
-                                    ORDER BY days_to_close, GapID) AS rn,
-                 COUNT(*) OVER (PARTITION BY MeasureID) AS n
-          FROM closed
-        ),
+        {ROB.ranked_sql("ranked", "closed", "days_to_close", "GapID",
+                        ("MeasureID",))},
         med AS (
           SELECT MeasureID,
                  CAST(MAX(n) AS BIGINT) AS n_closed,
-                 MAX(CASE WHEN rn = (n * 50 + 99) // 100
-                     THEN days_to_close END) AS median_days
+                 {ROB.at_median_sql("days_to_close")} AS median_days
           FROM ranked GROUP BY MeasureID
         ),
         tot AS (
@@ -1463,10 +1459,10 @@ def hq32_gap_closure_velocity(t):
     fast do gaps actually close? Per measure: total/open/closed
     counts, the MEDIAN days from period start to closure (d41's
     integer-rank PERCENTILE_DISC — rank ceil(n/2) via integer
-    arithmetic, GapID tiebreak), and the closure rate (one
-    bigint/bigint division). Measures with no closures report NULL
-    median and rate 0 via the left join — absence is visible, not
-    dropped."""
+    arithmetic, GapID tiebreak; operators/robust.py), and the closure
+    rate (one bigint/bigint division). Measures with no closures
+    report NULL median and rate 0 via the left join — absence is
+    visible, not dropped."""
     s = hc(t)
     gaps = s["s3_cca_care_gap"]
     closed = gaps.filter(F.col("Status") == "CLOSED").select(
@@ -1476,21 +1472,13 @@ def hq32_gap_closure_velocity(t):
         .alias("days_to_close"),
         "GapID",
     )
-    w = Window.partitionBy("MeasureID").orderBy("days_to_close", "GapID")
-    ranked = closed.select(
-        "MeasureID",
-        "days_to_close",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy("MeasureID")).alias("n"),
-    )
-    med = ranked.groupBy("MeasureID").agg(
-        F.max("n").alias("n_closed"),
-        F.max(
-            F.when(
-                F.col("rn") == F.expr("(n * 50 + 99) div 100"),
-                F.col("days_to_close"),
-            )
-        ).alias("median_days"),
+    med = (
+        ROB.ranked(closed, "days_to_close", "GapID", ("MeasureID",))
+        .groupBy("MeasureID")
+        .agg(
+            F.max("n").alias("n_closed"),
+            ROB.at_median("days_to_close").alias("median_days"),
+        )
     )
     tot = (
         gaps.join(s["s3_cca_quality_measure"], "MeasureID")
@@ -1651,10 +1639,10 @@ def hq33_measure_compliance_rate(t):
     )
 
 
-@query(
-    "hq34_member_cost_outliers",
-    _oracle(
-        """
+# hq34/hq48's member cost: every enrolled member's paid claims in
+# exact integer cents (the DECIMAL fold * 100), 0 for a member with no
+# claims, so the enrollment universe is the denominator.
+_MEMBER_CENTS_SQL = """
         , mem AS (SELECT DISTINCT MemberID FROM s1_elig_enrollment),
         cost AS (
           SELECT m.MemberID,
@@ -1664,40 +1652,44 @@ def hq33_measure_compliance_rate(t):
           LEFT JOIN s2_claims_claim_header ch ON ch.MemberID = m.MemberID
           LEFT JOIN s2_claims_claim_payment pay ON pay.ClaimID = ch.ClaimID
           GROUP BY m.MemberID
-        ),
-        r1 AS (
-          SELECT MemberID, cents,
-                 row_number() OVER (ORDER BY cents, MemberID) AS rn,
-                 COUNT(*) OVER () AS n
-          FROM cost
-        ),
-        med AS (SELECT MAX(CASE WHEN rn = (n * 50 + 99) // 100
-                                THEN cents END) AS med FROM r1),
-        dev AS (SELECT c.MemberID, c.cents, abs(c.cents - med.med) AS ad
-                FROM cost c, med),
-        r2 AS (
-          SELECT ad,
-                 row_number() OVER (ORDER BY ad, MemberID) AS rn,
-                 COUNT(*) OVER () AS n
-          FROM dev
-        ),
-        mad AS (SELECT MAX(CASE WHEN rn = (n * 50 + 99) // 100
-                                THEN ad END) AS mad FROM r2)
+        )"""
+_MEMBER_CENTS_TABLES = [
+    "s1_elig_enrollment",
+    "s2_claims_claim_header",
+    "s2_claims_claim_payment",
+]
+
+
+def member_cents(s):
+    """``_MEMBER_CENTS_SQL``'s (MemberID, cents) in Spark."""
+    mem = s["s1_elig_enrollment"].select("MemberID").distinct()
+    paid = (
+        s["s2_claims_claim_header"]
+        .join(s["s2_claims_claim_payment"], "ClaimID")
+        .groupBy("MemberID")
+        .agg((F.sum(money("PaidAmount")) * 100).cast("long").alias("cents"))
+    )
+    return mem.join(paid, "MemberID", "left").select(
+        "MemberID", F.coalesce("cents", F.lit(0).cast("long")).alias("cents")
+    )
+
+
+@query(
+    "hq34_member_cost_outliers",
+    _oracle(
+        f"""{_MEMBER_CENTS_SQL},
+        {ROB.mad_sql("cost", "cents", "MemberID")}
         SELECT CAST(COUNT(*) AS BIGINT) AS n_members,
                CAST(MAX(med.med) AS BIGINT) AS median_cents,
                CAST(MAX(mad.mad) AS BIGINT) AS mad_cents,
-               CAST(SUM(CASE WHEN d.ad * 10000 > 3 * 14826 * mad.mad
+               CAST(SUM(CASE WHEN {ROB.outlier_sql("d.ad", "mad.mad")}
                         THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
-               CAST((MAX({'c': d.cents, 'i': -d.MemberID})).i * -1
+               CAST((MAX({{'c': d.cents, 'i': -d.MemberID}})).i * -1
                     AS BIGINT) AS top_member,
                CAST(MAX(d.cents) AS BIGINT) AS top_cents
         FROM dev d, med, mad
         """,
-        [
-            "s1_elig_enrollment",
-            "s2_claims_claim_header",
-            "s2_claims_claim_payment",
-        ],
+        _MEMBER_CENTS_TABLES,
     ),
     tags=("healthcare", "finance", "stats"),
 )
@@ -1707,59 +1699,21 @@ def hq34_member_cost_outliers(t):
     members a care program actually calls): per member, total paid
     claims in EXACT integer cents (DECIMAL fold * 100 — members with
     no claims count at 0, the enrollment universe defines the
-    denominator), then d79's machinery verbatim: exact ceil-rank
-    median, exact MAD, and the 3 * 1.4826 rule applied as integer
-    cross-multiplication. One summary row: population size,
-    median/MAD cents, outlier count, and the top-cost member
-    (struct-argmax, min-id ties).
+    denominator), then the exact ceil-rank median, exact MAD and the
+    3 * 1.4826 rule applied as integer cross-multiplication
+    (operators/robust.py, global form; d79 runs it per language). One
+    summary row: population size, median/MAD cents, outlier count, and
+    the top-cost member (struct-argmax, min-id ties).
 
     Scale note: the rank windows are global because the member
     population is the fixture's bounded universe; at a real payer's
     scale the same derivation shards like d79 (partition by plan or
     region) or swaps in d76's histogram sketch — both documented
     trade-offs, not silent costs."""
-    s = hc(t)
-    mem = s["s1_elig_enrollment"].select("MemberID").distinct()
-    paid = (
-        s["s2_claims_claim_header"]
-        .join(s["s2_claims_claim_payment"], "ClaimID")
-        .groupBy("MemberID")
-        .agg((F.sum(money("PaidAmount")) * 100).cast("long").alias("cents"))
-    )
-    cost = mem.join(paid, "MemberID", "left").select(
-        "MemberID", F.coalesce("cents", F.lit(0).cast("long")).alias("cents")
-    )
-    w1 = Window.orderBy("cents", "MemberID")
-    wn = Window.partitionBy()
-    r1 = cost.select(
-        "MemberID",
-        "cents",
-        F.row_number().over(w1).alias("rn"),
-        F.count(F.lit(1)).over(wn).alias("n"),
-    )
-    rank = F.expr("(n * 50 + 99) div 100")
-    med = r1.agg(
-        F.max(F.when(F.col("rn") == rank, F.col("cents"))).alias("med")
-    )
-    dev = cost.crossJoin(F.broadcast(med)).select(
-        "MemberID",
-        "cents",
-        "med",
-        F.abs(F.col("cents") - F.col("med")).alias("ad"),
-    )
-    w2 = Window.orderBy("ad", "MemberID")
-    r2 = dev.select(
-        "ad",
-        F.row_number().over(w2).alias("rn"),
-        F.count(F.lit(1)).over(wn).alias("n"),
-    )
-    mad = r2.agg(
-        F.max(F.when(F.col("rn") == rank, F.col("ad"))).alias("mad")
-    )
-    out = F.col("ad") * 10000 > 3 * 14826 * F.col("mad")
+    out = ROB.outlier()
     pick = F.max(F.struct(F.col("cents").alias("c"), (-F.col("MemberID")).alias("i")))
     return (
-        dev.crossJoin(F.broadcast(mad))
+        ROB.mad_frame(member_cents(hc(t)), "cents", "MemberID")
         .agg(
             F.count(F.lit(1)).alias("n_members"),
             F.max("med").cast("long").alias("median_cents"),
@@ -2744,7 +2698,7 @@ def hq44_assessment_program_summary(t):
 @query(
     "hq45_small_cell_suppression",
     _oracle(
-        """
+        f"""
         , cells AS (
           SELECT COALESCE(gz.CountyName, 'UNMAPPED') AS county,
                  g.MeasureID AS measure_id,
@@ -2755,29 +2709,7 @@ def hq44_assessment_program_summary(t):
           WHERE g.Status = 'OPEN'
           GROUP BY 1, 2
         ),
-        prim AS (SELECT county, measure_id, n, n < 11 AS is_primary
-                 FROM cells),
-        cnt AS (SELECT county,
-                       SUM(CASE WHEN is_primary THEN 1 ELSE 0 END) AS n_prim
-                FROM prim GROUP BY county),
-        comp AS (
-          SELECT p.county, p.measure_id,
-                 ROW_NUMBER() OVER (PARTITION BY p.county
-                                    ORDER BY p.n, p.measure_id) AS rn_small
-          FROM prim p JOIN cnt c ON c.county = p.county
-          WHERE NOT p.is_primary AND c.n_prim = 1
-        )
-        SELECT p.county, p.measure_id,
-               CASE WHEN p.is_primary OR co.rn_small = 1 THEN NULL
-                    ELSE p.n END AS released_n,
-               CAST(p.is_primary OR COALESCE(co.rn_small, 0) = 1
-                    AS BOOLEAN) AS suppressed,
-               CASE WHEN p.is_primary THEN 'primary'
-                    WHEN co.rn_small = 1 THEN 'complementary'
-                    END AS suppression
-        FROM prim p
-        LEFT JOIN comp co
-          ON co.county = p.county AND co.measure_id = p.measure_id
+        {GOV.small_cell_suppress_sql("cells", ("county",), ("measure_id",))}
         ORDER BY 1, 2
         """,
         [
@@ -2834,28 +2766,15 @@ def hq45_small_cell_suppression(t):
         )
         .agg(F.countDistinct("MemberID").alias("n"))
     )
-    return small_cell_suppression(cells).orderBy("county", "measure_id")
-
-
-def small_cell_suppression(cells, k: int = 11):
-    """hq45's (county, measure_id, n) binding of the REUSABLE release
-    gate (operators/governance.py small_cell_suppress — round 9
-    extracted it so any member-grain query composes the same rule;
-    hq46/hq47 are further bindings). Kept as the planted-fixture
-    test's entry point (the seeded fixture's cells are all primary)."""
-    from data_engineer_project_spark.operators.governance import (
-        small_cell_suppress,
-    )
-
-    return small_cell_suppress(
-        cells, k=k, stratum_cols=("county",), cell_cols=("measure_id",)
-    )
+    return GOV.small_cell_suppress(
+        cells, stratum_cols=("county",), cell_cols=("measure_id",)
+    ).orderBy("county", "measure_id")
 
 
 @query(
     "hq46_special_status_release",
     _oracle(
-        """
+        f"""
         , cells AS (
           SELECT 'DUAL' AS status_type, d.StatusCode AS code,
                  CAST(COUNT(DISTINCT d.MemberID) AS BIGINT) AS n
@@ -2865,29 +2784,7 @@ def small_cell_suppression(cells, k: int = 11):
                  CAST(COUNT(DISTINCT l.MemberID) AS BIGINT)
           FROM s1_elig_subsidy_lis l GROUP BY 2
         ),
-        prim AS (SELECT status_type, code, n, n < 11 AS is_primary
-                 FROM cells),
-        cnt AS (SELECT status_type,
-                       SUM(CASE WHEN is_primary THEN 1 ELSE 0 END) AS n_prim
-                FROM prim GROUP BY 1),
-        comp AS (
-          SELECT p.status_type, p.code,
-                 ROW_NUMBER() OVER (PARTITION BY p.status_type
-                                    ORDER BY p.n, p.code) AS rn_small
-          FROM prim p JOIN cnt c ON c.status_type = p.status_type
-          WHERE NOT p.is_primary AND c.n_prim = 1
-        )
-        SELECT p.status_type, p.code,
-               CASE WHEN p.is_primary OR co.rn_small = 1 THEN NULL
-                    ELSE p.n END AS released_n,
-               CAST(p.is_primary OR COALESCE(co.rn_small, 0) = 1
-                    AS BOOLEAN) AS suppressed,
-               CASE WHEN p.is_primary THEN 'primary'
-                    WHEN co.rn_small = 1 THEN 'complementary'
-                    END AS suppression
-        FROM prim p
-        LEFT JOIN comp co
-          ON co.status_type = p.status_type AND co.code = p.code
+        {GOV.small_cell_suppress_sql("cells", ("status_type",), ("code",))}
         ORDER BY 1, 2
         """,
         ["s1_elig_dual_status", "s1_elig_subsidy_lis"],
@@ -2909,10 +2806,6 @@ def hq46_special_status_release(t):
     Scale shape: one distinct-member rollup per source to a bounded
     code x status cell table; the gate adds only bounded-table
     windows."""
-    from data_engineer_project_spark.operators.governance import (
-        small_cell_suppress,
-    )
-
     s = hc(t)
     dual = (
         s["s1_elig_dual_status"]
@@ -2926,9 +2819,8 @@ def hq46_special_status_release(t):
         .agg(F.countDistinct("MemberID").alias("n"))
         .select(F.lit("LIS").alias("status_type"), "code", "n")
     )
-    return small_cell_suppress(
+    return GOV.small_cell_suppress(
         dual.union(lis),
-        k=11,
         stratum_cols=("status_type",),
         cell_cols=("code",),
     ).orderBy("status_type", "code")
@@ -2937,7 +2829,7 @@ def hq46_special_status_release(t):
 @query(
     "hq47_geo_cost_release",
     _oracle(
-        """
+        f"""
         , mp AS (SELECT DISTINCT e.MemberID, e.PlanID
                  FROM s1_elig_enrollment e),
         geo AS (
@@ -2964,32 +2856,8 @@ def hq46_special_status_release(t):
           LEFT JOIN paid ON paid.MemberID = mp.MemberID
           GROUP BY 1, 2
         ),
-        prim AS (SELECT plan_name, county, n, paid_cents,
-                        n < 11 AS is_primary
-                 FROM cells),
-        cnt AS (SELECT plan_name,
-                       SUM(CASE WHEN is_primary THEN 1 ELSE 0 END) AS n_prim
-                FROM prim GROUP BY 1),
-        comp AS (
-          SELECT p.plan_name, p.county,
-                 ROW_NUMBER() OVER (PARTITION BY p.plan_name
-                                    ORDER BY p.n, p.county) AS rn_small
-          FROM prim p JOIN cnt c ON c.plan_name = p.plan_name
-          WHERE NOT p.is_primary AND c.n_prim = 1
-        )
-        SELECT p.plan_name, p.county,
-               CASE WHEN p.is_primary OR co.rn_small = 1 THEN NULL
-                    ELSE p.n END AS released_n,
-               CASE WHEN p.is_primary OR co.rn_small = 1 THEN NULL
-                    ELSE p.paid_cents END AS released_paid_cents,
-               CAST(p.is_primary OR COALESCE(co.rn_small, 0) = 1
-                    AS BOOLEAN) AS suppressed,
-               CASE WHEN p.is_primary THEN 'primary'
-                    WHEN co.rn_small = 1 THEN 'complementary'
-                    END AS suppression
-        FROM prim p
-        LEFT JOIN comp co
-          ON co.plan_name = p.plan_name AND co.county = p.county
+        {GOV.small_cell_suppress_sql("cells", ("plan_name",), ("county",),
+                                     ("paid_cents",))}
         ORDER BY 1, 2
         """,
         [
@@ -3016,10 +2884,6 @@ def hq47_geo_cost_release(t):
     Scale shape: member->county and member->cents are member-grain
     rollups (shuffle on MemberID); cells are bounded plan x county;
     the gate is bounded-table windows only."""
-    from data_engineer_project_spark.operators.governance import (
-        small_cell_suppress,
-    )
-
     s = hc(t)
     mp = s["s1_elig_enrollment"].select("MemberID", "PlanID").distinct()
     geo = (
@@ -3064,9 +2928,8 @@ def hq47_geo_cost_release(t):
             .alias("paid_cents"),
         )
     )
-    return small_cell_suppress(
+    return GOV.small_cell_suppress(
         cells,
-        k=11,
         stratum_cols=("plan_name",),
         cell_cols=("county",),
         mask_cols=("paid_cents",),
@@ -3076,38 +2939,11 @@ def hq47_geo_cost_release(t):
 @query(
     "hq48_outlier_release",
     _oracle(
-        """
-        , mem AS (SELECT DISTINCT MemberID FROM s1_elig_enrollment),
-        cost AS (
-          SELECT m.MemberID,
-                 CAST(COALESCE(SUM(pay.PaidAmount), 0) * 100 AS BIGINT)
-                   AS cents
-          FROM mem m
-          LEFT JOIN s2_claims_claim_header ch ON ch.MemberID = m.MemberID
-          LEFT JOIN s2_claims_claim_payment pay ON pay.ClaimID = ch.ClaimID
-          GROUP BY m.MemberID
-        ),
-        r1 AS (
-          SELECT MemberID, cents,
-                 row_number() OVER (ORDER BY cents, MemberID) AS rn,
-                 COUNT(*) OVER () AS n
-          FROM cost
-        ),
-        med AS (SELECT MAX(CASE WHEN rn = (n * 50 + 99) // 100
-                                THEN cents END) AS med FROM r1),
-        dev AS (SELECT c.MemberID, c.cents, abs(c.cents - med.med) AS ad
-                FROM cost c, med),
-        r2 AS (
-          SELECT ad,
-                 row_number() OVER (ORDER BY ad, MemberID) AS rn,
-                 COUNT(*) OVER () AS n
-          FROM dev
-        ),
-        mad AS (SELECT MAX(CASE WHEN rn = (n * 50 + 99) // 100
-                                THEN ad END) AS mad FROM r2),
+        f"""{_MEMBER_CENTS_SQL},
+        {ROB.mad_sql("cost", "cents", "MemberID")},
         flagged AS (
           SELECT d.MemberID, d.cents,
-                 d.ad * 10000 > 3 * 14826 * mad.mad AS is_out
+                 {ROB.outlier_sql("d.ad", "mad.mad")} AS is_out
           FROM dev d, mad
         ),
         mp AS (SELECT DISTINCT e.MemberID, e.PlanID
@@ -3123,34 +2959,11 @@ def hq47_geo_cost_release(t):
           JOIN flagged o ON o.MemberID = mp.MemberID
           GROUP BY 1
         ),
-        prim AS (SELECT plan_name, n, outlier_cents, n < 11 AS is_primary
-                 FROM cells),
-        cnt AS (SELECT SUM(CASE WHEN is_primary THEN 1 ELSE 0 END)
-                  AS n_prim FROM prim),
-        comp AS (
-          SELECT p.plan_name,
-                 ROW_NUMBER() OVER (ORDER BY p.n, p.plan_name) AS rn_small
-          FROM prim p, cnt c
-          WHERE NOT p.is_primary AND c.n_prim = 1
-        )
-        SELECT p.plan_name,
-               CASE WHEN p.is_primary OR co.rn_small = 1 THEN NULL
-                    ELSE p.n END AS released_n,
-               CASE WHEN p.is_primary OR co.rn_small = 1 THEN NULL
-                    ELSE p.outlier_cents END AS released_outlier_cents,
-               CAST(p.is_primary OR COALESCE(co.rn_small, 0) = 1
-                    AS BOOLEAN) AS suppressed,
-               CASE WHEN p.is_primary THEN 'primary'
-                    WHEN co.rn_small = 1 THEN 'complementary'
-                    END AS suppression
-        FROM prim p
-        LEFT JOIN comp co ON co.plan_name = p.plan_name
+        {GOV.small_cell_suppress_sql("cells", (), ("plan_name",),
+                                     ("outlier_cents",))}
         ORDER BY 1
         """,
-        [
-            "s1_elig_enrollment", "s1_elig_insurance_plan",
-            "s2_claims_claim_header", "s2_claims_claim_payment",
-        ],
+        [*_MEMBER_CENTS_TABLES, "s1_elig_insurance_plan"],
     ),
     tags=("healthcare", "governance", "finance", "stats"),
 )
@@ -3168,59 +2981,17 @@ def hq48_outlier_release(t):
     total can't be subtracted back. Third composition of the gate
     (hq46: rosters, hq47: geo cost, hq48: outlier triage).
 
-    The outlier flag is hq34's machinery verbatim: per-member exact
-    integer cents over the enrollment universe, exact ceil-rank
-    median, exact MAD, 3 * 1.4826 rule as integer cross-
-    multiplication.
+    The outlier flag is hq34's: the same member cents
+    (``member_cents``) through the same median/MAD gate
+    (operators/robust.py, global form).
 
     Scale shape: member-grain rollups shuffle on MemberID; the rank
     windows shard like d79 at a real payer's scale (documented in
     hq34); cells are bounded (one per plan); the gate adds only
     bounded-table windows."""
-    from data_engineer_project_spark.operators.governance import (
-        small_cell_suppress,
-    )
-
     s = hc(t)
-    mem = s["s1_elig_enrollment"].select("MemberID").distinct()
-    paid = (
-        s["s2_claims_claim_header"]
-        .join(s["s2_claims_claim_payment"], "ClaimID")
-        .groupBy("MemberID")
-        .agg((F.sum(money("PaidAmount")) * 100).cast("long").alias("cents"))
-    )
-    cost = mem.join(paid, "MemberID", "left").select(
-        "MemberID", F.coalesce("cents", F.lit(0).cast("long")).alias("cents")
-    )
-    w1 = Window.orderBy("cents", "MemberID")
-    wn = Window.partitionBy()
-    rank = F.expr("(n * 50 + 99) div 100")
-    med = (
-        cost.select(
-            "cents",
-            F.row_number().over(w1).alias("rn"),
-            F.count(F.lit(1)).over(wn).alias("n"),
-        )
-        .agg(F.max(F.when(F.col("rn") == rank, F.col("cents"))).alias("med"))
-    )
-    dev = cost.crossJoin(F.broadcast(med)).select(
-        "MemberID",
-        "cents",
-        F.abs(F.col("cents") - F.col("med")).alias("ad"),
-    )
-    w2 = Window.orderBy("ad", "MemberID")
-    mad = (
-        dev.select(
-            "ad",
-            F.row_number().over(w2).alias("rn"),
-            F.count(F.lit(1)).over(wn).alias("n"),
-        )
-        .agg(F.max(F.when(F.col("rn") == rank, F.col("ad"))).alias("mad"))
-    )
-    flagged = dev.crossJoin(F.broadcast(mad)).select(
-        "MemberID",
-        "cents",
-        (F.col("ad") * 10000 > 3 * 14826 * F.col("mad")).alias("is_out"),
+    flagged = ROB.mad_frame(member_cents(s), "cents", "MemberID").select(
+        "MemberID", "cents", ROB.outlier().alias("is_out")
     )
     mp = s["s1_elig_enrollment"].select("MemberID", "PlanID").distinct()
     cells = (
@@ -3243,9 +3014,8 @@ def hq48_outlier_release(t):
             .alias("outlier_cents"),
         )
     )
-    return small_cell_suppress(
+    return GOV.small_cell_suppress(
         cells,
-        k=11,
         stratum_cols=(),
         cell_cols=("plan_name",),
         mask_cols=("outlier_cents",),

@@ -29,6 +29,7 @@ from data_engineer_project_spark.operators import linalg as LA
 from data_engineer_project_spark.operators import neardup as ND
 from data_engineer_project_spark.operators import pq as PQ
 from data_engineer_project_spark.operators import retrieval as RET
+from data_engineer_project_spark.operators import robust as ROB
 from data_engineer_project_spark.operators import similarity as SIM
 from data_engineer_project_spark.operators import topk as TK
 from data_engineer_project_spark.operators.asof import asof_join
@@ -6538,44 +6539,15 @@ def d78_decontamination_certificate(t):
 
 @query(
     "d79_robust_mad_outlier_gate",
-    """
-    WITH r1 AS (
-      SELECT lang, n_chars, doc_id,
-             row_number() OVER (PARTITION BY lang ORDER BY n_chars, doc_id)
-               AS rn,
-             COUNT(*) OVER (PARTITION BY lang) AS n
-      FROM documents
-    ),
-    med AS (
-      SELECT lang,
-             MAX(CASE WHEN rn = (n * 50 + 99) // 100 THEN n_chars END)
-               AS med
-      FROM r1 GROUP BY lang
-    ),
-    dev AS (
-      SELECT r1.lang, r1.doc_id, r1.n_chars,
-             abs(r1.n_chars - med.med) AS ad
-      FROM r1 JOIN med ON med.lang = r1.lang
-    ),
-    r2 AS (
-      SELECT lang, doc_id, n_chars, ad,
-             row_number() OVER (PARTITION BY lang ORDER BY ad, doc_id)
-               AS rn,
-             COUNT(*) OVER (PARTITION BY lang) AS n
-      FROM dev
-    ),
-    mad AS (
-      SELECT lang,
-             MAX(CASE WHEN rn = (n * 50 + 99) // 100 THEN ad END) AS mad
-      FROM r2 GROUP BY lang
-    )
+    f"""
+    WITH {ROB.mad_sql("documents", "n_chars", "doc_id", ("lang",))}
     SELECT d.lang,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(MAX(m1.med) AS BIGINT) AS median_chars,
            CAST(MAX(m2.mad) AS BIGINT) AS mad_chars,
-           CAST(SUM(CASE WHEN d.ad * 10000 > 3 * 14826 * m2.mad
+           CAST(SUM(CASE WHEN {ROB.outlier_sql("d.ad", "m2.mad")}
                     THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
-           CAST(SUM(CASE WHEN d.ad * 10000 > 3 * 14826 * m2.mad
+           CAST(SUM(CASE WHEN {ROB.outlier_sql("d.ad", "m2.mad")}
                     THEN 1 ELSE 0 END) AS DOUBLE)
              / CAST(COUNT(*) AS DOUBLE) AS outlier_pct
     FROM dev d
@@ -6592,9 +6564,10 @@ def d79_robust_mad_outlier_gate(t):
     absolute deviation does not budge): per language, the exact
     integer-rank median of doc lengths, the exact MAD, and the count
     flagged by the standard |x - med| > 3 * 1.4826 * MAD rule — with
-    the consistency constant applied as INTEGER CROSS-MULTIPLICATION
-    (ad * 10000 > 3 * 14826 * MAD), so the gate decision never
-    touches a float; only the final percentage divides.
+    the consistency constant applied as INTEGER CROSS-MULTIPLICATION,
+    so the gate decision never touches a float; only the final
+    percentage divides. The chain is ``operators/robust.py``'s
+    ``mad_frame`` per language (hq34 and hq48 run its global form).
 
     Engine-exactness: both medians are d41's ceil-rank PERCENTILE_DISC
     derivation (value at rank (n*50+99) div 100, ties on doc_id);
@@ -6605,37 +6578,9 @@ def d79_robust_mad_outlier_gate(t):
     replace-this-at-100TB answer, with its error bound measured
     there); the per-lang medians broadcast back (5 rows); the rollup
     is map-side-combined."""
-    w1 = Window.partitionBy("lang").orderBy("n_chars", "doc_id")
-    r1 = t.documents.select(
-        "lang",
-        "doc_id",
-        "n_chars",
-        F.row_number().over(w1).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy("lang")).alias("n"),
-    )
-    rank = F.expr("(n * 50 + 99) div 100")
-    med = r1.groupBy("lang").agg(
-        F.max(F.when(F.col("rn") == rank, F.col("n_chars"))).alias("med")
-    )
-    dev = r1.join(F.broadcast(med), "lang").select(
-        "lang",
-        "doc_id",
-        F.abs(F.col("n_chars") - F.col("med")).alias("ad"),
-        "med",
-    )
-    w2 = Window.partitionBy("lang").orderBy("ad", "doc_id")
-    r2 = dev.select(
-        "lang",
-        "ad",
-        F.row_number().over(w2).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy("lang")).alias("n"),
-    )
-    mad = r2.groupBy("lang").agg(
-        F.max(F.when(F.col("rn") == rank, F.col("ad"))).alias("mad")
-    )
-    out = F.col("ad") * 10000 > 3 * 14826 * F.col("mad")
+    out = ROB.outlier()
     return (
-        dev.join(F.broadcast(mad), "lang")
+        ROB.mad_frame(t.documents, "n_chars", "doc_id", ("lang",))
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),

@@ -776,7 +776,12 @@ def s17_stream_ivf_cell_ingestion(t):
 
     from data_engineer_project_spark.streaming import read_embedding_stream
 
-    cents = SIM.materialized_centroids(t.embeddings).collect()
+    # cid order, not the order the store's part files are read back
+    # in, so the literal below (and the plan) is the same every run
+    cents = sorted(
+        SIM.materialized_centroids(t.embeddings).collect(),
+        key=lambda r: r["cid"],
+    )
 
     # Hoist the norms out of the argmax: cosine per centroid would
     # re-fold |q| (and |c|) for every one of the ~sqrt(N) candidates.

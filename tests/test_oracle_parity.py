@@ -96,6 +96,15 @@ _RECENTLY_TOUCHED = {
     "d85_embedding_alignment_eval",
     "m17_image_query_retrieval",
     "s17_stream_ivf_cell_ingestion",
+    # ported to the release gate and median/MAD twins
+    # (operators/governance.py, operators/robust.py)
+    "hq32_gap_closure_velocity",
+    "hq34_member_cost_outliers",
+    "hq45_small_cell_suppression",
+    "hq46_special_status_release",
+    "hq47_geo_cost_release",
+    "hq48_outlier_release",
+    "d79_robust_mad_outlier_gate",
 }
 
 _DEFAULT_LANE = set(BENCH_QUERIES) | set(SPOT_CHECK_QUERIES) | _RECENTLY_TOUCHED

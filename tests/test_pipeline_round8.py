@@ -664,8 +664,8 @@ def test_hq45_suppression_rule_on_planted_cells(spark):
     measure id); counties with zero or two+ primary cells get no
     complementary round; a county that is ALL primary has nothing
     left to complement."""
-    from data_engineer_project_spark.queries.healthcare import (
-        small_cell_suppression,
+    from data_engineer_project_spark.operators.governance import (
+        small_cell_suppress,
     )
 
     cells = spark.createDataFrame(
@@ -685,7 +685,7 @@ def test_hq45_suppression_rule_on_planted_cells(spark):
     )
     got = {
         (r.county, r.measure_id): (r.released_n, r.suppressed, r.suppression)
-        for r in small_cell_suppression(cells).collect()
+        for r in small_cell_suppress(cells).collect()
     }
     assert got == {
         ("A", "QM1"): (None, True, "complementary"),

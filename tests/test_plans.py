@@ -293,6 +293,7 @@ def test_no_forced_broadcast_of_unbounded_frames():
         ("operators/pq.py", "cn"),  # M*K codebook + norms
         ("operators/pq.py", "lut"),  # queries x M x K LUT
         ("operators/retrieval.py", "stats"),  # 1-row corpus stats
+        ("operators/robust.py", "stats"),  # one median/MAD row per group
         ("operators/similarity.py", "q"),  # bounded query set
         ("operators/similarity.py", "c"),  # ~sqrt(N) centroids
         ("operators/similarity.py", "q_assigned"),  # query-set-sized
@@ -308,9 +309,8 @@ def test_no_forced_broadcast_of_unbounded_frames():
         ("queries/healthcare.py", "cr"),
         ("queries/healthcare.py", "p"),
         ("queries/healthcare.py", "ds"),
-        ("queries/healthcare.py", "med"),  # per-group medians
+        ("queries/healthcare.py", "med"),  # hq32: per-measure medians
         ("queries/healthcare.py", "n_months"),  # 1-row month count
-        ("queries/healthcare.py", "mad"),  # hq34: 1-row MAD
         ("queries/healthcare.py", "band"),  # hq35: <= #risk-tiers rows
         ("queries/healthcare.py", "pr"),  # hq35: provider dimension
         ("queries/llm_pipeline.py", "queries"),  # d86: bounded 10-query panel
@@ -330,8 +330,6 @@ def test_no_forced_broadcast_of_unbounded_frames():
         ("queries/llm_pipeline.py", "types"),  # event-type dim
         ("queries/llm_pipeline.py", "bitset"),  # d70: <= 2048-word Bloom
         ("queries/llm_pipeline.py", "cms"),  # d71: <= d*w = 3072 counters
-        ("queries/llm_pipeline.py", "med"),  # d79: per-lang medians
-        ("queries/llm_pipeline.py", "mad"),  # d79: per-lang MADs
         ("queries/llm_pipeline.py", "ca_a"),  # e23: per-type session counts
         ("queries/llm_pipeline.py", "ca_b"),
         ("queries/llm_pipeline.py", "flat"),  # e25: per-type stat rows

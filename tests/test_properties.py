@@ -10,7 +10,7 @@ example pays Spark job latency, so max_examples stays small)."""
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from data_engineer_project_spark.operators import dedup as DD
@@ -783,15 +783,29 @@ def cell_tables(draw):
 
 
 @given(data=cell_tables())
+# one primary cell, per stratum and overall, so both forms complement
+@example(
+    data=(
+        [("s0", "c0", 3, 30), ("s0", "c1", 15, 150), ("s0", "c2", 12, 120),
+         ("s0", "c3", 20, 200), ("s1", "c0", 14, 140), ("s1", "c1", 11, 110)],
+        11,
+    )
+)
 @_SETTINGS
 def test_small_cell_suppress_rule_invariants(spark, data):
     """For ANY cell table and k: (1) every n<k cell is suppressed as
     'primary'; (2) a stratum gets a complementary suppression iff it
     has EXACTLY ONE primary and >= 1 non-primary cell, and then it is
     the smallest (n, cell) non-primary; (3) released rows carry their
-    exact count and masked value; suppressed rows carry NULLs."""
+    exact count and masked value; suppressed rows carry NULLs; (4) at
+    the default k (``MIN_CELL``) the DuckDB twin
+    ``small_cell_suppress_sql`` releases the same rows as Spark, per
+    stratum and with one global stratum."""
+    import duckdb
+
     from data_engineer_project_spark.operators.governance import (
         small_cell_suppress,
+        small_cell_suppress_sql,
     )
 
     cells, k = data
@@ -826,6 +840,94 @@ def test_small_cell_suppress_rule_invariants(spark, data):
             else:
                 assert (r.suppressed, r.suppression) == (False, None)
                 assert (r.released_n, r.released_cents) == (n, cents)
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE cells (stratum VARCHAR, cell VARCHAR, n BIGINT, cents BIGINT)"
+    )
+    con.executemany("INSERT INTO cells VALUES (?, ?, ?, ?)", cells)
+    for by, keys in ((("stratum",), ("cell",)), ((), ("stratum", "cell"))):
+        duck = con.execute(
+            "WITH " + small_cell_suppress_sql("cells", by, keys, ("cents",))
+        ).fetchall()
+        twin = small_cell_suppress(
+            df, stratum_cols=by, cell_cols=keys, mask_cols=("cents",)
+        ).collect()
+        assert sorted(duck) == sorted(tuple(r) for r in twin)
+    con.close()
+
+
+@st.composite
+def grouped_values(draw):
+    """(grp, id, v) rows: 1-3 groups of 1-9 rows each (odd and even
+    sizes), values drawn from a narrow range so ties are common."""
+    rows, rid = [], 0
+    for g in range(draw(st.integers(min_value=1, max_value=3))):
+        for _ in range(draw(st.integers(min_value=1, max_value=9))):
+            rows.append((f"g{g}", rid, draw(st.integers(min_value=-5, max_value=40))))
+            rid += 1
+    return rows
+
+
+def _ceil_rank_median(xs):
+    """The value at 1-based rank ceil(n/2) of the sorted ``xs``."""
+    return sorted(xs)[(len(xs) + 1) // 2 - 1]
+
+
+@given(rows=grouped_values())
+# ties, an even and an odd group, and outliers in both
+@example(
+    rows=[("g0", 0, 5), ("g0", 1, 5), ("g0", 2, 7), ("g0", 3, 100),
+          ("g1", 4, 1), ("g1", 5, 2), ("g1", 6, 2), ("g1", 7, 3), ("g1", 8, 50)]
+)
+@_SETTINGS
+def test_median_mad_kernel_matches_reference(spark, rows):
+    """For ANY grouped values, per group and over all rows (``by=()``),
+    Spark's ``robust.mad_frame`` and its DuckDB twin ``mad_sql`` give
+    the Python ceil-rank median, the MAD (the same median of |v - med|)
+    and the count of rows with ad * 10000 > 3 * 14826 * mad."""
+    import duckdb
+
+    from data_engineer_project_spark.operators import robust as ROB
+
+    df = spark.createDataFrame(rows, "grp string, id long, v long")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE vals (grp VARCHAR, id BIGINT, v BIGINT)")
+    con.executemany("INSERT INTO vals VALUES (?, ?, ?)", rows)
+    for by in ((), ("grp",)):
+        groups: dict[tuple, list[int]] = {}
+        for g, _, v in rows:
+            groups.setdefault((g,) if by else (), []).append(v)
+        want = {}
+        for key, vs in groups.items():
+            med = _ceil_rank_median(vs)
+            mad = _ceil_rank_median([abs(v - med) for v in vs])
+            n_out = sum(abs(v - med) * 10000 > 3 * 14826 * mad for v in vs)
+            want[key] = (med, mad, n_out)
+        got = {
+            tuple(r[c] for c in by): (r.med, r.mad, r.n_out)
+            for r in ROB.mad_frame(df, "v", "id", by)
+            .groupBy(*by)
+            .agg(
+                F.max("med").alias("med"),
+                F.max("mad").alias("mad"),
+                F.sum(ROB.outlier().cast("long")).alias("n_out"),
+            )
+            .collect()
+        }
+        keys = ", ".join(f"d.{c}" for c in by)
+        on = " AND ".join(f"{t}.{c} = d.{c}" for t in ("med", "mad") for c in by)
+        duck = con.execute(
+            f"""WITH {ROB.mad_sql("vals", "v", "id", by)}
+            SELECT {keys + ", " if by else ""}MAX(med.med), MAX(mad.mad),
+                   SUM(CASE WHEN {ROB.outlier_sql("d.ad", "mad.mad")}
+                       THEN 1 ELSE 0 END)
+            FROM dev d, med, mad
+            {f"WHERE {on} GROUP BY {keys}" if by else ""}"""
+        ).fetchall()
+        assert got == want
+        assert {tuple(r[: len(by)]): tuple(r[len(by):]) for r in duck} == want
+    con.close()
 
 
 @given(
