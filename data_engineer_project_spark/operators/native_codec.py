@@ -18,8 +18,13 @@ lazily starts ONE persistent JVM subprocess (the embedded
 ``NativeDecodeServer.java``, compiled once per host into a shared
 cache dir, ~200 ms warm / ~1 s cold including javac) and streams
 length-prefixed payload batches over its stdin/stdout pipes. Workers
-are reused across tasks (spark.python.worker.reuse), so the sidecar
-amortizes to zero; on a real cluster this is one decoder JVM per
+are reused across tasks (spark.python.worker.reuse), but reuse does not
+make the spawn free: a decode task lands on whichever idle worker of
+the pool Spark hands out, and a worker that has not decoded before
+starts its own sidecar. Over 5 warm perfbench m21 passes (llm seed 511,
+4 cores) 3 passes each spawned one more decoder JVM (4 -> 7 live); a
+traced llm pass with 2 such spawns read 0.38 s more sidecar CPU than
+one with none. On a real cluster this is up to one decoder JVM per
 Python worker per executor host.
 
 Format coverage and conformance tiers (pinned in

@@ -45,6 +45,16 @@ _BUILD_CONF = {
     # so it cannot join _RUNTIME_CONF and driver-provided sessions keep
     # their own value.
     "spark.sql.codegen.cache.maxEntries": "4096",
+    # Python workers forked from our daemon (pydaemon.py), which stops
+    # each task from re-reading pyspark.zip's 1,328-entry directory once
+    # per cached zipimporter (~16 times) when the archive has not
+    # changed. A warm 1-column payload_stage on 4 cores, Python 3.11:
+    # worker CPU per task 0.26-0.29 -> 0.05 s; per run, 4 tasks took
+    # 1.06 -> 0.22 s CPU (0.50 -> 0.27 s wall) and 16 tasks 4.7 -> 0.82 s
+    # CPU (1.74 -> 0.60 s wall), medians of 7 warm runs. Static conf
+    # like the codegen entry: driver-provided sessions keep their own
+    # daemon.
+    "spark.python.daemon.module": "data_engineer_project_spark.pydaemon",
 }
 
 # Conf we also force onto *driver-provided* sessions (runtime-settable).
